@@ -1,7 +1,7 @@
 package graft.observability
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.functions.{col, count, count_if, lit}
 
 import graft.functions.Validation
 import graft.sinks.SqlDialect
@@ -19,33 +19,40 @@ object Observed {
   def employeeBatch(batch: DataFrame, dialect: SqlDialect, cf: ConnFactory,
       metrics: Metrics): Unit =
     run(metrics, "employee") {
-      val cached = batch.cache()
-      try {
-        // single pass for both tallies (reference counts during transform)
-        val (n, fixed) = {
-          val row = cached.agg(
-            org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1)),
-            org.apache.spark.sql.functions.count_if(
-              Validation.emailWasRepaired(col("email")))).head()
-          (row.getLong(0), row.getLong(1))
-        }
-        metrics.incItemsParsed("employee", n.toDouble)
-        metrics.incEmailsFixed(fixed.toDouble)
+      val tally = tallied(batch,
+        count_if(Validation.emailWasRepaired(col("email"))).as("fixed")) { b =>
         metrics.time(metrics.observeDbQuery("merge_employees", _)) {
-          Pipelines.employeeBatch(cached, dialect, cf)
+          Pipelines.employeeBatch(b, dialect, cf)
         }
-      } finally batch.unpersist()
+      }
+      metrics.incItemsParsed("employee", tally("items"))
+      metrics.incEmailsFixed(tally("fixed"))
     }
 
   def taskBatch(batch: DataFrame, dialect: SqlDialect, cf: ConnFactory,
       loadDim: () => DataFrame, loadEmployees: () => DataFrame,
       metrics: Metrics): Unit =
     run(metrics, "task") {
-      metrics.incItemsParsed("task", batch.count().toDouble)
-      metrics.time(metrics.observeDbQuery("save_task_data", _)) {
-        Pipelines.taskBatch(batch, dialect, cf, loadDim, loadEmployees)
+      val tally = tallied(batch) { b =>
+        metrics.time(metrics.observeDbQuery("save_task_data", _)) {
+          Pipelines.taskBatch(b, dialect, cf, loadDim, loadEmployees)
+        }
       }
+      metrics.incItemsParsed("task", tally("items"))
     }
+
+  /** Runs `write` over `batch` observed with a raw row count
+    * (`items`) plus `extra` tallies, and returns them by name. The
+    * tallies come from the write's own jobs (`Dataset.observe`), so
+    * counting costs no extra pass; they are read only after the write
+    * succeeded, which is when Spark has completed the observation.
+    */
+  private def tallied(batch: DataFrame, extra: Column*)(
+      write: DataFrame => Unit): Map[String, Double] = {
+    val observation = Observation()
+    write(batch.observe(observation, count(lit(1)).as("items"), extra: _*))
+    observation.get.map { case (k, v) => k -> v.asInstanceOf[Long].toDouble }
+  }
 
   /** Cycle wrapper: success/failure counters + duration + last-success
     * gauge, failure rethrown after recording (the reference aborts the

@@ -40,6 +40,30 @@ object Bridge {
       .select(col(taskIdCol), col(shortnameCol), col("executor_id"))
   }
 
+  /** Driver-side J1 index for the sink's fused bridge rewrite
+    * (`JdbcMergeWriter.upsertWithBridge`): shortname → the id of every
+    * employee with that shortname. Employees is a dimension, so it is
+    * collected once per batch and broadcast, like the join above.
+    */
+  def shortnameIndex(employees: DataFrame, empIdCol: String,
+      shortnameCol: String): Map[String, Seq[Any]] =
+    employees.select(col(shortnameCol), col(empIdCol)).collect().toSeq
+      .filterNot(_.isNullAt(0))
+      .groupMap(_.getString(0))(_.get(1))
+
+  /** One task's bridge members with the LEFT join's multiplicity: one
+    * id per employee sharing the shortname, one NULL for an unknown or
+    * NULL shortname. An empty or NULL array has no members — the
+    * reference DELETEs the task's rows and inserts none
+    * (task.go:125-151).
+    */
+  def resolveMembers(shortnames: scala.collection.Seq[String],
+      index: Map[String, Seq[Any]]): Seq[Any] =
+    if (shortnames == null) Nil
+    else shortnames.toSeq.flatMap(sn => index.getOrElse(sn, UnmatchedMember))
+
+  private val UnmatchedMember: Seq[Any] = Seq(null)
+
   /** K5 as state transformation: the bridge table after overwriting the
     * groups of every task present in `incoming` (delete-then-reinsert).
     */

@@ -3,7 +3,6 @@ package graft.sinks
 import java.sql.{Connection, DriverManager, PreparedStatement, Timestamp}
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions.col
 
 /** Executor-side JDBC MERGE writer — the `foreachBatch` body of the
   * pipelines (SURVEY.md §7.2: Spark's native jdbc writer can't MERGE,
@@ -17,10 +16,12 @@ import org.apache.spark.sql.functions.col
   * the MERGE being idempotent, the same argument the reference makes
   * (SURVEY.md §2.6 "Progress/exactly-once").
   *
-  * [[overwriteGroups]] implements the bridge-table rewrite (K5):
-  * repartition by the group key so a group never spans partitions,
-  * then per partition DELETE the incoming group keys + INSERT the new
-  * rows in one transaction — an idempotent group overwrite.
+  * [[upsertWithBridge]] adds the bridge-table rewrite (K5) to the
+  * fact MERGE in the same pass: the fact rows are key-unique, so each
+  * one owns its bridge group and the partition holding the fact row
+  * holds the whole group. Its DELETE + INSERT commit atomically with
+  * the fact row — an idempotent group overwrite, ordered fact →
+  * DELETE → INSERT within every chunk (K7).
   */
 object JdbcMergeWriter {
 
@@ -132,59 +133,63 @@ object JdbcMergeWriter {
     }
   }
 
-  /** Bridge rewrite (K5): per group key, delete-then-reinsert.
-    *
-    * Streams each partition in ONE pass with O(BatchSize) executor
-    * memory: rows are repartitioned AND sorted by the group key, so a
-    * group's rows are contiguous — on first sight of a key its DELETE
-    * runs, then its rows flow into the batched INSERT behind it, all
-    * inside the partition's transaction. (Round 1 buffered the whole
-    * partition with `it.toSeq`; at 100 TB a bridge partition doesn't
-    * fit in executor heap.)
+  /** A bridge table whose groups are owned by the fact rows of
+    * [[upsertWithBridge]]: the group of a fact row is every bridge row
+    * whose `keyCol` equals the fact's `keyCol`, and `members(row)` are
+    * the `valueCol` values that replace it (a NULL member is written
+    * as a NULL `valueCol`; no members leaves the group empty).
     */
-  /** The exact frame [[overwriteGroups]] streams: hash-partitioned AND
-    * sorted by the group key, so every group's rows are contiguous
-    * inside exactly one partition — the invariant that lets the writer
-    * run each group's DELETE once, on first sight, with O(BatchSize)
-    * memory. Exposed so PlanAuditSpec can pin the physical plan
-    * (exchange on the key + non-global sort) instead of trusting this
-    * comment.
-    */
-  private[graft] def groupedStream(df: DataFrame, groupCol: String): DataFrame =
-    df.repartition(col(groupCol)).sortWithinPartitions(col(groupCol))
+  final case class BridgeSpec(table: String, keyCol: String, valueCol: String,
+      members: Row => Iterable[Any])
 
-  def overwriteGroups(df: DataFrame, table: String, groupCol: String,
-      cols: Seq[String], dialect: SqlDialect, cf: ConnFactory): Unit = {
-    val repartitioned = groupedStream(df, groupCol)
-    repartitioned.foreachPartition { (it: Iterator[Row]) =>
+  /** Fact MERGE fused with the bridge rewrite it owns (K5 after K2/K3,
+    * in K7 order).
+    *
+    * One pass per partition, one transaction per partition. Per
+    * `BatchSize` chunk of fact rows: the chunk's MERGE, the batched
+    * DELETE of the chunk's keys, then the batched INSERT of their
+    * members — so a bridge row is only ever written after its fact
+    * row, in the same transaction. Rows must be key-unique (A4): each
+    * fact row owns its whole group, so a group never spans partitions
+    * and no repartition is needed to keep groups whole.
+    *
+    * The DELETE binds one key per statement: with an index on the key,
+    * each one touches only its own group's rows, so concurrent
+    * partitions never wait on each other (Derby's unindexed heap scan
+    * locks every row it reads, and two such scans deadlock).
+    */
+  def upsertWithBridge(df: DataFrame, spec: MergeSpec, bridge: BridgeSpec,
+      dialect: SqlDialect, cf: ConnFactory): Unit = {
+    val plan = dialect.mergePlan(spec)
+    val insertSql = dialect.insertSql(bridge.table, Seq(bridge.keyCol, bridge.valueCol))
+    df.foreachPartition { (it: Iterator[Row]) =>
       if (it.hasNext) {
         val conn = cf()
         inTxn(conn) {
           val del = conn.prepareStatement(
-            dialect.deleteGroupsSql(table, groupCol, 1))
-          val ins = conn.prepareStatement(dialect.insertSql(table, cols))
+            dialect.deleteGroupsSql(bridge.table, bridge.keyCol, 1))
+          val ins = conn.prepareStatement(insertSql)
           try {
-            var current: Any = null
-            var started = false
-            var pending = 0
-            it.foreach { r =>
-              val k = r.getAs[Any](groupCol)
-              // deepEquals, not !=: for array/binary group keys universal
-              // equality is reference equality, which would re-run the
-              // DELETE mid-group and silently drop already-flushed rows
-              if (!started || !java.util.Objects.deepEquals(
-                  k.asInstanceOf[AnyRef], current.asInstanceOf[AnyRef])) {
-                setParam(del, 1, k, conn)
-                del.executeUpdate()
-                current = k
-                started = true
+            it.grouped(BatchSize).foreach { chunk =>
+              mergeRows(chunk.iterator, plan, conn)
+              chunk.foreach { r =>
+                setParam(del, 1, r.getAs[Any](bridge.keyCol), conn)
+                del.addBatch()
               }
-              bind(ins, cols, r, conn)
-              ins.addBatch()
-              pending += 1
-              if (pending >= BatchSize) { ins.executeBatch(); pending = 0 }
+              del.executeBatch()
+              var pending = 0
+              chunk.foreach { r =>
+                val k = r.getAs[Any](bridge.keyCol)
+                bridge.members(r).foreach { v =>
+                  setParam(ins, 1, k, conn)
+                  setParam(ins, 2, v, conn)
+                  ins.addBatch()
+                  pending += 1
+                  if (pending >= BatchSize) { ins.executeBatch(); pending = 0 }
+                }
+              }
+              if (pending > 0) ins.executeBatch()
             }
-            if (pending > 0) ins.executeBatch()
           } finally { del.close(); ins.close() }
         }
       }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -8,7 +8,7 @@ import graft.functions.{Dates, Validation}
 import graft.models.Schemas
 import graft.operators.Bridge
 import graft.sinks.{JdbcMergeWriter, MergeSpecs, SqlDialect}
-import graft.sinks.JdbcMergeWriter.ConnFactory
+import graft.sinks.JdbcMergeWriter.{BridgeSpec, ConnFactory}
 
 /** The two reference pipelines re-expressed Spark-first
   * (SURVEY.md §3.1/§3.2): landing-zone payloads → declarative
@@ -23,7 +23,8 @@ import graft.sinks.JdbcMergeWriter.ConnFactory
   * Ordering: employees before tasks within a cycle (executors resolve
   * against employees — main.go:85 encodes this with a sleep; here it
   * is an explicit call order), and inside the task batch
-  * dim → fact → bridge (K7, task.go:47-72).
+  * dim → fact → bridge (K7, task.go:47-72), fact → bridge per chunk of
+  * one sink transaction.
   */
 object Pipelines {
 
@@ -87,11 +88,15 @@ object Pipelines {
   /** foreachBatch body for tasks — K7 ordering inside one batch:
     *  1. dim: ensure task_types has every incoming name (K4; ids stay
     *     store-assigned, read back and joined — never generated in
-    *     Spark);
-    *  2. fact: MERGE tasks with the geo-preservation CASE (K3);
-    *  3. bridge: explode executors, broadcast-resolve shortname→id
-    *     (J1, LEFT join: unmatched ⇒ NULL), group-overwrite
-    *     task_executors (K5).
+    *     Spark). Names are collected as per-partition distinct sets of
+    *     the cached tasks, so no second shuffle runs;
+    *  2. fact + bridge in one pass: MERGE tasks with the
+    *     geo-preservation CASE (K3) and, per chunk of fact rows, rewrite
+    *     their task_executors groups (K5) — executors resolved through
+    *     the broadcast employee dimension (J1: unmatched ⇒ NULL, empty
+    *     array ⇒ no rows). Each task's bridge group commits atomically
+    *     with its fact row, and the fact → DELETE → INSERT order holds
+    *     per chunk.
     *
     * @param loadDim       reads current task_types from the store
     * @param loadEmployees reads current employees (id, shortname)
@@ -101,25 +106,28 @@ object Pipelines {
     val tasks = transformTasks(batch).cache()
     try {
       // 1. dimension get-or-create
-      val names = tasks.select("type_name").where(col("type_name").isNotNull)
-        .distinct().collect().map(_.getString(0)).toSeq
+      val names = tasks.select(col("type_name")).as(Encoders.STRING)
+        .mapPartitions(it => it.filter(_ != null).toSet.iterator)(Encoders.STRING)
+        .collect().toSeq
       JdbcMergeWriter.ensureDimension(names, "task_types", "type_name", dialect, cf)
       val dim = loadDim() // (type_id, type_name)
 
-      // 2. fact upsert with dim join (broadcast: dims are small)
+      // 2. fact upsert with dim join (broadcast: dims are small), fused
+      // with the bridge rewrite
       val fact = tasks.join(broadcast(dim), Seq("type_name"), "left")
         .select(col("task_id"), col("type_id").as("task_type_id"),
           col("creation_date"), col("closing_date"), col("description"),
           col("address"), col("customer_name"), col("customer_login"),
-          col("comments"), col("is_closed"))
-      JdbcMergeWriter.upsert(fact, MergeSpecs.tasks, dialect, cf)
-
-      // 3. bridge rewrite
-      val bridge = Bridge.resolveExecutors(tasks, loadEmployees(),
-        "task_id", "executors", "id", "shortname")
-        .select(col("task_id"), col("executor_id"))
-      JdbcMergeWriter.overwriteGroups(bridge, "task_executors", "task_id",
-        Seq("task_id", "executor_id"), dialect, cf)
+          col("comments"), col("is_closed"), col("executors"))
+      val employees = tasks.sparkSession.sparkContext.broadcast(
+        Bridge.shortnameIndex(loadEmployees(), "id", "shortname"))
+      try {
+        JdbcMergeWriter.upsertWithBridge(fact, MergeSpecs.tasks,
+          BridgeSpec("task_executors", "task_id", "executor_id",
+            r => Bridge.resolveMembers(r.getAs[scala.collection.Seq[String]]("executors"),
+              employees.value)),
+          dialect, cf)
+      } finally employees.destroy()
     } finally tasks.unpersist()
   }
 

@@ -3,12 +3,12 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sinks.{DerbyDialect, JdbcMergeWriter, MergeSpecs}
+import graft.sinks.{DerbyDialect, JdbcMergeWriter, MergeSpec, MergeSpecs}
 
 /** Throughput anchor for the JDBC sink path — the one surface with no
   * perf number through round 8. Measures [[JdbcMergeWriter.upsert]]
-  * (MERGE) and [[JdbcMergeWriter.overwriteGroups]] (bridge rewrite)
-  * rows/sec against embedded Derby at ~1M rows.
+  * (MERGE) and [[JdbcMergeWriter.upsertWithBridge]] (fact MERGE fused
+  * with the bridge rewrite) rows/sec against embedded Derby at ~1M rows.
   *
   * Why Derby and not the live Postgres the MERGE SQL is proven on:
   * the container ships Postgres server binaries but no Postgres JDBC
@@ -16,7 +16,7 @@ import graft.sinks.{DerbyDialect, JdbcMergeWriter, MergeSpecs}
   * dialect's statement TEXT through psql — a path that cannot carry a
   * DataFrame. Derby is the only JDBC engine reachable from the sink
   * code itself, which makes this a measurement of the WRITER (batch
-  * sizing, per-partition transaction, one-pass group streaming), with
+  * sizing, per-partition transaction, per-chunk bridge rewrite), with
   * the store's own ingest speed as a Derby-specific constant. The
   * numbers anchor the writer's overhead shape, not Postgres capacity.
   *
@@ -26,7 +26,8 @@ import graft.sinks.{DerbyDialect, JdbcMergeWriter, MergeSpecs}
   *   noop  same keys, same values — skip-if-identical MERGE (the
   *         write-amplification guard: applied updates should be ~0,
   *         wall time shows what the guard costs when nothing changed)
-  *   bridge 1M rows / 100k groups — delete+insert group rewrite
+  *   bridge 1M rows / 100k groups — delete+insert group rewrite, each
+  *         group owned by one fact row (a 100k-row `tasks` MERGE)
   *
   * Env: SINK_ROWS (default 1,000,000), SINK_PARTITIONS (default 4 —
   * concurrent per-partition transactions into one embedded store;
@@ -59,9 +60,10 @@ object JdbcSinkBench {
           id BIGINT PRIMARY KEY, fullname VARCHAR(200), shortname VARCHAR(50),
           position VARCHAR(100), email VARCHAR(200), phone VARCHAR(50),
           updated_at TIMESTAMP DEFAULT CURRENT_TIMESTAMP)""")
+        st.execute("CREATE TABLE tasks (task_id BIGINT PRIMARY KEY, fanout INT)")
         st.execute("CREATE TABLE task_executors (task_id BIGINT, executor_id BIGINT)")
-        // the writer DELETEs per group on first sight — unindexed, that
-        // is a 1M-row scan per group; any real bridge table has this
+        // the writer DELETEs each group by key — unindexed, that is a
+        // 1M-row scan per group; any real bridge table has this
         st.execute("CREATE INDEX te_task ON task_executors (task_id)")
         st.close()
       } finally c.close()
@@ -87,11 +89,17 @@ object JdbcSinkBench {
     val noopSec = timed(JdbcMergeWriter.upsert(
       employees("v2"), MergeSpecs.employees, DerbyDialect, cf))
 
-    val bridge = spark.range(rows).repartition(parts).select(
-      (col("id") % groups).as("task_id"), col("id").as("executor_id"))
-    val bridgeSec = timed(JdbcMergeWriter.overwriteGroups(
-      bridge, "task_executors", "task_id",
-      Seq("task_id", "executor_id"), DerbyDialect, cf))
+    // group g owns the ids i < rows with i % groups == g
+    val owners = spark.range(groups).repartition(parts).select(
+      col("id").as("task_id"),
+      sequence(col("id"), lit(rows - 1), lit(groups)).as("executor_ids"))
+      .withColumn("fanout", size(col("executor_ids")))
+    val bridgeSec = timed(JdbcMergeWriter.upsertWithBridge(
+      owners,
+      MergeSpec("tasks", Seq("task_id"), Seq("task_id", "fanout"), Seq("fanout")),
+      JdbcMergeWriter.BridgeSpec("task_executors", "task_id", "executor_id",
+        r => r.getAs[scala.collection.Seq[Long]]("executor_ids")),
+      DerbyDialect, cf))
 
     // correctness floor: every phase must have landed every row
     val c = cf()

@@ -291,42 +291,6 @@ class PlanAuditSpec extends SparkSpec {
     assert(exchanges == 1, s"expected exactly one hash exchange, got $exchanges:\n$p")
   }
 
-  test("overwriteGroups streams each group contiguously: exchange + in-partition sort") {
-    // the writer's one-pass DELETE-then-INSERT is only correct if the
-    // frame it iterates is hash-partitioned AND sorted by the group key
-    // (group contiguous in exactly one partition) — pin the plan, then
-    // the invariant itself on skewed multi-partition data
-    import org.apache.spark.sql.functions.col
-    val df = spark.read.parquet(s"$dir/orders.parquet")
-      .select(col("o_custkey").as("g"), col("o_orderkey").as("v"))
-    val framed = graft.sinks.JdbcMergeWriter.groupedStream(df, "g")
-    val p = framed.queryExecution.executedPlan.toString
-    assert("Exchange hashpartitioning\\(g".r.findAllIn(p).size == 1,
-      s"expected one hash exchange on the group key:\n$p")
-    assert("Sort \\[g.* ASC NULLS FIRST\\], false".r.findAllIn(p).nonEmpty,
-      s"expected a non-global sort on the group key:\n$p")
-    // invariant check: every key is one contiguous run in one partition
-    val runs = framed.rdd.mapPartitionsWithIndex { (pid, it) =>
-      val seen = scala.collection.mutable.LinkedHashSet.empty[Any]
-      var prev: Any = None
-      var violations = 0
-      it.foreach { r =>
-        val k = r.getAs[Any]("g")
-        if (prev != k) {
-          if (seen.contains(k)) violations += 1 // key resumed after a gap
-          seen.add(k)
-          prev = k
-        }
-      }
-      Iterator((pid, seen.toSet, violations))
-    }.collect()
-    assert(runs.map(_._3).sum == 0, "a group key appeared in two runs within a partition")
-    val keyToPartitions = runs.flatMap { case (pid, ks, _) => ks.map(_ -> pid) }
-      .groupBy(_._1).view.mapValues(_.map(_._2).distinct.length)
-    assert(keyToPartitions.values.forall(_ == 1),
-      "a group key was split across partitions")
-  }
-
   test("multi-column distinct agg: per-column passes, no Expand blowup") {
     // agg(countDistinct(a), countDistinct(b), countDistinct(c)) makes
     // Catalyst Expand every input row 3×, interleaving three key

@@ -2,7 +2,7 @@ package graft.sinks
 
 import java.sql.{DriverManager, Timestamp}
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 
 import graft.SparkSpec
@@ -52,6 +52,8 @@ class JdbcDerbySpec extends SparkSpec {
       type_id INT GENERATED ALWAYS AS IDENTITY PRIMARY KEY,
       type_name VARCHAR(100) UNIQUE)""")
     exec("CREATE TABLE task_executors (task_id BIGINT, executor_id BIGINT)")
+    // concurrent partitions' bridge DELETEs need it (see DerbyStore)
+    exec("CREATE INDEX task_executors_task ON task_executors (task_id)")
   }
 
   // reduced employees spec (same as production MergeSpecs.employees)
@@ -132,18 +134,34 @@ class JdbcDerbySpec extends SparkSpec {
     assert(ids == Seq(3)) // store-assigned, unique
   }
 
-  test("bridge overwriteGroups: delete-then-insert per task, NULL ids kept (K5/J1)") {
-    init
-    exec("DELETE FROM task_executors")
-    exec("INSERT INTO task_executors VALUES (100, 1), (100, 2), (200, 3)")
-    val incoming = Seq(
-      (100L, Some(9L)), (100L, None) // None = unmatched shortname → NULL
-    ).toDF("task_id", "executor_id")
-    JdbcMergeWriter.overwriteGroups(incoming, "task_executors", "task_id",
-      Seq("task_id", "executor_id"), DerbyDialect, cf)
-    val rows = query1("SELECT task_id, executor_id FROM task_executors ORDER BY task_id, executor_id")(
+  /** The reduced task MERGE fused with the task_executors rewrite;
+    * each incoming row's `members` replace its task's group.
+    */
+  private def upsertWithBridge(rows: DataFrame): Unit =
+    JdbcMergeWriter.upsertWithBridge(rows, taskSpec,
+      JdbcMergeWriter.BridgeSpec("task_executors", "task_id", "executor_id",
+        r => r.getAs[scala.collection.Seq[Any]]("members")),
+      DerbyDialect, cf)
+
+  private def bridgeRows(): Seq[(Long, Option[Long])] =
+    query1("SELECT task_id, executor_id FROM task_executors")(
       r => (r.getLong(1), Option(r.getObject(2)).map(_.toString.toLong)))
-    assert(rows == Seq((100L, Some(9L)), (100L, None), (200L, Some(3L))))
+      .sortBy { case (t, e) => (t, e.getOrElse(-1L)) }
+
+  test("upsertWithBridge: fact MERGE plus delete-then-insert per task, NULL ids kept (K5/J1)") {
+    init
+    exec("DELETE FROM tasks")
+    exec("DELETE FROM task_executors")
+    exec("INSERT INTO task_executors VALUES (100, 1), (100, 2), (101, 5), (200, 3)")
+    val incoming = Seq(
+      (100L, "Main St", Seq(Some(9L), None)), // None = unmatched shortname → NULL
+      (101L, "Oak Ave", Seq.empty[Option[Long]])
+    ).toDF("task_id", "address", "members")
+    upsertWithBridge(incoming)
+    assert(query1("SELECT task_id, address FROM tasks ORDER BY task_id")(
+      r => (r.getLong(1), r.getString(2))) == Seq((100L, "Main St"), (101L, "Oak Ave")))
+    assert(bridgeRows() == Seq((100L, None), (100L, Some(9L)), (200L, Some(3L))),
+      "100 rewritten with its NULL member, 101 emptied, untouched 200 intact")
   }
 
   test("MERGE null transitions: NULL→value and value→NULL update, NULL=NULL skips") {
@@ -194,22 +212,27 @@ class JdbcDerbySpec extends SparkSpec {
     assert(rows(1) == ((21L, None, 0)), "value→NULL address change must reset geo")
   }
 
-  test("overwriteGroups streams multi-group partitions past the batch size") {
+  test("upsertWithBridge streams partitions and groups past the batch size") {
     init
+    exec("DELETE FROM tasks")
     exec("DELETE FROM task_executors")
-    exec("INSERT INTO task_executors VALUES (300, 1), (301, 1), (999, 7)")
-    // 3 groups × 600 rows > BatchSize(500): exercises the one-pass
-    // sorted-stream (delete at group boundary, batched inserts behind)
-    val incoming = (0 until 1800).map { i =>
-      (300L + (i % 3), i.toLong)
-    }.toDF("task_id", "executor_id")
-    JdbcMergeWriter.overwriteGroups(incoming, "task_executors", "task_id",
-      Seq("task_id", "executor_id"), DerbyDialect, cf)
+    exec("INSERT INTO task_executors VALUES (300, 1), (301, 1), (9999, 7)")
+    // 1200 tasks over 2 partitions (more than one 500-row chunk each),
+    // one of them owning 600 members (more than one INSERT batch)
+    val incoming = (0 until 1200).map { i =>
+      val id = 300L + i
+      (id, s"addr $i", if (i == 0) (0L until 600L).map(Option(_)) else Seq(Some(id), None))
+    }.toDF("task_id", "address", "members").repartition(2)
+    upsertWithBridge(incoming)
+    assert(query1("SELECT count(*) FROM tasks")(_.getLong(1)) == Seq(1200L))
     val counts = query1(
-      "SELECT task_id, count(*) FROM task_executors GROUP BY task_id ORDER BY task_id")(
-      r => (r.getLong(1), r.getLong(2)))
-    assert(counts == Seq((300L, 600L), (301L, 600L), (302L, 600L), (999L, 1L)),
-      "each incoming group fully rewritten, untouched group intact")
+      "SELECT task_id, count(*), count(executor_id) FROM task_executors GROUP BY task_id")(
+      r => (r.getLong(1), (r.getLong(2), r.getLong(3)))).toMap
+    assert(counts.size == 1201)
+    assert(counts(300L) == ((600L, 600L)), "the 600-member group fully rewritten")
+    assert((301L until 1500L).forall(t => counts(t) == ((2L, 1L))),
+      "every other group rewritten to its id and one NULL")
+    assert(counts(9999L) == ((1L, 1L)), "untouched group intact")
   }
 
   test("sink accumulators record rows/transactions from the executors") {
