@@ -68,4 +68,14 @@ object Dimension {
       .select((col("__max_id") + col("__rn")).cast("int").as(idCol), col(nameCol))
     dim.select(col(idCol).cast("int"), col(nameCol)).unionByName(created)
   }
+
+  /** Driver-side name → id index of a store dimension, for the sink's
+    * dimension lookups (`JdbcMergeWriter.DimensionSpec.known`). A
+    * dimension is small by definition, so it is collected once per
+    * batch and broadcast, like `Bridge.shortnameIndex`.
+    */
+  def index(dim: DataFrame, idCol: String, nameCol: String): Map[String, Any] =
+    dim.select(col(nameCol), col(idCol)).collect()
+      .filterNot(_.isNullAt(0))
+      .map(r => r.getString(0) -> r.get(1)).toMap
 }

@@ -1,8 +1,12 @@
 package graft.sinks
 
-import java.sql.{Connection, DriverManager, PreparedStatement, Timestamp}
+import java.sql.{Connection, DriverManager, PreparedStatement, SQLException, Timestamp}
+
+import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
+import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 
 /** Executor-side JDBC MERGE writer — the `foreachBatch` body of the
   * pipelines (SURVEY.md §7.2: Spark's native jdbc writer can't MERGE,
@@ -16,12 +20,16 @@ import org.apache.spark.sql.{DataFrame, Row}
   * the MERGE being idempotent, the same argument the reference makes
   * (SURVEY.md §2.6 "Progress/exactly-once").
   *
-  * [[upsertWithBridge]] adds the bridge-table rewrite (K5) to the
-  * fact MERGE in the same pass: the fact rows are key-unique, so each
-  * one owns its bridge group and the partition holding the fact row
-  * holds the whole group. Its DELETE + INSERT commit atomically with
-  * the fact row — an idempotent group overwrite, ordered fact →
-  * DELETE → INSERT within every chunk (K7).
+  * [[upsertWithBridge]] writes a fact table with its dimension (K4)
+  * and its bridge table (K5) in the same pass, in K7 order within
+  * every chunk: dimension → fact → DELETE → INSERT. A fact row's
+  * dimension name resolves through the driver's broadcast snapshot;
+  * a name the snapshot lacks is created on a separate autocommit
+  * connection, so a new dimension row commits at once and is never
+  * held across a fact transaction. The fact rows are key-unique, so
+  * each one owns its bridge group and the partition holding the fact
+  * row holds the whole group: the group's DELETE + INSERT commit
+  * atomically with the fact row — an idempotent group overwrite.
   */
 object JdbcMergeWriter {
 
@@ -101,14 +109,25 @@ object JdbcMergeWriter {
       } finally { upd.close(); exi.close(); ins.close() }
   }
 
-  private def inTxn(conn: Connection)(body: => Unit): Unit =
+  /** Runs `body` in one transaction on `conn` and closes it. On
+    * failure the original error is rethrown: a broken connection
+    * usually fails its rollback and close too, and those errors are
+    * attached to it as suppressed instead of replacing it.
+    */
+  private[sinks] def inTxn(conn: Connection)(body: => Unit): Unit = {
     try {
       conn.setAutoCommit(false)
       body
       conn.commit()
     } catch {
-      case e: Throwable => conn.rollback(); throw e
-    } finally conn.close()
+      case e: Throwable =>
+        Seq(() => conn.rollback(), () => conn.close()).foreach { cleanup =>
+          try cleanup() catch { case s: Throwable => e.addSuppressed(s) }
+        }
+        throw e
+    }
+    conn.close()
+  }
 
   /** MERGE every row of `df` through `spec` — K1/K2/K3/K6 semantics.
     * Rows must be key-unique (callers dedupe with A4 first; MERGE
@@ -133,6 +152,16 @@ object JdbcMergeWriter {
     }
   }
 
+  /** The dimension a fact row names (K4): the fact row's `nameCol`
+    * value resolves to the `idCol` of the `table` row with that name
+    * and is bound as the fact's `factIdCol` (a NULL name binds a NULL
+    * id). `known(name)` is the driver's snapshot of the dimension;
+    * [[upsertWithBridge]] creates every name it lacks. Ids stay
+    * store-assigned (INT identity) — never generated in Spark.
+    */
+  final case class DimensionSpec(table: String, idCol: String, nameCol: String,
+      factIdCol: String, known: String => Option[Any])
+
   /** A bridge table whose groups are owned by the fact rows of
     * [[upsertWithBridge]]: the group of a fact row is every bridge row
     * whose `keyCol` equals the fact's `keyCol`, and `members(row)` are
@@ -142,35 +171,90 @@ object JdbcMergeWriter {
   final case class BridgeSpec(table: String, keyCol: String, valueCol: String,
       members: Row => Iterable[Any])
 
-  /** Fact MERGE fused with the bridge rewrite it owns (K5 after K2/K3,
-    * in K7 order).
+  /** One partition's dimension lookups: a fact row gets its name's id
+    * appended as `factIdCol`. A name missing from the snapshot is got
+    * or created the reference's race-safe way (task.go:13-45):
+    * INSERT-if-absent, then re-read the id by name. That runs on a
+    * connection of its own, opened at the first miss and left in
+    * autocommit, so the new row commits at once and no partition holds
+    * a dimension lock across its fact transaction. When two partitions
+    * race for a new name, the loser's INSERT fails on the unique name
+    * (SQLState 23505, Derby's emulated INSERT-if-absent) — the row is
+    * there, and the re-read finds it.
+    */
+  private final class DimensionIds(dim: DimensionSpec, insertIfAbsent: MergePlan,
+      cf: ConnFactory) extends AutoCloseable {
+    private val created = mutable.HashMap.empty[String, Any]
+    private val nameSchema = StructType(Seq(StructField(dim.nameCol, StringType)))
+    private var factSchema: StructType = _
+    private var conn: Connection = _
+    private var byName: PreparedStatement = _
+
+    /** `fact` with its dimension id appended. */
+    def bind(fact: Row): Row = {
+      if (factSchema == null) factSchema = fact.schema.add(dim.factIdCol, IntegerType)
+      val name = fact.getAs[String](dim.nameCol)
+      val id = if (name == null) null
+        else dim.known(name).getOrElse(created.getOrElseUpdate(name, getOrCreate(name)))
+      new GenericRowWithSchema((fact.toSeq :+ id).toArray, factSchema)
+    }
+
+    private def getOrCreate(name: String): Any = {
+      if (conn == null) {
+        conn = cf()
+        conn.setAutoCommit(true)
+        byName = conn.prepareStatement(
+          s"SELECT ${dim.idCol} FROM ${dim.table} WHERE ${dim.nameCol} = ?")
+      }
+      try mergeRows(Iterator(new GenericRowWithSchema(Array[Any](name), nameSchema)),
+        insertIfAbsent, conn)
+      catch { case e: SQLException if e.getSQLState == "23505" => () }
+      byName.setString(1, name)
+      val rs = byName.executeQuery()
+      try {
+        if (!rs.next()) throw new IllegalStateException(
+          s"${dim.table}: no row named '$name' after INSERT-if-absent")
+        rs.getObject(1)
+      } finally rs.close()
+    }
+
+    override def close(): Unit = if (conn != null) conn.close()
+  }
+
+  /** Fact MERGE fused with the dimension it names and the bridge
+    * rewrite it owns (K4, K3 and K5, in K7 order).
     *
     * One pass per partition, one transaction per partition. Per
-    * `BatchSize` chunk of fact rows: the chunk's MERGE, the batched
-    * DELETE of the chunk's keys, then the batched INSERT of their
-    * members — so a bridge row is only ever written after its fact
-    * row, in the same transaction. Rows must be key-unique (A4): each
-    * fact row owns its whole group, so a group never spans partitions
-    * and no repartition is needed to keep groups whole.
+    * `BatchSize` chunk of fact rows: the names the dimension snapshot
+    * lacks are created ([[DimensionIds]], committed outside the
+    * transaction), then the chunk's MERGE, the batched DELETE of the
+    * chunk's keys, then the batched INSERT of their members — so a
+    * bridge row is only ever written after its fact row, in the same
+    * transaction. Rows must be key-unique (A4): each fact row owns its
+    * whole group, so a group never spans partitions and no repartition
+    * is needed to keep groups whole.
     *
     * The DELETE binds one key per statement: with an index on the key,
     * each one touches only its own group's rows, so concurrent
     * partitions never wait on each other (Derby's unindexed heap scan
     * locks every row it reads, and two such scans deadlock).
     */
-  def upsertWithBridge(df: DataFrame, spec: MergeSpec, bridge: BridgeSpec,
-      dialect: SqlDialect, cf: ConnFactory): Unit = {
+  def upsertWithBridge(df: DataFrame, spec: MergeSpec, dim: DimensionSpec,
+      bridge: BridgeSpec, dialect: SqlDialect, cf: ConnFactory): Unit = {
     val plan = dialect.mergePlan(spec)
+    val dimPlan = dialect.insertIgnorePlan(dim.table, Seq(dim.nameCol), Seq(dim.nameCol))
     val insertSql = dialect.insertSql(bridge.table, Seq(bridge.keyCol, bridge.valueCol))
     df.foreachPartition { (it: Iterator[Row]) =>
       if (it.hasNext) {
+        val ids = new DimensionIds(dim, dimPlan, cf)
         val conn = cf()
-        inTxn(conn) {
+        try inTxn(conn) {
           val del = conn.prepareStatement(
             dialect.deleteGroupsSql(bridge.table, bridge.keyCol, 1))
           val ins = conn.prepareStatement(insertSql)
           try {
-            it.grouped(BatchSize).foreach { chunk =>
+            it.grouped(BatchSize).foreach { facts =>
+              val chunk = facts.map(ids.bind)
               mergeRows(chunk.iterator, plan, conn)
               chunk.foreach { r =>
                 setParam(del, 1, r.getAs[Any](bridge.keyCol), conn)
@@ -191,29 +275,8 @@ object JdbcMergeWriter {
               if (pending > 0) ins.executeBatch()
             }
           } finally { del.close(); ins.close() }
-        }
+        } finally ids.close()
       }
-    }
-  }
-
-  /** Dimension get-or-create (K4, task.go:13-45): INSERT-if-absent the
-    * distinct names, race-safe by the store's conflict handling. Names
-    * are collected to the driver — a dimension is small by definition
-    * (SURVEY.md §2.2 K4 keeps id assignment in the store's serial,
-    * never in Spark).
-    */
-  def ensureDimension(names: Seq[String], table: String, nameCol: String,
-      dialect: SqlDialect, cf: ConnFactory): Unit = {
-    if (names.nonEmpty) {
-      val plan = dialect.insertIgnorePlan(table, Seq(nameCol), Seq(nameCol))
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField(nameCol,
-          org.apache.spark.sql.types.StringType)))
-      val rows = names.distinct.map(n =>
-        new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
-          Array[Any](n), schema): Row)
-      val conn = cf()
-      inTxn(conn) { mergeRows(rows.iterator, plan, conn) }
     }
   }
 }

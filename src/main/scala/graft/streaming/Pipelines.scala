@@ -1,14 +1,14 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.functions.{Dates, Validation}
 import graft.models.Schemas
-import graft.operators.Bridge
+import graft.operators.{Bridge, Dimension}
 import graft.sinks.{JdbcMergeWriter, MergeSpecs, SqlDialect}
-import graft.sinks.JdbcMergeWriter.{BridgeSpec, ConnFactory}
+import graft.sinks.JdbcMergeWriter.{BridgeSpec, ConnFactory, DimensionSpec}
 
 /** The two reference pipelines re-expressed Spark-first
   * (SURVEY.md §3.1/§3.2): landing-zone payloads → declarative
@@ -23,8 +23,7 @@ import graft.sinks.JdbcMergeWriter.{BridgeSpec, ConnFactory}
   * Ordering: employees before tasks within a cycle (executors resolve
   * against employees — main.go:85 encodes this with a sleep; here it
   * is an explicit call order), and inside the task batch
-  * dim → fact → bridge (K7, task.go:47-72), fact → bridge per chunk of
-  * one sink transaction.
+  * dim → fact → bridge (K7, task.go:47-72) per chunk of one sink pass.
   */
 object Pipelines {
 
@@ -53,8 +52,7 @@ object Pipelines {
     * Checkpoint replaces the reference's scraper_status for progress;
     * `Trigger.ProcessingTime("10 minutes")` matches the reference
     * cadence (config.go:30), `Trigger.AvailableNow` drains a backlog.
-    */
-  /** `cleanSource` ("delete" / "archive" / "off") is the landing-zone
+    * `cleanSource` ("delete" / "archive" / "off") is the landing-zone
     * retention primary path: the file source removes each file once its
     * batch commits, so the zone stays bounded (see [[LandingZone]]).
     */
@@ -85,50 +83,37 @@ object Pipelines {
       col("comments"), col("executors"), col("is_closed"))
       .dropDuplicates("task_id")
 
-  /** foreachBatch body for tasks — K7 ordering inside one batch:
-    *  1. dim: ensure task_types has every incoming name (K4; ids stay
-    *     store-assigned, read back and joined — never generated in
-    *     Spark). Names are collected as per-partition distinct sets of
-    *     the cached tasks, so no second shuffle runs;
-    *  2. fact + bridge in one pass: MERGE tasks with the
-    *     geo-preservation CASE (K3) and, per chunk of fact rows, rewrite
-    *     their task_executors groups (K5) — executors resolved through
-    *     the broadcast employee dimension (J1: unmatched ⇒ NULL, empty
-    *     array ⇒ no rows). Each task's bridge group commits atomically
-    *     with its fact row, and the fact → DELETE → INSERT order holds
-    *     per chunk.
+  /** foreachBatch body for tasks: one write pass over the
+    * deduplicated tasks, in K7 order per chunk of fact rows
+    * (task.go:47-72):
+    *  1. dim: each task's type name resolves through the broadcast
+    *     task_types snapshot; a name it lacks is created in the store
+    *     by the sink (K4, INSERT-if-absent then re-read — ids stay
+    *     store-assigned, never generated in Spark). Names are not
+    *     collected: the batch runs only the dedup shuffle and the write;
+    *  2. fact: MERGE tasks with the geo-preservation CASE (K3);
+    *  3. bridge: DELETE then INSERT the chunk's task_executors groups
+    *     (K5), executors resolved through the broadcast employee
+    *     dimension (J1: unmatched ⇒ NULL, empty array ⇒ no rows). Each
+    *     task's bridge group commits atomically with its fact row.
     *
-    * @param loadDim       reads current task_types from the store
+    * @param loadDim       reads current task_types (type_id, type_name)
     * @param loadEmployees reads current employees (id, shortname)
     */
   def taskBatch(batch: DataFrame, dialect: SqlDialect, cf: ConnFactory,
       loadDim: () => DataFrame, loadEmployees: () => DataFrame): Unit = {
-    val tasks = transformTasks(batch).cache()
+    val sc = batch.sparkSession.sparkContext
+    val types = sc.broadcast(Dimension.index(loadDim(), "type_id", "type_name"))
+    val employees = sc.broadcast(Bridge.shortnameIndex(loadEmployees(), "id", "shortname"))
     try {
-      // 1. dimension get-or-create
-      val names = tasks.select(col("type_name")).as(Encoders.STRING)
-        .mapPartitions(it => it.filter(_ != null).toSet.iterator)(Encoders.STRING)
-        .collect().toSeq
-      JdbcMergeWriter.ensureDimension(names, "task_types", "type_name", dialect, cf)
-      val dim = loadDim() // (type_id, type_name)
-
-      // 2. fact upsert with dim join (broadcast: dims are small), fused
-      // with the bridge rewrite
-      val fact = tasks.join(broadcast(dim), Seq("type_name"), "left")
-        .select(col("task_id"), col("type_id").as("task_type_id"),
-          col("creation_date"), col("closing_date"), col("description"),
-          col("address"), col("customer_name"), col("customer_login"),
-          col("comments"), col("is_closed"), col("executors"))
-      val employees = tasks.sparkSession.sparkContext.broadcast(
-        Bridge.shortnameIndex(loadEmployees(), "id", "shortname"))
-      try {
-        JdbcMergeWriter.upsertWithBridge(fact, MergeSpecs.tasks,
-          BridgeSpec("task_executors", "task_id", "executor_id",
-            r => Bridge.resolveMembers(r.getAs[scala.collection.Seq[String]]("executors"),
-              employees.value)),
-          dialect, cf)
-      } finally employees.destroy()
-    } finally tasks.unpersist()
+      JdbcMergeWriter.upsertWithBridge(transformTasks(batch), MergeSpecs.tasks,
+        DimensionSpec("task_types", "type_id", "type_name", "task_type_id",
+          name => types.value.get(name)),
+        BridgeSpec("task_executors", "task_id", "executor_id",
+          r => Bridge.resolveMembers(r.getAs[scala.collection.Seq[String]]("executors"),
+            employees.value)),
+        dialect, cf)
+    } finally { types.destroy(); employees.destroy() }
   }
 
   def taskStream(spark: SparkSession, landingDir: String, checkpointDir: String,

@@ -8,7 +8,8 @@ import graft.sinks.{DerbyDialect, JdbcMergeWriter, MergeSpec, MergeSpecs}
 /** Throughput anchor for the JDBC sink path — the one surface with no
   * perf number through round 8. Measures [[JdbcMergeWriter.upsert]]
   * (MERGE) and [[JdbcMergeWriter.upsertWithBridge]] (fact MERGE fused
-  * with the bridge rewrite) rows/sec against embedded Derby at ~1M rows.
+  * with its dimension and the bridge rewrite) rows/sec against embedded
+  * Derby at ~1M rows.
   *
   * Why Derby and not the live Postgres the MERGE SQL is proven on:
   * the container ships Postgres server binaries but no Postgres JDBC
@@ -27,7 +28,9 @@ import graft.sinks.{DerbyDialect, JdbcMergeWriter, MergeSpec, MergeSpecs}
   *         write-amplification guard: applied updates should be ~0,
   *         wall time shows what the guard costs when nothing changed)
   *   bridge 1M rows / 100k groups — delete+insert group rewrite, each
-  *         group owned by one fact row (a 100k-row `tasks` MERGE)
+  *         group owned by one fact row (a 100k-row `tasks` MERGE); the
+  *         tasks name 10 types the dimension snapshot lacks, so every
+  *         partition races to create the same 10 `task_types` rows
   *
   * Env: SINK_ROWS (default 1,000,000), SINK_PARTITIONS (default 4 —
   * concurrent per-partition transactions into one embedded store;
@@ -60,7 +63,9 @@ object JdbcSinkBench {
           id BIGINT PRIMARY KEY, fullname VARCHAR(200), shortname VARCHAR(50),
           position VARCHAR(100), email VARCHAR(200), phone VARCHAR(50),
           updated_at TIMESTAMP DEFAULT CURRENT_TIMESTAMP)""")
-        st.execute("CREATE TABLE tasks (task_id BIGINT PRIMARY KEY, fanout INT)")
+        st.execute("CREATE TABLE tasks (task_id BIGINT PRIMARY KEY, task_type_id INT, fanout INT)")
+        st.execute("""CREATE TABLE task_types (type_id INT GENERATED ALWAYS AS IDENTITY
+          PRIMARY KEY, type_name VARCHAR(100) UNIQUE)""")
         st.execute("CREATE TABLE task_executors (task_id BIGINT, executor_id BIGINT)")
         // the writer DELETEs each group by key — unindexed, that is a
         // 1M-row scan per group; any real bridge table has this
@@ -92,27 +97,35 @@ object JdbcSinkBench {
     // group g owns the ids i < rows with i % groups == g
     val owners = spark.range(groups).repartition(parts).select(
       col("id").as("task_id"),
+      concat(lit("type-"), col("id") % 10).as("type_name"),
       sequence(col("id"), lit(rows - 1), lit(groups)).as("executor_ids"))
       .withColumn("fanout", size(col("executor_ids")))
     val bridgeSec = timed(JdbcMergeWriter.upsertWithBridge(
       owners,
-      MergeSpec("tasks", Seq("task_id"), Seq("task_id", "fanout"), Seq("fanout")),
+      MergeSpec("tasks", Seq("task_id"), Seq("task_id", "task_type_id", "fanout"),
+        Seq("task_type_id", "fanout")),
+      JdbcMergeWriter.DimensionSpec("task_types", "type_id", "type_name", "task_type_id",
+        _ => None),
       JdbcMergeWriter.BridgeSpec("task_executors", "task_id", "executor_id",
         r => r.getAs[scala.collection.Seq[Long]]("executor_ids")),
       DerbyDialect, cf))
 
     // correctness floor: every phase must have landed every row
     val c = cf()
-    val (nEmp, nBridge) = try {
+    val (nEmp, nBridge, nTypes, nUntyped) = try {
       def one(sql: String): Long = {
         val rs = c.createStatement().executeQuery(sql)
         rs.next(); rs.getLong(1)
       }
       (one("SELECT COUNT(*) FROM employees"),
-        one("SELECT COUNT(*) FROM task_executors"))
+        one("SELECT COUNT(*) FROM task_executors"),
+        one("SELECT COUNT(*) FROM task_types"),
+        one("SELECT COUNT(*) FROM tasks WHERE task_type_id IS NULL"))
     } finally c.close()
     require(nEmp == rows, s"employees: $nEmp != $rows")
     require(nBridge == rows, s"bridge: $nBridge != $rows")
+    require(nTypes == math.min(groups, 10L), s"task_types: $nTypes rows")
+    require(nUntyped == 0, s"tasks without a type id: $nUntyped")
 
     def rps(s: Double): Long = math.round(rows / s)
     println(s"""{"rows":$rows,"partitions":$parts,"groups":$groups,""" +

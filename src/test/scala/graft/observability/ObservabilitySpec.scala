@@ -134,7 +134,7 @@ class ObservabilitySpec extends SparkSpec {
 
   test("a task sink failing inside the write records a failure run and rethrows") {
     val broken = DerbyStore.create("obsbroken")
-    broken.exec("DROP TABLE tasks") // the dimension step passes, the fact MERGE fails
+    broken.exec("DROP TABLE tasks") // the type is created, then the fact MERGE fails
     val m = new Metrics
     intercept[Exception] {
       taskBatch(Seq(RawBatches.task(9, "repair", "1 Main St", Seq("a"))), m, broken)

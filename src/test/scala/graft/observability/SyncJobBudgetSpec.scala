@@ -12,14 +12,15 @@ import graft.streaming.RawBatches
 /** Spark jobs per instrumented sync batch. A small batch pays a fixed
   * cost per job, so the job count is the batch's latency budget. The
   * employee batch runs the dedup shuffle and the MERGE pass; its
-  * tallies ride on those jobs. The task batch runs the dedup shuffle,
-  * the cache, the collect of dimension names, the broadcast of the
-  * dimension, and the MERGE pass that also rewrites the bridge.
+  * tallies ride on those jobs. The task batch runs the dedup shuffle
+  * and the write pass, which also resolves the task types and
+  * rewrites the bridge; its dimension and employee snapshots are read
+  * and broadcast on the driver without a job.
   */
 class SyncJobBudgetSpec extends SparkSpec {
   import RawBatches.{employee, task}
 
-  test("at most 2 jobs per employee batch and 5 per task batch") {
+  test("at most 2 jobs per employee batch and 2 per task batch") {
     val store = DerbyStore.create("budgetdb")
     val sc = spark.sparkContext
     val jobs = new AtomicInteger
@@ -51,7 +52,7 @@ class SyncJobBudgetSpec extends SparkSpec {
           store.cf, m)),
         "task insert" -> jobsOf(taskBatch("1 New Rd")),
         "task update" -> jobsOf(taskBatch("2 New Rd")))
-      val over = counts.filter { case (k, n) => n > (if (k.startsWith("employee")) 2 else 5) }
+      val over = counts.filter { case (_, n) => n > 2 }
       assert(over.isEmpty, s"job budget exceeded: $counts")
     } finally sc.removeSparkListener(listener)
     assert(store.rows("SELECT count(*) FROM tasks").head.head.toString == "40")

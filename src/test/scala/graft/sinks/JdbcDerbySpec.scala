@@ -1,6 +1,6 @@
 package graft.sinks
 
-import java.sql.{DriverManager, Timestamp}
+import java.sql.{DriverManager, SQLException, Timestamp}
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
@@ -45,7 +45,7 @@ class JdbcDerbySpec extends SparkSpec {
       position VARCHAR(100), email VARCHAR(200), phone VARCHAR(50),
       updated_at TIMESTAMP DEFAULT CURRENT_TIMESTAMP)""")
     exec("""CREATE TABLE tasks (
-      task_id BIGINT PRIMARY KEY, address VARCHAR(200),
+      task_id BIGINT PRIMARY KEY, task_type_id INT, address VARCHAR(200),
       latitude DOUBLE, geocoding_attempts INT, geocoding_error VARCHAR(200),
       updated_at TIMESTAMP DEFAULT CURRENT_TIMESTAMP)""")
     exec("""CREATE TABLE task_types (
@@ -122,26 +122,78 @@ class JdbcDerbySpec extends SparkSpec {
       "changed address NULLs lat + error, zeroes attempts")
   }
 
-  test("dimension get-or-create is race-safe and idempotent (K4)") {
-    init
-    JdbcMergeWriter.ensureDimension(Seq("TypeA", "TypeB"), "task_types",
-      "type_name", DerbyDialect, cf)
-    JdbcMergeWriter.ensureDimension(Seq("TypeB", "TypeC"), "task_types",
-      "type_name", DerbyDialect, cf)
-    val names = query1("SELECT type_name FROM task_types ORDER BY type_name")(_.getString(1))
-    assert(names == Seq("TypeA", "TypeB", "TypeC"))
-    val ids = query1("SELECT count(DISTINCT type_id) FROM task_types")(_.getInt(1))
-    assert(ids == Seq(3)) // store-assigned, unique
-  }
+  // the reduced task MERGE plus the type id the fused writer binds
+  private val factSpec = taskSpec.copy(
+    insertCols = taskSpec.insertCols :+ "task_type_id",
+    updateCols = taskSpec.updateCols :+ "task_type_id")
 
-  /** The reduced task MERGE fused with the task_executors rewrite;
-    * each incoming row's `members` replace its task's group.
+  /** The reduced task MERGE fused with the task_types lookup (`known`
+    * is the snapshot) and the task_executors rewrite; each incoming
+    * row's `type_name` is resolved and its `members` replace its
+    * task's group.
     */
-  private def upsertWithBridge(rows: DataFrame): Unit =
-    JdbcMergeWriter.upsertWithBridge(rows, taskSpec,
+  private def upsertWithBridge(rows: DataFrame, known: Map[String, Any] = Map.empty,
+      via: JdbcMergeWriter.ConnFactory = cf): Unit =
+    JdbcMergeWriter.upsertWithBridge(rows, factSpec,
+      JdbcMergeWriter.DimensionSpec("task_types", "type_id", "type_name", "task_type_id",
+        known.get),
       JdbcMergeWriter.BridgeSpec("task_executors", "task_id", "executor_id",
         r => r.getAs[scala.collection.Seq[Any]]("members")),
-      DerbyDialect, cf)
+      DerbyDialect, via)
+
+  private def typeIds(): Map[String, Int] =
+    query1("SELECT type_name, type_id FROM task_types")(r => r.getString(1) -> r.getInt(2)).toMap
+
+  /** task_id → the name of its task_types row (NULL id: None). */
+  private def taskTypes(): Map[Long, Option[String]] =
+    query1("""SELECT t.task_id, tt.type_name FROM tasks t
+        LEFT JOIN task_types tt ON t.task_type_id = tt.type_id""")(
+      r => r.getLong(1) -> Option(r.getString(2))).toMap
+
+  test("dimension get-or-create is race-safe and idempotent (K4)") {
+    init
+    Seq("tasks", "task_executors", "task_types").foreach(t => exec(s"DELETE FROM $t"))
+    exec("INSERT INTO task_types (type_name) VALUES ('TypeA')")
+    val typeA = typeIds()("TypeA")
+    def tasks(rows: (Long, String)*): DataFrame =
+      rows.map { case (id, tpe) => (id, s"addr $id", tpe, Seq.empty[Long]) }
+        .toDF("task_id", "address", "type_name", "members").repartition(2)
+    upsertWithBridge(tasks(1L -> "TypeA", 2L -> "TypeB", 3L -> "TypeB", 4L -> null),
+      known = typeIds())
+    // TypeB is in the store but not in this stale snapshot
+    upsertWithBridge(tasks(5L -> "TypeB", 6L -> "TypeC", 7L -> "TypeA"),
+      known = Map("TypeA" -> typeA))
+    val names = query1("SELECT type_name FROM task_types ORDER BY type_name")(_.getString(1))
+    assert(names == Seq("TypeA", "TypeB", "TypeC"), "one row per name")
+    val ids = typeIds()
+    assert(ids("TypeA") == typeA, "an existing name keeps its id")
+    assert(ids.values.toSet.size == 3) // store-assigned, unique
+    assert(taskTypes() == Map(1L -> Some("TypeA"), 2L -> Some("TypeB"), 3L -> Some("TypeB"),
+      4L -> None, 5L -> Some("TypeB"), 6L -> Some("TypeC"), 7L -> Some("TypeA")),
+      "every task bound to its name's row; a NULL name binds a NULL id")
+  }
+
+  test("upsertWithBridge: a dimension INSERT that loses a race reads the winner's id (K4)") {
+    init
+    Seq("tasks", "task_executors", "task_types").foreach(t => exec(s"DELETE FROM $t"))
+    val incoming = Seq((1L, "a", "TypeR", Seq.empty[Long]), (2L, "b", "TypeR", Seq.empty[Long]))
+      .toDF("task_id", "address", "type_name", "members").coalesce(1)
+    upsertWithBridge(incoming, via = TestConnections.losingInsertRace(cf, "task_types"))
+    assert(query1("SELECT type_name FROM task_types")(_.getString(1)) == Seq("TypeR"),
+      "the concurrent writer's row, and no other")
+    assert(taskTypes() == Map(1L -> Some("TypeR"), 2L -> Some("TypeR")))
+  }
+
+  test("a failed rollback does not hide the error that caused it") {
+    val conn = TestConnections.lost()
+    val e = intercept[SQLException] {
+      JdbcMergeWriter.inTxn(conn) { conn.createStatement().execute("SELECT 1") }
+    }
+    assert(e.getMessage == "connection reset", "the statement's error is rethrown")
+    assert(e.getSuppressed.map(_.getMessage).toSeq ==
+      Seq("rollback on a closed connection", "close on a closed connection"),
+      "the cleanup failures ride along as suppressed")
+  }
 
   private def bridgeRows(): Seq[(Long, Option[Long])] =
     query1("SELECT task_id, executor_id FROM task_executors")(
@@ -154,9 +206,9 @@ class JdbcDerbySpec extends SparkSpec {
     exec("DELETE FROM task_executors")
     exec("INSERT INTO task_executors VALUES (100, 1), (100, 2), (101, 5), (200, 3)")
     val incoming = Seq(
-      (100L, "Main St", Seq(Some(9L), None)), // None = unmatched shortname → NULL
-      (101L, "Oak Ave", Seq.empty[Option[Long]])
-    ).toDF("task_id", "address", "members")
+      (100L, "Main St", "TypeA", Seq(Some(9L), None)), // None = unmatched shortname → NULL
+      (101L, "Oak Ave", "TypeA", Seq.empty[Option[Long]])
+    ).toDF("task_id", "address", "type_name", "members")
     upsertWithBridge(incoming)
     assert(query1("SELECT task_id, address FROM tasks ORDER BY task_id")(
       r => (r.getLong(1), r.getString(2))) == Seq((100L, "Main St"), (101L, "Oak Ave")))
@@ -221,8 +273,9 @@ class JdbcDerbySpec extends SparkSpec {
     // one of them owning 600 members (more than one INSERT batch)
     val incoming = (0 until 1200).map { i =>
       val id = 300L + i
-      (id, s"addr $i", if (i == 0) (0L until 600L).map(Option(_)) else Seq(Some(id), None))
-    }.toDF("task_id", "address", "members").repartition(2)
+      (id, s"addr $i", s"Type${i % 3}",
+        if (i == 0) (0L until 600L).map(Option(_)) else Seq(Some(id), None))
+    }.toDF("task_id", "address", "type_name", "members").repartition(2)
     upsertWithBridge(incoming)
     assert(query1("SELECT count(*) FROM tasks")(_.getLong(1)) == Seq(1200L))
     val counts = query1(

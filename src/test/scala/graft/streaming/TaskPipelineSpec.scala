@@ -3,12 +3,12 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 
 import graft.SparkSpec
-import graft.sinks.{DerbyDialect, DerbyStore}
+import graft.sinks.{DerbyDialect, DerbyStore, TestConnections}
 
 /** The task pipeline batch end to end against Derby: dimension
   * get-or-create (K4), the task MERGE with geocoding preservation (K3)
-  * and the bridge rewrite fused into it (K5/J1), in K7 order
-  * (task.go:47-151).
+  * and the bridge rewrite, all fused into one sink pass (K5/J1), in K7
+  * order (task.go:47-151).
   */
 class TaskPipelineSpec extends SparkSpec {
   import RawBatches.task
@@ -22,9 +22,8 @@ class TaskPipelineSpec extends SparkSpec {
       "(1, 'Ann', 'ann'), (2, 'Bob', 'bob'), (3, 'Cat A', 'cat'), (4, 'Cat B', 'cat')")
   }
 
-  private def run(batch: DataFrame): Unit =
-    Pipelines.taskBatch(batch, DerbyDialect, store.cf,
-      store.loadDim(spark), store.loadEmployees(spark))
+  private def run(batch: DataFrame, loadDim: () => DataFrame = store.loadDim(spark)): Unit =
+    Pipelines.taskBatch(batch, DerbyDialect, store.cf, loadDim, store.loadEmployees(spark))
 
   private def runTasks(rows: org.apache.spark.sql.Row*): Unit =
     run(RawBatches.tasks(spark, rows: _*))
@@ -34,6 +33,21 @@ class TaskPipelineSpec extends SparkSpec {
     store.rows("SELECT task_id, executor_id FROM task_executors")
       .map(r => (r(0).toString.toLong, Option(r(1)).map(_.toString.toLong)))
       .sortBy { case (t, e) => (t, e.getOrElse(-1L)) }
+
+  private def types(): Seq[(Int, Any)] =
+    store.rows("SELECT type_id, type_name FROM task_types ORDER BY type_id")
+      .map(r => (r(0).toString.toInt, r(1)))
+
+  /** Runs `body` with AQE partition coalescing off: the dedup shuffle
+    * then keeps spark.sql.shuffle.partitions partitions however small
+    * the batch.
+    */
+  private def uncoalesced[T](body: => T): T = {
+    val key = "spark.sql.adaptive.coalescePartitions.enabled"
+    val saved = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try body finally spark.conf.set(key, saved)
+  }
 
   private def typeOf: Map[Long, String] =
     store.rows("""SELECT t.task_id, tt.type_name FROM tasks t
@@ -46,10 +60,46 @@ class TaskPipelineSpec extends SparkSpec {
     runTasks(task(1, "repair", "1 Main St", Seq("ann")),
       task(2, "install", "2 Oak Ave", Seq("bob")),
       task(3, "install", "3 Elm St", Seq("bob")))
-    val types = store.rows("SELECT type_id, type_name FROM task_types ORDER BY type_id")
-      .map(r => (r(0).toString.toInt, r(1)))
-    assert(types == Seq((1, "repair"), (2, "install")), "one new row, the old id kept")
+    assert(types() == Seq((1, "repair"), (2, "install")), "one new row, the old id kept")
     assert(typeOf == Map(1L -> "repair", 2L -> "install", 3L -> "install"))
+  }
+
+  test("task types: a name the snapshot lacks but the store has keeps its stored id (K4)") {
+    fresh()
+    store.exec("INSERT INTO task_types (type_name) VALUES ('repair')")
+    // the snapshot was read before 'repair' was created by another writer
+    val stale = () => store.loadDim(spark)().where("type_name <> 'repair'")
+    run(RawBatches.tasks(spark, task(1, "repair", "1 Main St", Seq("ann")),
+      task(2, "repair", "2 Oak Ave", Seq("bob"))), stale)
+    assert(types() == Seq((1, "repair")), "no second row")
+    assert(typeOf == Map(1L -> "repair", 2L -> "repair"))
+  }
+
+  test("task types: new names met by every partition at once get one row each (K4)") {
+    fresh()
+    val batch = RawBatches.tasks(spark, (1L to 400L).map(i =>
+      task(i, if (i % 2 == 0) "alpha" else "beta", s"$i Main St", Seq("ann"))): _*)
+    TestConnections.rollbacks.set(0)
+    uncoalesced {
+      val names = Pipelines.transformTasks(batch).rdd
+        .mapPartitions(it => Iterator(it.map(_.getAs[String]("type_name")).toSet))
+        .collect().filter(_.nonEmpty)
+      assert(names.length >= 4 && names.forall(_ == Set("alpha", "beta")),
+        s"expected both names in each of at least 4 partitions: ${names.toSeq}")
+      Pipelines.taskBatch(batch, DerbyDialect, TestConnections.countingRollbacks(store.cf),
+        store.loadDim(spark), store.loadEmployees(spark))
+    }
+    assert(types().map(_._2).sortBy(_.toString) == Seq("alpha", "beta"), "one row per name")
+    assert(typeOf == (1L to 400L).map(i => i -> (if (i % 2 == 0) "alpha" else "beta")).toMap,
+      "every task carries its name's row id")
+    assert(TestConnections.rollbacks.get == 0, "no partition's transaction rolled back")
+  }
+
+  test("task types: a NULL name writes a NULL type id and no dimension row (K4)") {
+    fresh()
+    runTasks(task(1, null, "1 Main St", Seq("ann")))
+    assert(types().isEmpty)
+    assert(store.rows("SELECT task_id, task_type_id FROM tasks") == Vector(Vector(1L, null)))
   }
 
   test("geocoding is kept while the address is unchanged and reset when it changes (K3)") {
@@ -136,12 +186,8 @@ class TaskPipelineSpec extends SparkSpec {
     store.exec("INSERT INTO task_executors VALUES (999999, 1)")
     val ids = 1L to 2400L
     runTasks(ids.map(i => task(i, s"type-${i % 3}", s"$i Main St", Seq("zed"))): _*)
-    // without coalescing, the dedup shuffle keeps spark.sql.shuffle.partitions
-    // partitions, each holding more than one 500-row chunk
-    val key = "spark.sql.adaptive.coalescePartitions.enabled"
-    val saved = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try {
+    // uncoalesced, each partition holds more than one 500-row chunk
+    uncoalesced {
       val batch = RawBatches.tasks(spark,
         ids.map(i => task(i, s"type-${i % 3}", s"$i Main St", Seq("ann", "cat"))): _*)
       val sizes = Pipelines.transformTasks(batch).rdd.mapPartitions(it => Iterator(it.size))
@@ -149,7 +195,7 @@ class TaskPipelineSpec extends SparkSpec {
       assert(sizes.length >= 2 && sizes.count(_ > 500) >= 2,
         s"expected at least two partitions past one chunk: ${sizes.toSeq}")
       run(batch)
-    } finally spark.conf.set(key, saved)
+    }
     assert(store.rows("SELECT count(*) FROM tasks").head.head.toString == "2400")
     val perTask = store.rows(
       "SELECT task_id, count(*), min(executor_id), max(executor_id) FROM task_executors " +
