@@ -1,9 +1,7 @@
 package graft.observability
 
-import org.apache.spark.sql.{Column, DataFrame, Observation}
-import org.apache.spark.sql.functions.{col, count, count_if, lit}
+import org.apache.spark.sql.DataFrame
 
-import graft.functions.Validation
 import graft.sinks.SqlDialect
 import graft.sinks.JdbcMergeWriter.ConnFactory
 import graft.streaming.Pipelines
@@ -13,46 +11,34 @@ import graft.streaming.Pipelines
   * runs_total{success|failure} per cycle, items_parsed_total per
   * batch, emails_fixed_total (employees.go:166-193 tally),
   * run_duration_seconds, last_successful_run_timestamp.
+  *
+  * The tallies come from the write itself
+  * ([[graft.sinks.JdbcMergeWriter.Tally]]): raw rows, duplicates
+  * included, and repaired emails over those raw rows — from the
+  * collected rows of a local batch, or from the write's own jobs for a
+  * distributed one. A failed write records none.
   */
 object Observed {
 
   def employeeBatch(batch: DataFrame, dialect: SqlDialect, cf: ConnFactory,
       metrics: Metrics): Unit =
     run(metrics, "employee") {
-      val tally = tallied(batch,
-        count_if(Validation.emailWasRepaired(col("email"))).as("fixed")) { b =>
-        metrics.time(metrics.observeDbQuery("merge_employees", _)) {
-          Pipelines.employeeBatch(b, dialect, cf)
-        }
+      val tally = metrics.time(metrics.observeDbQuery("merge_employees", _)) {
+        Pipelines.employeeBatch(batch, dialect, cf)
       }
-      metrics.incItemsParsed("employee", tally("items"))
-      metrics.incEmailsFixed(tally("fixed"))
+      metrics.incItemsParsed("employee", tally.rows.toDouble)
+      metrics.incEmailsFixed(tally.flagged.toDouble)
     }
 
   def taskBatch(batch: DataFrame, dialect: SqlDialect, cf: ConnFactory,
       loadDim: () => DataFrame, loadEmployees: () => DataFrame,
       metrics: Metrics): Unit =
     run(metrics, "task") {
-      val tally = tallied(batch) { b =>
-        metrics.time(metrics.observeDbQuery("save_task_data", _)) {
-          Pipelines.taskBatch(b, dialect, cf, loadDim, loadEmployees)
-        }
+      val tally = metrics.time(metrics.observeDbQuery("save_task_data", _)) {
+        Pipelines.taskBatch(batch, dialect, cf, loadDim, loadEmployees)
       }
-      metrics.incItemsParsed("task", tally("items"))
+      metrics.incItemsParsed("task", tally.rows.toDouble)
     }
-
-  /** Runs `write` over `batch` observed with a raw row count
-    * (`items`) plus `extra` tallies, and returns them by name. The
-    * tallies come from the write's own jobs (`Dataset.observe`), so
-    * counting costs no extra pass; they are read only after the write
-    * succeeded, which is when Spark has completed the observation.
-    */
-  private def tallied(batch: DataFrame, extra: Column*)(
-      write: DataFrame => Unit): Map[String, Double] = {
-    val observation = Observation()
-    write(batch.observe(observation, count(lit(1)).as("items"), extra: _*))
-    observation.get.map { case (k, v) => k -> v.asInstanceOf[Long].toDouble }
-  }
 
   /** Cycle wrapper: success/failure counters + duration + last-success
     * gauge, failure rethrown after recording (the reference aborts the

@@ -4,47 +4,59 @@ import java.sql.{Connection, DriverManager, PreparedStatement, SQLException, Tim
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Observation, Row}
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.functions.{col, count, count_if, lit, max_by,
+  monotonically_increasing_id, struct}
 import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 
-/** Executor-side JDBC MERGE writer — the `foreachBatch` body of the
-  * pipelines (SURVEY.md §7.2: Spark's native jdbc writer can't MERGE,
-  * so this is custom by necessity).
+/** JDBC MERGE writer — the `foreachBatch` body of the pipelines
+  * (SURVEY.md §7.2: Spark's native jdbc writer can't MERGE, so this is
+  * custom by necessity).
   *
-  * Distribution model: [[upsert]] runs per partition on the executors
-  * — each partition opens one connection, prepares its statements
-  * once, and streams rows through inside a single transaction. No
-  * global transaction exists across partitions (neither does one in
+  * Distribution model: two shapes, one writer. Each write builds one
+  * writer function over an iterator of rows — open one connection,
+  * prepare the statements once, stream the rows through inside a
+  * single transaction — and [[writeBatch]] picks where it runs, by the
+  * batch's optimized plan:
+  *  - a `LocalRelation` (a batch the driver already holds, such as a
+  *    polled snapshot passed to `createDataFrame`) is collected once on
+  *    the driver and the writer function runs once over its rows. No
+  *    Spark job runs. The rows are a copy of a `Seq` the caller already
+  *    holds, so the driver memory this takes is bounded by what the
+  *    caller already holds;
+  *  - any other plan (a file-source micro-batch, a parquet read) runs
+  *    the writer function per partition on the executors, through
+  *    `foreachPartition`.
+  * No global transaction exists across partitions (neither does one in
   * the reference, which writes row-by-row); replay safety comes from
   * the MERGE being idempotent, the same argument the reference makes
   * (SURVEY.md §2.6 "Progress/exactly-once").
   *
+  * A batch may repeat a key: the writer gets the last row per key in
+  * delivery order (A4), as the reference's row-at-a-time upserts leave
+  * it (see [[lastPerKey]]).
+  *
   * [[upsertWithBridge]] writes a fact table with its dimension (K4)
   * and its bridge table (K5) in the same pass, in K7 order within
   * every chunk: dimension → fact → DELETE → INSERT. A fact row's
-  * dimension name resolves through the driver's broadcast snapshot;
-  * a name the snapshot lacks is created on a separate autocommit
-  * connection, so a new dimension row commits at once and is never
-  * held across a fact transaction. The fact rows are key-unique, so
-  * each one owns its bridge group and the partition holding the fact
-  * row holds the whole group: the group's DELETE + INSERT commit
-  * atomically with the fact row — an idempotent group overwrite.
+  * dimension name resolves through the driver's snapshot; a name the
+  * snapshot lacks is created on a separate autocommit connection, so a
+  * new dimension row commits at once and is never held across a fact
+  * transaction. The fact rows are key-unique, so each one owns its
+  * bridge group and the partition holding the fact row holds the whole
+  * group: the group's DELETE + INSERT commit atomically with the fact
+  * row — an idempotent group overwrite.
   */
 object JdbcMergeWriter {
 
   type ConnFactory = () => Connection
 
-  /** Executor-side sink instrumentation: Spark accumulators survive a
-    * real cluster (driver-side timers only see the action's wall
-    * time, not per-partition transaction behavior). Feed the totals
-    * into [[graft.observability.Metrics]] after the batch.
+  /** What a write was handed, counted before the A4 dedup: `rows` in
+    * all, and the `flagged` ones whose boolean flag column is true.
     */
-  final class SinkMetrics(sc: org.apache.spark.SparkContext) extends Serializable {
-    val rowsWritten = sc.longAccumulator("graft.sink.rowsWritten")
-    val txnNanos = sc.longAccumulator("graft.sink.txnNanos")
-    val partitionsTouched = sc.longAccumulator("graft.sink.partitionsTouched")
-  }
+  final case class Tally(rows: Long, flagged: Long)
 
   def connFactory(url: String): ConnFactory = {
     val u = url
@@ -129,25 +141,71 @@ object JdbcMergeWriter {
     conn.close()
   }
 
-  /** MERGE every row of `df` through `spec` — K1/K2/K3/K6 semantics.
-    * Rows must be key-unique (callers dedupe with A4 first; MERGE
-    * requires unique source keys).
+  /** Runs `write` over the last row per `keyCols` of `df`, in one of
+    * the two shapes of the object doc: once on the driver over the
+    * collected rows when the optimized plan is a `LocalRelation`, else
+    * once per partition through `foreachPartition`. Returns the tally
+    * of the rows as delivered; `flag` names a boolean column of `df`.
+    * On the driver the tally comes from the collected rows; on the
+    * executors it rides on the write's own jobs (`Dataset.observe`; a
+    * local batch is never observed, which would hide its
+    * `LocalRelation` and, with no job, never complete).
+    */
+  private def writeBatch(df: DataFrame, keyCols: Seq[String], flag: Option[String])(
+      write: Iterator[Row] => Unit): Tally =
+    df.queryExecution.optimizedPlan match {
+      case _: LocalRelation =>
+        val rows = df.collect()
+        write(lastPerKey(rows, keyCols))
+        Tally(rows.length, flag.fold(0L)(f => rows.count(_.getAs[Boolean](f)).toLong))
+      case _ =>
+        val seen = Observation()
+        lastPerKey(df.observe(seen, count(lit(1)).as("rows"),
+          count_if(flag.fold(lit(false))(col)).as("flagged")), keyCols).foreachPartition(write)
+        val m = seen.get
+        Tally(m("rows").asInstanceOf[Long], m("flagged").asInstanceOf[Long])
+    }
+
+  /** The last of `rows` per key, in the order of each key's first row. */
+  private def lastPerKey(rows: Array[Row], keyCols: Seq[String]): Iterator[Row] =
+    if (rows.isEmpty) Iterator.empty
+    else {
+      val keys = keyCols.map(rows.head.fieldIndex)
+      val last = mutable.LinkedHashMap.empty[Seq[Any], Row]
+      rows.foreach(r => last(keys.map(r.get)) = r)
+      last.valuesIterator
+    }
+
+  /** The last row of `df` per key in delivery order, through a
+    * `max_by` over a row ordinal (`monotonically_increasing_id`:
+    * partition index, then position in the partition). The ordinal
+    * follows delivery order within each input partition and across
+    * the splits of one file, which Spark reads in order. Across the
+    * files of one micro-batch it follows Spark's split order
+    * (largest split first), not the order the files landed in: a key
+    * repeated in two files of one micro-batch keeps the row of the
+    * file Spark reads last.
+    */
+  private[graft] def lastPerKey(df: DataFrame, keyCols: Seq[String]): DataFrame = {
+    val ordinal = "_graft_delivery"
+    df.withColumn(ordinal, monotonically_increasing_id())
+      .groupBy(keyCols.map(col): _*)
+      .agg(max_by(struct(df.columns.toSeq.map(col): _*), col(ordinal)).as("last"))
+      .select("last.*")
+  }
+
+  /** MERGE every row of `df` through `spec` — K1/K2/K3/K6 semantics,
+    * the last row per key when a key repeats (A4). `flag` names a
+    * boolean column of `df` to tally (see [[Tally]]); columns the
+    * MERGE does not bind are not written.
     */
   def upsert(df: DataFrame, spec: MergeSpec, dialect: SqlDialect,
-      cf: ConnFactory, metrics: Option[SinkMetrics] = None): Unit = {
+      cf: ConnFactory, flag: Option[String] = None): Tally = {
     val plan = dialect.mergePlan(spec) // built driver-side; plan is Serializable
-    df.foreachPartition { (it: Iterator[Row]) =>
+    writeBatch(df, spec.keyCols, flag) { it =>
       if (it.hasNext) {
-        val t0 = System.nanoTime()
-        var n = 0L
-        val counted = it.map { r => n += 1; r }
         val conn = cf()
-        inTxn(conn) { mergeRows(counted, plan, conn) }
-        metrics.foreach { m =>
-          m.rowsWritten.add(n)
-          m.txnNanos.add(System.nanoTime() - t0)
-          m.partitionsTouched.add(1)
-        }
+        inTxn(conn) { mergeRows(it, plan, conn) }
       }
     }
   }
@@ -224,15 +282,16 @@ object JdbcMergeWriter {
   /** Fact MERGE fused with the dimension it names and the bridge
     * rewrite it owns (K4, K3 and K5, in K7 order).
     *
-    * One pass per partition, one transaction per partition. Per
-    * `BatchSize` chunk of fact rows: the names the dimension snapshot
-    * lacks are created ([[DimensionIds]], committed outside the
-    * transaction), then the chunk's MERGE, the batched DELETE of the
-    * chunk's keys, then the batched INSERT of their members — so a
-    * bridge row is only ever written after its fact row, in the same
-    * transaction. Rows must be key-unique (A4): each fact row owns its
-    * whole group, so a group never spans partitions and no repartition
-    * is needed to keep groups whole.
+    * One pass and one transaction per partition, or one of each on the
+    * driver for a local batch. Per `BatchSize` chunk of fact rows: the
+    * names the dimension snapshot lacks are created ([[DimensionIds]],
+    * committed outside the transaction), then the chunk's MERGE, the
+    * batched DELETE of the chunk's keys, then the batched INSERT of
+    * their members — so a bridge row is only ever written after its
+    * fact row, in the same transaction. The writer gets one fact row
+    * per key (A4): each fact row owns its whole group, so a group never
+    * spans partitions and no repartition is needed to keep groups
+    * whole.
     *
     * The DELETE binds one key per statement: with an index on the key,
     * each one touches only its own group's rows, so concurrent
@@ -240,11 +299,11 @@ object JdbcMergeWriter {
     * locks every row it reads, and two such scans deadlock).
     */
   def upsertWithBridge(df: DataFrame, spec: MergeSpec, dim: DimensionSpec,
-      bridge: BridgeSpec, dialect: SqlDialect, cf: ConnFactory): Unit = {
+      bridge: BridgeSpec, dialect: SqlDialect, cf: ConnFactory): Tally = {
     val plan = dialect.mergePlan(spec)
     val dimPlan = dialect.insertIgnorePlan(dim.table, Seq(dim.nameCol), Seq(dim.nameCol))
     val insertSql = dialect.insertSql(bridge.table, Seq(bridge.keyCol, bridge.valueCol))
-    df.foreachPartition { (it: Iterator[Row]) =>
+    writeBatch(df, spec.keyCols, None) { it =>
       if (it.hasNext) {
         val ids = new DimensionIds(dim, dimPlan, cf)
         val conn = cf()

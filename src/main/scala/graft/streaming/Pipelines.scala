@@ -8,7 +8,7 @@ import graft.functions.{Dates, Validation}
 import graft.models.Schemas
 import graft.operators.{Bridge, Dimension}
 import graft.sinks.{JdbcMergeWriter, MergeSpecs, SqlDialect}
-import graft.sinks.JdbcMergeWriter.{BridgeSpec, ConnFactory, DimensionSpec}
+import graft.sinks.JdbcMergeWriter.{BridgeSpec, ConnFactory, DimensionSpec, Tally}
 
 /** The two reference pipelines re-expressed Spark-first
   * (SURVEY.md §3.1/§3.2): landing-zone payloads → declarative
@@ -16,9 +16,13 @@ import graft.sinks.JdbcMergeWriter.{BridgeSpec, ConnFactory, DimensionSpec}
   * `foreachBatch`.
   *
   * Replaces the reference's per-row round-trips (1 SELECT + 1 write
-  * per employee; ≥4 statements per task) with set-oriented MERGEs —
-  * the write path is per-partition batched, the read path is joins,
-  * nothing loops on the driver.
+  * per employee; ≥4 statements per task) with set-oriented MERGEs,
+  * JDBC-batched per chunk of rows. A batch the driver already holds (a
+  * polled snapshot) is projected and written on the driver with no
+  * Spark job; any other batch (the file-source streams) is written per
+  * partition from the executors — [[JdbcMergeWriter]] picks the shape
+  * from the batch's plan. Either way the sink keeps the last row per
+  * key in delivery order (A4).
   *
   * Ordering: employees before tasks within a cycle (executors resolve
   * against employees — main.go:85 encodes this with a sleep; here it
@@ -29,24 +33,30 @@ object Pipelines {
 
   // ---- employee pipeline (§3.1) -------------------------------------------
 
-  /** T1 projection + T3/T4 email repair + A4 key-dedup. Phone is
-    * validated (T5) but not repaired — reference behavior: invalid
-    * phones pass through untouched (employees.go:199-212 only tallies).
+  /** Flags a row whose email was repaired (the A3 tally). */
+  private val EmailFixed = "email_fixed"
+
+  /** T1 projection + T3/T4 email repair, with [[EmailFixed]] set on
+    * each repaired row. Phone is validated (T5) but not repaired —
+    * reference behavior: invalid phones pass through untouched
+    * (employees.go:199-212 only tallies). One projection, so over a
+    * local batch Spark folds it into the local rows (no job).
     */
   def transformEmployees(raw: DataFrame): DataFrame =
     raw.select(
       col("id").cast("long").as("id"),
       col("fullname"), col("shortname"), col("position"),
       Validation.repairEmail(col("email"), col("id")).as("email"),
-      col("phone"))
-      .dropDuplicates("id")
+      col("phone"),
+      Validation.emailWasRepaired(col("email")).as(EmailFixed))
 
   /** foreachBatch body: MERGE with skip-if-identical (K1+K2+T6 pushed
-    * into the store — identical rows produce zero writes).
+    * into the store — identical rows produce zero writes), the last row
+    * per id (A4). Returns the batch's raw rows and repaired emails.
     */
-  def employeeBatch(batch: DataFrame, dialect: SqlDialect, cf: ConnFactory): Unit =
+  def employeeBatch(batch: DataFrame, dialect: SqlDialect, cf: ConnFactory): Tally =
     JdbcMergeWriter.upsert(transformEmployees(batch), MergeSpecs.employees,
-      dialect, cf)
+      dialect, cf, Some(EmailFixed))
 
   /** Structured Streaming form: landing-zone parquet → MERGE sink.
     * Checkpoint replaces the reference's scraper_status for progress;
@@ -66,12 +76,12 @@ object Pipelines {
       .writeStream
       .trigger(trigger)
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (b: DataFrame, _: Long) => employeeBatch(b, dialect, cf) }
+      .foreachBatch { (b: DataFrame, _: Long) => employeeBatch(b, dialect, cf); () }
       .start()
 
   // ---- task pipeline (§3.2) -----------------------------------------------
 
-  /** T2 projection + T7 date normalization + T9 zero-time→NULL + A4. */
+  /** T2 projection + T7 date normalization + T9 zero-time→NULL. */
   def transformTasks(raw: DataFrame): DataFrame =
     raw.select(
       col("id").cast("long").as("task_id"),
@@ -81,39 +91,38 @@ object Pipelines {
       col("description"), col("address"),
       col("customer_name"), col("customer_login"),
       col("comments"), col("executors"), col("is_closed"))
-      .dropDuplicates("task_id")
 
-  /** foreachBatch body for tasks: one write pass over the
-    * deduplicated tasks, in K7 order per chunk of fact rows
-    * (task.go:47-72):
-    *  1. dim: each task's type name resolves through the broadcast
-    *     task_types snapshot; a name it lacks is created in the store
-    *     by the sink (K4, INSERT-if-absent then re-read — ids stay
-    *     store-assigned, never generated in Spark). Names are not
-    *     collected: the batch runs only the dedup shuffle and the write;
+  /** foreachBatch body for tasks: one write pass over the last row
+    * per task (A4), in K7 order per chunk of fact rows (task.go:47-72):
+    *  1. dim: each task's type name resolves through the task_types
+    *     snapshot; a name it lacks is created in the store by the sink
+    *     (K4, INSERT-if-absent then re-read — ids stay store-assigned,
+    *     never generated in Spark);
     *  2. fact: MERGE tasks with the geo-preservation CASE (K3);
     *  3. bridge: DELETE then INSERT the chunk's task_executors groups
-    *     (K5), executors resolved through the broadcast employee
-    *     dimension (J1: unmatched ⇒ NULL, empty array ⇒ no rows). Each
-    *     task's bridge group commits atomically with its fact row.
+    *     (K5), executors resolved through the employee snapshot (J1:
+    *     unmatched ⇒ NULL, empty array ⇒ no rows). Each task's bridge
+    *     group commits atomically with its fact row.
+    *
+    * The two snapshots are plain maps the writer function closes over,
+    * with no explicit broadcast: a local batch is written on the
+    * driver, and a distributed one ships them in its write stage's task
+    * binary, which Spark broadcasts once per stage. Returns the batch's
+    * raw row count.
     *
     * @param loadDim       reads current task_types (type_id, type_name)
     * @param loadEmployees reads current employees (id, shortname)
     */
   def taskBatch(batch: DataFrame, dialect: SqlDialect, cf: ConnFactory,
-      loadDim: () => DataFrame, loadEmployees: () => DataFrame): Unit = {
-    val sc = batch.sparkSession.sparkContext
-    val types = sc.broadcast(Dimension.index(loadDim(), "type_id", "type_name"))
-    val employees = sc.broadcast(Bridge.shortnameIndex(loadEmployees(), "id", "shortname"))
-    try {
-      JdbcMergeWriter.upsertWithBridge(transformTasks(batch), MergeSpecs.tasks,
-        DimensionSpec("task_types", "type_id", "type_name", "task_type_id",
-          name => types.value.get(name)),
-        BridgeSpec("task_executors", "task_id", "executor_id",
-          r => Bridge.resolveMembers(r.getAs[scala.collection.Seq[String]]("executors"),
-            employees.value)),
-        dialect, cf)
-    } finally { types.destroy(); employees.destroy() }
+      loadDim: () => DataFrame, loadEmployees: () => DataFrame): Tally = {
+    val types = Dimension.index(loadDim(), "type_id", "type_name")
+    val employees = Bridge.shortnameIndex(loadEmployees(), "id", "shortname")
+    JdbcMergeWriter.upsertWithBridge(transformTasks(batch), MergeSpecs.tasks,
+      DimensionSpec("task_types", "type_id", "type_name", "task_type_id", types.get),
+      BridgeSpec("task_executors", "task_id", "executor_id",
+        r => Bridge.resolveMembers(r.getAs[scala.collection.Seq[String]]("executors"),
+          employees)),
+      dialect, cf)
   }
 
   def taskStream(spark: SparkSession, landingDir: String, checkpointDir: String,
@@ -129,6 +138,7 @@ object Pipelines {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (b: DataFrame, _: Long) =>
         taskBatch(b, dialect, cf, loadDim, loadEmployees)
+        ()
       }
       .start()
 }

@@ -4,6 +4,8 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.sql.DriverManager
 
+import org.apache.spark.sql.DataFrame
+
 import graft.SparkSpec
 import graft.sinks.{DerbyDialect, DerbyStore, JdbcMergeWriter}
 import graft.streaming.RawBatches
@@ -99,47 +101,65 @@ class ObservabilitySpec extends SparkSpec {
 
   private lazy val store = DerbyStore.create("obsstore")
 
-  private def taskBatch(rows: Seq[org.apache.spark.sql.Row], m: Metrics,
-      s: DerbyStore = store): Unit =
-    bounded(Observed.taskBatch(RawBatches.tasks(spark, rows: _*), DerbyDialect, s.cf,
-      s.loadDim(spark), s.loadEmployees(spark), m))
+  /** The two shapes a batch reaches the sink in: as built, a local
+    * frame written on the driver, and read back from parquet, a
+    * distributed frame written from the executors.
+    */
+  private val shapes: Seq[(String, DataFrame => DataFrame)] =
+    Seq("local" -> identity, "on disk" -> RawBatches.onDisk)
+
+  private def taskBatch(batch: DataFrame, m: Metrics, s: DerbyStore = store): Unit =
+    bounded(Observed.taskBatch(batch, DerbyDialect, s.cf, s.loadDim(spark),
+      s.loadEmployees(spark), m))
 
   test("tallies count raw rows, duplicates included, from the write pass") {
-    val m = new Metrics
-    val dup = RawBatches.employee(2, "b", "not-an-email")
-    bounded(Observed.employeeBatch(RawBatches.employees(spark,
-      RawBatches.employee(1, "a", "a@example.com"), dup, dup), DerbyDialect, store.cf, m))
-    assert(m.counterValue("hephaestus_items_parsed_total", "type" -> "employee") == 3.0)
-    assert(m.counterValue("hephaestus_emails_fixed_total") == 2.0,
-      "every raw row with an invalid email counts, as the reference tallies")
-    assert(store.rows("SELECT id FROM employees ORDER BY id").map(_.head.toString) ==
-      Seq("1", "2"))
+    shapes.foreach { case (shape, as) =>
+      val m = new Metrics
+      val dup = RawBatches.employee(2, "b", "not-an-email")
+      bounded(Observed.employeeBatch(as(RawBatches.employees(spark,
+        RawBatches.employee(1, "a", "a@example.com"), dup, dup)), DerbyDialect, store.cf, m))
+      assert(m.counterValue("hephaestus_items_parsed_total", "type" -> "employee") == 3.0,
+        shape)
+      assert(m.counterValue("hephaestus_emails_fixed_total") == 2.0,
+        s"$shape: every raw row with an invalid email counts, as the reference tallies")
+      assert(store.rows("SELECT id FROM employees ORDER BY id").map(_.head.toString) ==
+        Seq("1", "2"), shape)
 
-    val t = RawBatches.task(7, "repair", "1 Main St", Seq("a"))
-    taskBatch(Seq(t, t, RawBatches.task(8, "repair", "2 Oak Ave", Seq("b"))), m)
-    assert(m.counterValue("hephaestus_items_parsed_total", "type" -> "task") == 3.0)
-    assert(m.counterValue("hephaestus_runs_total", "status" -> "success") == 2.0)
-    assert(store.rows("SELECT count(*) FROM task_executors").head.head.toString == "2")
+      val t = RawBatches.task(7, "repair", "1 Main St", Seq("a"))
+      taskBatch(as(RawBatches.tasks(spark, t, t,
+        RawBatches.task(8, "repair", "2 Oak Ave", Seq("b")))), m)
+      assert(m.counterValue("hephaestus_items_parsed_total", "type" -> "task") == 3.0, shape)
+      assert(m.counterValue("hephaestus_runs_total", "status" -> "success") == 2.0, shape)
+      assert(store.rows("SELECT count(*) FROM task_executors").head.head.toString == "2",
+        shape)
+    }
   }
 
   test("an empty batch records zero tallies and a success run") {
-    val m = new Metrics
-    bounded(Observed.employeeBatch(RawBatches.employees(spark), DerbyDialect, store.cf, m))
-    taskBatch(Nil, m)
-    assert(m.counterValue("hephaestus_items_parsed_total", "type" -> "employee") == 0.0)
-    assert(m.counterValue("hephaestus_items_parsed_total", "type" -> "task") == 0.0)
-    assert(m.counterValue("hephaestus_emails_fixed_total") == 0.0)
-    assert(m.counterValue("hephaestus_runs_total", "status" -> "success") == 2.0)
+    shapes.foreach { case (shape, as) =>
+      val m = new Metrics
+      bounded(Observed.employeeBatch(as(RawBatches.employees(spark)), DerbyDialect,
+        store.cf, m))
+      taskBatch(as(RawBatches.tasks(spark)), m)
+      assert(m.counterValue("hephaestus_items_parsed_total", "type" -> "employee") == 0.0,
+        shape)
+      assert(m.counterValue("hephaestus_items_parsed_total", "type" -> "task") == 0.0, shape)
+      assert(m.counterValue("hephaestus_emails_fixed_total") == 0.0, shape)
+      assert(m.counterValue("hephaestus_runs_total", "status" -> "success") == 2.0, shape)
+    }
   }
 
   test("a task sink failing inside the write records a failure run and rethrows") {
     val broken = DerbyStore.create("obsbroken")
     broken.exec("DROP TABLE tasks") // the type is created, then the fact MERGE fails
-    val m = new Metrics
-    intercept[Exception] {
-      taskBatch(Seq(RawBatches.task(9, "repair", "1 Main St", Seq("a"))), m, broken)
+    shapes.foreach { case (shape, as) =>
+      val m = new Metrics
+      intercept[Exception] {
+        taskBatch(as(RawBatches.tasks(spark, RawBatches.task(9, "repair", "1 Main St",
+          Seq("a")))), m, broken)
+      }
+      assert(m.counterValue("hephaestus_runs_total", "status" -> "failure") == 1.0, shape)
+      assert(m.counterValue("hephaestus_runs_total", "status" -> "success") == 0.0, shape)
     }
-    assert(m.counterValue("hephaestus_runs_total", "status" -> "failure") == 1.0)
-    assert(m.counterValue("hephaestus_runs_total", "status" -> "success") == 0.0)
   }
 }

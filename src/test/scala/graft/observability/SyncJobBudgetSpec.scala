@@ -1,27 +1,39 @@
 package graft.observability
 
+import java.sql.Timestamp
 import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.ListenerDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.types.StructType
 
 import graft.SparkSpec
-import graft.sinks.{DerbyDialect, DerbyStore}
+import graft.models.Schemas
+import graft.sinks.{DerbyDialect, DerbyStore, JdbcMergeWriter, MergeSpecs}
 import graft.streaming.RawBatches
 
 /** Spark jobs per instrumented sync batch. A small batch pays a fixed
-  * cost per job, so the job count is the batch's latency budget. The
-  * employee batch runs the dedup shuffle and the MERGE pass; its
-  * tallies ride on those jobs. The task batch runs the dedup shuffle
-  * and the write pass, which also resolves the task types and
-  * rewrites the bridge; its dimension and employee snapshots are read
-  * and broadcast on the driver without a job.
+  * cost per job, so the job count is the batch's latency budget.
+  *  - A driver-resident batch (a local frame, as a polled snapshot is)
+  *    runs none: the sink collects its projected rows without a job,
+  *    deduplicates and tallies them on the driver and runs the writer
+  *    function there. That holds for the employee batch, the task batch
+  *    (its dimension and employee snapshots are read into maps on the
+  *    driver without a job) and the backfill's watermark upsert.
+  *  - A distributed batch (read back from parquet, as a file-source
+  *    micro-batch is) runs the A4 dedup shuffle and the write pass; its
+  *    tallies ride on those jobs.
   */
 class SyncJobBudgetSpec extends SparkSpec {
   import RawBatches.{employee, task}
 
-  test("at most 2 jobs per employee batch and 2 per task batch") {
+  test("0 jobs per driver-resident batch, at most 2 per distributed batch") {
     val store = DerbyStore.create("budgetdb")
+    store.exec("""CREATE TABLE scraper_status (id INT PRIMARY KEY,
+      last_processed_date TIMESTAMP, updated_at TIMESTAMP DEFAULT CURRENT_TIMESTAMP)""")
     val sc = spark.sparkContext
     val jobs = new AtomicInteger
     val listener = new SparkListener {
@@ -40,21 +52,39 @@ class SyncJobBudgetSpec extends SparkSpec {
     def tasks(address: String) = RawBatches.tasks(spark,
       (1L to 40L).map(i => task(i, s"type-${i % 4}", if (i == 5) address else s"$i Main St",
         Seq(s"sn${i % 30}", s"sn${i % 7}", "unknown"))): _*)
-    def taskBatch(address: String): Unit =
-      Observed.taskBatch(tasks(address), DerbyDialect, store.cf,
+    def employeeBatch(batch: DataFrame): Unit =
+      Observed.employeeBatch(batch, DerbyDialect, store.cf, m)
+    def taskBatch(batch: DataFrame): Unit =
+      Observed.taskBatch(batch, DerbyDialect, store.cf,
         store.loadDim(spark), store.loadEmployees(spark), m)
+    def watermark(day: String): Unit = JdbcMergeWriter.upsert(
+      spark.createDataFrame(Seq(Row(1, Timestamp.valueOf(day))).asJava,
+        StructType(Schemas.scraperStatusTable.fields.take(2))),
+      MergeSpecs.scraperStatus, DerbyDialect, store.cf)
+    // written to parquet before the count starts: the write runs jobs
+    val (onDiskEmployees, onDiskTasks) =
+      (RawBatches.onDisk(employees("worst")), RawBatches.onDisk(tasks("3 New Rd")))
     sc.addSparkListener(listener)
     try {
-      val counts = Seq(
-        "employee insert" -> jobsOf(Observed.employeeBatch(employees("bad"), DerbyDialect,
-          store.cf, m)),
-        "employee update" -> jobsOf(Observed.employeeBatch(employees("worse"), DerbyDialect,
-          store.cf, m)),
-        "task insert" -> jobsOf(taskBatch("1 New Rd")),
-        "task update" -> jobsOf(taskBatch("2 New Rd")))
-      val over = counts.filter { case (_, n) => n > 2 }
-      assert(over.isEmpty, s"job budget exceeded: $counts")
+      val resident = Seq(
+        "employee insert" -> jobsOf(employeeBatch(employees("bad"))),
+        "employee update" -> jobsOf(employeeBatch(employees("worse"))),
+        "task insert" -> jobsOf(taskBatch(tasks("1 New Rd"))),
+        "task update" -> jobsOf(taskBatch(tasks("2 New Rd"))),
+        "watermark insert" -> jobsOf(watermark("2024-01-02 00:00:00")),
+        "watermark update" -> jobsOf(watermark("2024-01-03 00:00:00")))
+      assert(resident.forall(_._2 == 0), s"a driver-resident batch ran jobs: $resident")
+      val distributed = Seq(
+        "employee" -> jobsOf(employeeBatch(onDiskEmployees)),
+        "task" -> jobsOf(taskBatch(onDiskTasks)))
+      assert(distributed.forall { case (_, n) => n >= 1 && n <= 2 },
+        s"a distributed batch ran no job or exceeded 2: $distributed")
     } finally sc.removeSparkListener(listener)
     assert(store.rows("SELECT count(*) FROM tasks").head.head.toString == "40")
+    assert(store.rows("SELECT address FROM tasks WHERE task_id = 5") == Vector(Vector("3 New Rd")))
+    assert(store.rows("SELECT email FROM employees WHERE id = 3").head.head.toString
+      .endsWith("@placeholder.local"))
+    assert(store.rows("SELECT last_processed_date FROM scraper_status") ==
+      Vector(Vector(Timestamp.valueOf("2024-01-03 00:00:00"))))
   }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 
 import graft.SparkSpec
-import graft.streaming.Pipelines
+import graft.streaming.{Pipelines, RawBatches}
 
 /** Integration test of the MERGE sink against a real JDBC store
   * (in-memory Derby, same JVM as local-mode executors) — the analogue
@@ -288,18 +288,6 @@ class JdbcDerbySpec extends SparkSpec {
     assert(counts(9999L) == ((1L, 1L)), "untouched group intact")
   }
 
-  test("sink accumulators record rows/transactions from the executors") {
-    init
-    val m = new JdbcMergeWriter.SinkMetrics(spark.sparkContext)
-    JdbcMergeWriter.upsert(
-      employeeDf((50L, "Acc One", "x@example.com"), (51L, "Acc Two", "y@example.com"))
-        .repartition(2),
-      empSpec, DerbyDialect, cf, Some(m))
-    assert(m.rowsWritten.value == 2L)
-    assert(m.partitionsTouched.value >= 1L && m.partitionsTouched.value <= 2L)
-    assert(m.txnNanos.value > 0L)
-  }
-
   test("employee pipeline batch end-to-end: transform + repair + MERGE") {
     init
     exec("DELETE FROM employees")
@@ -315,5 +303,20 @@ class JdbcDerbySpec extends SparkSpec {
     assert(rows.map(_._1) == Seq(7L, 8L))
     assert(rows(0)._2 == "v@example.com")
     assert(rows(1)._2.endsWith("@placeholder.local"), "invalid email repaired")
+  }
+
+  test("A4: a repeated id keeps its last delivered row, local or distributed") {
+    init
+    val raw = RawBatches.employees(spark,
+      RawBatches.employee(9L, "x", "first@example.com"),
+      RawBatches.employee(10L, "y", "y@example.com"),
+      RawBatches.employee(9L, "x", "last@example.com"))
+    Seq("local" -> raw, "on disk" -> RawBatches.onDisk(raw)).foreach { case (shape, batch) =>
+      exec("DELETE FROM employees")
+      Pipelines.employeeBatch(batch, DerbyDialect, cf)
+      assert(query1("SELECT id, email FROM employees ORDER BY id")(r =>
+        (r.getLong(1), r.getString(2))) == Seq((9L, "last@example.com"), (10L, "y@example.com")),
+        s"$shape: the reference applies rows in order, so the last one wins")
+    }
   }
 }

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import java.nio.file.Files
 import java.sql.Timestamp
 
 import scala.jdk.CollectionConverters._
@@ -9,7 +10,10 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import graft.models.Schemas
 
 /** Upstream batches as the pipelines receive them (`Schemas.task`,
-  * `Schemas.employee`), for tests that drive whole batches.
+  * `Schemas.employee`), for tests that drive whole batches. `tasks`
+  * and `employees` build local frames, which the sink writes on the
+  * driver; [[onDisk]] turns one into a distributed frame, which it
+  * writes from the executors.
   */
 object RawBatches {
   val Created: Timestamp = Timestamp.valueOf("2024-01-02 10:00:00")
@@ -31,4 +35,14 @@ object RawBatches {
 
   def employees(spark: SparkSession, rows: Row*): DataFrame =
     spark.createDataFrame(rows.asJava, Schemas.employee)
+
+  /** `batch` written to one parquet file, in delivery order, and read
+    * back: a frame whose plan is a file scan, as a file-source
+    * micro-batch's is.
+    */
+  def onDisk(batch: DataFrame): DataFrame = {
+    val dir = Files.createTempDirectory("graft-rawbatch").resolve("batch").toString
+    batch.coalesce(1).write.parquet(dir)
+    batch.sparkSession.read.schema(batch.schema).parquet(dir)
+  }
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 
 import graft.SparkSpec
-import graft.sinks.{DerbyDialect, DerbyStore, TestConnections}
+import graft.sinks.{DerbyDialect, DerbyStore, JdbcMergeWriter, MergeSpecs, TestConnections}
 
 /** The task pipeline batch end to end against Derby: dimension
   * get-or-create (K4), the task MERGE with geocoding preservation (K3)
@@ -49,6 +49,12 @@ class TaskPipelineSpec extends SparkSpec {
     try body finally spark.conf.set(key, saved)
   }
 
+  /** The partitions the sink writes a distributed task batch from: the
+    * projected tasks after the A4 dedup's shuffle.
+    */
+  private def written(batch: DataFrame): DataFrame =
+    JdbcMergeWriter.lastPerKey(Pipelines.transformTasks(batch), MergeSpecs.tasks.keyCols)
+
   private def typeOf: Map[Long, String] =
     store.rows("""SELECT t.task_id, tt.type_name FROM tasks t
         LEFT JOIN task_types tt ON t.task_type_id = tt.type_id""")
@@ -77,11 +83,11 @@ class TaskPipelineSpec extends SparkSpec {
 
   test("task types: new names met by every partition at once get one row each (K4)") {
     fresh()
-    val batch = RawBatches.tasks(spark, (1L to 400L).map(i =>
-      task(i, if (i % 2 == 0) "alpha" else "beta", s"$i Main St", Seq("ann"))): _*)
+    val batch = RawBatches.onDisk(RawBatches.tasks(spark, (1L to 400L).map(i =>
+      task(i, if (i % 2 == 0) "alpha" else "beta", s"$i Main St", Seq("ann"))): _*))
     TestConnections.rollbacks.set(0)
     uncoalesced {
-      val names = Pipelines.transformTasks(batch).rdd
+      val names = written(batch).rdd
         .mapPartitions(it => Iterator(it.map(_.getAs[String]("type_name")).toSet))
         .collect().filter(_.nonEmpty)
       assert(names.length >= 4 && names.forall(_ == Set("alpha", "beta")),
@@ -188,9 +194,9 @@ class TaskPipelineSpec extends SparkSpec {
     runTasks(ids.map(i => task(i, s"type-${i % 3}", s"$i Main St", Seq("zed"))): _*)
     // uncoalesced, each partition holds more than one 500-row chunk
     uncoalesced {
-      val batch = RawBatches.tasks(spark,
-        ids.map(i => task(i, s"type-${i % 3}", s"$i Main St", Seq("ann", "cat"))): _*)
-      val sizes = Pipelines.transformTasks(batch).rdd.mapPartitions(it => Iterator(it.size))
+      val batch = RawBatches.onDisk(RawBatches.tasks(spark,
+        ids.map(i => task(i, s"type-${i % 3}", s"$i Main St", Seq("ann", "cat"))): _*))
+      val sizes = written(batch).rdd.mapPartitions(it => Iterator(it.size))
         .collect().filter(_ > 0)
       assert(sizes.length >= 2 && sizes.count(_ > 500) >= 2,
         s"expected at least two partitions past one chunk: ${sizes.toSeq}")
