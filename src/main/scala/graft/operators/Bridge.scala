@@ -40,10 +40,11 @@ object Bridge {
       .select(col(taskIdCol), col(shortnameCol), col("executor_id"))
   }
 
-  /** Driver-side J1 index for the sink's fused bridge rewrite
+  /** Driver-side J1 index for the sink's fused bridge write
     * (`JdbcMergeWriter.upsertWithBridge`): shortname → the id of every
     * employee with that shortname. Employees is a dimension, so it is
-    * collected once per batch and broadcast, like the join above.
+    * collected once per batch into a plain map the sink's writer
+    * function closes over.
     */
   def shortnameIndex(employees: DataFrame, empIdCol: String,
       shortnameCol: String): Map[String, Seq[Any]] =

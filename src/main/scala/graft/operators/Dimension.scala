@@ -72,7 +72,8 @@ object Dimension {
   /** Driver-side name → id index of a store dimension, for the sink's
     * dimension lookups (`JdbcMergeWriter.DimensionSpec.known`). A
     * dimension is small by definition, so it is collected once per
-    * batch and broadcast, like `Bridge.shortnameIndex`.
+    * batch into a plain map the sink's writer function closes over,
+    * like `Bridge.shortnameIndex`.
     */
   def index(dim: DataFrame, idCol: String, nameCol: String): Map[String, Any] =
     dim.select(col(nameCol), col(idCol)).collect()

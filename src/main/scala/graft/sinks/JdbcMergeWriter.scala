@@ -40,14 +40,16 @@ import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructT
   *
   * [[upsertWithBridge]] writes a fact table with its dimension (K4)
   * and its bridge table (K5) in the same pass, in K7 order within
-  * every chunk: dimension → fact → DELETE → INSERT. A fact row's
-  * dimension name resolves through the driver's snapshot; a name the
-  * snapshot lacks is created on a separate autocommit connection, so a
-  * new dimension row commits at once and is never held across a fact
-  * transaction. The fact rows are key-unique, so each one owns its
-  * bridge group and the partition holding the fact row holds the whole
-  * group: the group's DELETE + INSERT commit atomically with the fact
-  * row — an idempotent group overwrite.
+  * every chunk: dimension → fact → read of the stored groups → DELETE
+  * and INSERT of the changed groups. A fact row's dimension name
+  * resolves through the driver's snapshot; a name the snapshot lacks
+  * is created on a separate autocommit connection, so a new dimension
+  * row commits at once and is never held across a fact transaction.
+  * The fact rows are key-unique, so each one owns its bridge group and
+  * the partition holding the fact row holds the whole group: a group
+  * whose members changed is replaced in the fact row's transaction,
+  * and one whose members did not is left unwritten — either way a
+  * replay leaves the group as it is.
   */
 object JdbcMergeWriter {
 
@@ -280,18 +282,36 @@ object JdbcMergeWriter {
   }
 
   /** Fact MERGE fused with the dimension it names and the bridge
-    * rewrite it owns (K4, K3 and K5, in K7 order).
+    * groups it owns (K4, K3 and K5, in K7 order).
     *
     * One pass and one transaction per partition, or one of each on the
     * driver for a local batch. Per `BatchSize` chunk of fact rows: the
     * names the dimension snapshot lacks are created ([[DimensionIds]],
-    * committed outside the transaction), then the chunk's MERGE, the
-    * batched DELETE of the chunk's keys, then the batched INSERT of
-    * their members — so a bridge row is only ever written after its
-    * fact row, in the same transaction. The writer gets one fact row
-    * per key (A4): each fact row owns its whole group, so a group never
-    * spans partitions and no repartition is needed to keep groups
-    * whole.
+    * committed outside the transaction), then the chunk's MERGE, then
+    * one read of the chunk's stored groups, then the DELETE and INSERT
+    * of the groups that changed — so a bridge row is only ever written
+    * after its fact row, in the same transaction. The writer gets one
+    * fact row per key (A4): each fact row owns its whole group, so a
+    * group never spans partitions and no repartition is needed to keep
+    * groups whole.
+    *
+    * A group is rewritten only when its stored members differ from the
+    * fact row's `members` as a multiset: order does not count, repeats
+    * and NULL members do. An unchanged group is not written at all (the
+    * reference's skip-if-identical, T6, carried to K5; the reference
+    * itself rewrites every group, task.go:125-151); a group with no
+    * stored rows gets its INSERTs and no DELETE. The fact MERGE still
+    * re-stamps every fact row, so the store ends as a full rewrite
+    * would leave it, and a replay writes nothing new (idempotent).
+    * Members and keys compare with Scala's `==`, so an `Int` id equals
+    * the same id read back as a `Long`.
+    *
+    * The read is race-free: it runs after the chunk's fact MERGE, and
+    * every writer of a group locks the group's fact row first, so no
+    * other transaction can change the group between the read and this
+    * transaction's commit. So the read must never wait on other
+    * transactions' locks: on Postgres a plain read does not (MVCC);
+    * Derby reads uncommitted (see `DerbyDialect.readGroupsSql`).
     *
     * The DELETE binds one key per statement: with an index on the key,
     * each one touches only its own group's rows, so concurrent
@@ -315,15 +335,22 @@ object JdbcMergeWriter {
             it.grouped(BatchSize).foreach { facts =>
               val chunk = facts.map(ids.bind)
               mergeRows(chunk.iterator, plan, conn)
-              chunk.foreach { r =>
-                setParam(del, 1, r.getAs[Any](bridge.keyCol), conn)
-                del.addBatch()
-              }
-              del.executeBatch()
-              var pending = 0
-              chunk.foreach { r =>
+              val stored = storedGroups(conn, dialect.readGroupsSql(bridge.table,
+                bridge.keyCol, bridge.valueCol, chunk.size), chunk.map(_.getAs[Any](bridge.keyCol)))
+              val changed = chunk.flatMap { r =>
                 val k = r.getAs[Any](bridge.keyCol)
-                bridge.members(r).foreach { v =>
+                val members = bridge.members(r)
+                val old = stored.getOrElse(k, Map.empty[Any, Int])
+                if (multiset(members) == old) None else Some((k, members, old.nonEmpty))
+              }
+              val stale = changed.collect { case (k, _, true) => k }
+              if (stale.nonEmpty) {
+                stale.foreach { k => setParam(del, 1, k, conn); del.addBatch() }
+                del.executeBatch()
+              }
+              var pending = 0
+              changed.foreach { case (k, members, _) =>
+                members.foreach { v =>
                   setParam(ins, 1, k, conn)
                   setParam(ins, 2, v, conn)
                   ins.addBatch()
@@ -338,4 +365,23 @@ object JdbcMergeWriter {
       }
     }
   }
+
+  /** The stored members of each of `keys`' groups, as a multiset per
+    * group key; a group with no rows is absent.
+    */
+  private def storedGroups(conn: Connection, sql: String,
+      keys: Seq[Any]): Map[Any, Map[Any, Int]] = {
+    val ps = conn.prepareStatement(sql)
+    try {
+      keys.zipWithIndex.foreach { case (k, i) => setParam(ps, i + 1, k, conn) }
+      val rs = ps.executeQuery()
+      val rows = Vector.newBuilder[(Any, Any)]
+      try while (rs.next()) rows += (rs.getObject(1) -> rs.getObject(2))
+      finally rs.close()
+      rows.result().groupMap(_._1)(_._2).view.mapValues(multiset).toMap
+    } finally ps.close()
+  }
+
+  private def multiset(values: Iterable[Any]): Map[Any, Int] =
+    values.groupMapReduce(identity)(_ => 1)(_ + _)
 }

@@ -37,11 +37,20 @@ trait SqlDialect extends Serializable {
   def insertIgnorePlan(table: String, cols: Seq[String],
       conflictCols: Seq[String]): MergePlan
 
-  /** DELETE of all rows whose group key is in the incoming batch —
-    * first half of the bridge-table overwrite (task.go:132).
+  /** DELETE of all rows of `n` groups — the first half of a changed
+    * bridge group's overwrite (task.go:132).
     */
   def deleteGroupsSql(table: String, groupCol: String, n: Int): String =
     s"DELETE FROM $table WHERE $groupCol IN (${Seq.fill(n)("?").mkString(", ")})"
+
+  /** The stored rows of `n` groups, as (group key, member) pairs — the
+    * read that lets the bridge writer skip a group whose members are
+    * unchanged. It runs after the fact rows owning the groups are
+    * locked, so it must not wait on other transactions' locks; a
+    * dialect whose plain read can wait adds an isolation clause.
+    */
+  def readGroupsSql(table: String, groupCol: String, valueCol: String, n: Int): String =
+    s"SELECT $groupCol, $valueCol FROM $table WHERE $groupCol IN (${Seq.fill(n)("?").mkString(", ")})"
 
   def insertSql(table: String, cols: Seq[String]): String =
     s"INSERT INTO $table (${cols.mkString(", ")}) VALUES (${Seq.fill(cols.size)("?").mkString(", ")})"
@@ -135,4 +144,14 @@ object DerbyDialect extends SqlDialect {
       s"SELECT 1 FROM $table WHERE ${conflictCols.map(k => s"$k = ?").mkString(" AND ")}",
       conflictCols,
       insertSql(table, cols), cols)
+
+  /** `WITH UR`: Derby's READ COMMITTED scan waits on every uncommitted
+    * row it meets, including other partitions' uncommitted rows of
+    * other groups, and two such scans deadlock. An uncommitted read
+    * takes no locks, and the groups it returns are owned by fact rows
+    * this transaction has already locked.
+    */
+  override def readGroupsSql(table: String, groupCol: String, valueCol: String,
+      n: Int): String =
+    super.readGroupsSql(table, groupCol, valueCol, n) + " WITH UR"
 }

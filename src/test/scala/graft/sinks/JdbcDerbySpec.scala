@@ -2,6 +2,9 @@ package graft.sinks
 
 import java.sql.{DriverManager, SQLException, Timestamp}
 
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
+
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 
@@ -214,6 +217,57 @@ class JdbcDerbySpec extends SparkSpec {
       r => (r.getLong(1), r.getString(2))) == Seq((100L, "Main St"), (101L, "Oak Ave")))
     assert(bridgeRows() == Seq((100L, None), (100L, Some(9L)), (200L, Some(3L))),
       "100 rewritten with its NULL member, 101 emptied, untouched 200 intact")
+  }
+
+  test("upsertWithBridge: an Int member equals its stored BIGINT, so a replay writes no bridge row") {
+    init
+    exec("DELETE FROM tasks")
+    exec("DELETE FROM task_executors")
+    val incoming = Seq((110L, "Elm St", "TypeA", Seq(Some(7), None)))
+      .toDF("task_id", "address", "type_name", "members")
+    upsertWithBridge(incoming)
+    TestConnections.statements.clear()
+    upsertWithBridge(incoming, via = TestConnections.countingStatements(cf))
+    assert(TestConnections.ran("SELECT task_id, executor_id FROM task_executors") == 1)
+    assert(TestConnections.ran("DELETE") + TestConnections.ran("INSERT INTO task_executors") == 0)
+    assert(bridgeRows() == Seq((110L, None), (110L, Some(7L))))
+  }
+
+  test("Derby's group read runs uncommitted and never waits on another writer's rows") {
+    init
+    // no index: the read is a heap scan over every row, as in a store
+    // without an index on the group key
+    exec("CREATE TABLE groups_unindexed (g BIGINT, v BIGINT)")
+    exec("INSERT INTO groups_unindexed VALUES (1, 10), (1, NULL), (1, 10), (2, 20)")
+    val sql = DerbyDialect.readGroupsSql("groups_unindexed", "g", "v", 2)
+    assert(sql == "SELECT g, v FROM groups_unindexed WHERE g IN (?, ?) WITH UR")
+    val writer = conn()
+    writer.setAutoCommit(false)
+    writer.createStatement().execute("INSERT INTO groups_unindexed VALUES (3, 30)")
+    def read(sql: String): Future[Seq[(Long, Option[Long])]] = Future {
+      val c = conn()
+      try {
+        c.setAutoCommit(false)
+        val ps = c.prepareStatement(sql)
+        ps.setLong(1, 1L)
+        ps.setLong(2, 2L)
+        val rs = ps.executeQuery()
+        val out = Iterator.continually(rs).takeWhile(_.next())
+          .map(r => (r.getLong(1), Option(r.getObject(2)).map(_.toString.toLong))).toVector
+        c.commit()
+        out.sortBy { case (g, v) => (g, v.getOrElse(-1L)) }
+      } finally c.close()
+    }(ExecutionContext.global)
+    try {
+      assert(Await.result(read(sql), 30.seconds) ==
+        Seq((1L, None), (1L, Some(10L)), (1L, Some(10L)), (2L, Some(20L))),
+        "every stored row of the two groups, repeats and NULLs included")
+      val plain = read(sql.stripSuffix(" WITH UR"))
+      Thread.sleep(1000)
+      assert(!plain.isCompleted, "a READ COMMITTED scan waits on the uncommitted row")
+      writer.rollback()
+      Await.ready(plain, 30.seconds)
+    } finally { writer.rollback(); writer.close(); exec("DROP TABLE groups_unindexed") }
   }
 
   test("MERGE null transitions: NULL→value and value→NULL update, NULL=NULL skips") {

@@ -14,7 +14,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *    app-side identical-skip (employees.go:111-114) pushed into WHERE
   *  - K3 conditional geo-preserve upsert → task.go:81-113
   *  - K4 dimension insert-if-absent → task.go:25-29
-  *  - K5 bridge delete+insert → task.go:132-140
+  *  - K5 bridge delete+insert → task.go:132-140, and the stored-group
+  *    read that skips an unchanged group (the reference rewrites all)
   *  - K6 watermark upsert → scraper_status.go:16-19
   */
 class PostgresDialectSpec extends AnyFunSuite {
@@ -82,6 +83,11 @@ class PostgresDialectSpec extends AnyFunSuite {
       "DELETE FROM task_executors WHERE task_id IN (?, ?, ?)")
     assert(PostgresDialect.insertSql("task_executors", Seq("task_id", "executor_id")) ==
       "INSERT INTO task_executors (task_id, executor_id) VALUES (?, ?)")
+  }
+
+  test("K5: stored-group read — one IN-list SELECT, no isolation clause") {
+    assert(PostgresDialect.readGroupsSql("task_executors", "task_id", "executor_id", 3) ==
+      "SELECT task_id, executor_id FROM task_executors WHERE task_id IN (?, ?, ?)")
   }
 
   test("K6: watermark upsert — single-row ON CONFLICT DO UPDATE") {

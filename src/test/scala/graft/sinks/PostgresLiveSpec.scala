@@ -190,6 +190,9 @@ class PostgresLiveSpec extends AnyFunSuite with BeforeAndAfterAll {
     psql(bind(ins, Seq(1, 100)))
     psql(bind(ins, Seq(1, 101)))
     psql(bind(ins, Seq(2, 200)))
+    val read = PostgresDialect.readGroupsSql("task_executors", "task_id", "executor_id", 3)
+    assert(psql(bind(read, Seq(1, 2, 3))).trim.linesIterator.toSeq.sorted ==
+      Seq("1|100", "1|101", "2|200"), "the stored groups; an absent one reads no row")
     psql(bind(PostgresDialect.deleteGroupsSql("task_executors", "task_id", 1), Seq(1)))
     psql(bind(ins, Seq(1, 102)))
     assert(psql(

@@ -2,9 +2,11 @@ package graft.sinks
 
 import java.lang.reflect.{InvocationHandler, InvocationTargetException, Method, Proxy}
 import java.sql.{Connection, PreparedStatement, SQLException, Statement}
+import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicInteger
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 import graft.sinks.JdbcMergeWriter.ConnFactory
 
@@ -51,6 +53,36 @@ object TestConnections {
       call(c, m, args)
     }
   }
+
+  /** The SQL of each prepared statement run on connections of
+    * [[countingStatements]], once per run: once per `addBatch` when
+    * batched, else once per execute.
+    */
+  val statements = new ConcurrentLinkedQueue[String]
+
+  /** Statements of [[statements]] whose SQL starts with `prefix`. */
+  def ran(prefix: String): Int = statements.asScala.count(_.startsWith(prefix))
+
+  /** Connections of `cf` that record their prepared statements' runs
+    * in [[statements]].
+    */
+  def countingStatements(cf: ConnFactory): ConnFactory = () => {
+    val c = cf()
+    proxy(classOf[Connection]) { (m, args) =>
+      val target = call(c, m, args)
+      if (m.getName == "prepareStatement") counted(target.asInstanceOf[PreparedStatement],
+        args(0).toString)
+      else target
+    }
+  }
+
+  private val Runs = Set("addBatch", "execute", "executeQuery", "executeUpdate")
+
+  private def counted(ps: PreparedStatement, sql: String): PreparedStatement =
+    proxy(classOf[PreparedStatement]) { (m, args) =>
+      if (Runs(m.getName)) statements.add(sql)
+      call(ps, m, args)
+    }
 
   /** Connections of `cf` on which every INSERT into `table` loses a
     * race: just before it runs, the same row is inserted and committed

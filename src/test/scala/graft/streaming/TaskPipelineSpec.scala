@@ -28,6 +28,19 @@ class TaskPipelineSpec extends SparkSpec {
   private def runTasks(rows: org.apache.spark.sql.Row*): Unit =
     run(RawBatches.tasks(spark, rows: _*))
 
+  /** Runs `batch` and returns the bridge statements it ran:
+    * (DELETEs, INSERTs) against task_executors.
+    */
+  private def bridgeWrites(batch: DataFrame): (Int, Int) = {
+    TestConnections.statements.clear()
+    Pipelines.taskBatch(batch, DerbyDialect, TestConnections.countingStatements(store.cf),
+      store.loadDim(spark), store.loadEmployees(spark))
+    (TestConnections.ran("DELETE FROM task_executors"),
+      TestConnections.ran("INSERT INTO task_executors"))
+  }
+
+  private def tasks(rows: org.apache.spark.sql.Row*): DataFrame = RawBatches.tasks(spark, rows: _*)
+
   /** (task_id, executor_id) bridge rows, NULL as None, sorted. */
   private def bridge(): Seq[(Long, Option[Long])] =
     store.rows("SELECT task_id, executor_id FROM task_executors")
@@ -146,6 +159,63 @@ class TaskPipelineSpec extends SparkSpec {
     assert(bridge() == Seq((30L, Some(2L)), (31L, Some(2L))))
     runTasks(task(30, "repair", "a", Seq.empty))
     assert(bridge() == Seq((31L, Some(2L))))
+  }
+
+  test("a reordered group is not written and the store is unchanged (K5)") {
+    fresh()
+    runTasks(task(60, "repair", "a", Seq("ann", "bob", "cat")))
+    val before = bridge()
+    assert(bridgeWrites(tasks(task(60, "repair", "a", Seq("cat", "bob", "ann")))) == ((0, 0)),
+      "same members in another order: no DELETE, no INSERT")
+    assert(bridge() == before)
+  }
+
+  test("a shrinking and an emptied group lose their stale rows in one batch (K5)") {
+    fresh()
+    runTasks(task(61, "repair", "a", Seq("ann", "bob", "cat")),
+      task(62, "repair", "b", Seq("ann", "bob")),
+      task(63, "repair", "c", Seq("bob")))
+    assert(bridgeWrites(tasks(task(61, "repair", "a", Seq("bob")),
+      task(62, "repair", "b", Seq.empty),
+      task(63, "repair", "c", Seq("bob")))) == ((2, 1)),
+      "two groups deleted, one member re-inserted, the unchanged group not written")
+    assert(bridge() == Seq((61L, Some(2L)), (63L, Some(2L))))
+  }
+
+  test("an unknown executor's NULL row becomes the id of the employee hired under the name (J1)") {
+    fresh()
+    val t = task(64, "repair", "a", Seq("ann", "dan"))
+    runTasks(t)
+    assert(bridge() == Seq((64L, None), (64L, Some(1L))))
+    store.exec("INSERT INTO employees (id, fullname, shortname) VALUES (5, 'Dan', 'dan')")
+    assert(bridgeWrites(tasks(t)) == ((1, 2)), "the same batch, resolved anew: rewritten")
+    assert(bridge() == Seq((64L, Some(1L)), (64L, Some(5L))))
+  }
+
+  test("a repeated executor counts: [ann, ann] then [ann] rewrites the group (K5)") {
+    fresh()
+    runTasks(task(65, "repair", "a", Seq("ann", "ann")))
+    assert(bridge() == Seq((65L, Some(1L)), (65L, Some(1L))))
+    assert(bridgeWrites(tasks(task(65, "repair", "a", Seq("ann")))) == ((1, 1)),
+      "the same set of members, but not the same multiset")
+    assert(bridge() == Seq((65L, Some(1L))))
+  }
+
+  test("bridge writes: none on an identical replay, one group's for one changed task") {
+    val first = tasks(task(66, "repair", "a", Seq("ann", "zed")),
+      task(67, "repair", "b", Seq("cat")), task(68, "repair", "c", Seq.empty))
+    val changed = tasks(task(66, "repair", "a", Seq("ann", "zed")),
+      task(67, "repair", "b", Seq("cat", "bob")), task(68, "repair", "c", Seq.empty))
+    Seq[(String, DataFrame => DataFrame)]("local" -> identity, "on disk" -> RawBatches.onDisk)
+      .foreach { case (shape, as) =>
+        fresh()
+        assert(bridgeWrites(as(first)) == ((0, 4)),
+          s"$shape: new groups are inserted with no DELETE")
+        assert(bridgeWrites(as(first)) == ((0, 0)), s"$shape: an identical replay writes nothing")
+        assert(bridgeWrites(as(changed)) == ((1, 3)), s"$shape: only task 67's group is rewritten")
+        assert(bridge() == Seq((66L, None), (66L, Some(1L)),
+          (67L, Some(2L)), (67L, Some(3L)), (67L, Some(4L))), shape)
+      }
   }
 
   test("duplicate task ids in one batch write one task and one bridge group (A4)") {
