@@ -14,9 +14,9 @@ import graft.streaming.Pipelines
   *
   * The tallies come from the write itself
   * ([[graft.sinks.JdbcMergeWriter.Tally]]): raw rows, duplicates
-  * included, and repaired emails over those raw rows — from the
-  * collected rows of a local batch, or from the write's own jobs for a
-  * distributed one. A failed write records none.
+  * included, and repaired emails over those raw rows — from the rows
+  * of a local batch as the driver evaluates them, or from the write's
+  * own jobs for a distributed one. A failed write records none.
   */
 object Observed {
 

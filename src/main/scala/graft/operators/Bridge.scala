@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.sources.LocalRows
+
 /** Join-table (bridge) rewrite — K5 + J1 in SURVEY.md §2.
   *
   * The reference rewrites `task_executors` per task: DELETE all rows
@@ -43,12 +45,13 @@ object Bridge {
   /** Driver-side J1 index for the sink's fused bridge write
     * (`JdbcMergeWriter.upsertWithBridge`): shortname → the id of every
     * employee with that shortname. Employees is a dimension, so it is
-    * collected once per batch into a plain map the sink's writer
-    * function closes over.
+    * read once per batch into a plain map the sink's writer function
+    * closes over: a driver-resident snapshot with no query
+    * (`LocalRows`), any other through `collect()`.
     */
   def shortnameIndex(employees: DataFrame, empIdCol: String,
       shortnameCol: String): Map[String, Seq[Any]] =
-    employees.select(col(shortnameCol), col(empIdCol)).collect().toSeq
+    LocalRows.collect(employees.select(col(shortnameCol), col(empIdCol)))
       .filterNot(_.isNullAt(0))
       .groupMap(_.getString(0))(_.get(1))
 

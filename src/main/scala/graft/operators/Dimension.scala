@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.sources.LocalRows
+
 /** Dimension get-or-create (K4,
   * /root/reference/internal/repository/task.go:13-45).
   *
@@ -71,12 +73,13 @@ object Dimension {
 
   /** Driver-side name → id index of a store dimension, for the sink's
     * dimension lookups (`JdbcMergeWriter.DimensionSpec.known`). A
-    * dimension is small by definition, so it is collected once per
-    * batch into a plain map the sink's writer function closes over,
-    * like `Bridge.shortnameIndex`.
+    * dimension is small by definition, so it is read once per batch
+    * into a plain map the sink's writer function closes over, like
+    * `Bridge.shortnameIndex`: a driver-resident snapshot with no query
+    * (`LocalRows`), any other through `collect()`.
     */
   def index(dim: DataFrame, idCol: String, nameCol: String): Map[String, Any] =
-    dim.select(col(nameCol), col(idCol)).collect()
+    LocalRows.collect(dim.select(col(nameCol), col(idCol)))
       .filterNot(_.isNullAt(0))
       .map(r => r.getString(0) -> r.get(1)).toMap
 }

@@ -6,10 +6,11 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, Observation, Row}
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions.{col, count, count_if, lit, max_by,
   monotonically_increasing_id, struct}
 import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
+
+import graft.sources.LocalRows
 
 /** JDBC MERGE writer — the `foreachBatch` body of the pipelines
   * (SURVEY.md §7.2: Spark's native jdbc writer can't MERGE, so this is
@@ -19,15 +20,18 @@ import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructT
   * writer function over an iterator of rows — open one connection,
   * prepare the statements once, stream the rows through inside a
   * single transaction — and [[writeBatch]] picks where it runs, by the
-  * batch's optimized plan:
-  *  - a `LocalRelation` (a batch the driver already holds, such as a
-  *    polled snapshot passed to `createDataFrame`) is collected once on
-  *    the driver and the writer function runs once over its rows. No
-  *    Spark job runs. The rows are a copy of a `Seq` the caller already
-  *    holds, so the driver memory this takes is bounded by what the
-  *    caller already holds;
-  *  - any other plan (a file-source micro-batch, a parquet read) runs
-  *    the writer function per partition on the executors, through
+  * batch's analyzed plan:
+  *  - a driver-resident batch (a `LocalRelation`, such as a polled
+  *    snapshot passed to `createDataFrame`, or one deterministic
+  *    projection of it, such as the pipelines' transforms) has its rows
+  *    evaluated on the driver by [[graft.sources.LocalRows]], and the
+  *    writer function runs once over them. No query is planned and no
+  *    Spark job runs. The rows are a projection of a `Seq` the caller
+  *    already holds, so the driver memory this takes is bounded by what
+  *    the caller already holds;
+  *  - any other plan (a file-source micro-batch, a parquet read, a
+  *    filter or a nondeterministic column over a local frame) runs the
+  *    writer function per partition on the executors, through
   *    `foreachPartition`.
   * No global transaction exists across partitions (neither does one in
   * the reference, which writes row-by-row); replay safety comes from
@@ -144,23 +148,23 @@ object JdbcMergeWriter {
   }
 
   /** Runs `write` over the last row per `keyCols` of `df`, in one of
-    * the two shapes of the object doc: once on the driver over the
-    * collected rows when the optimized plan is a `LocalRelation`, else
-    * once per partition through `foreachPartition`. Returns the tally
-    * of the rows as delivered; `flag` names a boolean column of `df`.
-    * On the driver the tally comes from the collected rows; on the
-    * executors it rides on the write's own jobs (`Dataset.observe`; a
-    * local batch is never observed, which would hide its
-    * `LocalRelation` and, with no job, never complete).
+    * the two shapes of the object doc, keyed on the analyzed plan: once
+    * on the driver over the rows `LocalRows.of` evaluates when `df` is
+    * driver-resident, with no query planned, else once per partition
+    * through `foreachPartition`. Returns the tally of the rows as
+    * delivered; `flag` names a boolean column of `df`. On the driver
+    * the tally comes from the evaluated rows; on the executors it rides
+    * on the write's own jobs (`Dataset.observe`; a driver-resident
+    * batch is never observed: with no job, the observation would never
+    * complete).
     */
   private def writeBatch(df: DataFrame, keyCols: Seq[String], flag: Option[String])(
       write: Iterator[Row] => Unit): Tally =
-    df.queryExecution.optimizedPlan match {
-      case _: LocalRelation =>
-        val rows = df.collect()
+    LocalRows.of(df) match {
+      case Some(rows) =>
         write(lastPerKey(rows, keyCols))
         Tally(rows.length, flag.fold(0L)(f => rows.count(_.getAs[Boolean](f)).toLong))
-      case _ =>
+      case None =>
         val seen = Observation()
         lastPerKey(df.observe(seen, count(lit(1)).as("rows"),
           count_if(flag.fold(lit(false))(col)).as("flagged")), keyCols).foreachPartition(write)
@@ -169,7 +173,7 @@ object JdbcMergeWriter {
     }
 
   /** The last of `rows` per key, in the order of each key's first row. */
-  private def lastPerKey(rows: Array[Row], keyCols: Seq[String]): Iterator[Row] =
+  private def lastPerKey(rows: Seq[Row], keyCols: Seq[String]): Iterator[Row] =
     if (rows.isEmpty) Iterator.empty
     else {
       val keys = keyCols.map(rows.head.fieldIndex)

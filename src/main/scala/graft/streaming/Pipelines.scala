@@ -12,17 +12,20 @@ import graft.sinks.JdbcMergeWriter.{BridgeSpec, ConnFactory, DimensionSpec, Tall
 
 /** The two reference pipelines re-expressed Spark-first
   * (SURVEY.md §3.1/§3.2): landing-zone payloads → declarative
-  * transforms (Catalyst-optimized) → idempotent JDBC MERGE in
-  * `foreachBatch`.
+  * transforms → idempotent JDBC MERGE in `foreachBatch`.
   *
   * Replaces the reference's per-row round-trips (1 SELECT + 1 write
   * per employee; ≥4 statements per task) with set-oriented MERGEs,
   * JDBC-batched per chunk of rows. A batch the driver already holds (a
   * polled snapshot) is projected and written on the driver with no
-  * Spark job; any other batch (the file-source streams) is written per
-  * partition from the executors — [[JdbcMergeWriter]] picks the shape
-  * from the batch's plan. Either way the sink keeps the last row per
-  * key in delivery order (A4).
+  * Spark job and no query planned: each transform is one projection of
+  * the raw rows, which the sink evaluates straight from the analyzed
+  * plan (`graft.sources.LocalRows`). Any other batch (the file-source
+  * streams) is planned as usual and written per partition from the
+  * executors — [[JdbcMergeWriter]] picks the shape from the batch's
+  * analyzed plan. The column definitions below are the one statement
+  * of each transform on both paths. Either way the sink keeps the last
+  * row per key in delivery order (A4).
   *
   * Ordering: employees before tasks within a cycle (executors resolve
   * against employees — main.go:85 encodes this with a sleep; here it
@@ -40,7 +43,8 @@ object Pipelines {
     * each repaired row. Phone is validated (T5) but not repaired —
     * reference behavior: invalid phones pass through untouched
     * (employees.go:199-212 only tallies). One projection, so over a
-    * local batch Spark folds it into the local rows (no job).
+    * local batch the sink evaluates it on the driver (no job, no
+    * query).
     */
   def transformEmployees(raw: DataFrame): DataFrame =
     raw.select(
@@ -81,7 +85,9 @@ object Pipelines {
 
   // ---- task pipeline (§3.2) -----------------------------------------------
 
-  /** T2 projection + T7 date normalization + T9 zero-time→NULL. */
+  /** T2 projection + T7 date normalization + T9 zero-time→NULL. One
+    * projection, as [[transformEmployees]] is.
+    */
   def transformTasks(raw: DataFrame): DataFrame =
     raw.select(
       col("id").cast("long").as("task_id"),
@@ -105,10 +111,11 @@ object Pipelines {
     *     group commits atomically with its fact row.
     *
     * The two snapshots are plain maps the writer function closes over,
-    * with no explicit broadcast: a local batch is written on the
-    * driver, and a distributed one ships them in its write stage's task
-    * binary, which Spark broadcasts once per stage. Returns the batch's
-    * raw row count.
+    * with no explicit broadcast, read without a query when the loaders
+    * return local frames: a local batch is written on the driver, and a
+    * distributed one ships them in its write stage's task binary, which
+    * Spark broadcasts once per stage. Returns the batch's raw row
+    * count.
     *
     * @param loadDim       reads current task_types (type_id, type_name)
     * @param loadEmployees reads current employees (id, shortname)

@@ -8,24 +8,29 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.ListenerDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkSpec
 import graft.models.Schemas
 import graft.sinks.{DerbyDialect, DerbyStore, JdbcMergeWriter, MergeSpecs}
 import graft.streaming.RawBatches
 
-/** Spark jobs per instrumented sync batch. A small batch pays a fixed
-  * cost per job, so the job count is the batch's latency budget.
+/** Spark jobs and query executions per instrumented sync batch. A
+  * small batch pays a fixed cost per job, and a fixed planning cost per
+  * query, so these counts are the batch's latency budget.
   *  - A distributed batch (read back from parquet, as a file-source
   *    micro-batch is) runs the A4 dedup shuffle and the write pass; its
   *    tallies ride on those jobs.
   *  - A driver-resident batch (a local frame, as a polled snapshot is)
-  *    runs none: the sink collects its projected rows without a job,
-  *    deduplicates and tallies them on the driver and runs the writer
+  *    runs no job and no query execution: the sink evaluates its
+  *    projected rows on the driver from the analyzed plan
+  *    (`graft.sources.LocalRows`), with no optimizer or physical
+  *    planner, deduplicates and tallies them there and runs the writer
   *    function there. That holds for the employee batch, the task batch
-  *    (its dimension and employee snapshots are read into maps on the
-  *    driver without a job) and the backfill's watermark upsert.
+  *    (its dimension and employee snapshots are read into maps the same
+  *    way) and the backfill's watermark upsert.
   */
 class SyncJobBudgetSpec extends SparkSpec {
   import RawBatches.{employee, task}
@@ -35,14 +40,19 @@ class SyncJobBudgetSpec extends SparkSpec {
     override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
   }
 
-  /** Spark jobs started by `body`, drained before and after. */
-  private def jobsOf(body: => Unit): Int = {
+  /** The events `counter` counts while `body` runs, drained before and
+    * after.
+    */
+  private def countOf(counter: AtomicInteger)(body: => Unit): Int = {
     ListenerDrain(spark.sparkContext)
-    jobs.set(0)
+    counter.set(0)
     body
     ListenerDrain(spark.sparkContext)
-    jobs.get
+    counter.get
   }
+
+  /** Spark jobs started by `body`. */
+  private def jobsOf(body: => Unit): Int = countOf(jobs)(body)
 
   private def counted[T](body: => T): T = {
     spark.sparkContext.addSparkListener(listener)
@@ -85,22 +95,59 @@ class SyncJobBudgetSpec extends SparkSpec {
     assertWritten(store)
   }
 
-  test("0 jobs per driver-resident batch and watermark upsert") {
-    val store = DerbyStore.create("residentdb")
+  /** A store with the watermark table beside the service's tables. */
+  private def storeWithWatermark(name: String): DerbyStore = {
+    val store = DerbyStore.create(name)
     store.exec("""CREATE TABLE scraper_status (id INT PRIMARY KEY,
       last_processed_date TIMESTAMP, updated_at TIMESTAMP DEFAULT CURRENT_TIMESTAMP)""")
-    def watermark(day: String): Unit = JdbcMergeWriter.upsert(
-      spark.createDataFrame(Seq(Row(1, Timestamp.valueOf(day))).asJava,
-        StructType(Schemas.scraperStatusTable.fields.take(2))),
-      MergeSpecs.scraperStatus, DerbyDialect, store.cf)
+    store
+  }
+
+  /** The backfill's watermark upsert of `day`, from a local frame. */
+  private def watermark(store: DerbyStore, day: String): Unit = JdbcMergeWriter.upsert(
+    spark.createDataFrame(Seq(Row(1, Timestamp.valueOf(day))).asJava,
+      StructType(Schemas.scraperStatusTable.fields.take(2))),
+    MergeSpecs.scraperStatus, DerbyDialect, store.cf)
+
+  test("0 jobs per driver-resident batch and watermark upsert") {
+    val store = storeWithWatermark("residentdb")
     val counts = counted(Seq(
       "employee insert" -> jobsOf(employeeBatch(store, employees("bad"))),
       "employee update" -> jobsOf(employeeBatch(store, employees("worse"))),
       "task insert" -> jobsOf(taskBatch(store, tasks("1 New Rd"))),
       "task update" -> jobsOf(taskBatch(store, tasks("2 New Rd"))),
-      "watermark insert" -> jobsOf(watermark("2024-01-02 00:00:00")),
-      "watermark update" -> jobsOf(watermark("2024-01-03 00:00:00"))))
+      "watermark insert" -> jobsOf(watermark(store, "2024-01-02 00:00:00")),
+      "watermark update" -> jobsOf(watermark(store, "2024-01-03 00:00:00"))))
     assert(counts.forall(_._2 == 0), s"a driver-resident batch ran jobs: $counts")
+    assertWritten(store)
+    assert(store.rows("SELECT last_processed_date FROM scraper_status") ==
+      Vector(Vector(Timestamp.valueOf("2024-01-03 00:00:00"))))
+  }
+
+  test("no query execution per driver-resident batch") {
+    val store = storeWithWatermark("noqueriesdb")
+    val executions = new AtomicInteger
+    val queries = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        executions.incrementAndGet()
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        executions.incrementAndGet()
+    }
+    // the local frames are made before the count starts, as a poller
+    // hands over a frame; the task batch's two snapshot frames are made
+    // by its loaders, inside the count
+    val (employeeInsert, employeeUpdate, taskInsert, taskUpdate) =
+      (employees("bad"), employees("worse"), tasks("1 New Rd"), tasks("2 New Rd"))
+    spark.listenerManager.register(queries)
+    val counts = try Seq(
+      "employee insert" -> countOf(executions)(employeeBatch(store, employeeInsert)),
+      "employee update" -> countOf(executions)(employeeBatch(store, employeeUpdate)),
+      "task insert" -> countOf(executions)(taskBatch(store, taskInsert)),
+      "task update" -> countOf(executions)(taskBatch(store, taskUpdate)),
+      "watermark insert" -> countOf(executions)(watermark(store, "2024-01-02 00:00:00")),
+      "watermark update" -> countOf(executions)(watermark(store, "2024-01-03 00:00:00")))
+    finally spark.listenerManager.unregister(queries)
+    assert(counts.forall(_._2 == 0), s"a driver-resident batch executed a query: $counts")
     assertWritten(store)
     assert(store.rows("SELECT last_processed_date FROM scraper_status") ==
       Vector(Vector(Timestamp.valueOf("2024-01-03 00:00:00"))))

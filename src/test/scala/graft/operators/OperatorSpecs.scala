@@ -2,10 +2,17 @@ package graft.operators
 
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructField,
+  StructType}
 
 import graft.SparkSpec
 import graft.functions.ContentHash
+import graft.sources.LocalRows
+import graft.streaming.RawBatches
 
 /** K4 (task_test.go:16-150), K5/J1 (task_test.go:203-280),
   * S5/S6/K6 (scraper_status_test.go:18-112), T8 gate.
@@ -57,6 +64,32 @@ class OperatorSpecs extends SparkSpec {
       (101L, Some("E1"), Some(7L)),
       (101L, Some("Ghost"), None),   // NULL id, row NOT dropped
       (102L, None, None)))           // empty array still visible
+  }
+
+  /** A store snapshot as a loader hands it over: a local frame. */
+  private def snapshot(rows: Seq[Row], cols: (String, DataType)*): DataFrame =
+    spark.createDataFrame(rows.asJava, StructType(cols.map { case (n, t) => StructField(n, t) }))
+
+  test("dimension index: a parquet-read snapshot gives the local snapshot's map (K4)") {
+    val local = snapshot(Seq(Row(1, "repair"), Row(2, "install"), Row(3, null)),
+      "type_id" -> IntegerType, "type_name" -> StringType)
+    val onDisk = RawBatches.onDisk(local)
+    assert(LocalRows.of(local.select("type_name", "type_id")).isDefined)
+    assert(LocalRows.of(onDisk.select("type_name", "type_id")).isEmpty, "read through collect()")
+    val want = Map("repair" -> 1, "install" -> 2)
+    assert(Dimension.index(local, "type_id", "type_name") == want)
+    assert(Dimension.index(onDisk, "type_id", "type_name") == want)
+  }
+
+  test("shortname index: a parquet-read snapshot gives the local snapshot's map (J1)") {
+    val local = snapshot(Seq(Row(1L, "ann"), Row(3L, "cat"), Row(4L, "cat"), Row(5L, null)),
+      "id" -> LongType, "shortname" -> StringType)
+    val onDisk = RawBatches.onDisk(local)
+    assert(LocalRows.of(local.select("shortname", "id")).isDefined)
+    assert(LocalRows.of(onDisk.select("shortname", "id")).isEmpty, "read through collect()")
+    val want = Map("ann" -> Seq(1L), "cat" -> Seq(3L, 4L))
+    assert(Bridge.shortnameIndex(local, "id", "shortname") == want)
+    assert(Bridge.shortnameIndex(onDisk, "id", "shortname") == want)
   }
 
   test("bridge rewriteGroups: overwrites only incoming groups") {
