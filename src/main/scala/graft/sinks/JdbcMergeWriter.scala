@@ -71,6 +71,9 @@ object JdbcMergeWriter {
 
   private val BatchSize = 500
 
+  /** Keys per stored-group read (see [[storedGroups]]). */
+  private val ReadWidth = 128
+
   private def setParam(ps: PreparedStatement, idx: Int, v: Any,
       conn: Connection): Unit = v match {
     case null => ps.setObject(idx, null)
@@ -292,7 +295,7 @@ object JdbcMergeWriter {
     * driver for a local batch. Per `BatchSize` chunk of fact rows: the
     * names the dimension snapshot lacks are created ([[DimensionIds]],
     * committed outside the transaction), then the chunk's MERGE, then
-    * one read of the chunk's stored groups, then the DELETE and INSERT
+    * the read of the chunk's stored groups, then the DELETE and INSERT
     * of the groups that changed — so a bridge row is only ever written
     * after its fact row, in the same transaction. The writer gets one
     * fact row per key (A4): each fact row owns its whole group, so a
@@ -317,6 +320,14 @@ object JdbcMergeWriter {
     * transactions' locks: on Postgres a plain read does not (MVCC);
     * Derby reads uncommitted (see `DerbyDialect.readGroupsSql`).
     *
+    * The read has one SQL text, whatever the chunk size: it is prepared
+    * once per write at [[ReadWidth]] keys and reused for every slice of
+    * every chunk ([[storedGroups]]). A text per key count would make
+    * Derby compile a new class for each batch size it meets, and the
+    * JVM interprets each such class until it is hot. The width stays
+    * well below the list length at which Derby's reads turn slow even
+    * when hot.
+    *
     * The DELETE binds one key per statement: with an index on the key,
     * each one touches only its own group's rows, so concurrent
     * partitions never wait on each other (Derby's unindexed heap scan
@@ -335,12 +346,13 @@ object JdbcMergeWriter {
           val del = conn.prepareStatement(
             dialect.deleteGroupsSql(bridge.table, bridge.keyCol, 1))
           val ins = conn.prepareStatement(insertSql)
+          val read = conn.prepareStatement(
+            dialect.readGroupsSql(bridge.table, bridge.keyCol, bridge.valueCol, ReadWidth))
           try {
             it.grouped(BatchSize).foreach { facts =>
               val chunk = facts.map(ids.bind)
               mergeRows(chunk.iterator, plan, conn)
-              val stored = storedGroups(conn, dialect.readGroupsSql(bridge.table,
-                bridge.keyCol, bridge.valueCol, chunk.size), chunk.map(_.getAs[Any](bridge.keyCol)))
+              val stored = storedGroups(read, chunk.map(_.getAs[Any](bridge.keyCol)), conn)
               val changed = chunk.flatMap { r =>
                 val k = r.getAs[Any](bridge.keyCol)
                 val members = bridge.members(r)
@@ -364,26 +376,43 @@ object JdbcMergeWriter {
               }
               if (pending > 0) ins.executeBatch()
             }
-          } finally { del.close(); ins.close() }
+          } finally { del.close(); ins.close(); read.close() }
         } finally ids.close()
       }
     }
   }
 
   /** The stored members of each of `keys`' groups, as a multiset per
-    * group key; a group with no rows is absent.
+    * group key; a group with no rows is absent. `read` is the dialect's
+    * `readGroupsSql` at [[ReadWidth]] keys; it runs once per slice of
+    * `ReadWidth` keys, and the last slice is padded by repeating its
+    * last key. A repeated IN value returns no extra rows, and the keys
+    * are unique (one fact row per key, A4), so no group is read twice.
+    *
+    * Why the width is fixed, and why at 128: Derby compiles each SQL
+    * text it meets into a generated class, and the JVM interprets that
+    * class until it is hot. With the key count as the width, a store
+    * whose batches keep changing size ran most reads cold: on a
+    * 1,120-row store, widths changing every 9 reads took a median 10 ms
+    * a read, one padded width 1.7 ms. Wide lists are slow even when
+    * hot: in Derby stores of 1,120 and 20,000 rows a hot read took
+    * 1–3 ms at 128 keys and 40–840 ms at 300 keys, with or without
+    * HotSpot's huge-method limit (see
+    * `bench_evidence/fixed_width_read_width_sweep.txt`). 128 keys stay
+    * well below that, and cover a polled tick's task list in one read.
     */
-  private def storedGroups(conn: Connection, sql: String,
-      keys: Seq[Any]): Map[Any, Map[Any, Int]] = {
-    val ps = conn.prepareStatement(sql)
-    try {
-      keys.zipWithIndex.foreach { case (k, i) => setParam(ps, i + 1, k, conn) }
-      val rs = ps.executeQuery()
-      val rows = Vector.newBuilder[(Any, Any)]
+  private def storedGroups(read: PreparedStatement, keys: Seq[Any],
+      conn: Connection): Map[Any, Map[Any, Int]] = {
+    val rows = Vector.newBuilder[(Any, Any)]
+    keys.grouped(ReadWidth).foreach { slice =>
+      slice.padTo(ReadWidth, slice.last).zipWithIndex.foreach { case (k, i) =>
+        setParam(read, i + 1, k, conn)
+      }
+      val rs = read.executeQuery()
       try while (rs.next()) rows += (rs.getObject(1) -> rs.getObject(2))
       finally rs.close()
-      rows.result().groupMap(_._1)(_._2).view.mapValues(multiset).toMap
-    } finally ps.close()
+    }
+    rows.result().groupMap(_._1)(_._2).view.mapValues(multiset).toMap
   }
 
   private def multiset(values: Iterable[Any]): Map[Any, Int] =

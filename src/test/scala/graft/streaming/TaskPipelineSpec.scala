@@ -1,5 +1,8 @@
 package graft.streaming
 
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 
 import graft.SparkSpec
@@ -216,6 +219,60 @@ class TaskPipelineSpec extends SparkSpec {
         assert(bridge() == Seq((66L, None), (66L, Some(1L)),
           (67L, Some(2L)), (67L, Some(3L)), (67L, Some(4L))), shape)
       }
+  }
+
+  /** The SQL of each stored-group read run since the last clear. */
+  private def groupReads(): Seq[String] =
+    TestConnections.statements.asScala.toSeq
+      .filter(_.startsWith("SELECT task_id, executor_id FROM task_executors"))
+
+  /** Group reads a writer of `rows` fact rows runs: one per 128 keys
+    * of each 500-row chunk.
+    */
+  private def readsFor(rows: Int): Int =
+    (0 until rows by 500).map(o => (math.min(500, rows - o) + 127) / 128).sum
+
+  test("the group read runs one statement text, once per 128 keys of each chunk (K5)") {
+    assert(readsFor(600) == 5, "chunks of 500 and 100")
+    val texts = mutable.Set.empty[String]
+    for {
+      n <- Seq(1, 60, 128, 129, 600)
+      (shape, as) <- Seq[(String, DataFrame => DataFrame)](
+        "local" -> identity, "on disk" -> RawBatches.onDisk)
+    } {
+      fresh()
+      val batch = as(tasks((1L to n.toLong).map(i =>
+        task(i, "repair", s"$i Main St", if (i % 2 == 0) Seq("ann", "zed") else Seq("cat"))): _*))
+      // the partitions the executors write, or the one local pass
+      val sizes = if (shape == "local") Seq(n)
+        else written(batch).rdd.mapPartitions(it => Iterator(it.size)).collect().toSeq
+      assert(bridgeWrites(batch) == ((0, n * 2)), s"$shape, $n: every group inserted")
+      assert(groupReads().size == sizes.map(readsFor).sum, s"$shape, $n: reads of the first write")
+      texts ++= groupReads()
+      assert(bridgeWrites(batch) == ((0, 0)), s"$shape, $n: an identical replay writes nothing")
+      assert(groupReads().size == sizes.map(readsFor).sum, s"$shape, $n: reads of the replay")
+      texts ++= groupReads()
+    }
+    assert(texts.size == 1, s"one SQL text for every batch size: $texts")
+  }
+
+  test("a change alone in the last, padded read slice rewrites only its group (K5)") {
+    // 128 tasks fill the first slice; task 129 is read alone, its key
+    // repeated to the read's width. Groups with repeated and NULL members.
+    def batch(last: Seq[String]) = tasks((1L to 129L).map(i => task(i, "repair", s"$i Main St",
+      if (i == 129L) last else if (i == 1L) Seq("ann", "ann", "zed") else Seq("bob"))): _*)
+    fresh()
+    val changed = batch(Seq("cat", "zed", "zed"))
+    run(changed)
+    val full = bridge()
+    fresh()
+    run(batch(Seq("ann", "ann", "zed")))
+    assert(bridgeWrites(changed) == ((1, 4)),
+      "task 129's group deleted and its four members inserted; task 1's untouched")
+    assert(bridge() == full, "the same multisets as a full rewrite")
+    assert(full.filter(_._1 == 1L) == Seq((1L, None), (1L, Some(1L)), (1L, Some(1L))))
+    assert(full.filter(_._1 == 129L) ==
+      Seq((129L, None), (129L, None), (129L, Some(3L)), (129L, Some(4L))))
   }
 
   test("duplicate task ids in one batch write one task and one bridge group (A4)") {
