@@ -46,14 +46,15 @@ object Bridge {
     * (`JdbcMergeWriter.upsertWithBridge`): shortname → the id of every
     * employee with that shortname. Employees is a dimension, so it is
     * read once per batch into a plain map the sink's writer function
-    * closes over: a driver-resident snapshot with no query
-    * (`LocalRows`), any other through `collect()`.
+    * closes over: a driver-resident snapshot's columns are read by
+    * name, with no `select` and no query (`LocalRows`), any other
+    * snapshot's through `collect()`.
     */
   def shortnameIndex(employees: DataFrame, empIdCol: String,
       shortnameCol: String): Map[String, Seq[Any]] =
-    LocalRows.collect(employees.select(col(shortnameCol), col(empIdCol)))
-      .filterNot(_.isNullAt(0))
-      .groupMap(_.getString(0))(_.get(1))
+    LocalRows.collect(employees, shortnameCol, empIdCol)
+      .filter(_.getAs[String](shortnameCol) != null)
+      .groupMap(_.getAs[String](shortnameCol))(_.getAs[Any](empIdCol))
 
   /** One task's bridge members with the LEFT join's multiplicity: one
     * id per employee sharing the shortname, one NULL for an unknown or

@@ -367,10 +367,12 @@ object CorpusStats {
   def langClassifyWith(docs: DataFrame, idCol: String, textCol: String,
       model: DataFrame, n: Int = 3): DataFrame = {
     require(n >= 1, s"n=$n")
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val totals = model.groupBy(col("lang")).agg(sum(col("n")).as("t"))
-      .as[(String, Long)].collect().toMap // model-bounded: |languages|
+    val totalRows = model.groupBy(col("lang")).agg(sum(col("n")).as("t"))
+      .collect() // model-bounded: |languages|
+    require(!totalRows.exists(_.isNullAt(0)),
+      "langClassifyWith: model column lang is NULL in a row")
+    // a language whose every count is NULL has no mass: its sum is NULL
+    val totals = totalRows.filterNot(_.isNullAt(1)).map(r => r.getString(0) -> r.getLong(1)).toMap
     require(totals.nonEmpty, "langClassifyWith: empty model")
     // lang values become PIVOT COLUMN NAMES, i.e. part of the
     // unresolved-attribute namespace: a backtick (or other hostile
@@ -402,11 +404,15 @@ object CorpusStats {
       org.apache.spark.unsafe.types.UTF8String, Array[Long]]()
     model.select(col("lang"), col("gram"), col("n").cast("long")).collect()
       .foreach { r =>
-        val i = langIdx(r.getString(0))
-        val g = org.apache.spark.unsafe.types.UTF8String.fromString(r.getString(1))
-        var a = gramMap.get(g)
-        if (a == null) { a = new Array[Long](langs.size); gramMap.put(g, a) }
-        a(i) += r.getLong(2) // duplicate (lang, gram) rows sum, as the pivot did
+        require(!r.isNullAt(1), "langClassifyWith: model column gram is NULL in a row")
+        // a NULL count adds nothing, as the pivot's sum skipped it
+        if (!r.isNullAt(2)) {
+          val i = langIdx(r.getString(0))
+          val g = org.apache.spark.unsafe.types.UTF8String.fromString(r.getString(1))
+          var a = gramMap.get(g)
+          if (a == null) { a = new Array[Long](langs.size); gramMap.put(g, a) }
+          a(i) += r.getLong(2) // duplicate (lang, gram) rows sum, as the pivot did
+        }
       }
     val sums = docs.select(col(idCol).as("__id"),
         // coalesce: a NULL text scored as n_grams 0 / 'und' before
@@ -880,10 +886,14 @@ object CorpusStats {
     sketch.select(col("d").cast("int"), col("bucket").cast("long"),
         col("n").cast("long")).collect()
       .foreach { r =>
+        Seq(0 -> "d", 1 -> "bucket").foreach { case (i, c) =>
+          require(!r.isNullAt(i), s"countMinEstimateMapOnly: sketch column $c is NULL in a row")
+        }
         val (d, b) = (r.getInt(0), r.getLong(1))
         require(d >= 0 && d < depth && b >= 0 && b < width,
           s"sketch row outside geometry depth=$depth width=$width: d=$d bucket=$b")
-        counters(d * width + b.toInt) += r.getLong(2)
+        // a NULL count adds nothing, as the join's sum skipped it
+        if (!r.isNullAt(2)) counters(d * width + b.toInt) += r.getLong(2)
       }
     tokens.withColumn("n_est", coalesce(
       graft.expressions.CountMinEstimate.est(col(tokenCol), depth, width,

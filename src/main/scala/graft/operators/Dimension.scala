@@ -75,11 +75,12 @@ object Dimension {
     * dimension lookups (`JdbcMergeWriter.DimensionSpec.known`). A
     * dimension is small by definition, so it is read once per batch
     * into a plain map the sink's writer function closes over, like
-    * `Bridge.shortnameIndex`: a driver-resident snapshot with no query
-    * (`LocalRows`), any other through `collect()`.
+    * `Bridge.shortnameIndex`: a driver-resident snapshot's columns are
+    * read by name, with no `select` and no query (`LocalRows`), any
+    * other snapshot's through `collect()`.
     */
   def index(dim: DataFrame, idCol: String, nameCol: String): Map[String, Any] =
-    LocalRows.collect(dim.select(col(nameCol), col(idCol)))
-      .filterNot(_.isNullAt(0))
-      .map(r => r.getString(0) -> r.get(1)).toMap
+    LocalRows.collect(dim, nameCol, idCol)
+      .filter(_.getAs[String](nameCol) != null)
+      .map(r => r.getAs[String](nameCol) -> r.getAs[Any](idCol)).toMap
 }

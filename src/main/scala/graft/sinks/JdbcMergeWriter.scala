@@ -4,7 +4,7 @@ import java.sql.{Connection, DriverManager, PreparedStatement, SQLException, Tim
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, Observation, Row}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.functions.{col, count, count_if, lit, max_by,
   monotonically_increasing_id, struct}
@@ -16,21 +16,30 @@ import graft.sources.LocalRows
   * (SURVEY.md §7.2: Spark's native jdbc writer can't MERGE, so this is
   * custom by necessity).
   *
+  * A write takes a raw batch and the batch's transform, stated as
+  * columns (`transform`; none writes the batch as it is). The sink
+  * writes the rows `batch.select(transform)` holds.
+  *
   * Distribution model: two shapes, one writer. Each write builds one
   * writer function over an iterator of rows — open one connection,
   * prepare the statements once, stream the rows through inside a
   * single transaction — and [[writeBatch]] picks where it runs, by the
   * batch's analyzed plan:
   *  - a driver-resident batch (a `LocalRelation`, such as a polled
-  *    snapshot passed to `createDataFrame`, or one deterministic
-  *    projection of it, such as the pipelines' transforms) has its rows
-  *    evaluated on the driver by [[graft.sources.LocalRows]], and the
-  *    writer function runs once over them. No query is planned and no
-  *    Spark job runs. The rows are a projection of a `Seq` the caller
-  *    already holds, so the driver memory this takes is bounded by what
-  *    the caller already holds;
+  *    snapshot passed to `createDataFrame`) has its transform evaluated
+  *    on the driver by [[graft.sources.LocalRows.project]]: the columns
+  *    are analyzed and bound once per input schema and session
+  *    configuration, and each batch's rows go straight through the
+  *    bound projection, with no `Dataset` made and no analyzer run. The
+  *    writer function runs once over the rows. No query is planned and
+  *    no Spark job runs. The rows are a projection of a `Seq` the
+  *    caller already holds, so the driver memory this takes is bounded
+  *    by what the caller already holds. A batch with no transform may
+  *    also be one deterministic projection of a `LocalRelation`
+  *    ([[graft.sources.LocalRows.of]]);
   *  - any other plan (a file-source micro-batch, a parquet read, a
-  *    filter or a nondeterministic column over a local frame) runs the
+  *    filter over a local frame), or a transform with a
+  *    nondeterministic column, runs `batch.select(transform)` and the
   *    writer function per partition on the executors, through
   *    `foreachPartition`.
   * No global transaction exists across partitions (neither does one in
@@ -150,24 +159,26 @@ object JdbcMergeWriter {
     conn.close()
   }
 
-  /** Runs `write` over the last row per `keyCols` of `df`, in one of
-    * the two shapes of the object doc, keyed on the analyzed plan: once
-    * on the driver over the rows `LocalRows.of` evaluates when `df` is
+  /** Runs `write` over the last row per `keyCols` of
+    * `batch.select(transform)` (of `batch` itself when `transform` is
+    * empty), in one of the two shapes of the object doc: once on the
+    * driver over the rows `LocalRows.project` evaluates when they are
     * driver-resident, with no query planned, else once per partition
     * through `foreachPartition`. Returns the tally of the rows as
-    * delivered; `flag` names a boolean column of `df`. On the driver
-    * the tally comes from the evaluated rows; on the executors it rides
-    * on the write's own jobs (`Dataset.observe`; a driver-resident
-    * batch is never observed: with no job, the observation would never
-    * complete).
+    * delivered; `flag` names a boolean column of the transformed rows.
+    * On the driver the tally comes from the evaluated rows; on the
+    * executors it rides on the write's own jobs (`Dataset.observe`; a
+    * driver-resident batch is never observed: with no job, the
+    * observation would never complete).
     */
-  private def writeBatch(df: DataFrame, keyCols: Seq[String], flag: Option[String])(
-      write: Iterator[Row] => Unit): Tally =
-    LocalRows.of(df) match {
+  private def writeBatch(batch: DataFrame, transform: Seq[Column], keyCols: Seq[String],
+      flag: Option[String])(write: Iterator[Row] => Unit): Tally =
+    LocalRows.project(batch, transform) match {
       case Some(rows) =>
         write(lastPerKey(rows, keyCols))
         Tally(rows.length, flag.fold(0L)(f => rows.count(_.getAs[Boolean](f)).toLong))
       case None =>
+        val df = if (transform.isEmpty) batch else batch.select(transform: _*)
         val seen = Observation()
         lastPerKey(df.observe(seen, count(lit(1)).as("rows"),
           count_if(flag.fold(lit(false))(col)).as("flagged")), keyCols).foreachPartition(write)
@@ -203,15 +214,16 @@ object JdbcMergeWriter {
       .select("last.*")
   }
 
-  /** MERGE every row of `df` through `spec` — K1/K2/K3/K6 semantics,
-    * the last row per key when a key repeats (A4). `flag` names a
-    * boolean column of `df` to tally (see [[Tally]]); columns the
-    * MERGE does not bind are not written.
+  /** MERGE every row of `batch.select(transform)` (of `batch` when
+    * `transform` is empty) through `spec` — K1/K2/K3/K6 semantics, the
+    * last row per key when a key repeats (A4). `flag` names a boolean
+    * column of the transformed rows to tally (see [[Tally]]); columns
+    * the MERGE does not bind are not written.
     */
-  def upsert(df: DataFrame, spec: MergeSpec, dialect: SqlDialect,
-      cf: ConnFactory, flag: Option[String] = None): Tally = {
+  def upsert(batch: DataFrame, spec: MergeSpec, dialect: SqlDialect,
+      cf: ConnFactory, flag: Option[String] = None, transform: Seq[Column] = Nil): Tally = {
     val plan = dialect.mergePlan(spec) // built driver-side; plan is Serializable
-    writeBatch(df, spec.keyCols, flag) { it =>
+    writeBatch(batch, transform, spec.keyCols, flag) { it =>
       if (it.hasNext) {
         val conn = cf()
         inTxn(conn) { mergeRows(it, plan, conn) }
@@ -289,7 +301,8 @@ object JdbcMergeWriter {
   }
 
   /** Fact MERGE fused with the dimension it names and the bridge
-    * groups it owns (K4, K3 and K5, in K7 order).
+    * groups it owns (K4, K3 and K5, in K7 order). The fact rows are
+    * `batch.select(transform)`, or `batch` when `transform` is empty.
     *
     * One pass and one transaction per partition, or one of each on the
     * driver for a local batch. Per `BatchSize` chunk of fact rows: the
@@ -333,12 +346,13 @@ object JdbcMergeWriter {
     * partitions never wait on each other (Derby's unindexed heap scan
     * locks every row it reads, and two such scans deadlock).
     */
-  def upsertWithBridge(df: DataFrame, spec: MergeSpec, dim: DimensionSpec,
-      bridge: BridgeSpec, dialect: SqlDialect, cf: ConnFactory): Tally = {
+  def upsertWithBridge(batch: DataFrame, spec: MergeSpec, dim: DimensionSpec,
+      bridge: BridgeSpec, dialect: SqlDialect, cf: ConnFactory,
+      transform: Seq[Column] = Nil): Tally = {
     val plan = dialect.mergePlan(spec)
     val dimPlan = dialect.insertIgnorePlan(dim.table, Seq(dim.nameCol), Seq(dim.nameCol))
     val insertSql = dialect.insertSql(bridge.table, Seq(bridge.keyCol, bridge.valueCol))
-    writeBatch(df, spec.keyCols, None) { it =>
+    writeBatch(batch, transform, spec.keyCols, None) { it =>
       if (it.hasNext) {
         val ids = new DimensionIds(dim, dimPlan, cf)
         val conn = cf()

@@ -1,11 +1,12 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{BindReferences, Expression,
+import org.apache.spark.sql.catalyst.expressions.{Attribute, BindReferences, Expression,
   InterpretedUnsafeProjection, Unevaluable}
 import org.apache.spark.sql.catalyst.optimizer.ReplaceExpressions
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Project}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
@@ -19,49 +20,108 @@ import org.apache.spark.sql.types.StructType
   *  - or one `Project` of a `LocalRelation` (a `select`, `toDF` or
   *    `withColumn` over such a frame) whose expressions are all
   *    deterministic and, once `ReplaceExpressions` has run, evaluable.
-  *    The expressions are bound to the relation's output and evaluated
-  *    by an interpreted projection over the relation's rows. That is
-  *    the evaluation Spark's `ConvertToLocalRelation` rule does, with no
-  *    optimizer, physical planner or query execution around it.
+  *    The expressions are bound to the relation's output by ordinal and
+  *    evaluated by an interpreted projection over the relation's rows.
+  *    That is the evaluation Spark's `ConvertToLocalRelation` rule does,
+  *    with no optimizer, physical planner or query execution around it.
   * Any other plan (a filter, a nested projection, a file scan) is not,
   * and reads through `collect()`.
   *
-  * The analyzer has already bound the session's time zone into the
-  * expressions, so a frame made after the zone changes evaluates in the
-  * new zone, as its collect would.
+  * [[project]] evaluates a projection of a `LocalRelation` frame that
+  * is stated as columns, not yet as a frame: the rows
+  * `raw.select(columns)` would hold, with no `Dataset` made and no
+  * analyzer run. The columns are analyzed once per binding key — the
+  * input schema, the session's explicitly set configuration and the
+  * columns — against the first frame met with that key, and the bound
+  * expressions are kept with one interpreted projection, which a lock
+  * lets one caller use at a time. The analyzer binds the session's time
+  * zone and ANSI mode into the expressions, and both are configuration,
+  * so a change of either binds anew, as a frame made after the change
+  * would. The key does not cover the session's function registry: a
+  * column must not name a temporary function that is re-registered
+  * between batches.
   */
 object LocalRows {
 
   /** The rows of `df` if it is driver-resident, else None. */
   def of(df: DataFrame): Option[Seq[Row]] = {
     val qe = df.queryExecution
-    SQLConf.withExistingConf(qe.sparkSession.sessionState.conf) {
-      qe.analyzed match {
-        case r: LocalRelation => Some(toRows(r.schema, r.data.iterator))
-        case p @ Project(_, r: LocalRelation) =>
-          val exprs = BindReferences.bindReferences[Expression](
-            ReplaceExpressions(p).asInstanceOf[Project].projectList, r.output)
-          if (exprs.exists(e => !e.deterministic || e.exists(_.isInstanceOf[Unevaluable]))) None
-          else {
-            val project = InterpretedUnsafeProjection.createProjection(exprs)
-            Some(toRows(p.schema, r.data.iterator.map(project)))
-          }
-        case _ => None
-      }
+    val conf = qe.sparkSession.sessionState.conf
+    qe.analyzed match {
+      case r: LocalRelation => Some(toRows(converter(r.schema), r.data.iterator))
+      case p @ Project(_, r: LocalRelation) => bind(p, r.output, conf).map(_.rows(r.data, conf))
+      case _ => None
     }
   }
 
-  /** The rows of `df`: evaluated on the driver if it is
-    * driver-resident, else collected through a query.
+  /** The rows of `raw.select(columns)` if `raw` is a `LocalRelation`
+    * frame and the projection is driver-resident, else None. Of `raw`
+    * itself when `columns` is empty.
     */
-  def collect(df: DataFrame): Seq[Row] = of(df).getOrElse(df.collect().toSeq)
+  def project(raw: DataFrame, columns: Seq[Column]): Option[Seq[Row]] =
+    if (columns.isEmpty) of(raw)
+    else raw.queryExecution.analyzed match {
+      case r: LocalRelation =>
+        val conf = raw.sparkSession.sessionState.conf
+        val key = (r.schema, conf.getAllConfs, columns)
+        val binding = bindings.synchronized(Option(bindings.get(key))).getOrElse {
+          val bound = raw.select(columns: _*).queryExecution.analyzed match {
+            case p @ Project(_, input: LocalRelation) => bind(p, input.output, conf)
+            case _ => None
+          }
+          bindings.synchronized(bindings.put(key, bound))
+          bound
+        }
+        binding.map(_.rows(r.data, conf))
+      case _ => None
+    }
 
-  /** Catalyst rows as external `Row`s of `schema`. Each row is
-    * converted before the next is read, so a projection's reused
-    * output row is safe to pass.
+  /** The rows of `df`, to be read by column name: every column of a
+    * driver-resident frame, evaluated on the driver, else only
+    * `columns`, collected through a query.
     */
-  private def toRows(schema: StructType, rows: Iterator[InternalRow]): Seq[Row] = {
-    val convert = CatalystTypeConverters.createToScalaConverter(schema)
-    rows.map(convert(_).asInstanceOf[Row]).toVector
+  def collect(df: DataFrame, columns: String*): Seq[Row] =
+    of(df).getOrElse(df.select(columns.map(col): _*).collect().toSeq)
+
+  /** Bindings kept by [[project]], least recently used first. */
+  private val MaxBindings = 64
+  private val bindings = new java.util.LinkedHashMap[AnyRef, Option[Binding]](16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[AnyRef, Option[Binding]]): Boolean =
+      size > MaxBindings
   }
+
+  /** `p`'s expressions bound to `input` by ordinal, if all of them are
+    * deterministic and evaluable once `ReplaceExpressions` has run.
+    */
+  private def bind(p: Project, input: Seq[Attribute], conf: SQLConf): Option[Binding] = {
+    val exprs = BindReferences.bindReferences[Expression](
+      ReplaceExpressions(p).asInstanceOf[Project].projectList, input)
+    if (exprs.exists(e => !e.deterministic || e.exists(_.isInstanceOf[Unevaluable]))) None
+    else Some(new Binding(exprs, p.schema, conf))
+  }
+
+  /** Bound expressions, the projection that evaluates them and the
+    * converter of its output to `Row`s of `schema`. The projection
+    * reuses its output row and its evaluation state, so one caller at a
+    * time uses it.
+    */
+  private final class Binding(exprs: Seq[Expression], schema: StructType, conf: SQLConf) {
+    private val projection = SQLConf.withExistingConf(conf) {
+      InterpretedUnsafeProjection.createProjection(exprs)
+    }
+    private val convert = converter(schema)
+
+    def rows(data: Seq[InternalRow], conf: SQLConf): Seq[Row] = synchronized {
+      SQLConf.withExistingConf(conf)(toRows(convert, data.iterator.map(projection)))
+    }
+  }
+
+  private def converter(schema: StructType): Any => Any =
+    CatalystTypeConverters.createToScalaConverter(schema)
+
+  /** Catalyst rows as external `Row`s. Each row is converted before the
+    * next is read, so a projection's reused output row is safe to pass.
+    */
+  private def toRows(convert: Any => Any, rows: Iterator[InternalRow]): Seq[Row] =
+    rows.map(convert(_).asInstanceOf[Row]).toVector
 }

@@ -12,10 +12,12 @@ import graft.functions.ContentHash
   * hash advances even for empty responses, employees.go:97-101).
   *
   * This is deliberately a thin non-Spark component (the north star
-  * allows a non-Spark orchestration layer): it feeds a landing zone
-  * that Structured Streaming reads. `lastHash` is in-memory exactly
-  * like the reference's — restart ⇒ refetch, absorbed by the
-  * idempotent MERGE sink (SURVEY.md §2.6 "Stateful ops").
+  * allows a non-Spark orchestration layer): it hands each batch it lets
+  * through to `onBatch` in the calling thread, which writes it to the
+  * store: a caller wraps the items in a local frame for a `Pipelines`
+  * batch body, which the sink writes on the driver. `lastHash` is
+  * in-memory exactly like the reference's — restart ⇒ refetch,
+  * absorbed by the idempotent MERGE sink (SURVEY.md §2.6 "Stateful ops").
   */
 final case class FetchResult[+T](newHash: String, items: Seq[T])
 

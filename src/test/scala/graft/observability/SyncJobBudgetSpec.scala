@@ -8,6 +8,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.ListenerDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.rules.RuleExecutor
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -30,7 +31,9 @@ import graft.streaming.RawBatches
   *    planner, deduplicates and tallies them there and runs the writer
   *    function there. That holds for the employee batch, the task batch
   *    (its dimension and employee snapshots are read into maps the same
-  *    way) and the backfill's watermark upsert.
+  *    way) and the backfill's watermark upsert. Once a transform is
+  *    bound for a batch schema, a further batch of that schema runs no
+  *    analyzer rule either.
   */
 class SyncJobBudgetSpec extends SparkSpec {
   import RawBatches.{employee, task}
@@ -151,5 +154,32 @@ class SyncJobBudgetSpec extends SparkSpec {
     assertWritten(store)
     assert(store.rows("SELECT last_processed_date FROM scraper_status") ==
       Vector(Vector(Timestamp.valueOf("2024-01-03 00:00:00"))))
+  }
+
+  /** Analyzer and optimizer rules run by `body`, on every thread. */
+  private def rulesOf(body: => Unit): Long = {
+    val before = RuleExecutor.getCurrentMetrics().numRuns
+    body
+    RuleExecutor.getCurrentMetrics().numRuns - before
+  }
+
+  test("no analyzer rule runs for a second driver-resident batch of one schema") {
+    val store = DerbyStore.create("norulesdb")
+    // the first batch of each schema binds its transform
+    employeeBatch(store, employees("bad"))
+    taskBatch(store, tasks("1 New Rd"))
+    // every frame of the second pair is made before the count starts:
+    // the batches, as a poller hands them over, and the snapshots the
+    // task batch's loaders return
+    val framed = rulesOf(employees("x"))
+    val (employeeUpdate, taskUpdate) = (employees("worse"), tasks("2 New Rd"))
+    val (dim, staff) = (store.loadDim(spark)(), store.loadEmployees(spark)())
+    val counts = Seq(
+      "employee update" -> rulesOf(employeeBatch(store, employeeUpdate)),
+      "task update" -> rulesOf(Observed.taskBatch(taskUpdate, DerbyDialect, store.cf,
+        () => dim, () => staff, m)))
+    assert(framed > 0, "the count sees a frame's own analysis")
+    assert(counts.forall(_._2 == 0), s"a bound transform ran analyzer rules: $counts")
+    assertWritten(store)
   }
 }

@@ -204,6 +204,26 @@ class CurationSpec extends SparkSpec {
     assert(retracted == survivors)
   }
 
+  test("langClassifyWith: a NULL-count model row adds nothing, a NULL lang " +
+    "or gram fails naming the column") {
+    val docs = Seq((0L, "the cat and the dog"), (1L, "le chat et le chien"), (2L, "zz"))
+      .toDF("doc_id", "text")
+    val model = Seq(("en", "the", 3L), ("en", "cat", 1L), ("fr", "le ", 2L), ("fr", "cha", 1L))
+      .map { case (l, g, n) => (Option(l), Option(g), Option(n)) }
+    def classify(rows: Seq[(Option[String], Option[String], Option[Long])]) =
+      CorpusStats.langClassifyWith(docs, "doc_id", "text", rows.toDF("lang", "gram", "n"))
+        .orderBy("doc_id").collect().toSeq
+    // a NULL count beside counted rows, and a language counted nowhere
+    assert(classify(model ++ Seq((Some("en"), Some("dog"), None),
+      (Some("de"), Some("der"), None))) == classify(model))
+    Seq("lang" -> (None, Some("the"), Some(1L)), "gram" -> (Some("en"), None, Some(1L)))
+      .foreach { case (column, row) =>
+        val e = intercept[IllegalArgumentException](classify(model :+ row))
+        assert(e.getMessage.contains("langClassifyWith") &&
+          e.getMessage.contains(s"column $column"), e.getMessage)
+      }
+  }
+
   test("retractStats: subtract == recompute, emptied keys drop, " +
     "non-constituent partials fail loudly, multi-count shape works") {
     val boiler = "please subscribe to our newsletter now."

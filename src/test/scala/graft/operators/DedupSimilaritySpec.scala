@@ -1086,6 +1086,25 @@ class DedupSimilaritySpec extends SparkSpec {
       (6L, 0L, 0L, "")))
   }
 
+  test("countMinEstimateMapOnly: a NULL-count sketch row adds nothing, a " +
+    "NULL d or bucket fails naming the column") {
+    val docs = Seq((1L, "alpha beta alpha"), (2L, "beta gamma")).toDF("doc_id", "text")
+    val probes = Seq("alpha", "beta", "gamma", "delta").toDF("token")
+    val sketch = graft.operators.CorpusStats.countMinSketch(docs, "text", 3, 64)
+      .select(col("d").cast("int"), col("bucket").cast("long"), col("n").cast("long"))
+    def estimate(extra: (Option[Int], Option[Long], Option[Long])*) =
+      graft.operators.CorpusStats.countMinEstimateMapOnly(probes, "token",
+          sketch.unionByName(extra.toDF("d", "bucket", "n")), 3, 64)
+        .as[(String, Long)].collect().toMap
+    assert(estimate((Some(0), Some(5L), None), (Some(2), Some(63L), None)) == estimate())
+    Seq("d" -> (None, Some(1L), Some(1L)), "bucket" -> (Some(0), None, Some(1L)))
+      .foreach { case (column, row) =>
+        val e = intercept[IllegalArgumentException](estimate(row))
+        assert(e.getMessage.contains("countMinEstimateMapOnly") &&
+          e.getMessage.contains(s"column $column"), e.getMessage)
+      }
+  }
+
   test("countMinSketch: est >= exact always, exact at collision-free " +
     "width, additive across disjoint batches, unseen token reads 0") {
     val docs = Seq(

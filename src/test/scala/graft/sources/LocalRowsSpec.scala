@@ -57,7 +57,52 @@ class LocalRowsSpec extends SparkSpec {
       "parquet read" -> RawBatches.onDisk(local))
     frames.foreach { case (shape, df) =>
       assert(LocalRows.of(df).isEmpty, s"$shape: not driver-resident")
-      assert(LocalRows.collect(df).map(_.toSeq) == df.collect().toSeq.map(_.toSeq), shape)
+      assert(LocalRows.collect(df, df.columns.toSeq: _*).map(_.toSeq) ==
+        df.collect().toSeq.map(_.toSeq), shape)
     }
+  }
+
+  test("a projection stated as columns reads as select(...).collect() does, " +
+    "and binds anew when the time zone or ANSI mode changes") {
+    val s = StructType(Seq(StructField("at", TimestampType), StructField("n", StringType)))
+    val columns = Seq(hour(col("at")).as("h"), col("n").cast("int").as("n"))
+    def frame(n: String) = spark.createDataFrame(
+      Seq(Row(new Timestamp(3 * 3600 * 1000L), n), Row(null, null)).asJava, s)
+    def inConf(zone: String, ansi: Boolean)(body: => Unit): Unit = {
+      val saved = Seq("spark.sql.session.timeZone", "spark.sql.ansi.enabled")
+        .map(k => k -> spark.conf.get(k))
+      spark.conf.set("spark.sql.session.timeZone", zone)
+      spark.conf.set("spark.sql.ansi.enabled", ansi)
+      try body finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
+    }
+    def same(df: DataFrame): Seq[Row] = {
+      val rows = LocalRows.project(df, columns)
+      assert(rows.contains(df.select(columns: _*).collect().toSeq))
+      rows.get
+    }
+    Seq("UTC" -> 3, "America/Los_Angeles" -> 19, "UTC" -> 3).foreach { case (zone, h) =>
+      inConf(zone, ansi = false) {
+        assert(same(frame("12")) == Seq(Row(h, 12), Row(null, null)), zone)
+        assert(same(frame("x")) == Seq(Row(h, null), Row(null, null)), zone)
+      }
+      inConf(zone, ansi = true) {
+        assert(same(frame("12")) == Seq(Row(h, 12), Row(null, null)), zone)
+        intercept[Exception](frame("x").select(columns: _*).collect())
+        intercept[Exception](LocalRows.project(frame("x"), columns))
+      }
+    }
+  }
+
+  test("a projection stated as columns is bound per column order of its input, " +
+    "and declined over any other plan or with a nondeterministic column") {
+    val reordered = spark.createDataFrame(local.collect().toSeq.map(r =>
+      Row.fromSeq(r.toSeq.reverse)).asJava, StructType(schema.fields.reverse))
+    val columns = Seq(col("name"), (col("id") + 1).as("next"), col("point.x"))
+    Seq(local, reordered, local).foreach { df =>
+      assert(LocalRows.project(df, columns).contains(df.select(columns: _*).collect().toSeq))
+    }
+    assert(LocalRows.project(local.filter(col("id") > 1), columns).isEmpty, "filter")
+    assert(LocalRows.project(RawBatches.onDisk(local), columns).isEmpty, "parquet read")
+    assert(LocalRows.project(local, columns :+ rand()).isEmpty, "nondeterministic")
   }
 }

@@ -69,7 +69,7 @@ class TaskPipelineSpec extends SparkSpec {
     * projected tasks after the A4 dedup's shuffle.
     */
   private def written(batch: DataFrame): DataFrame =
-    JdbcMergeWriter.lastPerKey(Pipelines.transformTasks(batch), MergeSpecs.tasks.keyCols)
+    JdbcMergeWriter.lastPerKey(batch.select(Pipelines.taskColumns: _*), MergeSpecs.tasks.keyCols)
 
   private def typeOf: Map[Long, String] =
     store.rows("""SELECT t.task_id, tt.type_name FROM tasks t
