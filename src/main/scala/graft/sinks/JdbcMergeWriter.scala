@@ -34,9 +34,8 @@ import graft.sources.LocalRows
   *    writer function runs once over the rows. No query is planned and
   *    no Spark job runs. The rows are a projection of a `Seq` the
   *    caller already holds, so the driver memory this takes is bounded
-  *    by what the caller already holds. A batch with no transform may
-  *    also be one deterministic projection of a `LocalRelation`
-  *    ([[graft.sources.LocalRows.of]]);
+  *    by what the caller already holds. A batch with no transform is
+  *    written as it is ([[graft.sources.LocalRows.of]]);
   *  - any other plan (a file-source micro-batch, a parquet read, a
   *    filter over a local frame), or a transform with a
   *    nondeterministic column, runs `batch.select(transform)` and the

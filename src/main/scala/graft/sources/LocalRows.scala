@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{Attribute, BindReferences, Expression,
+import org.apache.spark.sql.catalyst.expressions.{BindReferences, Expression,
   InterpretedUnsafeProjection, Unevaluable}
 import org.apache.spark.sql.catalyst.optimizer.ReplaceExpressions
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Project}
@@ -14,44 +14,36 @@ import org.apache.spark.sql.types.StructType
   * a query.
   *
   * A frame is driver-resident when its analyzed plan, which `Dataset`
-  * computes when the frame is made, is
-  *  - a `LocalRelation`: a `Seq` passed to `createDataFrame`. Its rows
-  *    are the relation's rows;
-  *  - or one `Project` of a `LocalRelation` (a `select`, `toDF` or
-  *    `withColumn` over such a frame) whose expressions are all
-  *    deterministic and, once `ReplaceExpressions` has run, evaluable.
-  *    The expressions are bound to the relation's output by ordinal and
-  *    evaluated by an interpreted projection over the relation's rows.
-  *    That is the evaluation Spark's `ConvertToLocalRelation` rule does,
-  *    with no optimizer, physical planner or query execution around it.
-  * Any other plan (a filter, a nested projection, a file scan) is not,
-  * and reads through `collect()`.
+  * computes when the frame is made, is a `LocalRelation`: a `Seq`
+  * passed to `createDataFrame`. Its rows are the relation's rows. Any
+  * other plan (a projection, a filter, a file scan) is not, and reads
+  * through `collect()`.
   *
   * [[project]] evaluates a projection of a `LocalRelation` frame that
-  * is stated as columns, not yet as a frame: the rows
-  * `raw.select(columns)` would hold, with no `Dataset` made and no
-  * analyzer run. The columns are analyzed once per binding key — the
-  * input schema, the session's explicitly set configuration and the
-  * columns — against the first frame met with that key, and the bound
-  * expressions are kept with one interpreted projection, which a lock
-  * lets one caller use at a time. The analyzer binds the session's time
-  * zone and ANSI mode into the expressions, and both are configuration,
-  * so a change of either binds anew, as a frame made after the change
-  * would. The key does not cover the session's function registry: a
-  * column must not name a temporary function that is re-registered
-  * between batches.
+  * is stated as columns, not as a frame: the rows `raw.select(columns)`
+  * would hold, with no `Dataset` made and no analyzer run. The columns
+  * are analyzed once per binding key — the input schema, the session's
+  * explicitly set configuration and the columns — against the first
+  * frame met with that key, bound to the relation's output by ordinal,
+  * and kept with one interpreted projection, which a lock lets one
+  * caller use at a time. That is the evaluation Spark's
+  * `ConvertToLocalRelation` rule does, with no optimizer, physical
+  * planner or query execution around it. The analyzer binds the
+  * session's time zone and ANSI mode into the expressions, and both are
+  * configuration, so a change of either binds anew, as a frame made
+  * after the change would. The key does not cover the session's
+  * function registry: a column must not name a temporary function that
+  * is re-registered between batches.
   */
 object LocalRows {
 
   /** The rows of `df` if it is driver-resident, else None. */
-  def of(df: DataFrame): Option[Seq[Row]] = {
-    val qe = df.queryExecution
-    val conf = qe.sparkSession.sessionState.conf
-    qe.analyzed match {
-      case r: LocalRelation => Some(toRows(converter(r.schema), r.data.iterator))
-      case p @ Project(_, r: LocalRelation) => bind(p, r.output, conf).map(_.rows(r.data, conf))
-      case _ => None
-    }
+  def of(df: DataFrame): Option[Seq[Row]] = df.queryExecution.analyzed match {
+    case r: LocalRelation =>
+      SQLConf.withExistingConf(df.sparkSession.sessionState.conf) {
+        Some(toRows(converter(r.schema), r.data.iterator))
+      }
+    case _ => None
   }
 
   /** The rows of `raw.select(columns)` if `raw` is a `LocalRelation`
@@ -65,10 +57,7 @@ object LocalRows {
         val conf = raw.sparkSession.sessionState.conf
         val key = (r.schema, conf.getAllConfs, columns)
         val binding = bindings.synchronized(Option(bindings.get(key))).getOrElse {
-          val bound = raw.select(columns: _*).queryExecution.analyzed match {
-            case p @ Project(_, input: LocalRelation) => bind(p, input.output, conf)
-            case _ => None
-          }
+          val bound = bind(raw, columns, conf)
           bindings.synchronized(bindings.put(key, bound))
           bound
         }
@@ -90,25 +79,30 @@ object LocalRows {
       size > MaxBindings
   }
 
-  /** `p`'s expressions bound to `input` by ordinal, if all of them are
-    * deterministic and evaluable once `ReplaceExpressions` has run.
+  /** `columns` analyzed against `raw`, a `LocalRelation` frame, and
+    * bound to its output by ordinal, if all of them are deterministic
+    * and evaluable once `ReplaceExpressions` has run. Analyzed and bound
+    * under `conf`, the configuration of the binding key.
     */
-  private def bind(p: Project, input: Seq[Attribute], conf: SQLConf): Option[Binding] = {
-    val exprs = BindReferences.bindReferences[Expression](
-      ReplaceExpressions(p).asInstanceOf[Project].projectList, input)
-    if (exprs.exists(e => !e.deterministic || e.exists(_.isInstanceOf[Unevaluable]))) None
-    else Some(new Binding(exprs, p.schema, conf))
-  }
+  private def bind(raw: DataFrame, columns: Seq[Column], conf: SQLConf): Option[Binding] =
+    SQLConf.withExistingConf(conf) {
+      raw.select(columns: _*).queryExecution.analyzed match {
+        case p @ Project(_, input: LocalRelation) =>
+          val exprs = BindReferences.bindReferences[Expression](
+            ReplaceExpressions(p).asInstanceOf[Project].projectList, input.output)
+          if (exprs.exists(e => !e.deterministic || e.exists(_.isInstanceOf[Unevaluable]))) None
+          else Some(new Binding(exprs, p.schema))
+        case _ => None
+      }
+    }
 
   /** Bound expressions, the projection that evaluates them and the
-    * converter of its output to `Row`s of `schema`. The projection
-    * reuses its output row and its evaluation state, so one caller at a
-    * time uses it.
+    * converter of its output to `Row`s of `schema`, made under the
+    * caller's configuration. The projection reuses its output row and
+    * its evaluation state, so one caller at a time uses it.
     */
-  private final class Binding(exprs: Seq[Expression], schema: StructType, conf: SQLConf) {
-    private val projection = SQLConf.withExistingConf(conf) {
-      InterpretedUnsafeProjection.createProjection(exprs)
-    }
+  private final class Binding(exprs: Seq[Expression], schema: StructType) {
+    private val projection = InterpretedUnsafeProjection.createProjection(exprs)
     private val convert = converter(schema)
 
     def rows(data: Seq[InternalRow], conf: SQLConf): Seq[Row] = synchronized {

@@ -74,8 +74,8 @@ class OperatorSpecs extends SparkSpec {
     val local = snapshot(Seq(Row(1, "repair"), Row(2, "install"), Row(3, null)),
       "type_id" -> IntegerType, "type_name" -> StringType)
     val onDisk = RawBatches.onDisk(local)
-    assert(LocalRows.of(local.select("type_name", "type_id")).isDefined)
-    assert(LocalRows.of(onDisk.select("type_name", "type_id")).isEmpty, "read through collect()")
+    assert(LocalRows.of(local).isDefined)
+    assert(LocalRows.of(onDisk).isEmpty, "read through collect()")
     val want = Map("repair" -> 1, "install" -> 2)
     assert(Dimension.index(local, "type_id", "type_name") == want)
     assert(Dimension.index(onDisk, "type_id", "type_name") == want)
@@ -85,8 +85,8 @@ class OperatorSpecs extends SparkSpec {
     val local = snapshot(Seq(Row(1L, "ann"), Row(3L, "cat"), Row(4L, "cat"), Row(5L, null)),
       "id" -> LongType, "shortname" -> StringType)
     val onDisk = RawBatches.onDisk(local)
-    assert(LocalRows.of(local.select("shortname", "id")).isDefined)
-    assert(LocalRows.of(onDisk.select("shortname", "id")).isEmpty, "read through collect()")
+    assert(LocalRows.of(local).isDefined)
+    assert(LocalRows.of(onDisk).isEmpty, "read through collect()")
     val want = Map("ann" -> Seq(1L), "cat" -> Seq(3L, 4L))
     assert(Bridge.shortnameIndex(local, "id", "shortname") == want)
     assert(Bridge.shortnameIndex(onDisk, "id", "shortname") == want)

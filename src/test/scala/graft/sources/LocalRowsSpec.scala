@@ -32,16 +32,21 @@ class LocalRowsSpec extends SparkSpec {
       new java.math.BigDecimal("-2.25"), Row(-1.0))).asJava, schema)
 
   test("a local frame and one projection of it read as collect() does") {
-    val frames = Seq(
-      "local" -> local,
-      "toDF" -> local.toDF("i", "n", "t", "g", "a", "p"),
-      "select" -> local.select(col("id").cast("int").as("id"), upper(col("name")),
+    val rows = LocalRows.of(local)
+    assert(rows.isDefined, "local: driver-resident")
+    assert(rows.get == local.collect().toSeq, "local")
+    assert(rows.get.forall(_.schema == local.schema), "local: rows carry the schema")
+    val projections = Seq(
+      "renamed" -> local.columns.toSeq.zip(Seq("i", "n", "t", "g", "a", "p"))
+        .map { case (from, to) => col(from).as(to) },
+      "computed" -> Seq(col("id").cast("int").as("id"), upper(col("name")),
         year(col("at")), size(col("tags")), col("amount") * 2, col("point.x"),
         expr("nvl(name, 'none')").as("nvl"), // a RuntimeReplaceable expression
         concat(lit("gen-"), substring(md5(col("id").cast("string")), 1, 12))),
-      "withColumn" -> local.withColumn("flag", col("name").rlike("^[a-z]+$")))
-    frames.foreach { case (shape, df) =>
-      val rows = LocalRows.of(df)
+      "star and flag" -> Seq(col("*"), col("name").rlike("^[a-z]+$").as("flag")))
+    projections.foreach { case (shape, columns) =>
+      val df = local.select(columns: _*)
+      val rows = LocalRows.project(local, columns)
       assert(rows.isDefined, s"$shape: driver-resident")
       assert(rows.get == df.collect().toSeq, shape)
       assert(rows.get.forall(_.schema == df.schema), s"$shape: rows carry the schema")
@@ -50,6 +55,7 @@ class LocalRowsSpec extends SparkSpec {
 
   test("any other plan is not driver-resident and reads through collect()") {
     val frames = Seq(
+      "projection" -> local.select(col("id"), col("name")),
       "filter" -> local.filter(col("id") > 1),
       "nested projection" -> local.select(col("id")).select(col("id") + 1),
       "nondeterministic" -> local.select(col("id"), rand()),

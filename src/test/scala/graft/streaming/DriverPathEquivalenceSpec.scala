@@ -4,7 +4,7 @@ import java.sql.Timestamp
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions.{col, lit, rand}
 import org.apache.spark.sql.types.StructType
 import org.scalacheck.{Gen, Prop, Test => SCTest}
@@ -167,14 +167,16 @@ class DriverPathEquivalenceSpec extends SparkSpec {
       Vector(Vector(1L, "Employee 1"), Vector(2L, "Employee 2")))
 
     // one projection of the local rows, so only rand() keeps it off the driver
-    def flagged(flag: org.apache.spark.sql.Column) = raw.select(col("*"), flag.as("flag"))
+    def flagged(flag: Column) = Seq(col("*"), flag.as("flag"))
     val (fixed, random) = (flagged(lit(true)), flagged(rand() >= 0))
-    assert(LocalRows.of(fixed).isDefined)
-    assert(LocalRows.of(random).isEmpty, "a nondeterministic column is not evaluated on the driver")
+    assert(LocalRows.project(raw, fixed).isDefined)
+    assert(LocalRows.project(raw, random).isEmpty,
+      "a nondeterministic column is not evaluated on the driver")
     onDriver.clear()
     onExecutors.clear()
-    def upsert(df: DataFrame, store: DerbyStore) =
-      JdbcMergeWriter.upsert(df, MergeSpecs.employees, DerbyDialect, store.cf, Some("flag"))
+    def upsert(transform: Seq[Column], store: DerbyStore) =
+      JdbcMergeWriter.upsert(raw, MergeSpecs.employees, DerbyDialect, store.cf, Some("flag"),
+        transform)
     assert(upsert(fixed, onDriver) == Tally(3, 3))
     assert(upsert(random, onExecutors) == Tally(3, 3))
     assert(contents(onExecutors) == contents(onDriver))

@@ -1,11 +1,11 @@
 #!/usr/bin/env python3
-"""Splits a JFR recording's CPU samples of one thread by layer.
+"""Splits a JFR recording's CPU samples of the main thread by layer.
 
-Usage: python3 tools/jfr_split.py RECORDING.jfr [--thread main] [--under FRAME]
+Usage: python3 tools/jfr_split.py RECORDING.jfr [--under FRAME]
 
 Reads the recording's jdk.ExecutionSample events with the JDK's `jfr`
-tool and keeps the samples of one thread (default `main`, the thread
-the benchmark's closed loop runs in) whose stack holds a frame starting
+tool and keeps the samples of the `main` thread (the thread the
+benchmark's closed loop runs in) whose stack holds a frame starting
 with FRAME (default `graft.streaming.HashGatedPoller.poll`: the `sync`
 ticks). Each kept sample goes to one layer:
 
@@ -41,14 +41,14 @@ MARKERS = [("analyzer", "org.apache.spark.sql.catalyst.analysis.Analyzer"),
            ("Dataset.select", "org.apache.spark.sql.classic.Dataset.select")]
 
 
-def samples(path, thread):
-    """Yields the stack (innermost frame first) of each sample of `thread`."""
+def samples(path):
+    """Yields the stack (innermost frame first) of each sample of `main`."""
     out = subprocess.run(["jfr", "print", "--events", "jdk.ExecutionSample",
                           "--stack-depth", "512", path],
                          check=True, capture_output=True, text=True).stdout
     for event in out.split("jdk.ExecutionSample {")[1:]:
         m = re.search(r'sampledThread = "([^"]*)"', event)
-        if not m or m.group(1) != thread:
+        if not m or m.group(1) != "main":
             continue
         yield [line.strip().split("(")[0] for line in event.split("stackTrace = [")[1]
                .split("]")[0].splitlines() if line.strip() and line.strip() != "..."]
@@ -68,12 +68,11 @@ def layer(stack):
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("recording")
-    ap.add_argument("--thread", default="main")
     ap.add_argument("--under", default="graft.streaming.HashGatedPoller.poll")
     a = ap.parse_args()
-    kept = [s for s in samples(a.recording, a.thread) if any(f.startswith(a.under) for f in s)]
+    kept = [s for s in samples(a.recording) if any(f.startswith(a.under) for f in s)]
     n = len(kept)
-    print(f"{n} samples of thread {a.thread} under {a.under}")
+    print(f"{n} samples of thread main under {a.under}")
     if not n:
         return
     for name, k in collections.Counter(layer(s) for s in kept).most_common():
