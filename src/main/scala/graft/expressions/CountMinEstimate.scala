@@ -9,11 +9,10 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Count-min point estimate as ONE compiled fold:
   * `est(t) = min_d counters[d][h_d(t)]` over a COLLECTED sketch —
-  * the map-only scoring form of
-  * [[graft.operators.CorpusStats.countMinEstimateWith]], whose
-  * explode(×depth) + broadcast join + re-aggregation this kernel
-  * deletes (the probe table pays a vocab-sized exchange there just to
-  * regroup its own rows). The sketch is bounded at depth·width
+  * the kernel of [[graft.operators.CorpusStats.countMinEstimateMapOnly]],
+  * in place of an explode(×depth) + broadcast join + re-aggregation
+  * (where the probe table pays a vocab-sized exchange just to regroup
+  * its own rows). The sketch is bounded at depth·width
   * counters BY CONSTRUCTION — fixed space forever is the count-min
   * contract — so shipping it inside the expression costs what the
   * broadcast hash relation cost, without the join machinery.
@@ -23,7 +22,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * `base = md5prefix60(t) mod P`, `h_d = ((2d+1)·base + 7919d + 13)
   * mod P mod width` — all operands positive and < 2^33, so plain
   * `%`/Long arithmetic reproduces the SQL exactly. Absent counters
-  * read 0, exactly like the left join's coalesce.
+  * read 0.
   *
   * Round 17 measured that an interpreted HOF fold LOSES to the
   * codegen'd explode+join+agg path (+45% on the DSIR probe); this is

@@ -28,10 +28,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * formula matches byte-for-byte on the internal < 2³⁰ domain;
   * out-of-domain bigint callers must apply the same `((h % P) + P)
   * % P` pre-reduction on the oracle side. Band keys are rendered
-  * directly as `"b:s:s"` — byte-identical to
-  * [[graft.operators.Dedup.bandColsFromSigs]]'s `concat_ws` keys, the
-  * ONE band-key definition shared with the batch signing path (pinned
-  * in `StreamingDedupSpec` and `MinHashBandsSpec`).
+  * directly as `"b:s:s"` — byte-identical to a `concat_ws(":", b,
+  * sig…)` key over min-over-explode signatures (the reference pinned
+  * in `MinHashBandsSpec`); the batch and streaming dedup paths both
+  * sign through this kernel (pinned in `StreamingDedupSpec`).
   *
   * Accepts array<int> (the shingle sets' storage type) or
   * array<bigint> (caller-supplied hash arrays) — elements promote to

@@ -698,34 +698,6 @@ object CorpusStats {
         col("clean_text"))
   }
 
-  /** Count-min sketch (Cormode & Muthukrishnan, J. Algorithms '05)
-    * over token OCCURRENCES: a `depth × width` counter table where row
-    * d counts tokens by the d-th member of the portable seeded hash
-    * family ([[graft.functions.HashFunctions.seeded]], so the DuckDB
-    * oracle reproduces every bucket bit-for-bit). The estimate for any
-    * token — min over rows of its bucket's counter — never
-    * underestimates and overestimates only by hash collisions (with
-    * probability ≤ e^-depth by more than e·N/width), which is what
-    * makes frequency queries affordable when the true vocabulary is
-    * too big to keep: the sketch is `depth·width` rows FOREVER,
-    * independent of corpus size.
-    *
-    * Scale shape: the corpus pays ONE token aggregate (map-side
-    * partial counts, one shuffle to the Heaps-law-sized vocabulary
-    * table); the ×depth explode and the (d, bucket) fold run on the
-    * vocab-sized table, never the corpus.
-    *
-    * The sketch is ADDITIVE — counters of disjoint batches sum — so it
-    * is the fifth maintained shape: fold per-batch sketches through
-    * [[mergeStats]] with `keys = Seq("d", "bucket"), counts = Seq("n")`
-    * (or [[graft.streaming.StatsMaintenance.start]] for the
-    * crash/replay-safe loop), and the maintained sketch is EXACTLY the
-    * one-pass sketch of the union — unlike the exact token-df table it
-    * can absorb an unbounded stream in fixed space.
-    *
-    * @return (d: int, bucket: long, n: long) — one row per NON-EMPTY
-    *         counter (absent ⇒ 0, [[countMinEstimateWith]] coalesces)
-    */
   /** Exact token OCCURRENCE counts — (token, n), every occurrence
     * counted (unlike [[tokenDf]]'s per-document distinct). This is the
     * SIXTH maintained shape: additive over disjoint batches (fold with
@@ -791,6 +763,34 @@ object CorpusStats {
         sum(T.tokenCount(col(textCol)).cast("long")).as("n_tokens"),
         sum(col(charsCol).cast("long")).as("char_mass"))
 
+  /** Count-min sketch (Cormode & Muthukrishnan, J. Algorithms '05)
+    * over token OCCURRENCES: a `depth × width` counter table where row
+    * d counts tokens by the d-th member of the portable seeded hash
+    * family ([[graft.functions.HashFunctions.seeded]], so the DuckDB
+    * oracle reproduces every bucket bit-for-bit). The estimate for any
+    * token — min over rows of its bucket's counter — never
+    * underestimates and overestimates only by hash collisions (with
+    * probability ≤ e^-depth by more than e·N/width), which is what
+    * makes frequency queries affordable when the true vocabulary is
+    * too big to keep: the sketch is `depth·width` rows FOREVER,
+    * independent of corpus size.
+    *
+    * Scale shape: the corpus pays ONE token aggregate (map-side
+    * partial counts, one shuffle to the Heaps-law-sized vocabulary
+    * table); the ×depth explode and the (d, bucket) fold run on the
+    * vocab-sized table, never the corpus.
+    *
+    * The sketch is ADDITIVE — counters of disjoint batches sum — so it
+    * is the fifth maintained shape: fold per-batch sketches through
+    * [[mergeStats]] with `keys = Seq("d", "bucket"), counts = Seq("n")`
+    * (or [[graft.streaming.StatsMaintenance.start]] for the
+    * crash/replay-safe loop), and the maintained sketch is EXACTLY the
+    * one-pass sketch of the union — unlike the exact token-df table it
+    * can absorb an unbounded stream in fixed space.
+    *
+    * @return (d: int, bucket: long, n: long) — one row per NON-EMPTY
+    *         counter (absent ⇒ 0, as [[countMinEstimateMapOnly]] reads it)
+    */
   def countMinSketch(docs: DataFrame, textCol: String, depth: Int,
       width: Int): DataFrame =
     countMinSketchOf(tokenCounts(docs, textCol), depth, width)
@@ -815,67 +815,25 @@ object CorpusStats {
   /** Point-estimate token frequencies against a (maintained)
     * [[countMinSketch]] table: `est(t) = min_d sketch[d][h_d(t)]`,
     * with an absent counter reading 0 (the token family hashed there
-    * was never seen). `depth`/`width` MUST match the sketch's build —
-    * they are the model's geometry, exactly like a tokenizer's merge
-    * list.
+    * was never seen) and a NULL probe token estimating 0.
+    * `depth`/`width` MUST match the sketch's build — they are the
+    * model's geometry, exactly like a tokenizer's merge list.
     *
-    * Scale shape: ×depth explode of the PROBE table (usually
-    * vocab-sized or a handful of lookups), one equi-join against the
-    * `depth·width`-row sketch — Spark broadcasts it — and a per-token
-    * min. The corpus is never touched.
+    * Scale shape: the sketch — bounded at depth·width counters by
+    * construction, count-min's whole contract — is COLLECTED once and
+    * `est(t)` evaluates per probe row inside the compiled
+    * [[graft.expressions.CountMinEstimate]] kernel: map-only, no
+    * ×depth explode, no join, no re-aggregation. The corpus is never
+    * touched. Duplicate (d, bucket) sketch rows sum, the additive
+    * [[mergeStats]] reading; a NULL count adds nothing; rows outside
+    * the declared geometry fail loudly (a foreign sketch must never
+    * silently mis-bucket).
     *
     * @param tokens probe table; `tokenCol` is consumed, other columns
-    *               pass through untouched. The output is DISTINCT over
-    *               the input columns (the per-token min groups by all
-    *               of them), so duplicate probe rows collapse to one
-    *               output row — pass a surrogate key column if row
-    *               multiplicity matters. Column names `__d`, `__bucket`
-    *               and `__n` are reserved for the internal probe join
-    *               and rejected loudly.
+    *               pass through untouched, and the output has one row
+    *               per input row (duplicate probe rows are NOT
+    *               collapsed). The name `n_est` is rejected loudly.
     * @return input columns + (n_est: long)
-    */
-  def countMinEstimateWith(tokens: DataFrame, tokenCol: String,
-      sketch: DataFrame, depth: Int, width: Int): DataFrame = {
-    require(depth >= 1 && width >= 2, s"countMinEstimateWith($depth, $width)")
-    // n_est is reserved too: the probe's pass-through columns are the
-    // groupBy keys, so an input n_est would silently duplicate the
-    // output column name and break every downstream reference by name
-    val reserved = Set("__d", "__bucket", "__n", "n_est")
-    val clash = tokens.columns.filter(reserved)
-    require(clash.isEmpty,
-      s"countMinEstimateWith: probe columns ${clash.mkString(",")} clash " +
-        "with reserved names (__d, __bucket, __n, n_est) - rename them")
-    val passThrough = tokens.columns.toSeq
-    val base = H.md5Mod(col(tokenCol))
-    tokens
-      .select(passThrough.map(col) :+ posexplode(array(
-        (0 until depth).map(i => H.seeded(base, i) % width): _*))
-        .as(Seq("__d", "__bucket")): _*)
-      .join(sketch.select(col("d").as("__d"), col("bucket").as("__bucket"),
-        col("n").as("__n")), Seq("__d", "__bucket"), "left")
-      .groupBy(passThrough.map(col): _*)
-      .agg(min(coalesce(col("__n"), lit(0L))).as("n_est"))
-  }
-
-  /** MAP-ONLY [[countMinEstimateWith]] (round 18): the sketch —
-    * bounded at depth·width counters by construction, count-min's
-    * whole contract — is COLLECTED once (same bounded footprint the
-    * broadcast hash relation cost) and `est(t)` evaluates per probe
-    * row inside the compiled [[graft.expressions.CountMinEstimate]]
-    * kernel: no ×depth explode, no join, and no re-aggregation — the
-    * probe table paid a vocab-sized exchange there just to regroup its
-    * own rows. Absent counters read 0 via the array default, exactly
-    * like the left join's coalesce; a NULL probe token estimates 0,
-    * like the old all-NULL-bucket group.
-    *
-    * UNLIKE [[countMinEstimateWith]] this does NOT collapse duplicate
-    * probe rows (map-only: one output row per input row); every
-    * in-repo consumer probes an already-aggregated (hence distinct)
-    * token table, where the two forms are identical — oracle-pinned
-    * through x_sketch_countmin / x_sketch_heavy / x_sketch_heavy_stream.
-    * Duplicate (d, bucket) sketch rows sum, the additive
-    * [[mergeStats]] reading; rows outside the declared geometry fail
-    * loudly (a foreign sketch must never silently mis-bucket).
     */
   def countMinEstimateMapOnly(tokens: DataFrame, tokenCol: String,
       sketch: DataFrame, depth: Int, width: Int): DataFrame = {
@@ -979,11 +937,11 @@ object CorpusStats {
     * map-side with the broadcast candidate list) but never shuffled,
     * and the batch pays one O(batch) aggregate.
     *
-    * REGIME BOUND, probed (`tools/HeavySliverProbe`,
-    * `bench_evidence/r15_heavy_sliver_probe.txt`): the sliver shape
-    * above holds while the candidate list broadcasts. An adversarially
-    * LOW threshold makes the candidate set approach the vocabulary —
-    * at a planted 22M-candidate point (every history token heavy) AQE
+    * REGIME BOUND, probed (`bench_evidence/r15_heavy_sliver_probe.txt`):
+    * the sliver shape above holds while the candidate list
+    * broadcasts. An adversarially LOW threshold makes the candidate
+    * set approach the vocabulary — at a planted 22M-candidate point
+    * (every history token heavy) AQE
     * re-plans every semi-join as an ordinary shuffled join, which
     * completes EXACTLY with no hot key and no OOM (tokens are
     * well-distributed keys; nothing concentrates per task, unlike the

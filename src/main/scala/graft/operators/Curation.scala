@@ -97,9 +97,7 @@ object Curation {
 
   /** [[curate]] with cache OWNERSHIP: returns the packed result plus
     * an [[StagedCuration]] handle over every frame `persistStages`
-    * pinned, so repeated curate runs in one session (the
-    * `CurationE2EProbe` shape, which previously had to
-    * `cacheManager.clearCache()` around each call) release their
+    * pinned, so repeated curate runs in one session release their
     * blocks deterministically instead of leaking them until session
     * end. With persistStages=false the handle is empty and close() is
     * a no-op.

@@ -18,9 +18,13 @@ import graft.functions.{HashFunctions => H, TextFunctions => T, VectorFunctions 
   * the correctness baseline; its scale path is bucketing through
   * [[Similarity.hyperplaneBucket]] first.
   *
-  * Skew: a hot shingle/band (boilerplate text) explodes its bucket;
-  * AQE skew-join handles moderate cases, and [[lshCandidates]] caps
-  * bucket width defensively.
+  * Skew: a hot shingle/band (boilerplate text) explodes its bucket.
+  * In [[minhashDupPairs]] nothing caps a band's width: a band shared
+  * by m docs emits m·(m−1)/2 candidate pairs, and AQE's skew-join
+  * split of the oversized partition is the only mitigation.
+  * [[ngramJaccardPairs]] / [[containmentPairs]] keep hot shingles out
+  * of the prefix index, and [[sharedSpanPairs]] caps span df at
+  * `maxDf`.
   */
 object Dedup {
 
@@ -69,11 +73,6 @@ object Dedup {
           expr("__ca * (__ca - 1) div 2"))
         .otherwise(col("__ca") * col("__cb"))).as("dup_pairs"))
   }
-
-  /** (id, shingle) exploded rows over the distinct word-n-gram set. */
-  def shingleRows(docs: DataFrame, idCol: String, textCol: String,
-      n: Int): DataFrame =
-    docs.select(col(idCol), explode(T.shingleSet(col(textCol), n)).as("shingle"))
 
   /** Hashed shingle set: sorted distinct rolling hashes of the word
     * n-grams, computed straight from the token array
@@ -203,44 +202,13 @@ object Dedup {
           col("n_sh"), 6).as("contaminated_frac"))
   }
 
-  /** MinHash signatures from precomputed hashed shingle sets: each
-    * shingle hash (already < P) seeds the affine family — see
-    * [[graft.functions.HashFunctions]] — and the k mins aggregate per
-    * document. One shuffle on the id; no per-shingle digests here at
-    * all (they happened once inside [[hashedSets]]).
-    */
-  def minhashSignatures(sets: DataFrame, k: Int): DataFrame = {
-    val base = sets.select(col("__sid"), explode(col("__set")).as("__b"))
-    val aggs = (0 until k).map(i => min(H.seeded(col("__b"), i)).as(s"sig_$i"))
-    base.groupBy(col("__sid")).agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** LSH banding: k signatures split into bands of `rowsPerBand`; docs
-    * sharing any band key become candidate pairs (i < j, distinct).
-    * The self-join is an equi-join on the band key — the whole point:
-    * candidates come from hash buckets, never from a cross product.
-    */
-  /** Band keys from the k `sig_*` columns of [[minhashSignatures]] —
-    * the ONE definition of what a band key looks like (`"b:s:s"`),
-    * shared by batch LSH and the streaming corpus index so their keys
-    * can never drift.
-    */
-  private[graft] def bandColsFromSigs(k: Int, rowsPerBand: Int): Seq[Column] = {
-    require(k % rowsPerBand == 0,
-      s"k=$k must be a multiple of rowsPerBand=$rowsPerBand — a remainder " +
-        "would silently drop the trailing signatures from every band")
-    (0 until k / rowsPerBand).map { b =>
-      val parts = (0 until rowsPerBand).map(r => col(s"sig_${b * rowsPerBand + r}"))
-      concat_ws(":", lit(b) +: parts: _*)
-    }
-  }
-
-  /** The same band keys computed PER ROW from a hashed shingle set —
+  /** MinHash LSH band keys (`"b:s:s"`, k signatures split into bands
+    * of `rowsPerBand`) computed PER ROW from a hashed shingle set —
     * map-only (no explode, no groupBy), which is what makes it legal
     * on a STREAMING DataFrame: `min(seeded(h,i))` over an exploded set
-    * and the per-row minimum over the same set are the same number, so
-    * these keys equal [[bandColsFromSigs]]'s by construction (pinned
-    * in `StreamingDedupSpec`). Computed by the fused
+    * and the per-row minimum over the same set are the same number
+    * (pinned against the min-over-explode reference in
+    * `MinHashBandsSpec`). Computed by the fused
     * [[graft.expressions.MinHashBands]] kernel — one codegen'd array
     * scan updating all k seeded minima — replacing the former
     * k×(`transform`+`array_min`) HOF chain, which fell out of
@@ -256,17 +224,6 @@ object Dedup {
     */
   def rowBandArray(set: Column, k: Int, rowsPerBand: Int): Column =
     graft.expressions.MinHashBands(set, k, rowsPerBand)
-
-  def lshCandidates(sigs: DataFrame, idCol: String, k: Int,
-      rowsPerBand: Int): DataFrame = {
-    val banded = sigs.select(col(idCol),
-      explode(array(bandColsFromSigs(k, rowsPerBand): _*)).as("band"))
-    banded.as("a").join(banded.as("b"),
-        col("a.band") === col("b.band") &&
-          col(s"a.$idCol") < col(s"b.$idCol"))
-      .select(col(s"a.$idCol").as("i"), col(s"b.$idCol").as("j"))
-      .distinct()
-  }
 
   /** Per-doc hashed shingle sets `(__sid, __set)` — the shared input
     * of candidate generation and verification. Persisted
@@ -301,19 +258,6 @@ object Dedup {
       .where(col("jaccard") >= threshold)
       .select(col("i"), col("j"), col("jaccard"))
 
-  /** The pre-round-14 verify with the unbounded scan kernel — kept
-    * private for A/B evidence runs ([[graft.tools.VerifyAB]]).
-    */
-  private[graft] def jaccardVerifyUnbounded(candidates: DataFrame,
-      sets: DataFrame, threshold: Double): DataFrame =
-    candidates
-      .join(sets.select(col("__sid").as("i"), col("__set").as("__sa")), Seq("i"))
-      .join(sets.select(col("__sid").as("j"), col("__set").as("__sb")), Seq("j"))
-      .withColumn("jaccard",
-        graft.expressions.SortedArrayJaccard(col("__sa"), col("__sb")))
-      .where(col("jaccard") >= threshold)
-      .select(col("i"), col("j"), col("jaccard"))
-
   /** Materialize `pairs` (persist + count) so the shingle-set cache it
     * reads can be released immediately — the per-doc sets are the big
     * intermediate; the returned pair set is dedup OUTPUT, orders of
@@ -339,11 +283,9 @@ object Dedup {
       threshold: Double = 0.7): DataFrame = {
     val sets = hashedSets(docs, idCol, textCol, n)
     // Band keys come from the fused per-row kernel ([[rowBandArray]] →
-    // MinHashBands): one map-only array scan per doc. This replaced
-    // the explode + 8-min-aggregate signature build
-    // ([[minhashSignatures]] + [[lshCandidates]], kept as the
-    // documented alternates) — same keys by the pinned
-    // min-over-explode ≡ per-row-min identity, minus the signature
+    // MinHashBands): one map-only array scan per doc — the same keys
+    // as an explode + k-min-aggregate signature build, by the pinned
+    // min-over-explode ≡ per-row-min identity, minus that build's
     // groupBy exchange, which at corpus scale is a whole stage
     // barrier spent deriving what a map can compute.
     val banded = sets.select(col("__sid"),
@@ -405,13 +347,11 @@ object Dedup {
     materializeAndRelease(jaccardVerify(cand, sets, threshold), sets)
   }
 
-  /** Candidate stage of [[ngramJaccardPairs]], exposed for stage-level
-    * cost attribution (tools/JaccardProbe): returns (candidate pairs,
-    * persisted shingle sets). The CALLER owns the `sets` cache —
-    * unpersist it (or go through ngramJaccardPairs, whose
-    * materializeAndRelease does) when done.
+  /** Candidate stage of [[ngramJaccardPairs]]: returns (candidate
+    * pairs, persisted shingle sets). The CALLER owns the `sets` cache
+    * and releases it through materializeAndRelease.
     */
-  private[graft] def ngramJaccardCandidates(docs: DataFrame, idCol: String,
+  private def ngramJaccardCandidates(docs: DataFrame, idCol: String,
       textCol: String, n: Int, threshold: Double,
       prefixFilterFloor: Long, hotBroadcastCap: Int): (DataFrame, DataFrame) = {
     val sets = hashedSets(docs, idCol, textCol, n)
@@ -591,11 +531,10 @@ object Dedup {
     materializeAndRelease(out, sets)
   }
 
-  /** Candidate stage of [[containmentPairs]], exposed for stage-level
-    * cost attribution (tools/ContainmentProbe): returns (candidate
+  /** Candidate stage of [[containmentPairs]]: returns (candidate
     * pairs, persisted shingle sets). The CALLER owns the `sets` cache.
     */
-  private[graft] def containmentCandidates(docs: DataFrame, idCol: String,
+  private def containmentCandidates(docs: DataFrame, idCol: String,
       textCol: String, n: Int, threshold: Double,
       prefixFilterFloor: Long, hotBroadcastCap: Int): (DataFrame, DataFrame) = {
     require(threshold > 0 && threshold <= 1, s"threshold=$threshold")
@@ -787,10 +726,10 @@ object Dedup {
     * stage both [[sharedSpanPairs]] and [[dropDuplicateSubstrings]]
     * pay, in two SKEW-SAFE formulations (round 14: the count-over-
     * window form they used was CONVICTED by a planted-viral-key
-    * anchor, `tools/ViralSkewProbe` — `count(1) over (partition by
-    * __h)` ships every occurrence of a hash to ONE window task with no
-    * partial aggregation, and WindowExec cannot be skew-split; at a
-    * planted df of 10M the hot task died of
+    * anchor, `bench_evidence/r14_viral_skew_probe.txt` — `count(1)
+    * over (partition by __h)` ships every occurrence of a hash to ONE
+    * window task with no partial aggregation, and WindowExec cannot
+    * be skew-split; at a planted df of 10M the hot task died of
     * SparkOutOfMemoryError trying a ~500 MB contiguous allocation, and
     * at df 50M the surviving runs were 3× slower than the groupBy
     * form, which held flat at every point. A cookie banner in 1% of a
@@ -827,20 +766,6 @@ object Dedup {
     spans.join(keep, Seq("__h"), "left_semi")
   }
 
-  /** The convicted count-over-window thinning forms, kept ONLY for
-    * [[graft.tools.ViralSkewProbe]] / A-B evidence runs — identical
-    * output, single-task hot-key behavior. Do not use in operators.
-    */
-  private[graft] def dropOverCapKeysWindowed(spans: DataFrame,
-      cap: Int): DataFrame = spans
-    .withColumn("__df", count(lit(1)).over(Window.partitionBy(col("__h"))))
-    .where(col("__df") <= cap).drop("__df")
-
-  private[graft] def keepDuplicatedKeysWindowed(spans: DataFrame,
-      minOcc: Int): DataFrame = spans
-    .withColumn("__df", count(lit(1)).over(Window.partitionBy(col("__h"))))
-    .where(col("__df") >= minOcc).drop("__df")
-
   /** Exact long-span duplication — the "these two documents share a
     * verbatim 20-token passage" detector from the substring-dedup
     * literature (Lee et al. 2022 use suffix arrays for the fully
@@ -870,6 +795,13 @@ object Dedup {
     * its candidates are verified by exact set ops downstream, so
     * collisions there only perturb a ratio by ~1/P while the halved
     * element width halves the family's dominant shuffle.
+    *
+    * CAVEAT — eager, and not executor-loss tolerant: building the
+    * returned frame RUNS a Spark job (the token arrays are
+    * `localCheckpoint(true)`'d once per call). Those checkpoint blocks
+    * live only in the executors' block managers, with the lineage cut,
+    * so losing one executor fails the job instead of recomputing its
+    * partitions.
     */
   def sharedSpanPairs(docs: DataFrame, idCol: String, textCol: String,
       n: Int = 20, maxDf: Int = 64, minShared: Int = 1): DataFrame = {
@@ -927,12 +859,20 @@ object Dedup {
     * window mass; (2) occurrence thinning via [[keepDuplicatedKeys]]
     * — a map-combined groupBy count plus a sliver semi-join, skew-safe
     * under viral keys where the round-13 count-over-window form OOMed
-    * one task at a planted df of 10M (`tools/ViralSkewProbe`, round
-    * 14); (3) covered positions = duplicated windows × n rows
-    * BEFORE distinct — the one deliberate multiplier, proportional to
-    * the duplicated mass, not the corpus; (4) one token posexplode +
+    * one task at a planted df of 10M
+    * (`bench_evidence/r14_viral_skew_probe.txt`); (3) covered
+    * positions = duplicated windows × n rows BEFORE distinct — the one
+    * deliberate multiplier, proportional to the duplicated mass, not
+    * the corpus; (4) one token posexplode +
     * anti-join on (doc, position) + per-doc in-row rebuild (the
     * rebuild explode is inherent: the output IS the rewritten corpus).
+    *
+    * CAVEAT — eager, and not executor-loss tolerant: building the
+    * returned frame RUNS a Spark job (the token arrays are
+    * `localCheckpoint(true)`'d once per call). Those checkpoint blocks
+    * live only in the executors' block managers, with the lineage cut,
+    * so losing one executor fails the job instead of recomputing its
+    * partitions.
     *
     * @return (idCol, n_tokens, n_removed, clean_text) — token-less and
     *         fully-duplicated docs survive with clean_text = ""
@@ -1180,9 +1120,10 @@ object Dedup {
     * percent of all names end (or start) with the same token — Zipf
     * head words, Inc/LLC suffixes — that one (segment, i, len) key
     * pairs its whole bucket quadratically, and levenshtein then
-    * rejects nearly all of it (measured in `tools/EditDistProbe`:
-    * the same corpus that joins in seconds with hash-unique names
-    * stalls with first-word suffixes). Normalize shared affixes away
+    * rejects nearly all of it (measured in
+    * `bench_evidence/r10_editdist_probe.txt`: the same corpus that
+    * joins in seconds with hash-unique names stalls with first-word
+    * suffixes). Normalize shared affixes away
     * before calling, or use the shingle family for that data shape —
     * this is part of the declared domain, like the length bounds.
     * No sort, no window, no cross product.

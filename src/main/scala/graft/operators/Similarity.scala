@@ -230,7 +230,8 @@ object Similarity {
     * bit-for-bit, which is fine for a quantizer. Exemplar books are
     * near-random cuts of the space; on clustered corpora training
     * moves them onto the data manifold and is what makes the ADC
-    * shortlist usable (measured in tools/PqProbe). Train on a
+    * shortlist usable (measured by the PQ probe, source at
+    * `f9f40ed:src/main/scala/graft/tools/PqProbe.scala`). Train on a
     * [[Sampling.deterministicKeep]] sample at scale — quality needs a
     * sample, not the corpus.
     *
@@ -361,8 +362,9 @@ object Similarity {
   }
 
   /** Shortlist-rerank ANN — the deployment shape the PQ probes
-    * motivate (tools/PqProbe: raw ADC ranks cannot separate top-10 of
-    * a tight cluster, but an R = 100·k ADC shortlist recalls it):
+    * motivate (`f9f40ed:src/main/scala/graft/tools/PqProbe.scala`:
+    * raw ADC ranks cannot separate top-10 of a tight cluster, but an
+    * R = 100·k ADC shortlist recalls it):
     * the compressed ADC scan produces `shortK` candidates per query,
     * and the EXACT cosine re-scores only those — so full-precision
     * math touches shortK·queries rows instead of the corpus, while

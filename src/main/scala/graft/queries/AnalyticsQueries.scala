@@ -234,13 +234,15 @@ object AnalyticsQueries {
     * the dedup hash only ever sees one partition's share
     * (rows/partitions, AQE-sized), bounded at any scale; the dedup and
     * the final count then run post-shuffle where each pair occurs in
-    * exactly one task. Probe-measured (tools/DistinctProbe, n≥2 warm):
-    * sf10 8.4–15.4 s → 6.7–8.8 s; sf30 34.4–37.0 s → 27.4–28.3 s
-    * (and 22.5 s at an explicit width of 256 — left to AQE here
-    * because a hard-coded width is a local[32] artifact, while the
-    * AQE-managed form scales with the data). `count(col(c))` skips the
-    * one surviving (group, NULL) row, matching `countDistinct`'s
-    * NULL-skipping exactly while keeping the group alive with 0. The
+    * exactly one task. Probe-measured
+    * (`f9f40ed:src/main/scala/graft/tools/DistinctProbe.scala`, n≥2
+    * warm): sf10 8.4–15.4 s → 6.7–8.8 s; sf30 34.4–37.0 s →
+    * 27.4–28.3 s (and 22.5 s at an explicit width of 256 — left to
+    * AQE here because a hard-coded width is a local[32] artifact,
+    * while the AQE-managed form scales with the data). `count(col(c))`
+    * skips the one surviving (group, NULL) row, matching
+    * `countDistinct`'s NULL-skipping exactly while keeping the group
+    * alive with 0. The
     * per-column frames re-join on a NULL-SAFE key (`<=>`, still an
     * equi-join key for Catalyst) so a NULL group — which a single
     * multi-distinct agg would keep — survives the rewrite too; plain

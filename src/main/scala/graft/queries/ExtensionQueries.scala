@@ -397,7 +397,7 @@ object ExtensionQueries {
 
   /** Count-min sketch frequency estimation
     * ([[graft.operators.CorpusStats.countMinSketch]] /
-    * [[graft.operators.CorpusStats.countMinEstimateWith]]), built
+    * [[graft.operators.CorpusStats.countMinEstimateMapOnly]]), built
     * INCREMENTALLY: four disjoint-batch sketches folded through the
     * generic [[graft.operators.CorpusStats.mergeStats]] (the fifth
     * maintained shape — fixed `depth·width` rows however large the
@@ -1387,10 +1387,9 @@ object ExtensionQueries {
   /** Containment (overlap-coefficient) dedup over a corpus with
     * PLANTED excerpts: every 7th document re-appears under a shifted
     * id as its first max(⌊tokens/2⌋, 6) tokens. The shift is
-    * 10 000 000 (ContainmentProbe's convention) — past the doc_id
-    * range of any gated corpus, so an excerpt row can never silently
-    * merge with a real document (200 000 collided at the 500k-doc
-    * decade). An excerpt's shingle
+    * 10 000 000 — past the doc_id range of any gated corpus, so an
+    * excerpt row can never silently merge with a real document
+    * (200 000 collided at the 500k-doc decade). An excerpt's shingle
     * set is a subset of its source's, so containment is 1.0 while
     * Jaccard is only ~0.5 — below any symmetric threshold: exactly
     * the pair class [[Dedup.containmentPairs]] exists to catch

@@ -343,13 +343,14 @@ object ParityQueries {
     * near-unique (1-2 rows per key), so a map-side partial agg builds
     * a hash over nearly every row a task scans for almost no row
     * reduction; repartitioning first bounds dedup state to one
-    * AQE-sized partition's share. Probe-measured (tools/DistinctProbe
-    * `dedup` mode, warm): sf10 8.0-13.0 → 6.6-7.7 s, sf30 24-32 →
-    * 20 s. Counter-example measured in the same probe: k5's
-    * collect_set per PK is LEFT two-phase, because there the partial
-    * agg genuinely reduces (~4 lineitems → 1 array) and
-    * repartition-first measured ~25% SLOWER — the rewrite pays only
-    * where map-side aggregation yields no reduction.
+    * AQE-sized partition's share. Probe-measured (`dedup` mode of
+    * `f9f40ed:src/main/scala/graft/tools/DistinctProbe.scala`, warm):
+    * sf10 8.0-13.0 → 6.6-7.7 s, sf30 24-32 → 20 s. Counter-example
+    * measured in the same probe: k5's collect_set per PK is LEFT
+    * two-phase, because there the partial agg genuinely reduces
+    * (~4 lineitems → 1 array) and repartition-first measured ~25%
+    * SLOWER — the rewrite pays only where map-side aggregation yields
+    * no reduction.
     */
   private def a4DedupByPk(s: SparkSession, dir: String): DataFrame = {
     val li = Tables.lineitem(s, dir)

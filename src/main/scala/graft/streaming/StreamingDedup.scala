@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
@@ -94,14 +94,17 @@ object StreamingDedup {
     * Jaccard on the two shingle sets confirms, so band collisions can
     * cost work but never a wrong flag.
     *
-    * Scale shape of the stream-static join (measured in
-    * `DedupGateSoak` at a 500k-doc / 2M-row index): the planner
-    * broadcasts the BOUNDED side — the exploded micro-batch — and
-    * streams the index through the probe, so index size is a
+    * Scale shape of the stream-static join (measured at a 500k-doc /
+    * 2M-row index; SCALING.md "Streaming gate at a 500k-doc corpus
+    * index", soak source at
+    * `f9f40ed:src/main/scala/graft/tools/DedupGateSoak.scala`): the
+    * planner broadcasts the BOUNDED side — the exploded micro-batch —
+    * and streams the index through the probe, so index size is a
     * per-batch scan bill, never a driver/executor memory bill. At
-    * 100 TB the levers are amortizing that scan with larger triggers,
-    * and cutting it by bucketing the materialized index by band key
-    * so the parquet reader prunes to the micro-batch's buckets.
+    * 100 TB the lever is amortizing that scan with larger triggers. A
+    * band-hash-bucketed index read was measured slower than this full
+    * scan in every configuration tried
+    * (`bench_evidence/r9_gate_ab_sf10z_*`) and is not offered.
     */
   def nearDupFlags(incoming: DataFrame, index: DataFrame,
       idCol: String, textCol: String, n: Int = 5, k: Int = 8,
@@ -133,9 +136,8 @@ object StreamingDedup {
       .select(col("doc_id"), col("__dset"), col("__dbands"),
         explode(col("__dbands")).as("band"))
 
-  /** The join core shared by [[nearDupFlags]] and
-    * [[nearDupFlagsPruned]]: band-bucket equi-join, min-shared-band
-    * pair dedup, exact-Jaccard confirm.
+  /** The join core of [[nearDupFlags]]: band-bucket equi-join,
+    * min-shared-band pair dedup, exact-Jaccard confirm.
     */
   private def joinFlags(in: DataFrame, index: DataFrame,
       threshold: Double): DataFrame =
@@ -146,111 +148,4 @@ object StreamingDedup {
         graft.expressions.SortedArrayJaccard(col("__dset"), col("__cset")))
       .where(col("jaccard") >= threshold)
       .select(col("doc_id"), col("corpus_id"), col("jaccard"))
-
-  /** Name of the sidecar file [[writeBucketedIndex]] drops next to the
-    * parquet dirs, holding the bucket count — the read side MUST hash
-    * with the same modulus or the pruning silently drops true matches.
-    */
-  private val BucketSidecar = "_graft_band_buckets"
-
-  private def bucketOf(band: Column, nBuckets: Int): Column =
-    pmod(xxhash64(band), lit(nBuckets.toLong))
-
-  /** Materialize a [[corpusIndex]] to the lake partitioned by a
-    * band-hash bucket — the scan-cutting lever for the streaming
-    * gate: a micro-batch's band keys hash into a bounded set of
-    * buckets, so [[nearDupFlagsPruned]] reads only those partitions
-    * instead of the whole index. The count is recorded in a sidecar
-    * so the read side can never hash with a different modulus.
-    *
-    * MEASURED ECONOMICS (GateScanBench, zipf sf10 corpus — 500k docs,
-    * 2M-row index; `bench_evidence/r9_gate_ab_sf10z_*`): this layout
-    * rarely pays, for two compounding reasons. (1) Bucket saturation:
-    * at k/rowsPerBand = 4 uniformly-hashed band keys per doc, a
-    * 32-doc batch already touches 56 of 64 buckets (118 of 1024), so
-    * meaningful pruning needs batch ≲ nBuckets/40 docs — trickle
-    * triggers only. (2) Compression: band-hash clustering destroys
-    * the corpus-order adjacency parquet dictionaries exploit — the
-    * same 2M rows are 82 MB corpus-ordered, 159 MB at 64 buckets,
-    * 581 MB at 1024 — so at batch=32/nBuckets=1024 the "pruned"
-    * 67 MB read already exceeds the entire plain index. Use this
-    * only for trickle triggers (≤ tens of docs) against
-    * remote-storage indexes big enough that listing+fetch dominates;
-    * everywhere else [[nearDupFlags]]'s full scan (a sub-second
-    * broadcast-batch join at this index size) wins outright.
-    */
-  def writeBucketedIndex(index: DataFrame, path: String,
-      nBuckets: Int = 64): Unit = {
-    require(nBuckets >= 1, s"nBuckets=$nBuckets")
-    // repartition on the partition column before partitionBy, or every
-    // write task emits a file into every bucket dir — tasks × nBuckets
-    // small files (measured 1024 files for a 2M-row index at 16 tasks,
-    // GateProbe2; 640k files at a 1000-executor write). One shuffle at
-    // index-build time buys one chunky file per bucket.
-    index.withColumn("__bb", bucketOf(col("band"), nBuckets))
-      .repartition(nBuckets, col("__bb"))
-      .write.mode("overwrite").partitionBy("__bb").parquet(path)
-    val spark = index.sparkSession
-    val p = new org.apache.hadoop.fs.Path(path, BucketSidecar)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(nBuckets.toString.getBytes("UTF-8")) finally out.close()
-  }
-
-  /** [[nearDupFlags]] against a [[writeBucketedIndex]] lake index,
-    * reading ONLY the band-hash partitions the batch can touch — for
-    * use inside `foreachBatch`, where the micro-batch is a plain
-    * DataFrame and a bounded driver action is legal. Shape: (1) the
-    * banded incoming frame is pinned once (eager localCheckpoint —
-    * the batch is trigger-bounded); (2) its distinct band buckets
-    * are collected (≤ nBuckets rows); (3) the index is read
-    * `WHERE __bb IN (...)` — a literal filter on the partition
-    * column, so the parquet reader prunes at file-listing time and
-    * the per-batch bill drops from O(index) to
-    * O(index · buckets_hit / nBuckets); (4) the shared join core
-    * runs unchanged, so output ≡ [[nearDupFlags]] by construction
-    * (pinned in `StreamingDedupSpec`). Wrong-modulus reads are
-    * impossible: the bucket count comes from the sidecar the writer
-    * dropped.
-    *
-    * KNOW WHEN NOT TO USE IT: the round-9 A/B
-    * (`bench_evidence/r9_gate_ab_sf10z_*`, realistic zipf corpus)
-    * measured this path SLOWER than [[nearDupFlags]] at every local
-    * configuration — bucket saturation caps the prune ratio above
-    * trickle batch sizes, the clustered layout compresses 2–7× worse
-    * (see [[writeBucketedIndex]]), and the fixed per-batch costs
-    * (sidecar read, localCheckpoint, distinct-collect, partition
-    * listing) exceed the sub-second full scan. It exists for the one
-    * regime the full scan can't serve: trickle triggers against a
-    * remote-storage index orders of magnitude larger than a batch.
-    */
-  def nearDupFlagsPruned(batch: DataFrame, indexPath: String,
-      idCol: String, textCol: String, n: Int = 5, k: Int = 8,
-      rowsPerBand: Int = 2, threshold: Double = 0.7): DataFrame = {
-    val spark = batch.sparkSession
-    val p = new org.apache.hadoop.fs.Path(indexPath, BucketSidecar)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val nBuckets = {
-      val in = fs.open(p)
-      try {
-        val buf = new java.io.ByteArrayOutputStream()
-        val chunk = new Array[Byte](64)
-        var r = in.read(chunk)
-        while (r > 0) { buf.write(chunk, 0, r); r = in.read(chunk) }
-        new String(buf.toByteArray, "UTF-8").trim.toInt
-      } finally in.close()
-    }
-    val index = spark.read.parquet(indexPath)
-    index.select(size(col("__cbands")).as("w")).head(1).foreach { r =>
-      require(r.getInt(0) == k / rowsPerBand,
-        s"index has ${r.getInt(0)} bands/doc but the probe expects " +
-          s"${k / rowsPerBand} (k=$k, rowsPerBand=$rowsPerBand) — " +
-          "rebuild the index or match its parameters")
-    }
-    val in = bandedIncoming(batch, idCol, textCol, n, k, rowsPerBand)
-      .localCheckpoint()
-    val buckets = in.select(bucketOf(col("band"), nBuckets).as("__bb"))
-      .distinct().collect().map(_.getLong(0)).toSeq
-    joinFlags(in, index.where(col("__bb").isin(buckets: _*)), threshold)
-  }
 }

@@ -286,9 +286,9 @@ object AllShapesCycleProbe {
     // 8. count-min estimates of today's distinct tokens
     val probeToks = CorpusStats.tokenCounts(today, "text")
       .select(col("token")).limit(1000).localCheckpoint(true)
-    require(rows(CorpusStats.countMinEstimateWith(probeToks, "token",
+    require(rows(CorpusStats.countMinEstimateMapOnly(probeToks, "token",
         stored("count-min"), depth = 3, width = 512)) ==
-      rows(CorpusStats.countMinEstimateWith(probeToks, "token",
+      rows(CorpusStats.countMinEstimateMapOnly(probeToks, "token",
         CorpusStats.countMinSketch(survivors, "text", 3, 512),
         depth = 3, width = 512)),
       "count-min estimates drifted")

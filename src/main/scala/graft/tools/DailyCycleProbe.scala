@@ -53,7 +53,8 @@ object DailyCycleProbe {
 
     // lined rendition (the corpora ship one text blob per doc — C4's
     // line rules need sentences) + planted cross-doc boilerplate for
-    // the line-dedup stage, same shaping as CurationE2EProbe
+    // the line-dedup stage, same shaping as
+    // f9f40ed:src/main/scala/graft/tools/CurationE2EProbe.scala
     val lines0 = transform(
       graft.functions.TextFunctions.tokenChunks(col("text"), 8, 8),
       c => concat(array_join(c.getField("toks"), " "), lit(".")))

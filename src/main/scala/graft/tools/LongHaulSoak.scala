@@ -304,9 +304,9 @@ object LongHaulSoak {
       "quantile threshold drifted")
     val probeToks = CorpusStats.tokenCounts(today, "text")
       .select(col("token")).limit(1000).localCheckpoint(true)
-    require(rows(CorpusStats.countMinEstimateWith(probeToks, "token",
+    require(rows(CorpusStats.countMinEstimateMapOnly(probeToks, "token",
         stored("count-min"), depth = 3, width = 512)) ==
-      rows(CorpusStats.countMinEstimateWith(probeToks, "token",
+      rows(CorpusStats.countMinEstimateMapOnly(probeToks, "token",
         CorpusStats.countMinSketch(survivors, "text", 3, 512),
         depth = 3, width = 512)),
       "count-min estimates drifted")

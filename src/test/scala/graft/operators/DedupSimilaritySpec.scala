@@ -1119,7 +1119,7 @@ class DedupSimilaritySpec extends SparkSpec {
       val sk = graft.operators.CorpusStats
         .countMinSketch(docs, "text", depth, width)
       graft.operators.CorpusStats
-        .countMinEstimateWith(probes, "token", sk, depth, width)
+        .countMinEstimateMapOnly(probes, "token", sk, depth, width)
         .as[(String, Long)].collect().toMap
     }
     // the sketch can only overestimate (counters sum colliding tokens)
@@ -1143,7 +1143,7 @@ class DedupSimilaritySpec extends SparkSpec {
 
     // a token the corpus never saw estimates 0 when its buckets are
     // empty (collision-free width): absent counters read as zero
-    val unseen = graft.operators.CorpusStats.countMinEstimateWith(
+    val unseen = graft.operators.CorpusStats.countMinEstimateMapOnly(
         Seq("neverseen").toDF("token"),
         "token",
         graft.operators.CorpusStats.countMinSketch(docs, "text", 3, 4096),
@@ -1160,13 +1160,30 @@ class DedupSimilaritySpec extends SparkSpec {
         docs, "text", tiny, 2, 2, threshold = 2L)
       .as[(String, Long)].collect().sortBy(_._1).toSeq
     assert(hh == Seq(("alpha", 3L), ("beta", 2L)), s"got $hh")
+  }
 
-    // reserved probe-column names are rejected loudly, not shadowed
+  test("countMinEstimateMapOnly: repeated probe tokens keep one row per " +
+    "input row with equal estimates; an n_est probe column fails loudly") {
+    val C = graft.operators.CorpusStats
+    val docs = Seq((1L, "alpha beta alpha"), (2L, "beta gamma"))
+      .toDF("doc_id", "text")
+    val sketch = C.countMinSketch(docs, "text", 2, 2) // width 2: collides
+    // map-only: duplicate probe rows are not collapsed, and the same
+    // token reads the same estimate on every row
+    val probes = Seq((1, "alpha"), (2, "beta"), (3, "alpha"), (4, "alpha"))
+      .toDF("row", "token")
+    val out = C.countMinEstimateMapOnly(probes, "token", sketch, 2, 2)
+      .as[(Int, String, Long)].collect().sortBy(_._1).toSeq
+    assert(out.map(r => (r._1, r._2)) == Seq((1, "alpha"), (2, "beta"),
+      (3, "alpha"), (4, "alpha")), s"got $out")
+    val alpha = out.filter(_._2 == "alpha").map(_._3).distinct
+    assert(alpha.size == 1 && alpha.head >= 2L, s"got $out")
+    // the output column would shadow an input n_est — rejected
     val clash = intercept[IllegalArgumentException] {
-      graft.operators.CorpusStats.countMinEstimateWith(
-        Seq(("alpha", 1L)).toDF("token", "__bucket"), "token", tiny, 2, 2)
+      C.countMinEstimateMapOnly(Seq(("alpha", 1L)).toDF("token", "n_est"),
+        "token", sketch, 2, 2)
     }
-    assert(clash.getMessage.contains("__bucket"))
+    assert(clash.getMessage.contains("n_est"), clash.getMessage)
   }
 
   test("heavyHittersOverStream: whole-stream heavy set is exact from " +
@@ -1581,7 +1598,8 @@ class DedupSimilaritySpec extends SparkSpec {
 
   test("ivfPqTopK: residual-trained books hold the shortlist-recall floor " +
       "on a clustered corpus and do not lose to raw-vector PQ") {
-    // Deterministic 4-blob corpus (the regime tools/PqProbe measured:
+    // Deterministic 4-blob corpus (the regime measured by
+    // f9f40ed:src/main/scala/graft/tools/PqProbe.scala:
     // raw-vector books burn code entropy re-encoding cluster identity;
     // residual books see centered data). Pins the recall floor so
     // codebook-training changes can't silently degrade the ANN family.

@@ -308,8 +308,9 @@ class PlanAuditSpec extends SparkSpec {
     // Each pass must dedup POST-shuffle: an explicit repartition by the
     // (group, value) pair feeds the dedup aggregate, so no map-side
     // dedup hash absorbs a near-unique column's full input (the
-    // sf10→sf30 super-linear mechanism; tools/DistinctProbe measured
-    // the shapes). REPARTITION_BY_COL is that exchange's origin tag.
+    // sf10→sf30 super-linear mechanism; measured by
+    // f9f40ed:src/main/scala/graft/tools/DistinctProbe.scala).
+    // REPARTITION_BY_COL is that exchange's origin tag.
     assert(p.contains("REPARTITION_BY_COL"),
       s"per-column pass lost its explicit pair repartition:\n$p")
   }
@@ -340,9 +341,10 @@ class PlanAuditSpec extends SparkSpec {
     // The PK is near-unique (1-2 rows per key): a map-side partial agg
     // would hash nearly every scanned row for no reduction. The shipped
     // shape repartitions by the PK first so all dedup state lives in
-    // AQE-sized post-shuffle partitions (tools/DistinctProbe `dedup`
-    // mode measured the win at sf10 and sf30 — and measured the
-    // OPPOSITE for k5's collect_set, which is left two-phase).
+    // AQE-sized post-shuffle partitions (the `dedup` mode of
+    // f9f40ed:src/main/scala/graft/tools/DistinctProbe.scala measured
+    // the win at sf10 and sf30 — and measured the OPPOSITE for k5's
+    // collect_set, which is left two-phase).
     val p = plan("a4_dedup_by_pk")
     assert(p.contains("REPARTITION_BY_COL"),
       s"a4 lost its explicit PK repartition:\n$p")
@@ -530,9 +532,9 @@ class PlanAuditSpec extends SparkSpec {
 
   test("span df-thinning is skew-safe: partial-agged count, no window " +
       "operator holding a key's full occurrence list in one task") {
-    // round-14 conviction (ViralSkewProbe): count(1) over (partition
-    // by __h) OOMed its single hot task at a planted df of 10M. The
-    // replacement counts via groupBy (map-side partial aggregation —
+    // round-14 conviction (bench_evidence/r14_viral_skew_probe.txt):
+    // count(1) over (partition by __h) OOMed its single hot task at a
+    // planted df of 10M. The replacement counts via groupBy (map-side partial aggregation —
     // a viral key contributes ONE row per map task to the shuffle)
     // and rejoins the filtered key sliver. A Window reappearing in
     // either span query's plan is the regression this pins against.

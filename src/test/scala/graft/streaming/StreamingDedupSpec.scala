@@ -90,104 +90,6 @@ class StreamingDedupSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("bucketed index: pruned gate ≡ full gate, and the scan actually prunes") {
-    // a corpus big enough that its bands spread over many buckets
-    val corpus = graft.core.Tables.documents(spark, "/root/testdata/sf0.001")
-      .select(col("doc_id"), col("text"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-bidx").toString
-    try {
-      StreamingDedup.writeBucketedIndex(
-        StreamingDedup.corpusIndex(corpus, "doc_id", "text"), dir, nBuckets = 32)
-      // batch: one verbatim corpus doc + one fresh doc
-      val sample = corpus.orderBy("doc_id").limit(1)
-        .as[(Long, String)].head()
-      val batch = Seq((901L, sample._2),
-        (902L, "wholly novel text that shares nothing with the corpus whatsoever"))
-        .toDF("doc_id", "text")
-      val pruned = StreamingDedup.nearDupFlagsPruned(
-        batch, dir, "doc_id", "text")
-      val full = StreamingDedup.nearDupFlags(
-        batch, StreamingDedup.corpusIndex(corpus, "doc_id", "text"),
-        "doc_id", "text")
-      val got = pruned.as[(Long, Long, Double)].collect().toSet
-      val want = full.as[(Long, Long, Double)].collect().toSet
-      assert(got == want, s"pruned gate diverged: $got vs $want")
-      assert(got.exists(_._1 == 901L), "verbatim doc must flag")
-      // the index scan must carry a partition filter on __bb — that is
-      // what turns index size into O(buckets_hit / nBuckets). AQE wraps
-      // the executed plan, so unwrap adaptively before collecting.
-      def scansOf(p: org.apache.spark.sql.execution.SparkPlan)
-          : Seq[org.apache.spark.sql.execution.FileSourceScanExec] =
-        p.collect {
-          case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-            scansOf(a.executedPlan)
-          case s: org.apache.spark.sql.execution.FileSourceScanExec => Seq(s)
-        }.flatten
-      val scans = scansOf(pruned.queryExecution.executedPlan)
-        .filter(_.partitionFilters.exists(_.toString.contains("__bb")))
-      assert(scans.nonEmpty, "index scan lost its __bb partition filter")
-      // a 2-doc batch has ≤ 8 band keys → ≤ 8 of 32 buckets survive
-      val kept = scans.head.relation.location.listFiles(
-        scans.head.partitionFilters, Nil).length
-      assert(kept <= 8 && kept >= 1, s"expected ≤8 of 32 partitions, got $kept")
-    } finally {
-      scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively(): Unit
-    }
-  }
-
-  test("foreachBatch pruned gate e2e: streamed flags equal the full gate") {
-    // the intended deployment shape: a streaming query hands each
-    // micro-batch to nearDupFlagsPruned inside foreachBatch (where a
-    // bounded driver action is legal), against a lake-materialized
-    // bucketed index
-    val corpus = graft.core.Tables.documents(spark, "/root/testdata/sf0.001")
-      .select(col("doc_id"), col("text"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-bidx-e2e").toString
-    try {
-      StreamingDedup.writeBucketedIndex(
-        StreamingDedup.corpusIndex(corpus, "doc_id", "text"), dir, nBuckets = 32)
-      val samples = corpus.orderBy("doc_id").limit(2)
-        .as[(Long, String)].collect()
-      implicit val sqlCtx = spark.sqlContext
-      val input = MemoryStream[(Long, String)]
-      val got = scala.collection.mutable.ArrayBuffer[(Long, Long, Double)]()
-      val fn: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-        (batch, _) => {
-          val rows = StreamingDedup
-            .nearDupFlagsPruned(batch, dir, "doc_id", "text")
-            .as[(Long, Long, Double)].collect()
-          got.synchronized { got ++= rows }: Unit
-        }
-      val q = input.toDF().toDF("doc_id", "text")
-        .writeStream.foreachBatch(fn).start()
-      try {
-        input.addData(
-          (901L, samples(0)._2),
-          (902L, "wholly novel text that shares nothing with the corpus whatsoever"))
-        q.processAllAvailable()
-        input.addData(
-          (903L, samples(1)._2),
-          (904L, samples(0)._2 + " extra"))
-        q.processAllAvailable()
-      } finally q.stop()
-      val allDocs = Seq(
-        (901L, samples(0)._2),
-        (902L, "wholly novel text that shares nothing with the corpus whatsoever"),
-        (903L, samples(1)._2),
-        (904L, samples(0)._2 + " extra")).toDF("doc_id", "text")
-      val want = StreamingDedup.nearDupFlags(allDocs,
-          StreamingDedup.corpusIndex(corpus, "doc_id", "text"), "doc_id", "text")
-        .as[(Long, Long, Double)].collect().toSet
-      assert(got.toSet == want, s"streamed pruned flags diverged: " +
-        s"${got.toSet} vs $want")
-      assert(got.exists(_._1 == 901L) && got.exists(_._1 == 903L),
-        "verbatim docs must flag across separate micro-batches")
-      assert(!got.exists(_._1 == 902L), "fresh doc must not flag")
-    } finally {
-      scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively(): Unit
-    }
-  }
-
   test("incremental line-df maintenance: per-micro-batch partials folded " +
     "into a stats table equal the full recompute; the maintained table " +
     "gates a later batch") {
