@@ -534,9 +534,9 @@ class PlanAuditSpec extends SparkSpec {
       "operator holding a key's full occurrence list in one task") {
     // round-14 conviction (bench_evidence/r14_viral_skew_probe.txt):
     // count(1) over (partition by __h) OOMed its single hot task at a
-    // planted df of 10M. The replacement counts via groupBy (map-side partial aggregation —
-    // a viral key contributes ONE row per map task to the shuffle)
-    // and rejoins the filtered key sliver. A Window reappearing in
+    // planted df of 10M. The replacement counts via groupBy (map-side
+    // partial aggregation — a viral key contributes ONE row per map
+    // task to the shuffle) and rejoins the filtered key sliver. A Window reappearing in
     // either span query's plan is the regression this pins against.
     Seq("x_dedup_substring", "x_dedup_spans").foreach { q =>
       val p = plan(q)
