@@ -62,42 +62,6 @@ object Schemas {
     StructField("executors", ArrayType(StringType)),
     StructField("is_closed", BooleanType, nullable = false)))
 
-  /** State-table: employees (SURVEY.md §1.3;
-    * /root/reference/internal/repository/employee.go:23-27).
-    */
-  val employeesTable: StructType = StructType(
-    employee.fields :+ StructField("updated_at", TimestampType))
-
-  /** State-table: tasks (/root/reference/internal/repository/task.go:81-113). */
-  val tasksTable: StructType = StructType(Seq(
-    StructField("task_id", LongType, nullable = false),
-    StructField("task_type_id", IntegerType),
-    StructField("creation_date", TimestampType),
-    StructField("closing_date", TimestampType),
-    StructField("description", StringType),
-    StructField("address", StringType),
-    StructField("customer_name", StringType),
-    StructField("customer_login", StringType),
-    StructField("comments", ArrayType(StringType)),
-    StructField("is_closed", BooleanType),
-    StructField("updated_at", TimestampType),
-    StructField("latitude", DoubleType),
-    StructField("longitude", DoubleType),
-    StructField("geocoding_attempts", IntegerType),
-    StructField("geocoding_error", StringType)))
-
-  /** State-table: task_types (/root/reference/internal/repository/task.go:20-29). */
-  val taskTypesTable: StructType = StructType(Seq(
-    StructField("type_id", IntegerType, nullable = false),
-    StructField("type_name", StringType, nullable = false)))
-
-  /** State-table: task_executors (/root/reference/internal/repository/task.go:132-140).
-    * executor_id nullable: unmatched shortname inserts NULL (task.go:139).
-    */
-  val taskExecutorsTable: StructType = StructType(Seq(
-    StructField("task_id", LongType, nullable = false),
-    StructField("executor_id", LongType, nullable = true)))
-
   /** State-table: scraper_status watermark
     * (/root/reference/internal/repository/scraper_status.go:16-19).
     */

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{HashFunctions => H, TextFunctions => T}
@@ -73,12 +73,8 @@ object CorpusStats {
     * exactly one batch). Oracle-checked as `x_tokendf_incremental`
     * (merge of disjoint batches ≡ one full-corpus recompute).
     */
-  def mergeTokenDf(parts: Seq[DataFrame]): DataFrame = {
-    require(parts.nonEmpty, "mergeTokenDf: no partials")
-    parts.reduce(_.unionByName(_))
-      .groupBy(col("token"))
-      .agg(sum(col("token_df")).as("token_df"))
-  }
+  def mergeTokenDf(parts: Seq[DataFrame]): DataFrame =
+    mergeStats(parts, Seq("token"), Seq("token_df"))
 
   /** [[meanTokenDf]] against a PRECOMPUTED (e.g. incrementally
     * maintained) (token, token_df) table: score any batch of
@@ -217,12 +213,8 @@ object CorpusStats {
     * the batches partition the reference-document space. Plain
     * occurrence counts (no distinct), so the merge is one union + sum.
     */
-  def mergeBigramCounts(parts: Seq[DataFrame]): DataFrame = {
-    require(parts.nonEmpty, "mergeBigramCounts: no partials")
-    parts.reduce(_.unionByName(_))
-      .groupBy(col("w1"), col("bg"))
-      .agg(sum(col("n")).as("n"))
-  }
+  def mergeBigramCounts(parts: Seq[DataFrame]): DataFrame =
+    mergeStats(parts, Seq("w1", "bg"), Seq("n"))
 
   /** [[bigramLm]] against a PRECOMPUTED (e.g. incrementally
     * maintained) model table: score any batch of documents without
@@ -346,14 +338,10 @@ object CorpusStats {
     * (per-gram work is |langs| array adds, no row mass anywhere).
     * The per-doc argmax is an in-row array_sort over |langs| structs
     * (score desc, language asc — same tie-break as before).
-    * Language list, per-language totals and the gram map are
-    * collected driver-side — model-bounded, the same class as a
-    * tokenizer's merge list. `model` is still referenced twice
-    * (totals + gram map), so pass a MATERIALIZED table — the
-    * maintained store ([[graft.streaming.StatsMaintenance.readStats]])
-    * or a checkpointed frame; an expensive lazy training plan would be
-    * derived twice (measured 2× at the 500k-doc decade —
-    * [[langClassify]] materializes for exactly this reason).
+    * Language list, per-language totals and the gram map are built
+    * driver-side from ONE collect of the model — model-bounded, the
+    * same class as a tokenizer's merge list — so a lazy training plan
+    * runs once, when the frame is built.
     *
     * Integer sums are order-independent, so the kernel fold produces
     * the SAME per-(doc, lang) hit counts — and therefore the same
@@ -367,23 +355,21 @@ object CorpusStats {
   def langClassifyWith(docs: DataFrame, idCol: String, textCol: String,
       model: DataFrame, n: Int = 3): DataFrame = {
     require(n >= 1, s"n=$n")
-    val totalRows = model.groupBy(col("lang")).agg(sum(col("n")).as("t"))
-      .collect() // model-bounded: |languages|
-    require(!totalRows.exists(_.isNullAt(0)),
-      "langClassifyWith: model column lang is NULL in a row")
-    // a language whose every count is NULL has no mass: its sum is NULL
-    val totals = totalRows.filterNot(_.isNullAt(1)).map(r => r.getString(0) -> r.getLong(1)).toMap
+    // a NULL count adds nothing, as the pivot's sum skipped it
+    val rows = collectModel("langClassifyWith", model,
+      Seq("lang" -> "string", "gram" -> "string"), Seq("n")).filterNot(_.isNullAt(2))
+    // addExact: an overflowing total fails, as the ANSI sum did; a
+    // language whose every count is NULL has no mass and no total
+    val totals = rows.groupMapReduce(_.getString(0))(_.getLong(2))(Math.addExact)
     require(totals.nonEmpty, "langClassifyWith: empty model")
-    // lang values become PIVOT COLUMN NAMES, i.e. part of the
-    // unresolved-attribute namespace: a backtick (or other hostile
-    // string) in an untrusted model table would break resolution or
-    // misbind a column. Language codes are [A-Za-z0-9_-]; anything
-    // else is a corrupt model, rejected before it can reach the plan.
+    // lang values become output `lang_pred` literals: language codes
+    // are [A-Za-z0-9_-], and anything else is a corrupt model, rejected
+    // before it can reach a prediction
     val badLang = totals.keys.filterNot(_.matches("^[A-Za-z0-9_-]+$"))
     require(badLang.isEmpty,
       s"langClassifyWith: model lang value(s) ${badLang.mkString(",")} " +
         "are not valid language codes ([A-Za-z0-9_-]+) - refusing to " +
-        "pivot on them")
+        "predict them")
     val langs = totals.keys.toSeq.sorted
     // MAP-ONLY scoring (round 18): the model — vocab-bounded, the same
     // table the round-13 pivot already shipped to every executor as a
@@ -402,18 +388,13 @@ object CorpusStats {
     val langIdx = langs.zipWithIndex.toMap
     val gramMap = new java.util.HashMap[
       org.apache.spark.unsafe.types.UTF8String, Array[Long]]()
-    model.select(col("lang"), col("gram"), col("n").cast("long")).collect()
-      .foreach { r =>
-        require(!r.isNullAt(1), "langClassifyWith: model column gram is NULL in a row")
-        // a NULL count adds nothing, as the pivot's sum skipped it
-        if (!r.isNullAt(2)) {
-          val i = langIdx(r.getString(0))
-          val g = org.apache.spark.unsafe.types.UTF8String.fromString(r.getString(1))
-          var a = gramMap.get(g)
-          if (a == null) { a = new Array[Long](langs.size); gramMap.put(g, a) }
-          a(i) += r.getLong(2) // duplicate (lang, gram) rows sum, as the pivot did
-        }
-      }
+    rows.foreach { r =>
+      val i = langIdx(r.getString(0))
+      val g = org.apache.spark.unsafe.types.UTF8String.fromString(r.getString(1))
+      var a = gramMap.get(g)
+      if (a == null) { a = new Array[Long](langs.size); gramMap.put(g, a) }
+      a(i) += r.getLong(2) // duplicate (lang, gram) rows sum, as the pivot did
+    }
     val sums = docs.select(col(idCol).as("__id"),
         // coalesce: a NULL text scored as n_grams 0 / 'und' before
         // (split(NULL) → NULL → the otherwise(array()) arm) — "" takes
@@ -456,10 +437,7 @@ object CorpusStats {
   def langClassify(docs: DataFrame, idCol: String, langCol: String,
       textCol: String, n: Int = 3): DataFrame =
     langClassifyWith(docs, idCol, textCol,
-      // materialized: the model is vocab-bounded and classifyWith
-      // references it twice — lazy, the whole training explode would
-      // run twice
-      langProfiles(docs, langCol, textCol, n).localCheckpoint(true), n)
+      langProfiles(docs, langCol, textCol, n), n)
 
   /** BM25-shaped lexical scoring of a fixed keyword query against every
     * document — the exact-term complement to the embedding ANN family.
@@ -599,23 +577,18 @@ object CorpusStats {
     * loop is [[graft.streaming.StatsMaintenance]] (persisted batch-id
     * watermark + atomic versioned publish), not a bare fold.
     */
-  def mergeLineDf(parts: Seq[DataFrame]): DataFrame = {
-    require(parts.nonEmpty, "mergeLineDf: no partials")
-    parts.reduce(_.unionByName(_))
-      .groupBy(col("line_key"))
-      .agg(sum(col("line_df")).as("line_df"))
-  }
+  def mergeLineDf(parts: Seq[DataFrame]): DataFrame =
+    mergeStats(parts, Seq("line_key"), Seq("line_df"))
 
   /** Additive merge, generic over the incremental family's shapes —
     * the positive dual of [[retractStats]]: union the partials and sum
-    * every count column per key. [[mergeLineDf]]/[[mergeTokenDf]]/
-    * [[mergeBigramCounts]] (and [[Sampling.mergeDsirModel]]) are this
-    * with their columns spelled out; the generic form exists so the
-    * replay-safe maintenance store
-    * ([[graft.streaming.StatsMaintenance]]) can fold ANY of the four
-    * table shapes through one code path. Same exactness precondition
-    * as the named merges: the partials' underlying document sets must
-    * be disjoint.
+    * every count column per key. Every named merge
+    * ([[mergeLineDf]], [[mergeTokenDf]], [[mergeBigramCounts]],
+    * [[mergeLangProfiles]], [[Sampling.mergeDsirModel]]) is this call
+    * with its shape's columns, and the replay-safe maintenance store
+    * ([[graft.streaming.StatsMaintenance]]) folds every maintained
+    * shape through it. Exact iff the partials' underlying document
+    * sets are disjoint.
     */
   def mergeStats(parts: Seq[DataFrame], keys: Seq[String],
       counts: Seq[String]): DataFrame = {
@@ -626,6 +599,22 @@ object CorpusStats {
     parts.map(_.select(cols: _*)).reduce(_.unionByName(_))
       .groupBy(keys.map(col): _*)
       .agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** Collects a model table for a map-only kernel that folds it on the
+    * driver ([[Sampling.dsirWeightsWith]], [[countMinEstimateMapOnly]],
+    * [[langClassifyWith]]): each key column cast to its type, then each
+    * count column cast to BIGINT, in ONE `collect()`. A NULL key fails
+    * naming `op` and the column; a NULL count is left for the caller to
+    * skip. Duplicate keys are the caller's rule.
+    */
+  private[graft] def collectModel(op: String, model: DataFrame,
+      keys: Seq[(String, String)], counts: Seq[String]): Array[Row] = {
+    val rows = model.select(keys.map { case (c, t) => col(c).cast(t) } ++
+      counts.map(col(_).cast("long")): _*).collect()
+    for (r <- rows; ((c, _), i) <- keys.zipWithIndex)
+      require(!r.isNullAt(i), s"$op: model column $c is NULL in a row")
+    rows
   }
 
   /** RETRACT a batch's partial from a maintained additive stats table
@@ -841,12 +830,9 @@ object CorpusStats {
     require(!tokens.columns.contains("n_est"),
       "countMinEstimateMapOnly: probe column n_est clashes with the output")
     val counters = new Array[Long](depth * width)
-    sketch.select(col("d").cast("int"), col("bucket").cast("long"),
-        col("n").cast("long")).collect()
+    collectModel("countMinEstimateMapOnly", sketch,
+        Seq("d" -> "int", "bucket" -> "long"), Seq("n"))
       .foreach { r =>
-        Seq(0 -> "d", 1 -> "bucket").foreach { case (i, c) =>
-          require(!r.isNullAt(i), s"countMinEstimateMapOnly: sketch column $c is NULL in a row")
-        }
         val (d, b) = (r.getInt(0), r.getLong(1))
         require(d >= 0 && d < depth && b >= 0 && b < width,
           s"sketch row outside geometry depth=$depth width=$width: d=$d bucket=$b")

@@ -83,36 +83,6 @@ object Packing {
         sum(col("tok_in_bin")).as("n_tokens"))
   }
 
-  /** MATERIALIZE the packed layout as training-ready token-id
-    * sequences: one row per (shard, bin) carrying the bin's ids in
-    * stream order — the artifact a training run memory-maps, built
-    * from [[graft.operators.Bpe.encodeIds]] output (idCol, n_ids,
-    * ids). The last bin of a shard may be short; every other bin holds
-    * exactly `budget` ids (the packing contract — pinned in
-    * `PackingSpec` along with slice-equality against the per-doc
-    * sequences).
-    *
-    * Scale shape: the placement join is the one corpus-sized equi-join
-    * ([[packPlacement]]'s single shard shuffle happens inside it);
-    * then a map-only posexplode assigns every token its GLOBAL
-    * position (token_offset + index — no window, the offset is already
-    * per-doc data), and one (shard, bin) shuffle of the token mass
-    * assembles bins. Shuffling the token mass once is inherent to
-    * materialization — it IS the output. Each output row is bounded at
-    * `budget` ids, so reducers see bounded rows regardless of corpus
-    * size; `nShards` spreads bin keys exactly as in [[packPlacement]].
-    * In-row `array_sort` on (position, id) structs makes bin assembly
-    * deterministic under any partitioning (same trick as the line-
-    * dedup rebuild).
-    *
-    * `enc` is referenced ONCE (round 17): the ids array RIDES the
-    * placement window instead of being re-attached by a corpus-sized
-    * self-join on idCol — the offsets are identical (empty docs still
-    * occupy their order position and move nothing), the shard shuffle
-    * was carrying the id mass either way, and the former
-    * materialize-`enc`-first requirement disappears with the second
-    * reference (a lazy encode DAG now runs exactly once).
-    */
   /** [[binIdSequences]] FUSED with the encode at WORD granularity —
     * consumes [[graft.operators.Bpe.encodeWordIds]] rows
     * `(idCol, __wpos, __ids)` and assembles the identical
@@ -159,6 +129,34 @@ object Packing {
           s => s.getField("__tid")).as("ids"))
   }
 
+  /** MATERIALIZE the packed layout as training-ready token-id
+    * sequences: one row per (shard, bin) carrying the bin's ids in
+    * stream order — the artifact a training run memory-maps, built
+    * from [[graft.operators.Bpe.encodeIds]] output (idCol, n_ids,
+    * ids). The last bin of a shard may be short; every other bin holds
+    * exactly `budget` ids (the packing contract — pinned in
+    * `PackingSpec` along with slice-equality against the per-doc
+    * sequences).
+    *
+    * Scale shape: one hash shuffle on the shard key moves every doc's
+    * ids; within each shard one running-sum window over `idCol` gives
+    * each doc its token offset ([[packPlacement]]'s window), a
+    * map-only posexplode gives every token its GLOBAL position
+    * (offset + index), and the (shard, bin) aggregate assembles bins
+    * on the shard partitioning, with no second exchange. Moving the
+    * token mass once is inherent to materialization — it IS the
+    * output. Each output row is bounded at `budget` ids, so reducers
+    * see bounded rows regardless of corpus size; `nShards` spreads
+    * bin keys exactly as in [[packPlacement]]. In-row `array_sort` on
+    * (position, id) structs makes bin assembly deterministic under any
+    * partitioning (same trick as the line-dedup rebuild).
+    *
+    * `enc` is referenced ONCE (round 17): the ids array RIDES the
+    * placement window instead of being re-attached by a corpus-sized
+    * self-join on idCol — the offsets are identical (empty docs still
+    * occupy their order position and move nothing), and a lazy encode
+    * DAG runs exactly once.
+    */
   def binIdSequences(enc: DataFrame, idCol: String, budget: Int,
       nShards: Int): DataFrame = {
     require(budget > 0, s"budget=$budget")

@@ -564,12 +564,8 @@ object Sampling {
     * a ≤ `buckets`-row table.
     */
   def mergeDsirModel(parts: Seq[org.apache.spark.sql.DataFrame])
-      : org.apache.spark.sql.DataFrame = {
-    require(parts.nonEmpty, "mergeDsirModel: no partials")
-    parts.reduce(_.unionByName(_))
-      .groupBy(col("bucket"))
-      .agg(sum(col("tgt_n")).as("tgt_n"), sum(col("raw_n")).as("raw_n"))
-  }
+      : org.apache.spark.sql.DataFrame =
+    CorpusStats.mergeStats(parts, Seq("bucket"), Seq("tgt_n", "raw_n"))
 
   /** [[dsirWeights]] against a PRECOMPUTED (e.g. incrementally
     * maintained) model table: weight any batch of documents without
@@ -601,8 +597,8 @@ object Sampling {
     val tgt = new Array[Long](buckets)
     val raw = new Array[Long](buckets)
     val seen = new java.util.HashSet[Long]()
-    model.select(col("bucket").cast("long"), col("tgt_n").cast("long"),
-        col("raw_n").cast("long")).collect()
+    CorpusStats.collectModel("dsirWeightsWith", model,
+        Seq("bucket" -> "long"), Seq("tgt_n", "raw_n"))
       .foreach { r =>
         val b = r.getLong(0)
         require(seen.add(b),

@@ -586,18 +586,15 @@ object ExtensionQueries {
     val docs = Tables.documents(s, dir)
     // per-batch partials DELIBERATELY kept as separate passes (unlike
     // xLinedfIncremental's shared-pass rewrite): here no partial is
-    // referenced twice and the merged model is already materialized
-    // once, so a (lang, gram, batch) checkpoint only ADDS a second
-    // vocab-sized materialization — measured +60% on the isolated
-    // A/B/A probe (bench_evidence/r17_b2_langid_probe_*.json), reverted
+    // referenced twice and the merged model is collected once, so a
+    // (lang, gram, batch) checkpoint only ADDS a second vocab-sized
+    // materialization — measured +60% on the isolated A/B/A probe
+    // (bench_evidence/r17_b2_langid_probe_*.json), reverted
     val parts = (0 to 2).map(r =>
       graft.operators.CorpusStats.langProfiles(
         docs.where(col("doc_id") % 3 === r), "lang", "text"))
     graft.operators.CorpusStats.langClassifyWith(docs, "doc_id", "text",
-        // materialized (vocab-bounded): classifyWith references the
-        // model twice and a lazy merge plan would re-train per reference
-        graft.operators.CorpusStats.mergeLangProfiles(parts)
-          .localCheckpoint(true))
+        graft.operators.CorpusStats.mergeLangProfiles(parts))
       .orderBy("doc_id")
   }
 

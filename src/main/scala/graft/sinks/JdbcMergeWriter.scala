@@ -357,7 +357,7 @@ object JdbcMergeWriter {
         val conn = cf()
         try inTxn(conn) {
           val del = conn.prepareStatement(
-            dialect.deleteGroupsSql(bridge.table, bridge.keyCol, 1))
+            dialect.deleteGroupsSql(bridge.table, bridge.keyCol))
           val ins = conn.prepareStatement(insertSql)
           val read = conn.prepareStatement(
             dialect.readGroupsSql(bridge.table, bridge.keyCol, bridge.valueCol, ReadWidth))

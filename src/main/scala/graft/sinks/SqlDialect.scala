@@ -37,11 +37,11 @@ trait SqlDialect extends Serializable {
   def insertIgnorePlan(table: String, cols: Seq[String],
       conflictCols: Seq[String]): MergePlan
 
-  /** DELETE of all rows of `n` groups — the first half of a changed
+  /** DELETE of all rows of one group — the first half of a changed
     * bridge group's overwrite (task.go:132).
     */
-  def deleteGroupsSql(table: String, groupCol: String, n: Int): String =
-    s"DELETE FROM $table WHERE $groupCol IN (${Seq.fill(n)("?").mkString(", ")})"
+  def deleteGroupsSql(table: String, groupCol: String): String =
+    s"DELETE FROM $table WHERE $groupCol IN (?)"
 
   /** The stored rows of `n` groups, as (group key, member) pairs — the
     * read that lets the bridge writer skip a group whose members are

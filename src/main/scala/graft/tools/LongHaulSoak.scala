@@ -6,11 +6,9 @@ import org.apache.spark.sql.functions._
 import graft.operators.{Bpe, CorpusStats, Packing, Sampling}
 import graft.streaming.StatsMaintenance
 
-/** THIRTY days of the composed all-shapes operation with ROTATING
-  * weekly faults — the long-horizon soak the 7-day
-  * [[AllShapesCycleProbe]] cannot provide. Eight maintained stats
-  * shapes plus the versioned tokenizer run the schedule a real
-  * deployment would:
+/** THIRTY days (`LH_DAYS`) of the composed all-shapes operation with
+  * ROTATING weekly faults. Eight maintained stats shapes plus the
+  * versioned tokenizer run the schedule a real deployment would:
   *
   *  - every day: all eight shapes fold the day's batch through the
   *    generic store path, and the day is encoded under the CURRENT
@@ -46,6 +44,10 @@ import graft.streaming.StatsMaintenance
   * {{{
   * PACK_DIR=target/testdata/sf10z sbt 'runMain graft.tools.LongHaulSoak'
   * }}}
+  *
+  * One composed week — every store and consumer check above, one
+  * retraction, one kill matrix over all five crash points and one
+  * +500-merge refresh — is `LH_DAYS=7 LH_EXTRA_MERGES=500`.
   */
 object LongHaulSoak {
 

@@ -1,5 +1,9 @@
 package graft.operators
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -222,6 +226,32 @@ class CurationSpec extends SparkSpec {
         assert(e.getMessage.contains("langClassifyWith") &&
           e.getMessage.contains(s"column $column"), e.getMessage)
       }
+  }
+
+  test("langClassifyWith collects a lazy model once: its frame starts the " +
+    "jobs of one collect") {
+    val docs = Seq((0L, "en", "the cat and the dog"), (1L, "fr", "le chat et le chien"))
+      .toDF("doc_id", "lang", "text")
+    def model = CorpusStats.langProfiles(docs, "lang", "text")
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    def jobsOf(body: => Unit): Int = {
+      ListenerDrain(spark.sparkContext)
+      jobs.set(0)
+      body
+      ListenerDrain(spark.sparkContext)
+      jobs.get
+    }
+    spark.sparkContext.addSparkListener(listener)
+    // each count builds its own lazy model, so no shuffle is reused;
+    // adaptive execution runs an aggregate's collect as two jobs
+    val (collect, classify) = try (jobsOf(model.collect(): Unit),
+      jobsOf(CorpusStats.langClassifyWith(docs, "doc_id", "text", model): Unit))
+    finally spark.sparkContext.removeSparkListener(listener)
+    assert(collect >= 1 && classify == collect,
+      s"building the frame started $classify jobs, one collect $collect")
   }
 
   test("retractStats: subtract == recompute, emptied keys drop, " +

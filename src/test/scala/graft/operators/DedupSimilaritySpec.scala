@@ -1086,6 +1086,27 @@ class DedupSimilaritySpec extends SparkSpec {
       (6L, 0L, 0L, "")))
   }
 
+  test("dsirWeightsWith: a NULL tgt_n or raw_n adds nothing, a NULL bucket " +
+    "fails naming the column") {
+    val docs = Seq((1L, "alpha beta alpha"), (2L, "beta gamma")).toDF("id", "text")
+    val model = Sampling.dsirModel(docs, "id", "text", $"id" === 1L, 64)
+      .as[(Long, Long, Long)].collect().toSeq
+      .map { case (b, t, r) => (Option(b), Option(t), Option(r)) }
+    def weigh(rows: Seq[(Option[Long], Option[Long], Option[Long])]) =
+      Sampling.dsirWeightsWith(docs, "id", "text",
+          rows.toDF("bucket", "tgt_n", "raw_n"), 64)
+        .orderBy("id").collect().toSeq
+    // a bucket with mass on both sides, so zeroing either side moves a weight
+    val (Some(b), t, r) = model.find(_._2.exists(_ > 0)).get: @unchecked
+    val rest = model.filterNot(_._1.contains(b))
+    assert(weigh(rest :+ ((Some(b), Some(0L), r))) != weigh(model))
+    assert(weigh(rest :+ ((Some(b), None, r))) == weigh(rest :+ ((Some(b), Some(0L), r))))
+    assert(weigh(rest :+ ((Some(b), t, None))) == weigh(rest :+ ((Some(b), t, Some(0L)))))
+    val e = intercept[IllegalArgumentException](weigh(model :+ ((None, Some(1L), Some(1L)))))
+    assert(e.getMessage.contains("dsirWeightsWith") &&
+      e.getMessage.contains("column bucket"), e.getMessage)
+  }
+
   test("countMinEstimateMapOnly: a NULL-count sketch row adds nothing, a " +
     "NULL d or bucket fails naming the column") {
     val docs = Seq((1L, "alpha beta alpha"), (2L, "beta gamma")).toDF("doc_id", "text")

@@ -77,10 +77,8 @@ class PostgresDialectSpec extends AnyFunSuite {
   }
 
   test("K5: bridge rewrite — DELETE by group key then plain INSERT") {
-    assert(PostgresDialect.deleteGroupsSql("task_executors", "task_id", 1) ==
+    assert(PostgresDialect.deleteGroupsSql("task_executors", "task_id") ==
       "DELETE FROM task_executors WHERE task_id IN (?)")
-    assert(PostgresDialect.deleteGroupsSql("task_executors", "task_id", 3) ==
-      "DELETE FROM task_executors WHERE task_id IN (?, ?, ?)")
     assert(PostgresDialect.insertSql("task_executors", Seq("task_id", "executor_id")) ==
       "INSERT INTO task_executors (task_id, executor_id) VALUES (?, ?)")
   }

@@ -193,7 +193,7 @@ class PostgresLiveSpec extends AnyFunSuite with BeforeAndAfterAll {
     val read = PostgresDialect.readGroupsSql("task_executors", "task_id", "executor_id", 3)
     assert(psql(bind(read, Seq(1, 2, 3))).trim.linesIterator.toSeq.sorted ==
       Seq("1|100", "1|101", "2|200"), "the stored groups; an absent one reads no row")
-    psql(bind(PostgresDialect.deleteGroupsSql("task_executors", "task_id", 1), Seq(1)))
+    psql(bind(PostgresDialect.deleteGroupsSql("task_executors", "task_id"), Seq(1)))
     psql(bind(ins, Seq(1, 102)))
     assert(psql(
       "SELECT task_id, executor_id FROM task_executors ORDER BY task_id, executor_id;")
