@@ -355,11 +355,11 @@ object CorpusStats {
   def langClassifyWith(docs: DataFrame, idCol: String, textCol: String,
       model: DataFrame, n: Int = 3): DataFrame = {
     require(n >= 1, s"n=$n")
-    // a NULL count adds nothing, as the pivot's sum skipped it
+    // a NULL count adds nothing
     val rows = collectModel("langClassifyWith", model,
       Seq("lang" -> "string", "gram" -> "string"), Seq("n")).filterNot(_.isNullAt(2))
-    // addExact: an overflowing total fails, as the ANSI sum did; a
-    // language whose every count is NULL has no mass and no total
+    // an overflowing total fails; a language whose every count is NULL
+    // has no mass and no total
     val totals = rows.groupMapReduce(_.getString(0))(_.getLong(2))(Math.addExact)
     require(totals.nonEmpty, "langClassifyWith: empty model")
     // lang values become output `lang_pred` literals: language codes
