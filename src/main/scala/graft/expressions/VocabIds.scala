@@ -122,7 +122,7 @@ object VocabIds {
 
   /** Byte-fallback form: unknown symbols expand to UTF-8 byte ids
     * `byteBase + b` instead of -1. Pass the RESERVED byte-token id
-    * range's base (0 for [[graft.operators.Bpe.vocabWithBytes]]'
+    * range's base (0 for [[graft.operators.Bpe.vocabWithBytesFromAlphabet]]'
     * bytes-first layout).
     */
   def ids(symbols: Column, vocab: Seq[(Int, String)], byteBase: Int): Column = {

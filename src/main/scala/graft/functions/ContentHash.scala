@@ -9,15 +9,11 @@ import org.apache.spark.sql.functions._
   * client skips the batch when it matches the last known one
   * (/root/reference/internal/services/employees/employees.go:97-101,
   * tasks.go:151-153). When the source does NOT supply hashes, the
-  * engine recomputes one over the batch. Two variants:
-  *
-  *  - [[orderedHash]]: md5 over the sorted row renderings. Exact and
-  *    stable, but funnels the batch through one aggregation row —
-  *    correct for micro-batch-sized inputs (the reference's batches are
-  *    one day of tasks / one roster), NOT for 100 TB tables.
-  *  - [[xorHash]]: order-independent XOR of per-row xxhash64 values.
-  *    Fully distributed (map-side partial aggregation, no sort, no
-  *    collect), the variant to use at scale.
+  * engine recomputes one over the batch: [[orderedHash]], md5 over the
+  * sorted row renderings. Exact and stable, but funnels the batch
+  * through one aggregation row — correct for micro-batch-sized inputs
+  * (the reference's batches are one day of tasks / one roster), NOT
+  * for 100 TB tables.
   */
 object ContentHash {
 
@@ -29,11 +25,6 @@ object ContentHash {
     df.select(rowRendering(cols).as("__row"))
       .agg(md5(array_join(array_sort(collect_list(col("__row"))), ""))
         .as("content_hash"))
-
-  /** One-row DataFrame `(content_hash bigint)` — scalable variant. */
-  def xorHash(df: DataFrame, cols: Seq[Column]): DataFrame =
-    df.select(xxhash64(rowRendering(cols)).as("__h"))
-      .agg(coalesce(bit_xor(col("__h")), lit(0L)).as("content_hash"))
 
   /** Driver-side gate: true ⇒ process the batch, false ⇒ skip.
     * Mirrors `len==0 || lastKnownHash == newHash ⇒ skip`

@@ -31,10 +31,6 @@ object HashFunctions {
   def md5Long(c: Column): Column =
     graft.expressions.Md5Prefix60(c.cast("string"))
 
-  /** Built-in composition — kept for cross-checking the kernel. */
-  def md5LongBuiltins(c: Column): Column =
-    conv(substring(md5(c.cast("string")), 1, 15), 16, 10).cast("long")
-
   /** md5Long reduced mod P — the base for seeded families. */
   def md5Mod(c: Column): Column = md5Long(c) % P
 

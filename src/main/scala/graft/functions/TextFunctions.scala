@@ -21,27 +21,6 @@ object TextFunctions {
 
   def tokenCount(text: Column): Column = size(tokens(text))
 
-  /** Word n-gram shingles over the token array. Shorter-than-n texts
-    * produce a single shingle of whatever is there (mirrors the
-    * index range `1 .. max(len-n+1, 1)`).
-    */
-  def wordShingles(toks: Column, n: Int): Column =
-    transform(
-      sequence(lit(1), greatest(size(toks) - (n - 1), lit(1))),
-      i => array_join(slice(toks, i, lit(n)), " "))
-
-  /** Distinct shingle set — the unit of Jaccard/minhash dedup. */
-  def shingleSet(text: Column, n: Int): Column =
-    array_distinct(wordShingles(tokens(text), n))
-
-  /** ASCII-punctuation count (Java `\p{Punct}` ≡ RE2 `[[:punct:]]`). */
-  def punctCount(text: Column): Column =
-    length(text) - length(regexp_replace(text, "\\p{Punct}", ""))
-
-  /** Multiplicity-preserving count of tokens found in `dict`. */
-  def dictHits(toks: Column, dict: Seq[String]): Column =
-    size(filter(toks, t => array_contains(typedLit(dict), t)))
-
   // Tiny function-word dictionaries for the language-ID heuristic.
   val EnWords = Seq("the", "and", "of", "to", "in", "is", "that", "it")
   val EsWords = Seq("el", "la", "de", "que", "y", "en", "un", "es")
@@ -77,24 +56,6 @@ object TextFunctions {
     */
   def bpeishCount(text: Column): Column =
     size(regexp_extract_all(text, lit(BpeishPattern), lit(0)))
-
-  /** Inline PII patterns, portable between Java regex and RE2:
-    * unanchored email, and international-format phone (+ then 8-15
-    * digits — conservative on purpose: digit runs in prose must not
-    * be eaten).
-    */
-  val InlineEmailPattern = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
-  val InlinePhonePattern = "\\+[0-9]{8,15}"
-
-  /** PII redaction for training corpora: emails → [EMAIL], then
-    * international phones → [PHONE]. Order matters (emails can contain
-    * digit runs; phones can't contain '@'). Pure regexp_replace —
-    * codegen'd, map-only, oracle-reproducible.
-    */
-  def redactPii(text: Column): Column =
-    regexp_replace(
-      regexp_replace(text, InlineEmailPattern, "[EMAIL]"),
-      InlinePhonePattern, "[PHONE]")
 
   /** Normalization for fingerprinting: lowercase, collapse whitespace,
     * trim.
@@ -138,15 +99,6 @@ object TextFunctions {
       size(kept).as("n_kept"),
       (badDoc || size(kept) < 3).as("dropped"))
   }
-
-  /** Fused line/symbol quality signals (the Gopher-rule inputs):
-    * `struct<n_lines, n_dup_lines, dup_line_chars, line_chars,
-    * n_bullet, n_ellipsis, n_alpha_toks, n_sym_hits>` in one map-only
-    * pass — see [[graft.expressions.LineStats]] for the exact
-    * definitions and their DuckDB-portable forms.
-    */
-  def lineStats(text: Column): Column =
-    graft.expressions.LineStats.stats(text)
 
   /** Polynomial rolling hash of the normalized text:
     * `h := (h·131 + code(char)) mod P` left-to-right. Portable: DuckDB

@@ -22,27 +22,14 @@ object VectorFunctions {
   def asDouble(v: Column): Column = v.cast("array<double>")
 
   /** Dot product in double precision, left fold — fused codegen'd
-    * expression ([[graft.expressions.VectorDotProduct]]). Identical
-    * math to [[dotBuiltins]]; ~10× less per-pair overhead.
+    * expression ([[graft.expressions.VectorDotProduct]]); ~10× less
+    * per-pair overhead than the built-in `aggregate(zip_with(…))` fold.
     */
   def dot(a: Column, b: Column): Column =
     graft.expressions.VectorDotProduct.dot(a, b)
 
-  /** Reference implementation from built-in higher-order functions —
-    * kept for cross-checking the custom expression in tests.
-    */
-  def dotBuiltins(a: Column, b: Column): Column =
-    aggregate(zip_with(asDouble(a), asDouble(b), (x, y) => x * y),
-      lit(0.0), (acc, p) => acc + p)
-
   /** Squared L2 norm. */
   def normSq(v: Column): Column = dot(v, v)
-
-  /** Cosine similarity = dot / (√‖a‖² · √‖b‖²) — computed exactly in
-    * that association so both engines produce identical doubles.
-    */
-  def cosine(a: Column, b: Column): Column =
-    dot(a, b) / (sqrt(normSq(a)) * sqrt(normSq(b)))
 
   /** Cosine given precomputed squared norms (the form the top-k
     * operators use: norms are computed once per row, not per pair).

@@ -1,38 +1,14 @@
 package graft.models
 
-import java.sql.Timestamp
-
 import org.apache.spark.sql.types._
 
-/** Domain models mirroring the reference's row structs.
-  *
-  * Employee: /root/reference/internal/models/employee.go:4-11.
-  * Task:     /root/reference/internal/models/task.go:16-28.
-  * Schemas are fixed (the reference infers them from its SQL column
-  * lists — SURVEY.md §1.3); never schema-infer at read time.
-  * IDs are Long (reference uses int) for 100 TB headroom.
+/** Fixed schemas of the reference's row structs
+  * (Employee: /root/reference/internal/models/employee.go:4-11;
+  * Task: /root/reference/internal/models/task.go:16-28). The reference
+  * infers them from its SQL column lists (SURVEY.md §1.3); here they
+  * are fixed, never schema-inferred at read time. IDs are Long
+  * (reference uses int) for 100 TB headroom.
   */
-final case class Employee(
-    id: Long,
-    fullname: String,
-    shortname: String,
-    position: String,
-    email: String,
-    phone: String)
-
-final case class Task(
-    id: Long,
-    taskType: String,
-    creationDate: Timestamp,
-    closingDate: Option[Timestamp], // Go zero-time for open tasks → None
-    description: String,
-    address: String,
-    customerName: String,
-    customerLogin: String,
-    comments: Seq[String],
-    executors: Seq[String], // employee shortnames
-    isClosed: Boolean)
-
 object Schemas {
 
   /** Landing-zone employee payload (GetEmployees response element,

@@ -50,54 +50,9 @@ object Bpe {
         .as("syms"),
       col("n"))
 
-  /** Learn `nMerges` BPE merges from the corpus. Returns the ordered
-    * merge list (rank, a, b) — rank 0 learned first. Driver holds one
-    * (a, b) pair per iteration; the vocab table is cached and
-    * checkpoint-compacted every few iterations so lineage stays flat.
-    *
-    * This is the REFERENCE sequential learner: one Spark job per
-    * merge, so wall time is ~nMerges × per-job latency regardless of
-    * corpus size (measured 0.8 s/merge at the 500k-doc decade) —
-    * practical to a few hundred merges. At production merge counts
-    * (10k–50k) use [[trainMergesBatched]], which learns the IDENTICAL
-    * list (pinned in `BpeSpec`) in far fewer passes.
-    */
-  def trainMerges(docs: DataFrame, textCol: String,
-      nMerges: Int): Seq[(Int, String, String)] = {
-    require(nMerges >= 1, s"nMerges=$nMerges")
-    var syms = charSyms(wordTable(docs, textCol))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String)]
-    try {
-      var r = 0
-      var exhausted = false
-      while (r < nMerges && !exhausted) {
-        // deterministic argmax: count desc, then pair lexicographically
-        val top = pairCounts(syms)
-          .orderBy(desc("count"), col("a"), col("b")).limit(1)
-          .select(col("a"), col("b")).collect()
-        if (top.isEmpty) exhausted = true
-        else {
-          val (a, b) = (top(0).getString(0), top(0).getString(1))
-          merges += ((r, a, b))
-          val next = syms.select(
-            graft.expressions.MergeAdjacent.merge(col("syms"), a, b).as("syms"),
-            col("n"))
-          val mat =
-            if ((r + 1) % 8 == 0) next.localCheckpoint(true)
-            else next.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          syms.unpersist(blocking = false)
-          syms = mat
-          r += 1
-        }
-      }
-    } finally syms.unpersist(blocking = false)
-    merges.toSeq
-  }
-
   /** Code-point comparison — the SAME total order as UTF-8 unsigned
     * byte comparison, which is what Spark's UTF8String sort (and hence
-    * [[trainMerges]]/[[trainMergesBatched]]'s `orderBy` on strings)
+    * [[trainMergesBatched]]'s `orderBy` on strings)
     * uses. Java's `String.compareTo` orders by UTF-16 code UNIT, which
     * diverges for supplementary-plane symbols (a surrogate 0xD800-
     * 0xDFFF sorts below BMP chars ≥ 0xE000 even though its code point
@@ -131,8 +86,8 @@ object Bpe {
     * pair-count maintenance beats any per-merge Spark job by orders of
     * magnitude — no job latency, no shuffle, counts updated only for
     * the words a merge touches. Spark still does the one corpus-sized
-    * stage (the word count); the learned list is IDENTICAL to
-    * [[trainMerges]] (pinned in `BpeSpec`): raw adjacency counts
+    * stage (the word count); the learned list is IDENTICAL to the
+    * sequential one-job-per-merge learner (pinned in `BpeSpec`): raw adjacency counts
     * weighted by word frequency (overlaps counted, as in
     * [[pairCounts]]), greedy left-to-right non-overlapping merge
     * application, argmax ties broken on (a, b) in UTF-8 byte order
@@ -311,7 +266,7 @@ object Bpe {
         merges.sortBy(_._1).map(m => (m._2, m._3))))
 
   /** Learn `nMerges` BPE merges in batched passes — the SAME list as
-    * [[trainMerges]] (pinned in `BpeSpec`), at a fraction of the
+    * the sequential one-job-per-merge learner (pinned in `BpeSpec`), at a fraction of the
     * driver-loop latency: one pair-count job can safely commit a whole
     * PREFIX of the ranked pair list, not just its head, whenever no
     * earlier commit could have changed a later pick.
@@ -503,8 +458,14 @@ object Bpe {
     out.toSeq
   }
 
-  /** [[vocabWithBytes]] from an already-known alphabet — see
-    * [[vocabFromAlphabet]].
+  /** [[vocabFromAlphabet]] with BYTE FALLBACK reserved: ids 0..255 are
+    * the byte tokens, the alphabet and merge symbols follow shifted by
+    * 256. This is the SentencePiece/Llama vocabulary contract that
+    * makes encode TOTAL — text whose characters exceed the training
+    * corpus's alphabet (new scripts, emoji, mojibake) decomposes into
+    * UTF-8 bytes instead of collapsing to UNK, so no input is
+    * unrepresentable and decode is always lossless. Same growth
+    * contract as [[vocab]]: training more merges only APPENDS ids.
     */
   def vocabWithBytesFromAlphabet(alphabet: Seq[String],
       merges: Seq[(Int, String, String)]): Seq[(Int, String)] =
@@ -522,21 +483,6 @@ object Bpe {
     */
   val ByteTokens: Seq[(Int, String)] =
     (0 until 256).map(b => (b, f"<0x$b%02X>"))
-
-  /** [[vocab]] with BYTE FALLBACK reserved: ids 0..255 are the byte
-    * tokens, the alphabet and merge symbols follow shifted by 256.
-    * This is the SentencePiece/Llama vocabulary contract that makes
-    * encode TOTAL — text whose characters exceed the training corpus's
-    * alphabet (new scripts, emoji, mojibake) decomposes into UTF-8
-    * bytes instead of collapsing to UNK, so no input is
-    * unrepresentable and decode is always lossless. Same growth
-    * contract as [[vocab]]: training more merges only APPENDS ids.
-    */
-  def vocabWithBytes(docs: DataFrame, textCol: String,
-      merges: Seq[(Int, String, String)]): Seq[(Int, String)] =
-    ByteTokens ++ vocab(docs, textCol, merges).map {
-      case (i, s) => (i + 256, s)
-    }
 
   /** Doc → token-id sequences: the tokenizer's LAST MILE — what a
     * training run actually consumes. Encodes every document under the
@@ -562,7 +508,7 @@ object Bpe {
     * A symbol absent from the vocabulary (possible only when encoding
     * NEW text whose alphabet exceeds the training corpus's) maps to
     * id -1 — the caller's UNK policy hook, chosen over silent drops —
-    * or, with `byteFallback = true` and a [[vocabWithBytes]] layout,
+    * or, with `byteFallback = true` and a [[vocabWithBytesFromAlphabet]] layout,
     * expands to its UTF-8 bytes as the reserved ids 0..255: encode
     * becomes TOTAL and decode lossless on ANY input, the production
     * contract (no training run wants UNK mass). The byte rows are
@@ -616,7 +562,7 @@ object Bpe {
       if (!byteFallback) vocabIds
       else {
         require(vocabIds.take(256) == ByteTokens,
-          "byteFallback needs a vocabWithBytes layout: ids 0..255 must " +
+          "byteFallback needs a vocabWithBytesFromAlphabet layout: ids 0..255 must " +
             "be the reserved byte tokens")
         vocabIds.drop(256)
       }
@@ -662,7 +608,7 @@ object Bpe {
       graft.expressions.VocabDecode.decode(ids, vocabIds)
     else {
       require(vocabIds.take(256) == ByteTokens,
-        "byteFallback needs a vocabWithBytes layout: ids 0..255 must " +
+        "byteFallback needs a vocabWithBytesFromAlphabet layout: ids 0..255 must " +
           "be the reserved byte tokens")
       graft.expressions.VocabDecode.decode(ids, vocabIds.drop(256),
         byteBase = 0)

@@ -68,12 +68,4 @@ object Bridge {
     else shortnames.toSeq.flatMap(sn => index.getOrElse(sn, UnmatchedMember))
 
   private val UnmatchedMember: Seq[Any] = Seq(null)
-
-  /** K5 as state transformation: the bridge table after overwriting the
-    * groups of every task present in `incoming` (delete-then-reinsert).
-    */
-  def rewriteGroups(bridge: DataFrame, incoming: DataFrame,
-      groupKey: String): DataFrame =
-    bridge.join(incoming.select(groupKey).distinct(), Seq(groupKey), "left_anti")
-      .unionByName(incoming)
 }

@@ -430,15 +430,6 @@ object CorpusStats {
           .otherwise(col("__best.s")), 6).as("lang_score"))
   }
 
-  /** [[langClassifyWith]] against profiles trained on the input's own
-    * labels — the self-contained form; the factored pair exists for
-    * incremental maintenance.
-    */
-  def langClassify(docs: DataFrame, idCol: String, langCol: String,
-      textCol: String, n: Int = 3): DataFrame =
-    langClassifyWith(docs, idCol, textCol,
-      langProfiles(docs, langCol, textCol, n), n)
-
   /** BM25-shaped lexical scoring of a fixed keyword query against every
     * document — the exact-term complement to the embedding ANN family.
     * Deviation from textbook BM25, on purpose: the IDF is the RATIO
@@ -845,41 +836,27 @@ object CorpusStats {
   }
 
   /** Heavy hitters through the sketch — the count-min's canonical
-    * composition: SCREEN every distinct token of `docs` against a
-    * (maintained) [[countMinSketch]] (`est ≥ threshold` — no false
-    * NEGATIVES, since est ≥ exact always), then exact-confirm ONLY the
-    * candidates (a semi-join thins the token stream to the candidate
-    * mass — the heavy tail is a sliver of the vocabulary — before the
-    * one exact aggregate).
+    * composition, from an ALREADY-AGGREGATED exact (token, n) table
+    * ([[tokenCounts]]): SCREEN every token against a (maintained)
+    * [[countMinSketch]] (`n_est ≥ threshold` — no false NEGATIVES,
+    * since est ≥ exact always), then confirm with the table's own exact
+    * count, in one vocab-sized map-only filter.
     *
     * CONTRACT SCOPE — same-corpus only: both the screen AND the exact
-    * confirm count occurrences in the passed `docs`, so the output is
-    * heavy-hitters OF `docs` (with the sketch merely pruning the
-    * aggregate). Screening `docs` against an ALL-HISTORY maintained
-    * sketch does NOT find tokens heavy over the whole stream: a token
-    * heavy historically but light in `docs` passes the screen and is
-    * then confirmed OUT by the batch-local `n ≥ threshold`. For the
-    * honest whole-stream composition — history screen + exact confirm
-    * that sums maintained all-history counts with the batch's — use
+    * confirm read `tokCnt`, so the output is heavy-hitters OF the
+    * corpus `tokCnt` counts (with the sketch merely pruning). Screening
+    * against an ALL-HISTORY maintained sketch does NOT find tokens
+    * heavy over the whole stream: a token heavy historically but light
+    * in `tokCnt` passes the screen and is then confirmed OUT by the
+    * batch-local `n ≥ threshold`. For the honest whole-stream
+    * composition — history screen + exact confirm that sums maintained
+    * all-history counts with the batch's — use
     * [[heavyHittersOverStream]].
     *
     * @return (token, n) with the EXACT count, only rows with
     *         n ≥ threshold — false positives from sketch collisions
-    *         are removed by the confirm pass, so the output equals
-    *         the plain `HAVING count ≥ threshold` on any input
-    */
-  def heavyHittersWith(docs: DataFrame, textCol: String, sketch: DataFrame,
-      depth: Int, width: Int, threshold: Long): DataFrame =
-    heavyHittersWithCounts(tokenCounts(docs, textCol), sketch,
-      depth, width, threshold)
-
-  /** [[heavyHittersWith]] from an ALREADY-AGGREGATED exact (token, n)
-    * table of the SAME corpus: the sketch screen keeps its
-    * no-false-negative shape (est ≥ exact, so `n_est ≥ threshold`
-    * passes every true heavy hitter) and the exact confirm is the
-    * table's own count — the former distinct + semi-join + recount
-    * collapse into one vocab-sized filter. Output is the plain
-    * `HAVING n ≥ threshold` on any input, exactly as before.
+    *         are removed by the confirm, so the output equals the
+    *         plain `HAVING n ≥ threshold` on any input
     */
   def heavyHittersWithCounts(tokCnt: DataFrame, sketch: DataFrame,
       depth: Int, width: Int, threshold: Long): DataFrame = {
@@ -894,7 +871,7 @@ object CorpusStats {
   }
 
   /** Heavy hitters OVER THE WHOLE STREAM — the honest all-history
-    * composition [[heavyHittersWith]]'s contract deliberately excludes.
+    * composition [[heavyHittersWithCounts]]'s contract deliberately excludes.
     * Requires BOTH maintained shapes: the all-history
     * [[countMinSketch]] (`sketch`, fixed `depth·width` space) and the
     * all-history exact [[tokenCounts]] table (`history`, Heaps-sized).

@@ -31,6 +31,19 @@ import graft.functions.{TextFunctions => T}
   */
 object Curation {
 
+  /** The staged frames [[curateStaged]] pinned, with deterministic
+    * release: `close()` (or `unpersistStages()`) after the result's
+    * consumers have run. Closing before materializing is CORRECT but
+    * slow (downstream re-derives the stages — same as
+    * persistStages=false); closing twice is a no-op.
+    */
+  final class StagedCuration(val result: DataFrame,
+      stagedFrames: Seq[DataFrame]) extends AutoCloseable {
+    def unpersistStages(): Unit =
+      stagedFrames.foreach(_.unpersist(blocking = false))
+    override def close(): Unit = unpersistStages()
+  }
+
   /** @param mixPerMille per-source mix weight (1000 = keep, 2300 =
     *   2.3×, 400 = keep 40%); unlisted sources keep 1000
     * @param budget tokens per packed context window
@@ -58,49 +71,16 @@ object Curation {
     *   scoring, the anti join, the budget cut's three scans), each
     *   re-running C4 + line dedup + exact dedup from the source scan;
     *   measured 1.77× end-to-end at the 500k-doc decade
-    *   (`bench_evidence/r11_curation_e2e_sf10z.txt`). Off by default
-    *   because persisted blocks outlive the returned frame (Spark has
-    *   no scope-exit unpersist) — a caller invoking `curate`
-    *   repeatedly in one session would accumulate leaked cached
-    *   blocks. Use [[curateStaged]] for deterministic ownership: it
-    *   returns the pinned frames in an AutoCloseable handle to
-    *   unpersist once the outputs are materialized.
-    * @return one row per packed document INSTANCE:
-    *   (instance_id, idCol, copy, sourceCol, clean_text, shard,
-    *   n_tokens, token_offset, bin_first, bin_last, straddles)
-    */
-  def curate(docs: DataFrame, idCol: String, textCol: String,
-      sourceCol: String, mixPerMille: Map[String, Int],
-      budget: Int, nShards: Int,
-      shingleN: Int = 5, jaccardThreshold: Double = 0.7,
-      lineDedupMaxDf: Option[Int] = None,
-      substringDedupN: Option[Int] = None,
-      tokenBudget: Option[Long] = None,
-      quality: Column = lit(0L),
-      persistStages: Boolean = false): DataFrame =
-    curateStaged(docs, idCol, textCol, sourceCol, mixPerMille, budget,
-      nShards, shingleN, jaccardThreshold, lineDedupMaxDf,
-      substringDedupN, tokenBudget, quality, persistStages).result
-
-  /** The staged frames [[curateStaged]] pinned, with deterministic
-    * release: `close()` (or `unpersistStages()`) after the result's
-    * consumers have run. Closing before materializing is CORRECT but
-    * slow (downstream re-derives the stages — same as
-    * persistStages=false); closing twice is a no-op.
-    */
-  final class StagedCuration(val result: DataFrame,
-      stagedFrames: Seq[DataFrame]) extends AutoCloseable {
-    def unpersistStages(): Unit =
-      stagedFrames.foreach(_.unpersist(blocking = false))
-    override def close(): Unit = unpersistStages()
-  }
-
-  /** [[curate]] with cache OWNERSHIP: returns the packed result plus
-    * an [[StagedCuration]] handle over every frame `persistStages`
-    * pinned, so repeated curate runs in one session release their
-    * blocks deterministically instead of leaking them until session
-    * end. With persistStages=false the handle is empty and close() is
-    * a no-op.
+    *   (`bench_evidence/r11_curation_e2e_sf10z.txt`). Persisted blocks
+    *   outlive the result frame (Spark has no scope-exit unpersist),
+    *   so the returned [[StagedCuration]] handle owns them: close it
+    *   once the outputs are materialized, and repeated runs in one
+    *   session release their blocks deterministically. With
+    *   persistStages=false the handle is empty and close() is a no-op.
+    * @return the handle whose `result` holds one row per packed
+    *   document INSTANCE: (instance_id, idCol, copy, sourceCol,
+    *   clean_text, shard, n_tokens, token_offset, bin_first, bin_last,
+    *   straddles)
     */
   def curateStaged(docs: DataFrame, idCol: String, textCol: String,
       sourceCol: String, mixPerMille: Map[String, Int],
@@ -173,7 +153,7 @@ object Curation {
     // (longest doc wins its cluster); unclustered docs all survive.
     // minhashDupPairs returns a PERSISTED pair set (its contract: the
     // caller owns the release) — tracked in the handle regardless of
-    // persistStages, closing the one block plain curate() always leaked
+    // persistStages
     val pairs = Dedup.minhashDupPairs(exact, idCol, "clean_text",
       n = shingleN, threshold = jaccardThreshold)
     pinned += pairs
@@ -208,7 +188,7 @@ object Curation {
         explode(sequence(lit(0L), col("__copies") - 1)))
       .withColumn("instance_id",
         when(col(idCol) < 0 || col(idCol) > idMax, raise_error(concat(
-            lit(s"Curation.curate: doc id outside the instance-id domain [0, $idMax]: "),
+            lit(s"Curation.curateStaged: doc id outside the instance-id domain [0, $idMax]: "),
             col(idCol).cast("string"))))
           .otherwise(col(idCol) * 100 + col("copy")))
       .drop("__copies"))

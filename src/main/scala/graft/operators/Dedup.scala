@@ -14,9 +14,9 @@ import graft.functions.{HashFunctions => H, TextFunctions => T, VectorFunctions 
   * is a hash-keyed groupBy (one shuffle). MinHash/LSH generates
   * candidates via band-bucket equi-joins — cost scales with bucket
   * collision count, not n². Jaccard verification runs only on
-  * candidates. The only O(n²) routine, [[embeddingDupPairsBrute]], is
-  * the correctness baseline; its scale path is bucketing through
-  * [[Similarity.hyperplaneBucket]] first.
+  * candidates. Embedding near-dups are bucketed through
+  * [[Similarity.hyperplaneBucket]] first; the O(n²) all-pairs scan is
+  * only the tests' reference.
   *
   * Skew: a hot shingle/band (boilerplate text) explodes its bucket.
   * In [[minhashDupPairs]] nothing caps a band's width: a band shared
@@ -214,10 +214,9 @@ object Dedup {
     * k×(`transform`+`array_min`) HOF chain, which fell out of
     * whole-stage codegen and re-walked the set k times per row. A
     * null set keys like an empty one (`"b"` with no signature parts,
-    * matching `concat_ws`'s null-skip in the HOF form). Since
-    * [[graft.streaming.StreamingDedup.corpusIndex]] signs with this
-    * same kernel, a contentless corpus doc carries the identical
-    * signature-less keys, so contentless docs CAN band-collide — but
+    * matching `concat_ws`'s null-skip in the HOF form). Every
+    * contentless doc carries the identical signature-less keys, so
+    * contentless docs CAN band-collide — but
     * only with each other, and the exact-Jaccard verify discards the
     * pair (null sets null-propagate through the Jaccard score and the
     * `>= threshold` filter rejects null), so they are never flagged.
@@ -928,21 +927,6 @@ object Dedup {
       .select(tokPos("__id").as(idCol), col("n_tokens"),
         (col("n_tokens") - col("__nkept")).as("n_removed"),
         col("clean_text"))
-  }
-
-  /** Embedding near-dup pairs, brute O(n²) — the correctness baseline
-    * and small-n path. Norms are computed once per row before the
-    * join; only the dot product is per-pair.
-    */
-  def embeddingDupPairsBrute(emb: DataFrame, idCol: String, vecCol: String,
-      threshold: Double): DataFrame = {
-    val n = emb.select(col(idCol).as("__id"),
-      col(vecCol).as("__v")).withColumn("__nsq", V.normSq(col("__v")))
-    n.as("a").join(n.as("b"), col("a.__id") < col("b.__id"))
-      .withColumn("cos", V.cosinePrenormed(
-        V.dot(col("a.__v"), col("b.__v")), col("a.__nsq"), col("b.__nsq")))
-      .where(col("cos") > threshold)
-      .select(col("a.__id").as("i"), col("b.__id").as("j"), col("cos"))
   }
 
   /** Plane count sized to the corpus: enough hyperplanes that the

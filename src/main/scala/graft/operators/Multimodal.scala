@@ -1,206 +1,27 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-
-import graft.functions.{HashFunctions => H}
 
 /** Multimodal column handling: media payloads travel as opaque
   * `binary` columns with typed metadata alongside (driver mandate,
   * SURVEY.md §7 step 6).
   *
-  * Two codecs plug into the per-partition boundary:
-  *  - [[ImageIoDecoder]]/[[ImageIoTranscoder]] — REAL image decode,
-  *    resize, and (animated-GIF) frame extraction over the JDK's
-  *    `javax.imageio`, zero external dependencies;
-  *  - [[StubDecoder]]/[[StubTranscoder]] — deterministic fakes for
-  *    payloads no installed reader handles (audio/video codecs aren't
-  *    in the JDK), and the fallback the ImageIO pair degrades to on
-  *    corrupt or unsupported bytes, so a mixed 100-TB corpus keeps
-  *    flowing instead of dying on the first bad row.
-  *
-  * Around either codec the plumbing is identical and real: the schema
-  * contract, the per-partition batch loop (one decoder instance per
-  * partition, the shape a JNI/FFmpeg binding needs), and a pure-column
-  * variant ([[withFakeMediaMeta]]) for metadata that needs no codec.
+  * Audio decodes through a per-partition codec boundary:
+  * [[JavaSoundDecoder]] is a REAL decode over the JDK's
+  * `javax.sound.sampled`, and [[StubAudioDecoder]] the deterministic
+  * fake it degrades to on payloads no installed reader handles, so a
+  * mixed 100-TB corpus keeps flowing instead of dying on the first bad
+  * row. Around the codec the plumbing is real: the schema contract, the
+  * per-partition batch loop (one decoder instance per partition, the
+  * shape a JNI/FFmpeg binding needs), and a pure-column variant
+  * ([[withFakeMediaMeta]]) for metadata that needs no codec. Image
+  * near-dups pair on a perceptual hash column ([[phashPairs]]).
   */
 object Multimodal {
 
   /** Media row: payload + metadata columns. */
   final case class MediaRow(doc_id: Long, payload: Array[Byte])
-
-  /** Decoded metadata contract (what a real image decode would emit). */
-  final case class MediaMeta(doc_id: Long, n_bytes: Long, width: Long,
-      height: Long, n_frames: Long, content_md5: String)
-
-  /** Pluggable codec boundary. A real implementation wraps an image/
-    * audio library and is instantiated once per partition (expensive
-    * native init amortized over the batch).
-    */
-  trait MediaDecoder extends Serializable {
-    def decode(id: Long, payload: Array[Byte]): MediaMeta
-  }
-
-  /** STUB: deterministic fake decode — dimensions derived from the md5
-    * of the payload, so results are stable across runs/engines. Marks
-    * exactly where a real codec plugs in.
-    */
-  object StubDecoder extends MediaDecoder {
-    override def decode(id: Long, payload: Array[Byte]): MediaMeta = {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      val hex = md.digest(payload).map("%02x".format(_)).mkString
-      val h = java.lang.Long.parseLong(hex.substring(0, 15), 16)
-      MediaMeta(id, payload.length.toLong,
-        h % 640 + 16, (h / 640) % 480 + 16, payload.length % 30 + 1, hex)
-    }
-  }
-
-  /** Shared ImageIO plumbing: run `f` over an [[javax.imageio.ImageReader]]
-    * positioned on the payload, or None when no installed reader claims
-    * the format / the bytes are corrupt. Readers are looked up per call
-    * (they are NOT thread-safe); the in-memory cache flag is set once so
-    * executors never touch disk for scratch space.
-    */
-  private object ImageIo {
-    javax.imageio.ImageIO.setUseCache(false)
-
-    /** Decode-allocation cap: a payload is untrusted input, and a hostile
-      * or corrupt header declaring huge dimensions (a 10-byte GIF header
-      * can claim 65535×65535 → a ~17 GB raster) would make `r.read()`
-      * throw OutOfMemoryError — fatal, NOT caught by the NonFatal
-      * handler, killing the executor instead of degrading to the stub.
-      * 64 M pixels ≈ 256 MB ARGB, comfortably above any legitimate
-      * training-corpus image; larger claims fall back to the stub codec
-      * like any other undecodable payload.
-      */
-    val MaxPixels: Long = 64L * 1024 * 1024
-
-    /** `r.read(i)` behind the pixel cap. Throws IllegalArgumentException
-      * (non-fatal → caught by [[withReader]] → stub fallback) instead of
-      * letting the JVM attempt the allocation.
-      */
-    def checkedRead(r: javax.imageio.ImageReader, i: Int): java.awt.image.BufferedImage = {
-      val px = r.getWidth(i).toLong * r.getHeight(i).toLong
-      require(px >= 0 && px <= MaxPixels,
-        s"image declares $px pixels, cap is $MaxPixels")
-      r.read(i)
-    }
-
-    def withReader[T](payload: Array[Byte])(
-        f: javax.imageio.ImageReader => T): Option[T] = {
-      val iis = javax.imageio.ImageIO.createImageInputStream(
-        new java.io.ByteArrayInputStream(payload))
-      // no stream SPI registered → null; without this guard the
-      // `finally iis.close()` NPE would escape the NonFatal catch
-      if (iis == null) return None
-      try {
-        val readers = javax.imageio.ImageIO.getImageReaders(iis)
-        if (!readers.hasNext) None
-        else {
-          val r = readers.next()
-          r.setInput(iis)
-          try Some(f(r)) finally r.dispose()
-        }
-      } catch { case scala.util.control.NonFatal(_) => None }
-      finally iis.close()
-    }
-
-    def encodePng(img: java.awt.image.BufferedImage): Array[Byte] = {
-      val bos = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(img, "png", bos)
-      bos.toByteArray
-    }
-  }
-
-  /** REAL image decode via the JDK's `javax.imageio` (PNG/JPEG/GIF/BMP,
-    * no external dependencies): true pixel dimensions, true frame count
-    * (animated GIFs report every frame). Payloads no reader handles fall
-    * back to [[StubDecoder]] — per-row degradation, never a task failure.
-    */
-  object ImageIoDecoder extends MediaDecoder {
-    override def decode(id: Long, payload: Array[Byte]): MediaMeta =
-      ImageIo.withReader(payload) { r =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        val hex = md.digest(payload).map("%02x".format(_)).mkString
-        MediaMeta(id, payload.length.toLong, r.getWidth(0).toLong,
-          r.getHeight(0).toLong, r.getNumImages(true).toLong, hex)
-      }.getOrElse(StubDecoder.decode(id, payload))
-  }
-
-  /** REAL transcoding via `javax.imageio`:
-    *  - resize = bilinear redraw to exactly w×h, re-encoded as PNG;
-    *  - frames = every N-th frame of the container (an animated GIF
-    *    yields its true frames; a still image is its own single frame),
-    *    each re-encoded as standalone PNG bytes a downstream stage can
-    *    decode independently.
-    * Unsupported payloads fall back to the stub, same contract as
-    * [[ImageIoDecoder]].
-    */
-  object ImageIoTranscoder extends MediaTranscoder {
-    override def resize(payload: Array[Byte], w: Int, h: Int): Array[Byte] =
-      ImageIo.withReader(payload) { r =>
-        val src = ImageIo.checkedRead(r, 0)
-        val dst = new java.awt.image.BufferedImage(
-          w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-        val g = dst.createGraphics()
-        try {
-          g.setRenderingHint(
-            java.awt.RenderingHints.KEY_INTERPOLATION,
-            java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-          g.drawImage(src, 0, 0, w, h, null): Unit
-        } finally g.dispose()
-        ImageIo.encodePng(dst)
-      }.getOrElse(StubTranscoder.resize(payload, w, h))
-
-    override def sampleFrames(payload: Array[Byte],
-        everyN: Int): Iterator[(Int, Array[Byte])] =
-      ImageIo.withReader(payload) { r =>
-        val n = r.getNumImages(true)
-        // materialized inside withReader — the reader is disposed on exit,
-        // so the frames must be read eagerly, not from a lazy iterator
-        (0 until n by everyN).map(i => (i, ImageIo.encodePng(ImageIo.checkedRead(r, i)))).toVector
-      }.map(_.iterator).getOrElse(StubTranscoder.sampleFrames(payload, everyN))
-  }
-
-  /** One sampled frame of a media payload. */
-  final case class FrameRow(doc_id: Long, frame_idx: Int, frame: Array[Byte])
-
-  /** Pluggable transform boundary for payload→payload ops (resize) and
-    * payload→frames ops (frame sampling). Like [[MediaDecoder]], a real
-    * implementation wraps a native codec and is instantiated once per
-    * partition.
-    */
-  trait MediaTranscoder extends Serializable {
-    def resize(payload: Array[Byte], w: Int, h: Int): Array[Byte]
-    def sampleFrames(payload: Array[Byte], everyN: Int): Iterator[(Int, Array[Byte])]
-  }
-
-  /** STUB transcoder, deterministic:
-    *  - "resize" = stride subsample of the byte stream down to ≤ w·h
-    *    bytes (stands in for pixel resampling);
-    *  - frames = the payload cut into `n_frames = len%30+1` equal
-    *    chunks (the same n_frames contract as [[StubDecoder]]), every
-    *    N-th chunk emitted.
-    */
-  object StubTranscoder extends MediaTranscoder {
-    override def resize(payload: Array[Byte], w: Int, h: Int): Array[Byte] = {
-      val target = math.max(w * h, 1)
-      if (payload.length <= target) payload
-      else {
-        val stride = (payload.length + target - 1) / target
-        payload.indices.by(stride).map(payload).toArray
-      }
-    }
-    override def sampleFrames(payload: Array[Byte],
-        everyN: Int): Iterator[(Int, Array[Byte])] = {
-      val len = payload.length
-      val n = len % 30 + 1
-      val sz = (len + n - 1) / n // ceil — last frame may be short
-      (0 until n by everyN).iterator.map { i =>
-        (i, payload.slice(i * sz, math.min((i + 1) * sz, len)))
-      }
-    }
-  }
 
   // ---- audio --------------------------------------------------------------
 
@@ -214,15 +35,16 @@ object Multimodal {
       channels: Long, n_samples: Long, duration_ms: Long, peak: Double,
       codec: String, content_md5: String)
 
-  /** Pluggable audio codec boundary — same shape as [[MediaDecoder]]:
-    * one instance per partition, rows stream through it.
+  /** Pluggable audio codec boundary: a real implementation wraps an
+    * audio library and is instantiated once per partition (expensive
+    * native init amortized over the batch); rows stream through it.
     */
   trait AudioDecoder extends Serializable {
     def decode(id: Long, payload: Array[Byte]): AudioMeta
   }
 
-  /** STUB: deterministic fake audio decode, md5-derived like
-    * [[StubDecoder]] so it is oracle-expressible: sample rate from a
+  /** STUB: deterministic fake audio decode, md5-derived so it is
+    * oracle-expressible: sample rate from a
     * fixed 4-rate palette, 1–2 channels, one "sample" per payload
     * byte. Doubles here divide integers < 2⁵³, exact on both engines.
     */
@@ -246,8 +68,8 @@ object Multimodal {
     * length changes nothing (frames are counted at read time), and the
     * byte budget is bounded by the in-memory payload (PCM conversion
     * is ≤2× the compressed ULAW/ALAW size). Non-audio or unsupported
-    * payloads fall back to [[StubAudioDecoder]] per row — the same
-    * degrade-don't-die contract as [[ImageIoDecoder]]. Formats the JDK
+    * payloads fall back to [[StubAudioDecoder]] per row (degrade, don't
+    * die). Formats the JDK
     * can't read (MP3/OGG/FLAC) take the stub path; the conversion call
     * below is the plug point for an FFmpeg/JNI binding.
     */
@@ -312,9 +134,9 @@ object Multimodal {
     }
   }
 
-  /** Distributed audio decode through the codec boundary — identical
-    * shape to [[decodeBatch]]: mapPartitions, one decoder per
-    * partition, no collect.
+  /** Distributed audio decode through the codec boundary:
+    * mapPartitions, so the decoder is constructed once per partition
+    * and rows stream through it — no collect, no driver loop.
     */
   def decodeAudioBatch(rows: Dataset[MediaRow], decoder: AudioDecoder)(
       implicit spark: SparkSession): Dataset[AudioMeta] = {
@@ -329,75 +151,6 @@ object Multimodal {
     df.withColumn(binCol, col(srcCol).cast("binary"))
 
   // ---- perceptual hashing (image near-dup) --------------------------------
-
-  /** Perceptual hash row: 60-bit average-hash + whether a real decode
-    * produced it (false = stub fallback).
-    */
-  final case class PHashRow(doc_id: Long, phash: Long, decoded: Boolean)
-
-  /** Pluggable perceptual hasher, same codec-boundary contract as
-    * [[MediaDecoder]].
-    */
-  trait PerceptualHasher extends Serializable {
-    def phash(id: Long, payload: Array[Byte]): PHashRow
-  }
-
-  /** STUB: deterministic 60-bit hash from the payload md5 (the
-    * [[graft.expressions.Md5Prefix60]] value) — content-exact images
-    * collide, near-dups don't (md5 avalanche). Marks where a real
-    * codec plugs in; the oracle-checked query plants near-dup signal
-    * at the HASH level instead.
-    */
-  object StubPHasher extends PerceptualHasher {
-    override def phash(id: Long, payload: Array[Byte]): PHashRow =
-      PHashRow(id, graft.expressions.Md5Prefix60.compute(payload),
-        decoded = false)
-  }
-
-  /** REAL average-hash via `javax.imageio`: bilinear-resize the image
-    * to 8×8 luma (BT.601 weights), threshold each cell against the
-    * mean → 60 bits (the top-left 60 of the 64 cells, keeping the
-    * value inside the engine-portable non-negative int64 range the
-    * rest of the hash family uses). Visually-near images differ in
-    * few bits; Hamming distance is the dissimilarity.
-    */
-  object ImageIoPHasher extends PerceptualHasher {
-    override def phash(id: Long, payload: Array[Byte]): PHashRow =
-      ImageIo.withReader(payload) { r =>
-        val src = ImageIo.checkedRead(r, 0)
-        val small = new java.awt.image.BufferedImage(
-          8, 8, java.awt.image.BufferedImage.TYPE_INT_RGB)
-        val g = small.createGraphics()
-        try {
-          g.setRenderingHint(
-            java.awt.RenderingHints.KEY_INTERPOLATION,
-            java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-          g.drawImage(src, 0, 0, 8, 8, null): Unit
-        } finally g.dispose()
-        val luma = Array.tabulate(64) { i =>
-          val rgb = small.getRGB(i % 8, i / 8)
-          0.299 * ((rgb >> 16) & 0xff) + 0.587 * ((rgb >> 8) & 0xff) +
-            0.114 * (rgb & 0xff)
-        }
-        val mean = luma.sum / 64
-        var h = 0L
-        var i = 0
-        while (i < 60) { // top-left 60 cells → non-negative int64
-          if (luma(i) >= mean) h |= (1L << i)
-          i += 1
-        }
-        PHashRow(id, h, decoded = true)
-      }.getOrElse(StubPHasher.phash(id, payload))
-  }
-
-  /** Distributed perceptual hashing — mapPartitions through the codec
-    * boundary, same shape as [[decodeBatch]].
-    */
-  def phashBatch(rows: Dataset[MediaRow], hasher: PerceptualHasher)(
-      implicit spark: SparkSession): Dataset[PHashRow] = {
-    import spark.implicits._
-    rows.mapPartitions { it => it.map(r => hasher.phash(r.doc_id, r.payload)) }
-  }
 
   /** Image near-dup pairs by Hamming distance on the perceptual hash,
     * WITHOUT an all-pairs comparison: split the hash into
@@ -427,40 +180,6 @@ object Multimodal {
         bit_count(col("a.__h").bitwiseXOR(col("b.__h"))).as("hamming"))
       .distinct()
       .where(col("hamming") <= maxHamming)
-  }
-
-  /** Distributed resize: payload→payload through the transcoder
-    * boundary, one transcoder per partition, rows streaming.
-    */
-  def resizeBatch(rows: Dataset[MediaRow], t: MediaTranscoder, w: Int, h: Int)(
-      implicit spark: SparkSession): Dataset[MediaRow] = {
-    import spark.implicits._
-    rows.mapPartitions { it => it.map(r => MediaRow(r.doc_id, t.resize(r.payload, w, h))) }
-  }
-
-  /** Distributed frame sampling: 1→N rows per payload (flatMap — the
-    * video shape: a doc explodes into its sampled frames, each a row
-    * downstream feature extraction can process independently).
-    */
-  def sampleFramesBatch(rows: Dataset[MediaRow], t: MediaTranscoder, everyN: Int)(
-      implicit spark: SparkSession): Dataset[FrameRow] = {
-    import spark.implicits._
-    rows.mapPartitions { it =>
-      it.flatMap { r =>
-        t.sampleFrames(r.payload, everyN).map { case (i, f) => FrameRow(r.doc_id, i, f) }
-      }
-    }
-  }
-
-  /** Batch decode through the codec boundary: mapPartitions so the
-    * decoder is constructed once per partition and rows stream through
-    * it. This is the distributed shape — no collect, no driver loop;
-    * partition count controls decoder parallelism.
-    */
-  def decodeBatch(rows: Dataset[MediaRow], decoder: MediaDecoder)(
-      implicit spark: SparkSession): Dataset[MediaMeta] = {
-    import spark.implicits._
-    rows.mapPartitions { it => it.map(r => decoder.decode(r.doc_id, r.payload)) }
   }
 
   /** Pure-column metadata (no codec needed): byte count, content hash,

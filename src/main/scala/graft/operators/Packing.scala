@@ -113,20 +113,12 @@ object Packing {
     val w = Window.partitionBy(col("__shard"))
       .orderBy(col(idCol), col("__wpos"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    wordIds
+    assembleBins(wordIds
       .where(col("__ids").isNotNull && size(col("__ids")) > 0)
       .withColumn("__shard", Sampling.hashBucket(col(idCol), nShards))
       .withColumn("__nt", size(col("__ids")).cast("long"))
-      .withColumn("__off", coalesce(sum(col("__nt")).over(w), lit(0L)))
-      .select(col("__shard").as("shard"), col("__off").as("token_offset"),
-        posexplode(col("__ids")).as(Seq("__p", "__tid")))
-      .select(col("shard"), (col("token_offset") + col("__p")).as("__g"),
-        col("__tid"))
-      .withColumn("bin", expr(s"__g div $budget"))
-      .groupBy(col("shard"), col("bin"))
-      .agg(count(lit(1)).as("n_ids"),
-        transform(array_sort(collect_list(struct(col("__g"), col("__tid")))),
-          s => s.getField("__tid")).as("ids"))
+      .withColumn("__off", coalesce(sum(col("__nt")).over(w), lit(0L))),
+      "__ids", budget)
   }
 
   /** MATERIALIZE the packed layout as training-ready token-id
@@ -165,13 +157,24 @@ object Packing {
     // itself stays the narrow-output placement operator)
     val w = Window.partitionBy(col("__shard")).orderBy(col(idCol))
       .rowsBetween(Window.unboundedPreceding, -1)
-    enc
+    assembleBins(enc
       .withColumn("__shard", Sampling.hashBucket(col(idCol), nShards))
       .withColumn("__nt", coalesce(col("n_ids").cast("long"), lit(0L)))
       .withColumn("__off", coalesce(sum(col("__nt")).over(w), lit(0L)))
-      .where(col("__nt") > 0)
+      .where(col("__nt") > 0),
+      "ids", budget)
+  }
+
+  /** The bin assembly both materializers share: each id of the `ids`
+    * array column lands at its global position (`__off` + index) within
+    * its `__shard`, and the ids group into `budget`-sized (shard, bin)
+    * rows, sorted by position inside each row.
+    */
+  private def assembleBins(placed: DataFrame, ids: String,
+      budget: Int): DataFrame =
+    placed
       .select(col("__shard").as("shard"), col("__off").as("token_offset"),
-        posexplode(col("ids")).as(Seq("__p", "__tid")))
+        posexplode(col(ids)).as(Seq("__p", "__tid")))
       .select(col("shard"), (col("token_offset") + col("__p")).as("__g"),
         col("__tid"))
       .withColumn("bin", expr(s"__g div $budget"))
@@ -179,5 +182,4 @@ object Packing {
       .agg(count(lit(1)).as("n_ids"),
         transform(array_sort(collect_list(struct(col("__g"), col("__tid")))),
           s => s.getField("__tid")).as("ids"))
-  }
 }

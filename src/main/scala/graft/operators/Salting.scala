@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** Manual skew mitigation — the fallback when AQE's runtime skew-join
   * splitting (enabled by default in [[graft.core.GraftSession]]) can't
-  * apply: non-shuffle-join plans, severe single-key skew known ahead
-  * of time, or aggregation states too wide for one reducer.
+  * apply: non-shuffle-join plans, or severe single-key skew known
+  * ahead of time.
   *
   * Salting is deterministic where determinism is observable: the salt
   * is xxhash64 over the row's column VALUES (never `rand()`), so
@@ -70,22 +70,5 @@ object Salting {
     val replicated = dim.withColumn("__salt",
       explode(array((0 until saltFactor).map(lit): _*)))
     salted.join(replicated, keys :+ "__salt", joinType).drop("__salt")
-  }
-
-  /** Two-phase aggregation for high-cardinality-per-key states (e.g.
-    * collect-like or distinct aggregations where map-side partials
-    * don't shrink): phase 1 groups on (keys, salt), phase 2 merges the
-    * `saltFactor` partials per key. Caller supplies both phases as
-    * aggregation expression lists over the named columns.
-    */
-  def twoPhaseAgg(df: DataFrame, keys: Seq[String], saltFactor: Int,
-      spread: Boolean = false)(
-      phase1: Seq[org.apache.spark.sql.Column],
-      phase2: Seq[org.apache.spark.sql.Column]): DataFrame = {
-    require(saltFactor > 0)
-    val salted = df.withColumn("__salt", contentSalt(df, keys, saltFactor, spread))
-    val partial = salted.groupBy((keys :+ "__salt").map(col): _*)
-      .agg(phase1.head, phase1.tail: _*)
-    partial.groupBy(keys.map(col): _*).agg(phase2.head, phase2.tail: _*)
   }
 }

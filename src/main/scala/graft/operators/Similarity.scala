@@ -92,53 +92,13 @@ object Similarity {
     */
   /** Deterministic exemplar centroids: embeddings of the `nlist`
     * lowest-id rows. The quantizer the oracle-checked query uses
-    * (DuckDB-reproducible); also the k-means init.
+    * (DuckDB-reproducible).
     */
   def exemplarCentroids(candidates: DataFrame, idCol: String, vecCol: String,
       nlist: Int): Seq[Seq[Double]] =
     candidates.orderBy(col(idCol)).limit(nlist)
       .select(col(vecCol)).collect()
       .map(_.getSeq[Number](0).map(_.doubleValue()).toSeq).toSeq
-
-  /** Train IVF centroids with Lloyd's k-means (cosine assignment,
-    * element-wise mean update). Structurally deterministic: init =
-    * exemplar centroids, fixed iteration count, no randomness. The
-    * centroid update uses `avg()` over doubles, whose partial-sum
-    * merge order varies with partition layout, so replays agree to
-    * floating-point round-off (~ulp), not bit-for-bit — more than
-    * enough for a quantizer, where centroids only route candidates.
-    *
-    * Scale shape per iteration: one map-only assignment pass (the same
-    * literal-fold as [[ivfTopK]]) + a posexplode shuffle of
-    * rows × dim (cell, pos) partial sums. Train on a deterministic
-    * sample ([[Sampling.deterministicKeep]]) when the corpus is large —
-    * quantizer quality needs a sample, not the corpus.
-    *
-    * Empty cells keep their previous centroid (standard practice).
-    */
-  def trainCentroids(data: DataFrame, idCol: String, vecCol: String,
-      nlist: Int, iters: Int): Seq[Seq[Double]] = {
-    var cents = exemplarCentroids(data, idCol, vecCol, nlist)
-    // persisted: each Lloyd iteration re-reads this projection; without
-    // the cache the source scan would run `iters` times
-    val base = data.select(col(vecCol).as("__v"))
-      .withColumn("__nsq", V.normSq(col("__v")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try for (_ <- 1 to iters) {
-      val assigned = base.withColumn("__cell",
-        element_at(rankedCellArray(col("__v"), col("__nsq"), cents), 1)("cell"))
-      val means = assigned
-        .select(col("__cell"), posexplode(col("__v")).as(Seq("__pos", "__x")))
-        .groupBy("__cell", "__pos")
-        .agg(avg(col("__x").cast("double")).as("__m"))
-        .collect()
-      val byCell = means.groupBy(_.getInt(0)).map { case (cell, rows) =>
-        cell -> rows.sortBy(_.getInt(1)).map(_.getDouble(2)).toSeq
-      }
-      cents = cents.indices.map(i => byCell.getOrElse(i, cents(i)))
-    } finally base.unpersist(blocking = false) // even if an iteration throws
-    cents
-  }
 
   /** Cells ranked by cosine-to-centroid: ascending (ns = −cos, cell)
     * ≡ cosine DESC, cell ASC. One compact kernel
@@ -153,12 +113,9 @@ object Similarity {
     graft.expressions.RankedCentroidCells.ranked(v, nsq, cents)
 
   def ivfTopK(queries: DataFrame, candidates: DataFrame,
-      idCol: String, vecCol: String, k: Int, nlist: Int, nprobe: Int,
-      centroids: Option[Seq[Seq[Double]]] = None): DataFrame = {
+      idCol: String, vecCol: String, k: Int, nlist: Int, nprobe: Int): DataFrame = {
     require(nprobe >= 1 && nprobe <= nlist, s"nprobe must be in [1,$nlist], got $nprobe")
-    val cents: Seq[Seq[Double]] =
-      centroids.getOrElse(exemplarCentroids(candidates, idCol, vecCol, nlist))
-    require(cents.size <= nlist, s"got ${cents.size} centroids for nlist=$nlist")
+    val cents = exemplarCentroids(candidates, idCol, vecCol, nlist)
     // rankedCellArray's -cos/cell struct sort matches the oracle's
     // `ORDER BY cs DESC, cell` window exactly (left-fold double math)
     def rankedCells(v: Column, nsq: Column): Column =
@@ -222,53 +179,6 @@ object Similarity {
     (0 until m).map(sub => ex.map(_.slice(sub * dsub, (sub + 1) * dsub)))
   }
 
-  /** Train PQ sub-codebooks with per-subspace Lloyd's k-means (L2
-    * assignment via [[graft.expressions.PqEncode]], element-wise mean
-    * update) — same determinism contract as [[trainCentroids]]: init =
-    * exemplar slices, fixed iteration count, no randomness; the avg()
-    * partial-merge order makes replays agree to round-off, not
-    * bit-for-bit, which is fine for a quantizer. Exemplar books are
-    * near-random cuts of the space; on clustered corpora training
-    * moves them onto the data manifold and is what makes the ADC
-    * shortlist usable (measured by the PQ probe, source at
-    * `f9f40ed:src/main/scala/graft/tools/PqProbe.scala`). Train on a
-    * [[Sampling.deterministicKeep]] sample at scale — quality needs a
-    * sample, not the corpus.
-    *
-    * Scale shape per iteration: one map-only encode pass + a
-    * posexplode shuffle of rows × dim (sub, code, pos) partial sums.
-    * Empty codes keep their previous centroid.
-    */
-  def pqTrainCodebooks(data: DataFrame, idCol: String, vecCol: String,
-      m: Int, ksub: Int, iters: Int): Seq[Seq[Seq[Double]]] = {
-    var books = pqCodebooks(data, idCol, vecCol, m, ksub)
-    val dsub = books.head.head.size
-    val base = data.select(col(vecCol).as("__v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try for (_ <- 1 to iters) {
-      val coded = base.withColumn("__codes",
-        graft.expressions.PqEncode(col("__v"), books))
-      val means = coded
-        .select(col("__codes"), posexplode(col("__v")).as(Seq("__pos", "__x")))
-        .select((col("__pos") / dsub).cast("int").as("__sub"),
-          pmod(col("__pos"), lit(dsub)).as("__i"),
-          element_at(col("__codes"),
-            (col("__pos") / dsub).cast("int") + 1).as("__code"),
-          col("__x").cast("double").as("__x"))
-        .groupBy("__sub", "__code", "__i").agg(avg(col("__x")).as("__m"))
-        .collect()
-      val bySubCode = means.groupBy(r => (r.getInt(0), r.getInt(1)))
-      books = books.zipWithIndex.map { case (cb, sub) =>
-        cb.zipWithIndex.map { case (cent, code) =>
-          bySubCode.get((sub, code))
-            .map(_.sortBy(_.getInt(2)).map(_.getDouble(3)).toSeq)
-            .getOrElse(cent)
-        }
-      }
-    } finally base.unpersist(blocking = false)
-    books
-  }
-
   /** PQ-encode the candidate side: (neighbor_id, codes, recon_nsq).
     * `codes` is the m-code quantization (the form a 100 TB deployment
     * STORES — m bytes/vector at ksub ≤ 256 instead of 4·dim, a 32×
@@ -301,19 +211,14 @@ object Similarity {
     * — every term an existing PQ kernel call, so the candidate side
     * still stores only (cell, m codes, one double).
     *
-    * `trainIters` = 0 keeps the deterministic exemplar residual books
-    * (DuckDB-reproducible — the oracle path); > 0 runs per-subspace
-    * k-means over the residuals ([[pqTrainCodebooks]] contract).
-    * `centroids` overrides the coarse quantizer (pass
-    * [[trainCentroids]] output for the fully-trained IVFADC layout;
-    * its size wins over `nlist`).
+    * Both quantizers are the deterministic exemplar ones (the coarse
+    * cells of [[exemplarCentroids]], the residual books of
+    * [[pqCodebooks]]), so the result is DuckDB-reproducible.
     */
   def ivfPqTopK(queries: DataFrame, candidates: DataFrame,
       idCol: String, vecCol: String, k: Int, nlist: Int = 8, nprobe: Int = 2,
-      m: Int = 8, ksub: Int = 8, trainIters: Int = 0,
-      centroids: Option[Seq[Seq[Double]]] = None): DataFrame = {
-    val cents = centroids.getOrElse(
-      exemplarCentroids(candidates, idCol, vecCol, nlist))
+      m: Int = 8, ksub: Int = 8): DataFrame = {
+    val cents = exemplarCentroids(candidates, idCol, vecCol, nlist)
     require(nprobe >= 1 && nprobe <= cents.size,
       s"nprobe must be in [1,${cents.size}], got $nprobe")
     val ss = candidates.sparkSession
@@ -330,11 +235,8 @@ object Similarity {
         .withColumn("__rv",
           zip_with(V.asDouble(col("__v")), col("__cv"), (x, c) => x - c))
     val cand = assignResidual(candidates, "neighbor_id")
-    val books = {
-      val resid = cand.select(col("neighbor_id"), col("__rv"))
-      if (trainIters <= 0) pqCodebooks(resid, "neighbor_id", "__rv", m, ksub)
-      else pqTrainCodebooks(resid, "neighbor_id", "__rv", m, ksub, trainIters)
-    }
+    val books = pqCodebooks(cand.select(col("neighbor_id"), col("__rv")),
+      "neighbor_id", "__rv", m, ksub)
     import graft.expressions.{PqAdcDot, PqEncode, PqReconNormSq}
     // what a deployment stores: id, cell, m codes, recon norm²
     val enc = cand
@@ -379,11 +281,10 @@ object Similarity {
     */
   def pqRerankTopK(queries: DataFrame, candidates: DataFrame,
       idCol: String, vecCol: String, k: Int, shortK: Int,
-      m: Int = 8, ksub: Int = 8,
-      codebooks: Option[Seq[Seq[Seq[Double]]]] = None): DataFrame = {
+      m: Int = 8, ksub: Int = 8): DataFrame = {
     require(shortK >= k, s"shortK=$shortK must be >= k=$k")
     rerankExact(
-      pqTopK(queries, candidates, idCol, vecCol, shortK, m, ksub, codebooks),
+      pqTopK(queries, candidates, idCol, vecCol, shortK, m, ksub),
       queries, candidates, idCol, vecCol, k)
   }
 
@@ -421,10 +322,8 @@ object Similarity {
     * with IVF cells for the classic IVFPQ layout.
     */
   def pqTopK(queries: DataFrame, candidates: DataFrame,
-      idCol: String, vecCol: String, k: Int, m: Int = 8, ksub: Int = 8,
-      codebooks: Option[Seq[Seq[Seq[Double]]]] = None): DataFrame = {
-    val books = codebooks.getOrElse(
-      pqCodebooks(candidates, idCol, vecCol, m, ksub))
+      idCol: String, vecCol: String, k: Int, m: Int = 8, ksub: Int = 8): DataFrame = {
+    val books = pqCodebooks(candidates, idCol, vecCol, m, ksub)
     val enc = pqEncode(candidates, idCol, vecCol, books)
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
       .withColumn("__qn", V.normSq(col("__qv")))
@@ -434,139 +333,4 @@ object Similarity {
         col("__qn"), col("recon_nsq")))
     ranked(pairs, k)
   }
-
-  // ---- persistable model artifacts ---------------------------------------
-  //
-  // [[trainCentroids]]/[[pqTrainCodebooks]] are k-means fits a daily
-  // 100 TB deployment runs ONCE (on a sample) and reuses across every
-  // search/encode job — refitting per invocation re-pays the training
-  // scans and, because avg() partial-merge order varies with partition
-  // layout, yields round-off-different quantizers whose cell routing
-  // can differ between runs. Persisting the fit makes the quantizer a
-  // versioned artifact: parquet round-trips IEEE doubles bit-exactly,
-  // so a loaded model reproduces the original's topk RESULTS
-  // bit-for-bit (pinned in `DedupSimilaritySpec`). Layout is one row
-  // per centroid with its index — deterministic, engine-portable, and
-  // diffable — written as a single file (models are nlist×dim /
-  // m×ksub×dsub doubles: KBs).
-
-  private def centroidsTable(spark: org.apache.spark.sql.SparkSession,
-      centroids: Seq[Seq[Double]]): DataFrame = {
-    require(centroids.nonEmpty, "empty centroid model")
-    import spark.implicits._
-    centroids.zipWithIndex.map { case (v, i) => (i, v) }
-      .toDF("cell", "vec").coalesce(1)
-  }
-
-  private def parseCentroids(df: DataFrame, path: String): Seq[Seq[Double]] = {
-    val rows = df.select(col("cell"), col("vec")).collect()
-      .map(r => (r.getInt(0), r.getSeq[Double](1).toSeq)).sortBy(_._1).toSeq
-    require(rows.map(_._1) == rows.indices,
-      s"corrupt centroid model at $path: cells ${rows.map(_._1)}")
-    rows.map(_._2)
-  }
-
-  private def codebooksTable(spark: org.apache.spark.sql.SparkSession,
-      books: Seq[Seq[Seq[Double]]]): DataFrame = {
-    require(books.nonEmpty && books.forall(_.nonEmpty), "empty codebooks")
-    require(books.map(_.size).distinct.size == 1,
-      "ragged codebooks: every subspace needs the same ksub")
-    import spark.implicits._
-    books.zipWithIndex.flatMap { case (cb, sub) =>
-      cb.zipWithIndex.map { case (cent, code) => (sub, code, cent) }
-    }.toDF("sub", "code", "vec").coalesce(1)
-  }
-
-  private def parseCodebooks(df: DataFrame, path: String)
-      : Seq[Seq[Seq[Double]]] = {
-    val rows = df.select(col("sub"), col("code"), col("vec")).collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toSeq)).toSeq
-    val bySub = rows.groupBy(_._1)
-    require(bySub.keySet == (0 until bySub.size).toSet,
-      s"corrupt codebook model at $path: subs ${bySub.keySet.toSeq.sorted}")
-    (0 until bySub.size).map { sub =>
-      val cb = bySub(sub).sortBy(_._2)
-      require(cb.map(_._2) == cb.indices,
-        s"corrupt codebook model at $path: sub $sub codes ${cb.map(_._2)}")
-      cb.map(_._3).toSeq
-    }
-  }
-
-  /** Persist an IVF centroid model (layout: (cell, vec), cell =
-    * 0..nlist-1). Overwrites IN PLACE — a crash mid-overwrite leaves a
-    * torn table the loader rejects AND no previous model to fall back
-    * to; the deployment path is [[saveCentroidsVersioned]], which
-    * keeps the old model servable through the publish.
-    */
-  def saveCentroids(spark: org.apache.spark.sql.SparkSession,
-      centroids: Seq[Seq[Double]], path: String): Unit =
-    centroidsTable(spark, centroids).write.mode("overwrite").parquet(path)
-
-  /** Load a [[saveCentroids]] model; fails loudly on a table that is
-    * not a dense 0..nlist-1 cell range (a partial overwrite or a
-    * wrong-path read must never route vectors silently).
-    */
-  def loadCentroids(spark: org.apache.spark.sql.SparkSession,
-      path: String): Seq[Seq[Double]] =
-    parseCentroids(spark.read.parquet(path), path)
-
-  /** Publish an IVF centroid model through the crash-safe
-    * versioned-marker store
-    * ([[graft.streaming.StatsMaintenance.publishArtifact]]): the new
-    * model becomes visible atomically with its commit marker, a crash
-    * anywhere mid-publish leaves the PREVIOUS model servable (torn
-    * versions are invisible and pruned), and retain=2 keeps the
-    * superseded model one publish longer for jobs that loaded it just
-    * before the refresh. This is the daily-deployment path — train
-    * once on a sample, publish, reuse across every search/encode job.
-    */
-  def saveCentroidsVersioned(spark: org.apache.spark.sql.SparkSession,
-      centroids: Seq[Seq[Double]], path: String, retain: Int = 2): Unit =
-    graft.streaming.StatsMaintenance.publishArtifact(spark, path,
-      centroidsTable(spark, centroids), retain)
-
-  /** Load the newest committed [[saveCentroidsVersioned]] model, with
-    * the same density validation as [[loadCentroids]]. Fails loudly if
-    * nothing has ever been committed (a store holding only torn
-    * publishes included).
-    */
-  def loadCentroidsVersioned(spark: org.apache.spark.sql.SparkSession,
-      path: String): Seq[Seq[Double]] =
-    parseCentroids(
-      graft.streaming.StatsMaintenance.readArtifact(spark, path).getOrElse(
-        throw new IllegalStateException(
-          s"no committed centroid model at $path")), path)
-
-  /** Persist a PQ codebook model (layout: (sub, code, vec), dense in
-    * both dimensions). Overwrites in place — deployment path is
-    * [[saveCodebooksVersioned]], see [[saveCentroids]]' caveat.
-    */
-  def saveCodebooks(spark: org.apache.spark.sql.SparkSession,
-      books: Seq[Seq[Seq[Double]]], path: String): Unit =
-    codebooksTable(spark, books).write.mode("overwrite").parquet(path)
-
-  /** Load a [[saveCodebooks]] model; fails loudly unless both the
-    * subspace and code dimensions are dense.
-    */
-  def loadCodebooks(spark: org.apache.spark.sql.SparkSession,
-      path: String): Seq[Seq[Seq[Double]]] =
-    parseCodebooks(spark.read.parquet(path), path)
-
-  /** Publish a PQ codebook model through the versioned-marker store —
-    * same contract as [[saveCentroidsVersioned]].
-    */
-  def saveCodebooksVersioned(spark: org.apache.spark.sql.SparkSession,
-      books: Seq[Seq[Seq[Double]]], path: String, retain: Int = 2): Unit =
-    graft.streaming.StatsMaintenance.publishArtifact(spark, path,
-      codebooksTable(spark, books), retain)
-
-  /** Load the newest committed [[saveCodebooksVersioned]] model —
-    * same contract as [[loadCentroidsVersioned]].
-    */
-  def loadCodebooksVersioned(spark: org.apache.spark.sql.SparkSession,
-      path: String): Seq[Seq[Seq[Double]]] =
-    parseCodebooks(
-      graft.streaming.StatsMaintenance.readArtifact(spark, path).getOrElse(
-        throw new IllegalStateException(
-          s"no committed codebook model at $path")), path)
 }

@@ -262,6 +262,26 @@ object ExtensionQueries {
       .orderBy("i", "j")
   }
 
+  /** The documents with `__t2`: the deterministic 8-token lined
+    * rendition of [[xTextC4]] plus planted corpus-wide boilerplate — a
+    * newsletter header on doc_id % 3 docs and a rights footer on
+    * doc_id % 5 docs. The token array is projected once as `__toks` —
+    * see xTextC4.
+    */
+  private def linedWithBoilerplate(s: SparkSession, dir: String): DataFrame = {
+    val lines0 = transform(T.tokenChunksOf(col("__toks"), 8, 8),
+      c => array_join(c.getField("toks"), " "))
+    val t2 = concat(
+      when(col("doc_id") % 3 === 0,
+        lit("subscribe to our newsletter\n")).otherwise(lit("")),
+      array_join(lines0, "\n"),
+      when(col("doc_id") % 5 === 0,
+        lit("\nall rights reserved")).otherwise(lit("")))
+    Tables.documents(s, dir)
+      .withColumn("__toks", T.tokens(col("text")))
+      .withColumn("__t2", t2)
+  }
+
   /** Corpus-level line deduplication
     * ([[graft.operators.CorpusStats.dropDuplicateLines]], the
     * RefinedWeb/CCNet boilerplate-removal stage) over the same
@@ -274,20 +294,8 @@ object ExtensionQueries {
     * counts and the cleaned text's md5.
     */
   private def xTextLineDedup(s: SparkSession, dir: String): DataFrame = {
-    // token array projected once — see xTextC4
-    val lines0 = transform(T.tokenChunksOf(col("__toks"), 8, 8),
-      c => array_join(c.getField("toks"), " "))
-    val t2 = concat(
-      when(col("doc_id") % 3 === 0,
-        lit("subscribe to our newsletter\n")).otherwise(lit("")),
-      array_join(lines0, "\n"),
-      when(col("doc_id") % 5 === 0,
-        lit("\nall rights reserved")).otherwise(lit("")))
     graft.operators.CorpusStats.dropDuplicateLines(
-        Tables.documents(s, dir)
-          .withColumn("__toks", T.tokens(col("text")))
-          .withColumn("__t2", t2),
-        "doc_id", "__t2", maxDocFreq = 10)
+        linedWithBoilerplate(s, dir), "doc_id", "__t2", maxDocFreq = 10)
       .select(col("doc_id"), col("n_lines"), col("n_kept"),
         md5(col("clean_text")).as("clean_md5"))
       .orderBy("doc_id")
@@ -311,18 +319,7 @@ object ExtensionQueries {
     * dropped a partial could not match.
     */
   private def xLinedfIncremental(s: SparkSession, dir: String): DataFrame = {
-    // token array projected once — see xTextC4
-    val lines0 = transform(T.tokenChunksOf(col("__toks"), 8, 8),
-      c => array_join(c.getField("toks"), " "))
-    val t2 = concat(
-      when(col("doc_id") % 3 === 0,
-        lit("subscribe to our newsletter\n")).otherwise(lit("")),
-      array_join(lines0, "\n"),
-      when(col("doc_id") % 5 === 0,
-        lit("\nall rights reserved")).otherwise(lit("")))
-    val docs = Tables.documents(s, dir)
-      .withColumn("__toks", T.tokens(col("text")))
-      .withColumn("__t2", t2)
+    val docs = linedWithBoilerplate(s, dir)
     // all three per-batch partials from ONE corpus pass, materialized
     // vocab-sized ([[CorpusStats.lineDfBy]]) — the slices are
     // byte-identical to per-batch lineDf calls, so the fold path under
@@ -347,18 +344,7 @@ object ExtensionQueries {
     * dropped) rather than lingering at zero.
     */
   private def xLinedfRetract(s: SparkSession, dir: String): DataFrame = {
-    // token array projected once — see xTextC4
-    val lines0 = transform(T.tokenChunksOf(col("__toks"), 8, 8),
-      c => array_join(c.getField("toks"), " "))
-    val t2 = concat(
-      when(col("doc_id") % 3 === 0,
-        lit("subscribe to our newsletter\n")).otherwise(lit("")),
-      array_join(lines0, "\n"),
-      when(col("doc_id") % 5 === 0,
-        lit("\nall rights reserved")).otherwise(lit("")))
-    val docs = Tables.documents(s, dir)
-      .withColumn("__toks", T.tokens(col("text")))
-      .withColumn("__t2", t2)
+    val docs = linedWithBoilerplate(s, dir)
     // full table and the retracted batch share ONE corpus pass
     // ([[CorpusStats.lineDfBy]]): full = the three disjoint partials
     // folded (≡ lineDf(docs) — per-batch distinct-doc counts add),
@@ -438,7 +424,7 @@ object ExtensionQueries {
   }
 
   /** Sketch-screened heavy hitters
-    * ([[graft.operators.CorpusStats.heavyHittersWith]]): tokens whose
+    * ([[graft.operators.CorpusStats.heavyHittersWithCounts]]): tokens whose
     * corpus count reaches 1/64 of the token mass, found by screening
     * the vocabulary against the incrementally built sketch (no false
     * negatives — est ≥ exact) and exact-confirming only the
@@ -488,7 +474,7 @@ object ExtensionQueries {
     * so the hash match proves the composition finds exactly the
     * stream-wide heavy set with exact totals, including tokens heavy
     * from history but light (or absent) in today's batch: the case
-    * [[graft.operators.CorpusStats.heavyHittersWith]]'s same-corpus
+    * [[graft.operators.CorpusStats.heavyHittersWithCounts]]'s same-corpus
     * contract excludes.
     */
   private def xSketchHeavyStream(s: SparkSession, dir: String): DataFrame = {
@@ -836,7 +822,7 @@ object ExtensionQueries {
   @volatile private var bpeTokenMerges: Seq[(Int, String, String)] = Seq()
 
   /** Per-document BPE token accounting with REAL learned merges: train
-    * 10 merges on the corpus ([[graft.operators.Bpe.trainMerges]] —
+    * 10 merges on the corpus ([[graft.operators.Bpe.trainBpe]] —
     * deterministic, so both engines see the same list), encode the
     * distinct-word vocabulary, join back per doc. The oracle replays
     * the encode as a chain of boundary-anchored string replaces
@@ -916,7 +902,7 @@ object ExtensionQueries {
   @volatile private var bpeBfVocab: Seq[(Int, String)] = Seq()
   @volatile private var bpeBfUnknown: Seq[(String, Seq[Int])] = Seq()
 
-  /** Byte-fallback encode ([[graft.operators.Bpe.vocabWithBytes]] +
+  /** Byte-fallback encode ([[graft.operators.Bpe.vocabWithBytesFromAlphabet]] +
     * [[graft.operators.Bpe.encodeIds]] with `byteFallback = true`) —
     * the SentencePiece/Llama vocabulary contract: ids 0..255 are
     * reserved byte tokens and a symbol outside the learned vocabulary
@@ -1030,10 +1016,8 @@ object ExtensionQueries {
       .orderBy("shard", "bin")
   }
 
-  /** Image near-dup by perceptual hash: the stub 60-bit hash over the
-    * text stand-in payload ([[graft.operators.Multimodal.StubPHasher]]
-    * ≡ md5-prefix60 — the real `javax.imageio` average-hash path is
-    * behavior-tested with real images), with near-dup signal planted
+  /** Image near-dup by perceptual hash: a 60-bit md5-prefix hash over
+    * the text stand-in payload, with near-dup signal planted
     * at the HASH level (md5 avalanche makes payload-level planting
     * impossible): every 9th doc re-appears 1 bit flipped (must pair at
     * Hamming 1), every 11th doc 4 bits flipped (the BASE copy must NOT
@@ -1068,6 +1052,20 @@ object ExtensionQueries {
       .orderBy("i", "j")
   }
 
+  /** `df` with the stopword per-mille quality signal in column `out`:
+    * floor(1000 · stopword hits / tokens) of the `text` column, 0 for a
+    * doc with no tokens — integer-exact, so both engines compute it
+    * identically. The [[graft.expressions.TokenStats]] struct it reads
+    * stays on the frame as `__st`.
+    */
+  private[graft] def withStopwordPerMille(df: DataFrame, out: String): DataFrame =
+    df.withColumn("__st",
+        graft.expressions.TokenStats.stats(col("text"), T.EnWords))
+      .withColumn(out,
+        when(col("__st.n_tokens") === 0, lit(0L)).otherwise(
+          floor(col("__st.n_dict").cast("double") * 1000.0 /
+            col("__st.n_tokens").cast("double")).cast("long")))
+
   /** Quality-proportional sampling ([[graft.operators.Sampling.scoreKeep]]):
     * keep probability = the doc's stopword ratio (a deterministic
     * integer-exact signal both engines compute identically), floored
@@ -1076,13 +1074,7 @@ object ExtensionQueries {
     * rand().
     */
   private def xSampleQuality(s: SparkSession, dir: String): DataFrame =
-    Tables.documents(s, dir)
-      .withColumn("__st",
-        graft.expressions.TokenStats.stats(col("text"), T.EnWords))
-      .withColumn("quality_pm",
-        when(col("__st.n_tokens") === 0, lit(0L)).otherwise(
-          floor(col("__st.n_dict").cast("double") * 1000.0 /
-            col("__st.n_tokens").cast("double")).cast("long")))
+    withStopwordPerMille(Tables.documents(s, dir), "quality_pm")
       .where(graft.operators.Sampling.scoreKeep(col("quality_pm"), col("doc_id")))
       .select(col("doc_id"), col("quality_pm"))
       .orderBy("doc_id")
@@ -1176,13 +1168,7 @@ object ExtensionQueries {
     // passes → 1. The fold path (qualityHistogram with its per-mille
     // guard, mergeStats, retractStats, quantileThresholdWith) is
     // untouched.
-    val q = Tables.documents(s, dir)
-      .withColumn("__st",
-        graft.expressions.TokenStats.stats(col("text"), T.EnWords))
-      .withColumn("quality_pm",
-        when(col("__st.n_tokens") === 0, lit(0L)).otherwise(
-          floor(col("__st.n_dict").cast("double") * 1000.0 /
-            col("__st.n_tokens").cast("double")).cast("long")))
+    val q = withStopwordPerMille(Tables.documents(s, dir), "quality_pm")
       .select(col("doc_id"), col("quality_pm"))
       .localCheckpoint(true)
     val parts = (0 to 3).map(r =>
@@ -1214,13 +1200,7 @@ object ExtensionQueries {
     // strata count + stratum sums + bucket sums + rows), which re-ran
     // the TokenStats kernel corpus-wide each time; its own cost note
     // says to pre-materialize an expensive quality signal
-    val base = Tables.documents(s, dir)
-      .withColumn("__st",
-        graft.expressions.TokenStats.stats(col("text"), T.EnWords))
-      .withColumn("__q",
-        when(col("__st.n_tokens") === 0, lit(0L)).otherwise(
-          floor(col("__st.n_dict").cast("double") * 1000.0 /
-            col("__st.n_tokens").cast("double")).cast("long")))
+    val base = withStopwordPerMille(Tables.documents(s, dir), "__q")
       .select(col("doc_id"), col("__q"),
         col("__st.n_tokens").cast("long").as("__nt"))
       .localCheckpoint(true)
@@ -1570,10 +1550,9 @@ object ExtensionQueries {
 
   // ---- multimodal ---------------------------------------------------------
 
-  /** Frame sampling as pure columns over the text stand-in (the binary
-    * path is [[Multimodal.sampleFramesBatch]], behavior-tested; this
-    * CHARACTER-chunk variant exists because the container's DuckDB
-    * can't substring BLOBs). Same contract: n_frames = len%30+1 equal
+  /** Frame sampling as pure columns over the text stand-in (a
+    * CHARACTER-chunk form, because the container's DuckDB can't
+    * substring BLOBs): n_frames = len%30+1 equal
     * chunks, every 3rd sampled. Chunk size is the integer ceil
     * `(len + nf - 1) div nf` — exact on both engines, no double math.
     */

@@ -67,56 +67,6 @@ object PartitionedLake {
     new File(sys.props("java.io.tmpdir"), s"graft-lake-events-$slug-$fp").getPath
   }
 
-  /** The shared dynamic-overwrite writer: replaces exactly the
-    * partition-column combinations present in `df`, leaves every other
-    * partition untouched. Rows are sorted within partitions by
-    * `sortCols` so per-file parquet min/max stats enable row-group
-    * skipping on those columns. All lake writes (day backfill, batch
-    * ingest, compaction) go through here so the overwrite recipe lives
-    * in one place.
-    */
-  def overwritePartitions(df: DataFrame, path: String,
-      partitionCols: Seq[String], sortCols: Seq[String] = Nil): Unit = {
-    require(partitionCols.nonEmpty)
-    val sorted =
-      if (sortCols.isEmpty) df
-      else df.sortWithinPartitions((partitionCols ++ sortCols).map(col): _*)
-    sorted.write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partitionCols: _*)
-      .parquet(path)
-  }
-
-  /** Idempotent per-day overwrite — the at-scale backfill WRITE path.
-    * Re-running a day's backfill (the reference's day-by-day catch-up,
-    * tasks.go:79-127) is a safe replace, never an append-duplicate.
-    */
-  def overwriteDays(df: DataFrame, path: String,
-      sortCols: Seq[String] = Nil): Unit =
-    overwritePartitions(df, path, Seq("dt"), sortCols)
-
-  /** Compact one day's partition to `nFiles` files — the small-files
-    * maintenance pass every streaming-ingested lake needs (a day
-    * written by N executors × M micro-batches accumulates N×M small
-    * parquet files; scans then pay per-file open cost). Reads only the
-    * target partition (pruned), repartitions, and dynamically
-    * overwrites just that day.
-    *
-    * For SINGLE-LEVEL `dt=` lakes only: a lake written by
-    * [[graft.streaming.LakeIngest]] has a second `batch=` partition
-    * level — compact those with `LakeIngest.compactDay`, which
-    * preserves the layout (mixing the two corrupts partition
-    * discovery).
-    */
-  def compactDay(spark: SparkSession, path: String, day: String,
-      nFiles: Int = 1, sortCols: Seq[String] = Nil): Unit = {
-    require(nFiles > 0)
-    val part = spark.read.parquet(path).where(col("dt") === day)
-    require(!part.columns.contains("batch"),
-      s"$path has a batch= partition level (LakeIngest layout) — use LakeIngest.compactDay")
-    overwriteDays(part.repartition(nFiles), path, sortCols)
-  }
-
   /** The events table as a `dt`-partitioned lake, materializing the
     * partitioned copy on first use (skipped when `_SUCCESS` exists).
     * Guarded by a cross-process file lock — `this.synchronized` only

@@ -43,9 +43,8 @@ import graft.operators.CorpusStats
   * after the marker's content lands but before old-version cleanup
   * leaves two committed
   * versions, of which readers use the newer and the next write prunes
-  * the older. This is the same commit discipline as
-  * [[LakeIngest.compactDay]]'s staging-swap, with the version-counter
-  * namespace replacing the rename — deliberate: directory renames are
+  * the older. The version-counter namespace stands in for a staging
+  * directory's rename on purpose: directory renames are
   * not atomic on object stores, while "create a marker file, pick the
   * max committed version" is correct on any store with atomic
   * single-file creation.

@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.SparkSpec
+import graft.{References, SparkSpec}
 
 /** Every custom kernel must COMPILE under Janino and produce the same
   * value as its interpreted path. Round 1 shipped all six kernels with
@@ -428,8 +428,8 @@ class KernelCodegenSpec extends SparkSpec {
     val legacy = df.select(
       length(col("text")).as("n_chars"),
       T.tokenCount(col("text")).as("n_tokens"),
-      T.punctCount(col("text")).as("n_punct"),
-      T.dictHits(toks, dict).as("n_dict"),
+      References.punctCount(col("text")).as("n_punct"),
+      References.dictHits(toks, dict).as("n_dict"),
       aggregate(transform(toks, t => length(t)), lit(0), (a, b) => a + b)
         .as("tok_len_sum"),
       size(array_distinct(toks)).as("n_distinct")).collect().toSeq
@@ -446,8 +446,8 @@ class KernelCodegenSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     import graft.functions.{TextFunctions => T}
     // the kernel re-spells the patterns to avoid an import cycle; pin them
-    assert(PiiRedactStats.EmailRegex == T.InlineEmailPattern)
-    assert(PiiRedactStats.PhoneRegex == T.InlinePhonePattern)
+    assert(PiiRedactStats.EmailRegex == References.InlineEmailPattern)
+    assert(PiiRedactStats.PhoneRegex == References.InlinePhonePattern)
     val samples = Seq(
       "no pii here at all",
       "mail me at a.b+c@ex-ample.co.uk thanks",           // email only
@@ -470,11 +470,11 @@ class KernelCodegenSpec extends SparkSpec {
     import spark.implicits._
     val df = samples.toDF("text")
     val legacy = df.select(
-      size(regexp_extract_all(col("text"), lit(T.InlineEmailPattern), lit(0)))
+      size(regexp_extract_all(col("text"), lit(References.InlineEmailPattern), lit(0)))
         .as("n_emails"),
-      size(regexp_extract_all(col("text"), lit(T.InlinePhonePattern), lit(0)))
+      size(regexp_extract_all(col("text"), lit(References.InlinePhonePattern), lit(0)))
         .as("n_phones"),
-      T.redactPii(col("text")).as("redacted")).collect().toSeq
+      References.redactPii(col("text")).as("redacted")).collect().toSeq
     val kernel = df.select(PiiRedactStats.stats(col("text")).as("r"))
       .select("r.n_emails", "r.n_phones", "r.redacted").collect().toSeq
     kernel.zip(legacy).zip(samples).foreach { case ((k, l), s) =>

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{References, SparkSpec}
 
 /** BPE learning against hand-computed merges on a tiny corpus, plus
   * the structural properties: determinism, vocab-side iteration,
@@ -18,14 +18,14 @@ class BpeSpec extends SparkSpec {
     val docs = Seq(
       (1L, Seq.fill(5)("low").mkString(" ")),
       (2L, Seq.fill(2)("lowest").mkString(" "))).toDF("doc_id", "text")
-    val merges = Bpe.trainMerges(docs, "text", 4)
+    val merges = References.trainMerges(docs, "text", 4)
     assert(merges.take(2) == Seq((0, "l", "o"), (1, "lo", "w")))
     // after (l,o) and (lo,w): "low" is one symbol; next pairs are the
     // lowest suffix: (low,e)=2, (e,s)=2, (s,t)=2 -> lexicographic on
     // ties: (e,s) < (low,e) < (s,t)
     assert(merges(2) == ((2, "e", "s")))
     // determinism: an identical run learns identical merges
-    assert(Bpe.trainMerges(docs, "text", 4) == merges)
+    assert(References.trainMerges(docs, "text", 4) == merges)
     // encode with the learned merges: "low" collapses to one symbol
     val enc = Bpe.applySyms(Seq(("low", 1L), ("lowest", 1L)).toDF("word", "n"),
         merges.take(2))
@@ -85,7 +85,7 @@ class BpeSpec extends SparkSpec {
     val hand = Seq(
       (1L, Seq.fill(5)("low").mkString(" ")),
       (2L, Seq.fill(2)("lowest").mkString(" "))).toDF("doc_id", "text")
-    assert(Bpe.trainMergesBatched(hand, "text", 4) == Bpe.trainMerges(hand, "text", 4))
+    assert(Bpe.trainMergesBatched(hand, "text", 4) == References.trainMerges(hand, "text", 4))
     // corpus 2: seeded pseudo-random words over a small alphabet — ties,
     // shared affixes, self-pairs, symbol-reuse hazards all present
     val rnd = new scala.util.Random(42L)
@@ -95,7 +95,7 @@ class BpeSpec extends SparkSpec {
     val docs = (0 until 120).map { i =>
       (i.toLong, (1 to (3 + rnd.nextInt(10))).map(_ => word()).mkString(" "))
     }.toDF("doc_id", "text")
-    val seqList = Bpe.trainMerges(docs, "text", 40)
+    val seqList = References.trainMerges(docs, "text", 40)
     val batList = Bpe.trainMergesBatched(docs, "text", 40)
     assert(batList == seqList)
     // maxBatch=1 degenerates to the sequential learner exactly
@@ -111,9 +111,9 @@ class BpeSpec extends SparkSpec {
     val hand = Seq(
       (1L, Seq.fill(5)("low").mkString(" ")),
       (2L, Seq.fill(2)("lowest").mkString(" "))).toDF("doc_id", "text")
-    assert(Bpe.trainMergesLocal(hand, "text", 4) == Bpe.trainMerges(hand, "text", 4))
+    assert(Bpe.trainMergesLocal(hand, "text", 4) == References.trainMerges(hand, "text", 4))
     // exhaustion: more merges requested than pairs exist — both stop
-    assert(Bpe.trainMergesLocal(hand, "text", 50) == Bpe.trainMerges(hand, "text", 50))
+    assert(Bpe.trainMergesLocal(hand, "text", 50) == References.trainMerges(hand, "text", 50))
     val rnd = new scala.util.Random(42L)
     val vocabChars = "abcde"
     def word(): String =
@@ -122,7 +122,7 @@ class BpeSpec extends SparkSpec {
       (i.toLong, (1 to (3 + rnd.nextInt(10))).map(_ => word()).mkString(" "))
     }.toDF("doc_id", "text")
     assert(Bpe.trainMergesLocal(docs, "text", 40) ==
-      Bpe.trainMerges(docs, "text", 40))
+      References.trainMerges(docs, "text", 40))
     // the fallback default would train via the batched learner; pin the
     // hard-assertion mode explicitly
     intercept[IllegalArgumentException] {
@@ -132,7 +132,7 @@ class BpeSpec extends SparkSpec {
     // and the DEFAULT (fallbackToBatched=true) keeps an over-cap table
     // training instead of throwing — same list
     assert(Bpe.trainMergesLocal(docs, "text", 4, maxWords = 3) ==
-      Bpe.trainMerges(docs, "text", 4))
+      References.trainMerges(docs, "text", 4))
   }
 
   test("trainMergesLocal tie-break matches Spark's UTF-8 order on " +
@@ -148,7 +148,7 @@ class BpeSpec extends SparkSpec {
     val docs = Seq(
       (1L, Seq.fill(3)(emoji + "z").mkString(" ")),
       (2L, Seq.fill(3)(fffd + "z").mkString(" "))).toDF("doc_id", "text")
-    val sparkList = Bpe.trainMerges(docs, "text", 2)
+    val sparkList = References.trainMerges(docs, "text", 2)
     assert(sparkList.head == ((0, fffd, "z")), s"spark order: $sparkList")
     assert(Bpe.trainMergesLocal(docs, "text", 2) == sparkList)
   }
@@ -168,7 +168,7 @@ class BpeSpec extends SparkSpec {
     assert(ex.getMessage.contains("trainMergesBatched"), ex.getMessage)
     // same over-budget call with the DEFAULT fallback: identical list
     assert(Bpe.trainMergesLocal(docs, "text", 3, maxBytes = 64L)
-      == Bpe.trainMerges(docs, "text", 3))
+      == References.trainMerges(docs, "text", 3))
   }
 
   test("tokenizer artifact: merges + vocab publish as ONE committed " +
@@ -177,9 +177,9 @@ class BpeSpec extends SparkSpec {
     val docs = Seq(
       (1L, "low low low lowest"),
       (2L, "lowest low")).toDF("doc_id", "text")
-    val m1 = Bpe.trainMerges(docs, "text", 2)
+    val m1 = References.trainMerges(docs, "text", 2)
     val v1 = Bpe.vocab(docs, "text", m1)
-    val m2 = Bpe.trainMerges(docs, "text", 4)
+    val m2 = References.trainMerges(docs, "text", 4)
     val v2 = Bpe.vocab(docs, "text", m2)
     val path = java.nio.file.Files
       .createTempDirectory("graft-tokenizer").toString + "/tok"
@@ -217,7 +217,7 @@ class BpeSpec extends SparkSpec {
       (1L, "low low low lowest"),
       (2L, "lowest low"),
       (3L, "")).toDF("doc_id", "text")
-    val merges = Bpe.trainMerges(docs, "text", 3)
+    val merges = References.trainMerges(docs, "text", 3)
     val voc = Bpe.vocab(docs, "text", merges)
     // alphabet of {low, lowest}: e,l,o,s,t,w — ids 0..5 sorted; merges
     // appended at 6.. in rank order
@@ -260,8 +260,10 @@ class BpeSpec extends SparkSpec {
     val docs = Seq(
       (1L, "low low low lowest"),
       (2L, "lowest low")).toDF("doc_id", "text")
-    val merges = Bpe.trainMerges(docs, "text", 3)
-    val vb = Bpe.vocabWithBytes(docs, "text", merges)
+    val merges = References.trainMerges(docs, "text", 3)
+    val alphabet = Bpe.vocab(docs, "text", merges).map(_._2)
+      .filter(s => s.codePointCount(0, s.length) == 1)
+    val vb = Bpe.vocabWithBytesFromAlphabet(alphabet, merges)
     // layout: 256 reserved byte tokens first, then the plain vocab
     // shifted — the id-stability contract carries over
     assert(vb.take(256) == Bpe.ByteTokens)
@@ -336,8 +338,8 @@ class BpeSpec extends SparkSpec {
       (3L, "wide wider widest new low")).toDF("doc_id", "text")
     // greedy BPE is anytime: the first k merges of a longer run ARE
     // the k-merge run, so the assembled vocab can only append
-    val m5 = Bpe.trainMerges(docs, "text", 5)
-    val m9 = Bpe.trainMerges(docs, "text", 9)
+    val m5 = References.trainMerges(docs, "text", 5)
+    val m9 = References.trainMerges(docs, "text", 9)
     assert(m9.take(5) == m5)
     val v5 = Bpe.vocab(docs, "text", m5)
     val v9 = Bpe.vocab(docs, "text", m9)
@@ -353,7 +355,7 @@ class BpeSpec extends SparkSpec {
       (3L, "low"),
       (4L, ""),
       (5L, "lowest low lowest")).toDF("doc_id", "text")
-    val merges = Bpe.trainMerges(docs, "text", 2)
+    val merges = References.trainMerges(docs, "text", 2)
     val voc = Bpe.vocab(docs, "text", merges)
     val enc = Bpe.encodeIds(docs, "doc_id", "text", merges, voc)
     val budget = 5

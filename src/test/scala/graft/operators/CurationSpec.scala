@@ -41,9 +41,9 @@ class CurationSpec extends SparkSpec {
   ).toDF("doc_id", "source", "text")
 
   test("curate: clean -> dedup -> survivors -> mix -> pack, deterministic") {
-    val out = Curation.curate(corpus, "doc_id", "text", "source",
+    val out = Curation.curateStaged(corpus, "doc_id", "text", "source",
       mixPerMille = Map("A" -> 1000, "B" -> 3000, "C" -> 500),
-      budget = 16, nShards = 2)
+      budget = 16, nShards = 2).result
     val rows = out.select($"instance_id", $"doc_id", $"copy", $"source",
         $"shard", $"n_tokens", $"token_offset", $"bin_first")
       .as[(Long, Long, Long, String, Long, Long, Long, Long)]
@@ -66,9 +66,9 @@ class CurationSpec extends SparkSpec {
         s"offsets not contiguous in shard: ${sorted.toSeq}")
     }
     // replay determinism
-    val again = Curation.curate(corpus, "doc_id", "text", "source",
+    val again = Curation.curateStaged(corpus, "doc_id", "text", "source",
       mixPerMille = Map("A" -> 1000, "B" -> 3000, "C" -> 500),
-      budget = 16, nShards = 2)
+      budget = 16, nShards = 2).result
       .select($"instance_id", $"doc_id", $"copy", $"source",
         $"shard", $"n_tokens", $"token_offset", $"bin_first")
       .as[(Long, Long, Long, String, Long, Long, Long, Long)]
@@ -83,8 +83,8 @@ class CurationSpec extends SparkSpec {
         .toDF("doc_id", "text"), "doc_id", "text")
       .select($"i", $"j").as[(Long, Long)].collect()
     assert(pairs.toSeq == Seq((3L, 4L)), s"expected the planted pair: ${pairs.toSeq}")
-    val out = Curation.curate(corpus, "doc_id", "text", "source",
-      mixPerMille = Map("B" -> 0), budget = 16, nShards = 1)
+    val out = Curation.curateStaged(corpus, "doc_id", "text", "source",
+      mixPerMille = Map("B" -> 0), budget = 16, nShards = 1).result
     val ids = out.select($"doc_id").as[Long].collect().distinct.sorted
     assert(ids.toSeq == Seq(1L, 3L))
   }
@@ -151,8 +151,8 @@ class CurationSpec extends SparkSpec {
     assert(cachedCount() == before,
       "close() must release every stage block the run pinned")
     run.close() // idempotent
-    val direct = Curation.curate(docs, "doc_id", "text", "source",
-        Map("books" -> 2000), budget = 12, nShards = 2)
+    val direct = Curation.curateStaged(docs, "doc_id", "text", "source",
+        Map("books" -> 2000), budget = 12, nShards = 2).result
       .orderBy("instance_id").select("instance_id").as[Long].collect().toSeq
     assert(viaHandle == direct)
   }
@@ -177,7 +177,8 @@ class CurationSpec extends SparkSpec {
     assert(merged.as[(String, String, Long)].collect()
       .sortBy(r => (r._1, r._2)).toSeq == full)
     // trio leg 2: scoring against the maintained model == self-trained
-    val self = CorpusStats.langClassify(docs, "doc_id", "lang", "text")
+    val self = CorpusStats.langClassifyWith(docs, "doc_id", "text",
+        CorpusStats.langProfiles(docs, "lang", "text"))
       .orderBy("doc_id").as[(Long, Long, String, Option[Double])]
       .collect().toSeq
     val via = CorpusStats.langClassifyWith(docs, "doc_id", "text", merged)
@@ -306,8 +307,8 @@ class CurationSpec extends SparkSpec {
       (-7L, "A", mk("blue")) // negative id: id*100 wraps / collides
     ).toDF("doc_id", "source", "text")
     val e = intercept[Exception] {
-      Curation.curate(bad, "doc_id", "text", "source",
-        mixPerMille = Map.empty, budget = 16, nShards = 1).collect()
+      Curation.curateStaged(bad, "doc_id", "text", "source",
+        mixPerMille = Map.empty, budget = 16, nShards = 1).result.collect()
     }
     def msgs(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ msgs(x.getCause))
@@ -316,8 +317,8 @@ class CurationSpec extends SparkSpec {
     // an id just inside the domain still works
     val edge = Seq(((Long.MaxValue - 99L) / 100L, "A", mk("red")))
       .toDF("doc_id", "source", "text")
-    val ok = Curation.curate(edge, "doc_id", "text", "source",
-      mixPerMille = Map.empty, budget = 16, nShards = 1)
+    val ok = Curation.curateStaged(edge, "doc_id", "text", "source",
+      mixPerMille = Map.empty, budget = 16, nShards = 1).result
       .select($"instance_id").as[Long].collect()
     assert(ok.toSeq == Seq((Long.MaxValue - 99L) / 100L * 100L))
   }
@@ -334,9 +335,9 @@ class CurationSpec extends SparkSpec {
       (4L, "A", mk("plain")),
       (5L, "A", Seq(boiler, boiler, boiler).mkString("\n")) // all boilerplate
     ).toDF("doc_id", "source", "text")
-    val out = Curation.curate(docs, "doc_id", "text", "source",
+    val out = Curation.curateStaged(docs, "doc_id", "text", "source",
       mixPerMille = Map.empty, budget = 16, nShards = 1,
-      lineDedupMaxDf = Some(2))
+      lineDedupMaxDf = Some(2)).result
     val byId = out.select($"doc_id", $"clean_text", $"n_tokens")
       .as[(Long, String, Long)].collect().sortBy(_._1)
     // doc 5 stripped to nothing and dropped; 1-4 survive without the line
@@ -344,9 +345,9 @@ class CurationSpec extends SparkSpec {
     assert(byId.forall(!_._2.contains("subscribe")))
     assert(byId.forall(_._3 == 18L), s"back to mk()'s 18 tokens: ${byId.toSeq}")
     // budget 40 over four 18-token survivors admits exactly two (cum 36)
-    val cut = Curation.curate(docs, "doc_id", "text", "source",
+    val cut = Curation.curateStaged(docs, "doc_id", "text", "source",
       mixPerMille = Map.empty, budget = 16, nShards = 1,
-      lineDedupMaxDf = Some(2), tokenBudget = Some(40L))
+      lineDedupMaxDf = Some(2), tokenBudget = Some(40L)).result
     val cutIds = cut.select($"doc_id").as[Long].collect().distinct
     assert(cutIds.length == 2, s"got ${cutIds.toSeq}")
     // without the budget all four pack
@@ -367,9 +368,9 @@ class CurationSpec extends SparkSpec {
       (3L, "A", filler("green")),
       (4L, "A", Seq(passage, passage, passage).mkString("\n")) // all dup
     ).toDF("doc_id", "source", "text")
-    val out = Curation.curate(docs, "doc_id", "text", "source",
+    val out = Curation.curateStaged(docs, "doc_id", "text", "source",
       mixPerMille = Map.empty, budget = 16, nShards = 1,
-      substringDedupN = Some(4))
+      substringDedupN = Some(4)).result
     val byId = out.select($"doc_id", $"clean_text", $"n_tokens")
       .as[(Long, String, Long)].collect().sortBy(_._1).toSeq.distinct
     // doc 4 stripped to nothing and dropped; 1-3 keep their 18 fillers

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{References, SparkSpec}
 import graft.functions.{TextFunctions => T, VectorFunctions => V}
 
 /** Extension-operator behavior on controlled fixtures: recall of the
@@ -64,7 +64,7 @@ class DedupSimilaritySpec extends SparkSpec {
         0.9999, nlist = 6, nPlanes = 12, dim = 8)
       .select($"i", $"j").as[(Long, Long)].collect().toSet
     assert(got.contains((5L, 105L)), s"planted exact dup lost: $got")
-    val brute = Dedup.embeddingDupPairsBrute(withDup, "vec_id", "embedding", 0.9999)
+    val brute = References.embeddingDupPairsBrute(withDup, "vec_id", "embedding", 0.9999)
       .select($"i", $"j").as[(Long, Long)].collect().toSet
     assert(got.subsetOf(brute), s"unverified pair leaked: ${got -- brute}")
   }
@@ -207,7 +207,7 @@ class DedupSimilaritySpec extends SparkSpec {
       .where($"i" < 20 && $"j" < 20)
     val diff = pairs.select(
       V.dot($"a", $"b").as("fused"),
-      V.dotBuiltins($"a", $"b").as("builtin"))
+      References.dotBuiltins($"a", $"b").as("builtin"))
       .where(!($"fused" <=> $"builtin")).count()
     assert(diff == 0, "fused expression must produce identical doubles")
     // null/length-mismatch semantics also mirror zip_with
@@ -224,11 +224,11 @@ class DedupSimilaritySpec extends SparkSpec {
     val docs = graft.core.Tables.documents(spark, "/root/testdata/sf0.001")
     val diff = docs.select(
       H.md5Long($"text").as("fused"),
-      H.md5LongBuiltins($"text").as("builtin"))
+      References.md5LongBuiltins($"text").as("builtin"))
       .where(!($"fused" <=> $"builtin")).count()
     assert(diff == 0)
     val edge = Seq("", "a", "é中文").toDF("s")
-      .select(H.md5Long($"s").as("f"), H.md5LongBuiltins($"s").as("b"))
+      .select(H.md5Long($"s").as("f"), References.md5LongBuiltins($"s").as("b"))
       .where(!($"f" <=> $"b")).count()
     assert(edge == 0, "empty/multibyte strings must hash identically")
   }
@@ -283,7 +283,7 @@ class DedupSimilaritySpec extends SparkSpec {
       (1L, Array(1.0f, 0.0f), Array(1.0f, 0.0f)),
       (2L, Array(1.0f, 0.0f), Array(0.0f, 3.0f))
     ).toDF("id", "a", "b")
-    val out = df.select($"id", V.cosine($"a", $"b").as("c")).as[(Long, Double)]
+    val out = df.select($"id", References.cosine($"a", $"b").as("c")).as[(Long, Double)]
       .collect().toMap
     assert(math.abs(out(1L) - 1.0) < 1e-12)
     assert(math.abs(out(2L)) < 1e-12)
@@ -396,135 +396,6 @@ class DedupSimilaritySpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       Similarity.ivfTopK(q, e, "vec_id", "embedding", 5, 8, 9)
     }
-  }
-
-  test("trainCentroids: deterministic k-means improves assignment, ivfTopK accepts them") {
-    val e = graft.core.Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val c1 = Similarity.trainCentroids(e, "vec_id", "embedding", nlist = 4, iters = 2)
-    val c2 = Similarity.trainCentroids(e, "vec_id", "embedding", nlist = 4, iters = 2)
-    assert(c1 == c2, "no randomness: identical runs produce identical centroids")
-    assert(c1.size == 4 && c1.forall(_.size == 64))
-    val init = Similarity.exemplarCentroids(e, "vec_id", "embedding", 4)
-    assert(c1 != init, "training must move the centroids")
-
-    def meanBestCos(cents: Seq[Seq[Double]]): Double = {
-      val norms = cents.map(_.foldLeft(0.0)((a, x) => a + x * x))
-      val best = cents.zipWithIndex.map { case (cv, i) =>
-        graft.functions.VectorFunctions.cosinePrenormed(
-          graft.functions.VectorFunctions.dot($"embedding", typedLit(cv)),
-          graft.functions.VectorFunctions.normSq($"embedding"), lit(norms(i)))
-      }.reduce((a, b) => greatest(a, b))
-      e.select(avg(best)).as[Double].head()
-    }
-    assert(meanBestCos(c1) >= meanBestCos(init) - 1e-12,
-      "k-means must not worsen mean assignment similarity")
-
-    val q = e.where($"vec_id" < 3)
-    val brute = Similarity.bruteTopK(q, e, "vec_id", "embedding", 100)
-      .as[(Long, Long, Double)].collect().toMap_2
-    val trained = Similarity.ivfTopK(q, e, "vec_id", "embedding",
-        k = 5, nlist = 4, nprobe = 2, centroids = Some(c1))
-      .as[(Long, Long, Double)].collect()
-    assert(trained.nonEmpty)
-    trained.foreach { case (qid, nid, s) =>
-      brute.get((qid, nid)).foreach(bs => assert(math.abs(bs - s) < 1e-12))
-    }
-  }
-
-  test("ANN model artifacts: save/load round-trips centroids and PQ " +
-    "codebooks bit-exactly and the loaded model reproduces topk exactly") {
-    val e = graft.core.Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val dir = java.nio.file.Files.createTempDirectory("graft-annmodel").toString
-    // IVF centroids: train once, persist, reuse — no refit
-    val cents = Similarity.trainCentroids(e, "vec_id", "embedding",
-      nlist = 4, iters = 2)
-    Similarity.saveCentroids(spark, cents, s"$dir/cents")
-    val loadedC = Similarity.loadCentroids(spark, s"$dir/cents")
-    assert(loadedC == cents, "parquet round-trip must be bit-exact")
-    val q = e.where($"vec_id" < 3)
-    def ivf(c: Seq[Seq[Double]]) =
-      Similarity.ivfTopK(q, e, "vec_id", "embedding", k = 5, nlist = 4,
-          nprobe = 2, centroids = Some(c))
-        .orderBy($"query_id", $"score".desc, $"neighbor_id")
-        .as[(Long, Long, Double)].collect().toSeq
-    assert(ivf(loadedC) == ivf(cents),
-      "loaded centroid model must reproduce the exact topk")
-    // PQ codebooks: same contract through the trained books
-    val books = Similarity.pqTrainCodebooks(e, "vec_id", "embedding",
-      m = 8, ksub = 4, iters = 2)
-    Similarity.saveCodebooks(spark, books, s"$dir/books")
-    val loadedB = Similarity.loadCodebooks(spark, s"$dir/books")
-    assert(loadedB == books, "parquet round-trip must be bit-exact")
-    def pq(b: Seq[Seq[Seq[Double]]]) =
-      Similarity.pqTopK(q, e, "vec_id", "embedding", k = 5,
-          codebooks = Some(b))
-        .orderBy($"query_id", $"score".desc, $"neighbor_id")
-        .as[(Long, Long, Double)].collect().toSeq
-    assert(pq(loadedB) == pq(books),
-      "loaded codebook model must reproduce the exact topk")
-    // corruption fails loudly: a non-dense cell range must never route
-    spark.read.parquet(s"$dir/cents").where($"cell" =!= 2)
-      .write.mode("overwrite").parquet(s"$dir/torn")
-    intercept[IllegalArgumentException] {
-      Similarity.loadCentroids(spark, s"$dir/torn")
-    }
-  }
-
-  test("versioned ANN model publish: a crash mid-refresh leaves the " +
-    "PREVIOUS model servable, and the new model lands atomically") {
-    import graft.streaming.StatsMaintenance
-    val e = graft.core.Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val dir = java.nio.file.Files.createTempDirectory("graft-annver").toString
-    val m1 = Similarity.trainCentroids(e, "vec_id", "embedding",
-      nlist = 4, iters = 1)
-    val m2 = Similarity.trainCentroids(e, "vec_id", "embedding",
-      nlist = 4, iters = 3)
-    assert(m1 != m2, "test needs two distinguishable models")
-    intercept[IllegalStateException] {
-      Similarity.loadCentroidsVersioned(spark, s"$dir/c")
-    }
-    Similarity.saveCentroidsVersioned(spark, m1, s"$dir/c")
-    assert(Similarity.loadCentroidsVersioned(spark, s"$dir/c") == m1)
-    // the daily refresh crashes mid-publish (after parquet, before the
-    // marker's content lands) — the in-place overwrite path would now
-    // serve NOTHING until a retrain; the versioned store serves m1
-    final class Killed extends RuntimeException("injected crash")
-    StatsMaintenance.testCrashPoint =
-      p => if (p == "marker-open") throw new Killed
-    try intercept[Killed] {
-      Similarity.saveCentroidsVersioned(spark, m2, s"$dir/c")
-    } finally StatsMaintenance.testCrashPoint = _ => ()
-    assert(Similarity.loadCentroidsVersioned(spark, s"$dir/c") == m1,
-      "crash mid-refresh must leave the previous model servable")
-    // the retried refresh lands atomically; retain=2 keeps m1's version
-    Similarity.saveCentroidsVersioned(spark, m2, s"$dir/c")
-    assert(Similarity.loadCentroidsVersioned(spark, s"$dir/c") == m2)
-    val vers = new java.io.File(s"$dir/c").listFiles()
-      .map(_.getName).filter(_.startsWith("v=")).sorted.toSeq
-    assert(vers.size == 2, s"retain=2 grace window lost: $vers")
-    // codebooks ride the same store
-    val books = Similarity.pqTrainCodebooks(e, "vec_id", "embedding",
-      m = 8, ksub = 4, iters = 1)
-    Similarity.saveCodebooksVersioned(spark, books, s"$dir/b")
-    assert(Similarity.loadCodebooksVersioned(spark, s"$dir/b") == books)
-  }
-
-  test("trainCentroids reads the base data once, not once per Lloyd iteration (W5)") {
-    val acc = spark.sparkContext.longAccumulator("baseRowReads")
-    val n = 200
-    val src = (0 until n).map { i =>
-      (i.toLong, Array.tabulate(8)(j => ((i * 31 + j * 7) % 13 - 6).toFloat))
-    }.toDF("vec_id", "embedding")
-      .as[(Long, Array[Float])]
-      .map { t => acc.add(1); t }
-      .toDF("vec_id", "embedding")
-    val cents = Similarity.trainCentroids(src, "vec_id", "embedding",
-      nlist = 3, iters = 4)
-    assert(cents.size == 3)
-    // one full scan for exemplar init + one to fill the persisted cache;
-    // without the persist this would be (iters + 1) * n = 1000
-    assert(acc.value <= 2L * n + 50,
-      s"base scanned ${acc.value} row-reads — persist across iterations lost")
   }
 
   test("splitAssign: deterministic, replay-stable, roughly proportioned") {
@@ -1177,8 +1048,9 @@ class DedupSimilaritySpec extends SparkSpec {
     // because the screen has no false negatives and the confirm pass
     // removes every false positive
     val tiny = graft.operators.CorpusStats.countMinSketch(docs, "text", 2, 2)
-    val hh = graft.operators.CorpusStats.heavyHittersWith(
-        docs, "text", tiny, 2, 2, threshold = 2L)
+    val hh = graft.operators.CorpusStats.heavyHittersWithCounts(
+        graft.operators.CorpusStats.tokenCounts(docs, "text"), tiny, 2, 2,
+        threshold = 2L)
       .as[(String, Long)].collect().sortBy(_._1).toSeq
     assert(hh == Seq(("alpha", 3L), ("beta", 2L)), s"got $hh")
   }
@@ -1437,7 +1309,7 @@ class DedupSimilaritySpec extends SparkSpec {
       (3L, "year 2024 had 365 days"), // digit runs stay
       (4L, "a@b.co and +12345678 twice: c_d%e@f-g.info"))
       .toDF("id", "text")
-    val got = rows.select($"id", T.redactPii($"text").as("r"))
+    val got = rows.select($"id", References.redactPii($"text").as("r"))
       .as[(Long, String)].collect().toMap
     assert(got(1L) == "mail me at [EMAIL] thanks")
     assert(got(2L) == "dial [PHONE] tonight")
@@ -1487,7 +1359,7 @@ class DedupSimilaritySpec extends SparkSpec {
   test("text functions: tokens, shingles, language, fingerprint locality") {
     val df = Seq((1L, "  The quick   brown fox  ")).toDF("id", "text")
     assert(df.select(T.tokenCount($"text")).as[Int].head() == 4)
-    val sh = df.select(T.shingleSet($"text", 2).as("s")).as[Seq[String]].head()
+    val sh = df.select(References.shingleSet($"text", 2).as("s")).as[Seq[String]].head()
     assert(sh == Seq("The quick", "quick brown", "brown fox"))
     assert(Seq((1L, "")).toDF("id", "text")
       .select(T.tokenCount($"text")).as[Int].head() == 0)
@@ -1607,7 +1479,7 @@ class DedupSimilaritySpec extends SparkSpec {
     // quantized (non-codeword) candidates score within quantizer error
     // of brute but are present for every query
     assert(ivfpq.keySet == brute.keySet)
-    // trainIters = 0 path is fully deterministic: identical replays
+    // the exemplar quantizers are fully deterministic: identical replays
     val again = toMap(Similarity.ivfPqTopK(q, cand, "vec_id", "embedding",
       k = 40, nlist = 1, nprobe = 1, m = 8, ksub = 8))
     assert(again == ivfpq)
@@ -1617,52 +1489,4 @@ class DedupSimilaritySpec extends SparkSpec {
     }
   }
 
-  test("ivfPqTopK: residual-trained books hold the shortlist-recall floor " +
-      "on a clustered corpus and do not lose to raw-vector PQ") {
-    // Deterministic 4-blob corpus (the regime measured by
-    // f9f40ed:src/main/scala/graft/tools/PqProbe.scala:
-    // raw-vector books burn code entropy re-encoding cluster identity;
-    // residual books see centered data). Pins the recall floor so
-    // codebook-training changes can't silently degrade the ANN family.
-    val dim = 16
-    def center(c: Int): Seq[Float] =
-      Seq.tabulate(dim)(j => if (j / 4 == c) 5.0f else 0.0f)
-    def jitter(i: Int, j: Int): Float = (((i * 31 + j * 17) % 19) - 9) / 30.0f
-    val rows = (0 until 400).map { i =>
-      val c = i % 4
-      (i.toLong, center(c).zipWithIndex.map { case (x, j) => x + jitter(i, j) })
-    }
-    val corpus = rows.toDF("vec_id", "embedding")
-    val q = corpus.where($"vec_id" >= 100 && $"vec_id" < 105)
-    val k = 10
-    val shortK = 50
-    def tops(df: org.apache.spark.sql.DataFrame): Map[Long, Seq[Long]] =
-      df.select($"query_id", $"neighbor_id", $"score")
-        .as[(Long, Long, Double)].collect()
-        .groupBy(_._1)
-        .map { case (qq, rs) => qq -> rs.sortBy(r => (-r._3, r._2)).map(_._2).toSeq }
-    val brute = tops(Similarity.bruteTopK(q, corpus, "vec_id", "embedding", k))
-    def recall(short: Map[Long, Seq[Long]]): Double = {
-      val per = brute.keys.toSeq.map { qq =>
-        short.getOrElse(qq, Nil).toSet.intersect(brute(qq).toSet).size.toDouble / k
-      }
-      per.sum / per.size
-    }
-    val raw = recall(tops(Similarity.pqTopK(q, corpus, "vec_id", "embedding",
-      shortK, m = 8, ksub = 8)))
-    // nprobe = nlist isolates code quality from cell routing
-    val resid = recall(tops(Similarity.ivfPqTopK(q, corpus, "vec_id",
-      "embedding", shortK, nlist = 8, nprobe = 8, m = 8, ksub = 8,
-      trainIters = 3)))
-    assert(resid >= raw - 1e-9, s"residual books lost to raw: $resid < $raw")
-    assert(resid >= 0.6, s"residual shortlist recall floor broken: $resid")
-    // fully-trained IVFADC: k-means coarse centroids (one per blob)
-    // route cleanly, residual books hold the same floor
-    val cents = Similarity.trainCentroids(corpus, "vec_id", "embedding",
-      nlist = 4, iters = 2)
-    val trained = recall(tops(Similarity.ivfPqTopK(q, corpus, "vec_id",
-      "embedding", shortK, nprobe = 4, m = 8, ksub = 8, trainIters = 3,
-      centroids = Some(cents))))
-    assert(trained >= 0.6, s"trained-coarse recall floor broken: $trained")
-  }
 }

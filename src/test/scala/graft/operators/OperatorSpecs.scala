@@ -92,14 +92,6 @@ class OperatorSpecs extends SparkSpec {
     assert(Bridge.shortnameIndex(onDisk, "id", "shortname") == want)
   }
 
-  test("bridge rewriteGroups: overwrites only incoming groups") {
-    val bridge = Seq((1L, 10L), (1L, 11L), (2L, 20L)).toDF("task_id", "executor_id")
-    val incoming = Seq((1L, 12L)).toDF("task_id", "executor_id")
-    val out = Bridge.rewriteGroups(bridge, incoming, "task_id")
-      .as[(Long, Long)].collect().toSet
-    assert(out == Set((1L, 12L), (2L, 20L)))
-  }
-
   test("watermark: latest by updated_at; epoch default when empty (S5/S6)") {
     val status = Seq(
       (Timestamp.valueOf("2024-03-01 00:00:00"), Timestamp.valueOf("2024-03-02 08:00:00")),
@@ -123,17 +115,6 @@ class OperatorSpecs extends SparkSpec {
     assert(days.length == 4)
     assert(days.head == Timestamp.valueOf("2024-01-30 00:00:00"))
     assert(days.last == Timestamp.valueOf("2024-02-02 00:00:00"))
-  }
-
-  test("xorHash is partition-order independent (scalable hash gate)") {
-    val df = (1 to 1000).map(i => (i.toLong, s"row$i")).toDF("id", "s")
-    val h1 = ContentHash.xorHash(df.repartition(1), Seq($"id", $"s")).as[Long].head()
-    val h8 = ContentHash.xorHash(df.repartition(8), Seq($"id", $"s")).as[Long].head()
-    assert(h1 == h8)
-    val changed = ContentHash.xorHash(
-      df.withColumn("s", when($"id" === 500, lit("tampered")).otherwise($"s")),
-      Seq($"id", $"s")).as[Long].head()
-    assert(changed != h1)
   }
 
   test("shouldProcess gate matrix (T8, employees.go:97-101)") {

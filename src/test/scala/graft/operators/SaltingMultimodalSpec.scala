@@ -66,229 +66,17 @@ class SaltingMultimodalSpec extends SparkSpec {
     assert(Salting.saltedEquiJoin(fact, dim, Seq("k"), 8, "inner").count() == 4000L)
 
     // duplicate-heavy non-key payload: content hashing cannot tell the
-    // rows apart, so spread=true forces the MIID salt — and the
-    // aggregate result stays exact
+    // rows apart, so spread=true forces the MIID salt
     val dup = (1 to 4000).map(_ => (1L, 1L)).toDF("k", "v")
     val dupSpread = dup
       .withColumn("__salt", Salting.contentSalt(dup, Seq("k"), 8, spread = true))
       .select("__salt").as[Int].collect().toSet
     assert(dupSpread.size > 1, "spread=true must split identical hot rows")
-    val agg = Salting.twoPhaseAgg(dup, Seq("k"), 8, spread = true)(
-      Seq(sum($"v").as("ps"), count(lit(1)).as("pn")),
-      Seq(sum($"ps").as("total"), sum($"pn").as("n")))
-      .as[(Long, Long, Long)].collect().toSeq
-    assert(agg == Seq((1L, 4000L, 4000L)))
-  }
-
-  test("two-phase aggregation merges salted partials to exact totals") {
-    val df = ((1 to 5000).map(_ => ("hot", 1L)) ++ Seq(("cold", 7L), ("cold", 3L)))
-      .toDF("k", "v")
-    val out = Salting.twoPhaseAgg(df, Seq("k"), 16)(
-      Seq(sum($"v").as("ps"), count(lit(1)).as("pn")),
-      Seq(sum($"ps").as("total"), sum($"pn").as("n")))
-      .as[(String, Long, Long)].collect().toMap_kv
-    assert(out == Map("hot" -> ((5000L, 5000L)), "cold" -> ((10L, 2L))))
   }
 
   private implicit class M(rows: Array[(String, Long, Long)]) {
     def toMap_kv: Map[String, (Long, Long)] =
       rows.map { case (k, a, b) => k -> ((a, b)) }.toMap
-  }
-
-  test("multimodal decodeBatch: per-partition decoder over binary payloads") {
-    implicit val s = spark
-    val rows = Seq(
-      Multimodal.MediaRow(1L, "fake-image-bytes-1".getBytes("UTF-8")),
-      Multimodal.MediaRow(2L, "fake-image-bytes-two".getBytes("UTF-8")))
-      .toDS().repartition(2)
-    val metas = Multimodal.decodeBatch(rows, Multimodal.StubDecoder)
-      .collect().sortBy(_.doc_id)
-    assert(metas.map(_.doc_id).toSeq == Seq(1L, 2L))
-    assert(metas(0).n_bytes == 18 && metas(1).n_bytes == 20)
-    assert(metas.forall(m => m.width >= 16 && m.width < 656))
-    assert(metas.forall(m => m.content_md5.length == 32))
-    // deterministic: same payload → same fake decode
-    val again = Multimodal.decodeBatch(rows, Multimodal.StubDecoder)
-      .collect().sortBy(_.doc_id)
-    assert(again.toSeq == metas.toSeq)
-  }
-
-  test("multimodal resize + frame sampling: per-partition transcoder, stub contracts") {
-    implicit val s = spark
-    import s.implicits._
-    val payload = Array.tabulate[Byte](100)(_.toByte) // len 100 → n_frames 11
-    val rows = Seq(Multimodal.MediaRow(1L, payload)).toDS()
-
-    val resized = Multimodal.resizeBatch(rows, Multimodal.StubTranscoder, 4, 4)
-      .collect().head
-    assert(resized.payload.length <= 16, "resize bounds the payload to w*h")
-    assert(resized.payload.head == payload.head, "stride subsample keeps byte 0")
-
-    val frames = Multimodal.sampleFramesBatch(rows, Multimodal.StubTranscoder, 3)
-      .collect().sortBy(_.frame_idx)
-    // n = 100 % 30 + 1 = 11 frames of ceil(100/11) = 10 bytes; every 3rd
-    assert(frames.map(_.frame_idx).toSeq == Seq(0, 3, 6, 9))
-    assert(frames.forall(_.frame.length == 10))
-    assert(frames.head.frame.toSeq == payload.slice(0, 10).toSeq)
-    assert(frames.last.frame.toSeq == payload.slice(90, 100).toSeq)
-  }
-
-  // --- real ImageIO codecs ------------------------------------------------
-
-  /** A real PNG: w×h gradient pixels, encoded through javax.imageio. */
-  private def pngBytes(w: Int, h: Int): Array[Byte] = {
-    val img = new java.awt.image.BufferedImage(
-      w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    for (x <- 0 until w; y <- 0 until h)
-      img.setRGB(x, y, (x * 7 + y * 31) & 0xffffff)
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", bos)
-    bos.toByteArray
-  }
-
-  /** A real animated GIF with `n` gray frames via the JDK GIF writer. */
-  private def gifBytes(w: Int, h: Int, n: Int): Array[Byte] = {
-    val bos = new java.io.ByteArrayOutputStream()
-    val ios = javax.imageio.ImageIO.createImageOutputStream(bos)
-    val writer = javax.imageio.ImageIO.getImageWritersByFormatName("gif").next()
-    writer.setOutput(ios)
-    writer.prepareWriteSequence(null)
-    for (i <- 0 until n) {
-      val img = new java.awt.image.BufferedImage(
-        w, h, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
-      val g = img.createGraphics()
-      try {
-        g.setColor(new java.awt.Color(i * 40 % 256, i * 40 % 256, i * 40 % 256))
-        g.fillRect(0, 0, w, h)
-      } finally g.dispose()
-      writer.writeToSequence(new javax.imageio.IIOImage(img, null, null), null)
-    }
-    writer.endWriteSequence()
-    writer.dispose(); ios.close()
-    bos.toByteArray
-  }
-
-  test("ImageIoDecoder decodes real PNG bytes; non-images fall back to the stub") {
-    implicit val s = spark
-    val png = pngBytes(37, 23)
-    val junk = "definitely-not-an-image".getBytes("UTF-8")
-    val rows = Seq(Multimodal.MediaRow(1L, png), Multimodal.MediaRow(2L, junk))
-      .toDS().repartition(2)
-    val metas = Multimodal.decodeBatch(rows, Multimodal.ImageIoDecoder)
-      .collect().sortBy(_.doc_id)
-    assert(metas(0).width == 37 && metas(0).height == 23 && metas(0).n_frames == 1,
-      s"real PNG dims not decoded: ${metas(0)}")
-    assert(metas(0).n_bytes == png.length)
-    assert(metas(1) == Multimodal.StubDecoder.decode(2L, junk),
-      "unsupported payload must degrade to the deterministic stub")
-  }
-
-  test("ImageIoTranscoder resize produces a real w*h image; GIF frames sample") {
-    implicit val s = spark
-    val rows = Seq(Multimodal.MediaRow(1L, pngBytes(64, 48))).toDS()
-    val resized = Multimodal.resizeBatch(rows, Multimodal.ImageIoTranscoder, 8, 6)
-      .collect().head
-    val back = javax.imageio.ImageIO.read(
-      new java.io.ByteArrayInputStream(resized.payload))
-    assert(back != null && back.getWidth == 8 && back.getHeight == 6,
-      "resized payload must decode as a real 8x6 image")
-
-    // animated GIF: 5 real frames, every 2nd sampled -> 0, 2, 4
-    val gif = Seq(Multimodal.MediaRow(7L, gifBytes(16, 12, 5))).toDS()
-    val frames = Multimodal.sampleFramesBatch(gif, Multimodal.ImageIoTranscoder, 2)
-      .collect().sortBy(_.frame_idx)
-    assert(frames.map(_.frame_idx).toSeq == Seq(0, 2, 4), "every 2nd GIF frame")
-    frames.foreach { f =>
-      val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(f.frame))
-      assert(img != null && img.getWidth == 16 && img.getHeight == 12,
-        s"frame ${f.frame_idx} must re-encode as a standalone decodable image")
-    }
-    // a still PNG is its own single frame through the same API
-    val one = Multimodal.sampleFramesBatch(rows, Multimodal.ImageIoTranscoder, 1)
-      .collect()
-    assert(one.map(_.frame_idx).toSeq == Seq(0))
-  }
-
-  test("ImageIoPHasher: visually-near real images land within Hamming 3, " +
-      "distinct images far; phashPairs finds exactly the near pair") {
-    implicit val s = spark
-    // base: half-black / half-white split (strong 8x8 structure);
-    // near: same split with a tiny corner blemish; far: inverted split
-    def splitPng(invert: Boolean, blemish: Boolean): Array[Byte] = {
-      val img = new java.awt.image.BufferedImage(
-        64, 64, java.awt.image.BufferedImage.TYPE_INT_RGB)
-      for (x <- 0 until 64; y <- 0 until 64) {
-        val left = x < 32
-        val white = if (invert) !left else left
-        img.setRGB(x, y, if (white) 0xffffff else 0x000000)
-      }
-      if (blemish) for (x <- 60 until 64; y <- 0 until 4)
-        img.setRGB(x, y, 0x808080)
-      val bos = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(img, "png", bos)
-      bos.toByteArray
-    }
-    val rows = Seq(
-      Multimodal.MediaRow(1L, splitPng(invert = false, blemish = false)),
-      Multimodal.MediaRow(2L, splitPng(invert = false, blemish = true)),
-      Multimodal.MediaRow(3L, splitPng(invert = true, blemish = false)),
-      Multimodal.MediaRow(4L, "not an image at all".getBytes("UTF-8")))
-      .toDS()
-    val hs = Multimodal.phashBatch(rows, Multimodal.ImageIoPHasher)
-      .collect().sortBy(_.doc_id)
-    assert(hs.map(_.decoded).toSeq == Seq(true, true, true, false))
-    def ham(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
-    assert(ham(hs(0).phash, hs(1).phash) <= 3,
-      s"near images too far: ${ham(hs(0).phash, hs(1).phash)}")
-    assert(ham(hs(0).phash, hs(2).phash) > 20,
-      s"inverted image too close: ${ham(hs(0).phash, hs(2).phash)}")
-    val pairs = Multimodal.phashPairs(
-        hs.toSeq.toDF("doc_id", "phash", "decoded"), "doc_id", "phash")
-      .as[(Long, Long, Int)].collect()
-    assert(pairs.map(p => (p._1, p._2)).toSet == Set((1L, 2L)),
-      s"expected exactly the near pair: ${pairs.toSeq}")
-  }
-
-  test("hostile header declaring a huge raster degrades to the stub, not OOM") {
-    implicit val s = spark
-    // a syntactically valid 65535x65535 GIF89a header (~17 GB raster if
-    // decoded) followed by a minimal image descriptor; getWidth/getHeight
-    // report the declared dims, so only the pre-read pixel cap stands
-    // between this payload and an executor-killing OutOfMemoryError
-    val huge: Array[Byte] = {
-      val bos = new java.io.ByteArrayOutputStream()
-      bos.write("GIF89a".getBytes("US-ASCII"))
-      bos.write(Array[Byte](-1, -1, -1, -1)) // logical screen 65535x65535
-      bos.write(Array[Byte](0x00, 0x00, 0x00)) // no GCT, bg, aspect
-      bos.write(0x2c) // image descriptor
-      bos.write(Array[Byte](0, 0, 0, 0, -1, -1, -1, -1, 0x00)) // 65535x65535 frame
-      bos.write(Array[Byte](0x02, 0x01, 0x00, 0x00)) // minimal LZW data
-      bos.write(0x3b) // trailer
-      bos.toByteArray
-    }
-    // sanity: ImageIO does claim this payload and reports the huge dims
-    val claimed = {
-      val iis = javax.imageio.ImageIO.createImageInputStream(
-        new java.io.ByteArrayInputStream(huge))
-      val it = javax.imageio.ImageIO.getImageReaders(iis)
-      val ok = it.hasNext && { val r = it.next(); r.setInput(iis)
-        val w = r.getWidth(0); r.dispose(); w == 65535 }
-      iis.close(); ok
-    }
-    assert(claimed, "test payload must be reader-claimed with declared 65535 width")
-    val rows = Seq(Multimodal.MediaRow(9L, huge)).toDS()
-    val resized = Multimodal.resizeBatch(rows, Multimodal.ImageIoTranscoder, 8, 6)
-      .collect().head
-    assert(resized.payload.sameElements(Multimodal.StubTranscoder.resize(huge, 8, 6)),
-      "capped decode must fall back to the stub resize")
-    val frames = Multimodal.sampleFramesBatch(rows, Multimodal.ImageIoTranscoder, 1)
-      .collect()
-    val stubFrames = Multimodal.StubTranscoder.sampleFrames(huge, 1).toSeq
-    assert(frames.length == stubFrames.length,
-      "capped frame sampling must fall back to the stub chunking")
-    // decode-only metadata never allocates the raster; real dims flow through
-    val meta = Multimodal.decodeBatch(rows, Multimodal.ImageIoDecoder).collect().head
-    assert(meta.width == 65535L && meta.height == 65535L)
   }
 
   // --- real javax.sound audio codec ---------------------------------------

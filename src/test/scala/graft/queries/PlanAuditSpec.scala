@@ -477,11 +477,11 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("trained lang-id: profile training partial-aggregates map-side, " +
-    "the model-pivot gram join is an equi-join, the per-doc lang sums " +
-    "partial-aggregate, no window and no cartesian product") {
-    // the query materializes its model (classifyWith references it
-    // twice — a lazy plan would re-train per reference), so training
-    // is audited on its own plan
+    "scoring is one LangGramHits kernel pass with no gram explode, no " +
+    "window and no cartesian product") {
+    // the query collects its merged model into the LangGramHits kernel,
+    // so profile training never appears in the query plan — audit it
+    // on its own plan
     val train = graft.operators.CorpusStats.langProfiles(
         graft.core.Tables.documents(spark, dir), "lang", "text")
       .queryExecution.executedPlan.toString

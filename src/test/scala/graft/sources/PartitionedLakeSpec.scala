@@ -6,10 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** Lake WRITE path: dynamic per-day overwrite must replace exactly the
-  * incoming days (idempotent backfill), and compaction must shrink a
-  * day's file count without touching data or sibling days.
-  */
+/** The partitioned events lake's cached copy follows its source. */
 class PartitionedLakeSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
   import spark.implicits._
 
@@ -24,38 +21,6 @@ class PartitionedLakeSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll
     d
   }
 
-  private def mkLake(): (String, org.apache.spark.sql.DataFrame) = {
-    val dir = tempDir("graft-lake-spec")
-    val df = (1 to 300).map { i =>
-      (i.toLong, s"2024-02-0${i % 3 + 1}", i * 1.5)
-    }.toDF("id", "dt", "v").repartition(8) // 8 tasks → up to 8 files/day
-    PartitionedLake.overwriteDays(df, dir, sortCols = Seq("id"))
-    (dir, df)
-  }
-
-  private def filesIn(dir: String, day: String): Seq[File] =
-    new File(dir, s"dt=$day").listFiles()
-      .filter(f => f.getName.endsWith(".parquet")).toSeq
-
-  test("overwriteDays replaces only the incoming days (idempotent backfill)") {
-    val (dir, _) = mkLake()
-    def stateOf(day: String) =
-      spark.read.parquet(dir).where(col("dt") === day)
-        .agg(count(lit(1)), sum("v")).as[(Long, Double)].head()
-    val d1Before = stateOf("2024-02-01")
-    val d2Before = stateOf("2024-02-02")
-    // replay day 1's backfill with identical regenerated data
-    val day1 = (1 to 300).filter(i => i % 3 + 1 == 1)
-      .map(i => (i.toLong, "2024-02-01", i * 1.5)).toDF("id", "dt", "v")
-    PartitionedLake.overwriteDays(day1, dir)
-    assert(stateOf("2024-02-01") == d1Before, "replay must replace, not append")
-    assert(stateOf("2024-02-02") == d2Before, "sibling day untouched")
-    // a changed re-run replaces the day's content outright
-    PartitionedLake.overwriteDays(day1.where(col("id") <= 30), dir)
-    assert(stateOf("2024-02-01")._1 < d1Before._1)
-    assert(stateOf("2024-02-02") == d2Before)
-  }
-
   test("eventsPath tracks the source fingerprint: regenerated data gets a fresh cache") {
     val src = tempDir("graft-lake-src")
     val f = new File(src, "events.parquet")
@@ -68,19 +33,5 @@ class PartitionedLakeSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll
     f.setLastModified(f.lastModified() + 5000)
     assert(PartitionedLake.eventsPath(src) != p1,
       "stale cache would be served after the source changed")
-  }
-
-  test("compactDay shrinks a day to one file, data and siblings intact") {
-    val (dir, _) = mkLake()
-    def stateOf(day: String) =
-      spark.read.parquet(dir).where(col("dt") === day)
-        .agg(count(lit(1)), sum("v")).as[(Long, Double)].head()
-    val before2 = stateOf("2024-02-02")
-    val before3 = stateOf("2024-02-03")
-    assert(filesIn(dir, "2024-02-02").size > 1, "fixture must start fragmented")
-    PartitionedLake.compactDay(spark, dir, "2024-02-02", nFiles = 1, sortCols = Seq("id"))
-    assert(filesIn(dir, "2024-02-02").size == 1, "day compacted to one file")
-    assert(stateOf("2024-02-02") == before2, "compaction must not change data")
-    assert(stateOf("2024-02-03") == before3, "sibling day untouched")
   }
 }

@@ -9,58 +9,6 @@ import graft.operators.Dedup
 class StreamingDedupSpec extends SparkSpec {
   import spark.implicits._
 
-  private val corpusDocs = Seq(
-    (10L, "the quick brown fox jumps over the lazy dog near the river bank today"),
-    (11L, "completely different corpus text talking about databases and query engines"),
-    (12L, "a third corpus document with its own unmistakably distinct wording here"))
-
-  test("rowBandArray keys equal the batch signing path's band keys") {
-    val docs = graft.core.Tables.documents(spark, "/root/testdata/sf0.001")
-      .select(col("doc_id"), col("text"))
-    val sets = docs.select(col("doc_id"),
-      Dedup.hashedShingleSet(col("text"), 5).as("__set"))
-    val perRow = sets.select(col("doc_id"),
-        explode(Dedup.rowBandArray(col("__set"), 8, 2)).as("band"))
-      .as[(Long, String)].collect().toSet
-    val batch = StreamingDedup.corpusIndex(docs, "doc_id", "text", 5, 8, 2)
-      .select(col("corpus_id"), col("band"))
-      .as[(Long, String)].collect().toSet
-    assert(perRow == batch, "streaming and batch band keys drifted")
-  }
-
-  test("nearDupFlags: verbatim + near-dup flagged once, fresh doc clean") {
-    val index = StreamingDedup.corpusIndex(
-      corpusDocs.toDF("doc_id", "text"), "doc_id", "text")
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Long, String)]
-    val flags = StreamingDedup.nearDupFlags(
-      input.toDF().toDF("doc_id", "text"), index, "doc_id", "text")
-    val q = flags.writeStream.format("memory").queryName("nd_flags").start()
-    try {
-      input.addData(
-        // verbatim copy of corpus doc 10: matches on EVERY band — the
-        // min-shared-band predicate must still emit exactly one row
-        (1L, "the quick brown fox jumps over the lazy dog near the river bank today"),
-        // near-dup of corpus doc 10 (one word changed)
-        (2L, "the quick brown fox jumps over the lazy dog near the river bank tonight"),
-        (3L, "entirely fresh content that matches nothing in the corpus at all now"))
-      q.processAllAvailable()
-      val out = spark.table("nd_flags")
-        .as[(Long, Long, Double)].collect().sortBy(r => (r._1, r._2))
-      assert(out.count(r => r._1 == 1L) == 1, s"verbatim must flag exactly once: ${out.toSeq}")
-      assert(out.find(_._1 == 1L).get._2 == 10L)
-      assert(out.find(_._1 == 1L).get._3 == 1.0)
-      val near = out.filter(_._1 == 2L)
-      assert(near.length == 1 && near.head._2 == 10L && near.head._3 >= 0.7,
-        s"near-dup must flag against doc 10: ${out.toSeq}")
-      assert(!out.exists(_._1 == 3L), s"fresh doc must not flag: ${out.toSeq}")
-      // second batch: stateless — same doc content flags again
-      input.addData((4L, "the quick brown fox jumps over the lazy dog near the river bank today"))
-      q.processAllAvailable()
-      assert(spark.table("nd_flags").where($"doc_id" === 4L).count() == 1)
-    } finally q.stop()
-  }
-
   test("quality gates stream: c4Clean + LineStats/TokenStats are map-only " +
       "stateless transforms over a readStream") {
     // the ingest-time quality filter every streaming curation front
@@ -71,7 +19,7 @@ class StreamingDedupSpec extends SparkSpec {
     import graft.functions.{TextFunctions => T}
     val scored = input.toDF().toDF("doc_id", "text")
       .withColumn("__c", T.c4Clean($"text"))
-      .withColumn("__l", T.lineStats($"text"))
+      .withColumn("__l", graft.expressions.LineStats.stats($"text"))
       .select($"doc_id", $"__c.n_kept".as("n_kept"),
         $"__c.dropped".as("dropped"), $"__l.n_dup_lines".as("dups"))
     val q = scored.writeStream.format("memory").queryName("q_gate").start()
@@ -135,37 +83,9 @@ class StreamingDedupSpec extends SparkSpec {
   }
 
   test("band-parameter footguns fail loudly, never silently zero-match") {
-    val corpus = corpusDocs.toDF("doc_id", "text")
     // k not a multiple of rowsPerBand would silently drop trailing sigs
-    intercept[IllegalArgumentException] {
-      StreamingDedup.corpusIndex(corpus, "doc_id", "text", 5, 8, 3)
-    }
     intercept[IllegalArgumentException] {
       Dedup.rowBandArray(col("text"), 8, 3)
     }
-    // probing an index built with a different band width would join on
-    // disjoint keys and flag nothing — construction must refuse
-    val index2 = StreamingDedup.corpusIndex(corpus, "doc_id", "text", 5, 8, 2)
-    intercept[IllegalArgumentException] {
-      StreamingDedup.nearDupFlags(corpus, index2, "doc_id", "text", 5, 8, 4)
-    }
-  }
-
-  test("notInCorpus drops byte-identical docs, passes everything else") {
-    val corpus = corpusDocs.toDF("doc_id", "text")
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Long, String)]
-    val gated = StreamingDedup.notInCorpus(
-      input.toDF().toDF("doc_id", "text"), corpus, "text")
-    val q = gated.writeStream.format("memory").queryName("nd_gate").start()
-    try {
-      input.addData(
-        (1L, "the quick brown fox jumps over the lazy dog near the river bank today"),
-        (2L, "the quick brown fox jumps over the lazy dog near the river bank tonight"),
-        (3L, "entirely fresh content that matches nothing in the corpus at all now"))
-      q.processAllAvailable()
-      val kept = spark.table("nd_gate").select("doc_id").as[Long].collect().sorted
-      assert(kept.toSeq == Seq(2L, 3L), s"only the byte-identical doc drops: ${kept.toSeq}")
-    } finally q.stop()
   }
 }
