@@ -30,8 +30,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * % P` pre-reduction on the oracle side. Band keys are rendered
   * directly as `"b:s:s"` — byte-identical to a `concat_ws(":", b,
   * sig…)` key over min-over-explode signatures (the reference pinned
-  * in `MinHashBandsSpec`); the batch and streaming dedup paths both
-  * sign through this kernel (pinned in `StreamingDedupSpec`).
+  * in `MinHashBandsSpec`).
   *
   * Accepts array<int> (the shingle sets' storage type) or
   * array<bigint> (caller-supplied hash arrays) — elements promote to

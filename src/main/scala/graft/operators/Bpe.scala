@@ -652,8 +652,8 @@ object Bpe {
     * encode under merges from one training run and ids from another
     * would silently renumber the corpus. Layout is one row per entry,
     * `kind` ∈ {merge, vocab}: merge rows carry (idx = rank, a, b),
-    * vocab rows carry (idx = id, a = symbol, b = null). Same crash
-    * contract as the ANN models: a kill mid-refresh leaves the
+    * vocab rows carry (idx = id, a = symbol, b = null). Crash
+    * contract: a kill mid-refresh leaves the
     * previous tokenizer servable, retain=2 keeps it one publish
     * longer for in-flight encodes.
     */

@@ -1524,7 +1524,7 @@ object ExtensionQueries {
   /** IVFPQ ANN: coarse exemplar cells route the corpus, PQ codes
     * encode the RESIDUALS (v − centroid), queries probe their 2
     * nearest cells — the full IVFADC layout. The deterministic
-    * exemplar path (trainIters = 0) keeps every stage — cell argmax,
+    * exemplar quantizers keep every stage — cell argmax,
     * residual subtraction, sub-code argmin, reconstruction scoring —
     * DuckDB-reproducible; the probe-measured story for why residual
     * encoding matters on clustered corpora is in SCALING.md.

@@ -729,11 +729,11 @@ object StatsMaintenance {
     * invisible, readers always see the last fully committed version,
     * and a crash mid-publish leaves the PREVIOUS artifact servable
     * instead of no artifact at all. This is the publish path for model
-    * artifacts (ANN centroids/codebooks —
-    * [[graft.operators.Similarity.saveCentroidsVersioned]]), where the
+    * artifacts (the tokenizer —
+    * [[graft.operators.Bpe.saveTokenizerVersioned]]), where the
     * alternative `mode("overwrite")` in place has a crash window that
     * destroys the old model before the new one lands, leaving a daily
-    * deployment with NO quantizer until a retrain.
+    * deployment with NO model until a retrain.
     *
     * Default retain=2: the superseded artifact survives one publish —
     * the grace window for jobs that loaded the model just before the

@@ -1093,7 +1093,7 @@ class DedupSimilaritySpec extends SparkSpec {
         C.countMinSketch(h2, "text", 2, 2)), // width 2: saturated
       Seq("d", "bucket"), Seq("n"))
     // today: 'hist' absent (heavy from history ALONE — the case
-    // heavyHittersWith's same-corpus contract excludes), 'joint'
+    // heavyHittersWithCounts' same-corpus contract excludes), 'joint'
     // crosses only as history+batch, 'fresh' heavy from batch alone,
     // 'old'/'rare' stay light overall
     val today = Seq(

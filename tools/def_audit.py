@@ -24,6 +24,7 @@ The exit status is 1 when an unreached member is not on ALLOW, or when
 an ALLOW entry no longer names an unreached member (a stale entry);
 otherwise 0.
 """
+import bisect
 import os
 import re
 import sys
@@ -70,7 +71,8 @@ TEMPLATES = {"object", "class", "trait"}
 
 IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
 CHAR_LIT = re.compile(r"'(?:\\u[0-9a-fA-F]{4}|\\.|[^'\\\n])'")
-TOKEN = re.compile(r"`[^`\n]+`|[A-Za-z_][A-Za-z0-9_]*|[0-9][A-Za-z0-9_.]*|[{}()\[\]]|[^\sA-Za-z0-9_{}()\[\]`]+")
+TOKEN = re.compile(r"`[^`\n]+`|[A-Za-z_][A-Za-z0-9_]*|[0-9][A-Za-z0-9_.]*"
+                   r"|[{}()\[\]]|[^\sA-Za-z0-9_{}()\[\]`]+")
 IMPORT = re.compile(r"^[ \t]*import\b[^\n]*", re.M)
 
 
@@ -218,7 +220,7 @@ def parse(path, text):
     prev = None
     for i, (tok, pos, end) in enumerate(toks):
         kind, owner = stack[-1]
-        if (open_ is not None and kind == "template" and stack[-1][1] is open_.parent
+        if (open_ is not None and kind == "template" and owner is open_.parent
                 and prev is not None and "\n" in text[prev[2]:pos]
                 and not _continues(prev[0], tok)):
             open_.end = prev[2]
@@ -299,7 +301,7 @@ def walk(m):
         yield from walk(c)
 
 
-def own_text(m, text):
+def own_text(m):
     """The member's text without its children's spans."""
     parts, at = [], m.start
     for c in m.children:
@@ -334,7 +336,7 @@ def audit(root, allow):
         for m in walk(top):
             if m is top:
                 continue
-            m.line = _line_of(lines, m.start)
+            m.line = bisect.bisect_right(lines, m.start)
             members.append(m)
             by_name.setdefault(m.name, []).append(m)
 
@@ -363,7 +365,7 @@ def audit(root, allow):
         while work:
             m = work.pop()
             text = files[m.path][0]
-            for a, b in own_text(m, text):
+            for a, b in own_text(m):
                 for w in IDENT.finditer(text, a, b):
                     for n in by_name.get(w.group(0), ()):
                         if id(n) not in live and not (
@@ -390,19 +392,9 @@ def _ancestors(m):
         m = m.parent
 
 
-def _line_of(lines, pos):
-    lo, hi = 0, len(lines)
-    while hi - lo > 1:
-        mid = (lo + hi) // 2
-        if lines[mid] <= pos:
-            lo = mid
-        else:
-            hi = mid
-    return lo + 1
-
-
 def main(argv):
-    root = argv[1] if len(argv) > 1 else os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    here = os.path.dirname(os.path.abspath(__file__))
+    root = argv[1] if len(argv) > 1 else os.path.dirname(here)
     shown, stale = audit(root, ALLOW)
     for m in shown:
         print(f"{os.path.relpath(m.path, root)}:{m.line} {m.kind} {m.qualified()}")
